@@ -60,7 +60,7 @@ final case class Snapshot(
 }
 
 /** Minimal snapshot-based lake table ("icelite") on Parquet: data files +
-  * JSON manifests + atomic commit via rename. Replaces the reference's
+  * JSON manifests + atomic fail-if-exists commit (link). Replaces the reference's
   * Postgres destination + `ON CONFLICT` machinery (`streamer/metadata.go:
   * 163-220`) with an Iceberg-style table: snapshot isolation, schema
   * evolution, snapshot properties carrying the commit epoch and LSN
@@ -433,11 +433,14 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   private def writeManifest(s: Snapshot): Unit = {
     Files.createDirectories(metaDir)
     val target = metaDir.resolve(f"v${s.version}%020d.json")
-    if (Files.exists(target))
-      throw new IllegalStateException(s"concurrent commit: $target exists")
     val tmp = metaDir.resolve(s".tmp-${UUID.randomUUID()}.json")
     Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(s))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    // publish with link(2), which fails if the name exists; a rename
+    // would silently replace a version another writer already committed
+    try Files.createLink(target, tmp)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      throw new IllegalStateException(s"concurrent commit: $target exists")
+    } finally Files.delete(tmp)
   }
 }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.lake.{LakeTable, LineageEntry}
 import graft.model.{ChangeEvent, TableMapping}
+import graft.streaming.CdcStream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -157,17 +158,17 @@ object History {
       // result is consumed BEFORE anything is written — an R message or a
       // DML-empty batch (both rare) ABORTS the optimistic merge with zero
       // side effects and the sequential path below redoes it against the
-      // evolved schema. GRAFT_OVERLAP=0 restores the sequential order.
+      // evolved schema. The stats job is forked as in Replay.applyBatch.
+      // GRAFT_OVERLAP=0 restores the sequential order.
       var stats: Array[(String, String, Long, Long, Long, Long)] = null
       if (!sys.env.get("GRAFT_OVERLAP").contains("0")) {
-        val statsFut =
-          java.util.concurrent.CompletableFuture.supplyAsync(() => collectStats())
+        val statsJob = CdcStream.fork(spark.sparkContext, "graft-stats")(collectStats())
         val merged =
           try tryMerge(lake, routed, batchId, epochKey,
-            () => statsFut.join(), rHandled = false)
-          catch { case e: Throwable => statsFut.cancel(false); throw e }
+            () => statsJob.join(), rHandled = false)
+          catch { case e: Throwable => statsJob.cancel(); throw e }
         if (merged) return true
-        stats = statsFut.join() // aborted: R message or DML-empty batch
+        stats = statsJob.join() // aborted: R message or DML-empty batch
       } else stats = collectStats()
 
       // R-message schema evolution, before the apply (north rule) — same

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.lake.{LakeTable, LineageEntry}
 import graft.model._
+import graft.streaming.CdcStream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -776,22 +777,24 @@ object Replay {
       // unless it reveals an R message or an empty batch (both rare), in
       // which case the merge ABORTS before writing anything and the
       // sequential path below redoes it against the evolved schema.
-      // GRAFT_OVERLAP=0 restores the fully sequential order (A/Bs).
+      // The stats job is forked with the caller's batch context (job
+      // group, batch id), so a query stop cancels it too; a fold failure
+      // cancels only the stats job. GRAFT_OVERLAP=0 restores the fully
+      // sequential order (A/Bs).
       var stats: Array[(String, String, Long, Long, Long, Long)] = null
       if (salts <= 0 && !sys.env.get("GRAFT_OVERLAP").contains("0")) {
-        val statsFut =
-          java.util.concurrent.CompletableFuture.supplyAsync(() => collectStats())
+        val statsJob = CdcStream.fork(spark.sparkContext, "graft-stats")(collectStats())
         val merged =
           try {
             val xfs = foldCatalyst()
             explain(s"replay-fold-batch$batchId", xfs)
             mergeApplyDeferred(lake, xfs, batchId, epochKey,
-              () => commitInfoOf(statsFut.join()))
+              () => commitInfoOf(statsJob.join()))
           } catch { case e: Throwable =>
-            statsFut.cancel(false); throw e
+            statsJob.cancel(); throw e
           }
         if (merged.isDefined) return true
-        stats = statsFut.join() // aborted: R message or empty batch
+        stats = statsJob.join() // aborted: R message or empty batch
       } else stats = collectStats()
 
       val dml = stats.filter(s => s._2 != "R" && s._2 != "T")

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode}
 import graft.operators.{History, Replay}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,6 +27,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     multi-table map, `streamer/map.go`): each target table carries its
   *     own epoch, so a crash between two tables' commits in one batch also
   *     replays safely.
+  *   - Concurrency inside a batch: the routes split once, at start, into
+  *     groups that share no table root (target, signature or label
+  *     table). Each batch applies the groups concurrently, one thread per
+  *     group, and a group's routes in declared order — the analog of the
+  *     reference giving each table its own worker while all ops of one
+  *     table go to ONE worker (`worker.go:106-120`). Routes that share a
+  *     root therefore stay sequential (two mappings into one target: the
+  *     later-declared route's values win, as before). The batch returns
+  *     only after every group has ended, and then rethrows the first
+  *     group's failure as thrown. A failed group's siblings may already
+  *     have committed; on replay their epoch check skips the batch, the
+  *     same contract as a crash between two routes. A stream with one
+  *     group applies it on the stream's own thread, as it always did.
   *   - MULTIPLE streams (one per source URL, Orchestrator) may fan into
   *     one target: applies serialize on a per-table-root lock — the exact
   *     analog of the reference routing all ops of one table to ONE worker
@@ -97,6 +111,83 @@ object CdcStream {
       LakeTable.load(spark, root).compact(maxFilesPerBucket = maxFilesPerBucket)
     }
 
+  private val forkIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A task that runs on its own thread on behalf of the thread that
+    * forked it. The thread is created by the caller, so it inherits the
+    * caller's Spark local properties (job group, streaming batch id,
+    * query id) and active session: its jobs belong to the caller's batch
+    * and a query stop cancels them. They also carry a job tag of their
+    * own, which [[cancel]] uses to stop this task without touching the
+    * caller's job group. */
+  private[graft] final class Forked[T] private[CdcStream] (
+      sc: SparkContext, name: String, body: () => T) {
+    private val tag = s"$name-${forkIds.incrementAndGet()}"
+    @volatile private var outcome: Either[Throwable, T] = _
+    private val thread = new Thread(() => outcome =
+      try { sc.addJobTag(tag); Right(body()) } catch { case t: Throwable => Left(t) },
+      name)
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Wait for the task and return its value or its failure as thrown.
+      * If the waiting thread is interrupted, the task is cancelled first. */
+    def result(): Either[Throwable, T] = {
+      try thread.join()
+      catch { case e: InterruptedException => cancel(); throw e }
+      outcome
+    }
+
+    /** The task's value; its failure is rethrown unwrapped. */
+    def join(): T = result().fold(t => throw t, identity)
+
+    /** Interrupt the task, wait until its thread has ended and cancel the
+      * jobs it left running; its outcome is dropped. Cancelling after the
+      * thread ended also catches a job it submitted as it was stopping. */
+    def cancel(): Unit = {
+      thread.interrupt()
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join() catch { case _: InterruptedException => interrupted = true }
+      sc.cancelJobsWithTag(tag)
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
+
+  /** Start `body` on a new thread that carries the calling thread's Spark
+    * context (see [[Forked]]). */
+  private[graft] def fork[T](sc: SparkContext, name: String)(body: => T): Forked[T] =
+    new Forked(sc, name, () => body)
+
+  /** Wait for every task, then rethrow the first failure in `forks` order
+    * (later ones are attached as suppressed). */
+  private[graft] def joinAll(forks: Seq[Forked[Unit]]): Unit = {
+    val failures =
+      try forks.flatMap(_.result().left.toOption)
+      catch { case e: InterruptedException => forks.foreach(_.cancel()); throw e }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  /** The table roots a route writes: its target and, outside History mode,
+    * its companion tables. */
+  private def rootsOf(r: Route): Set[String] =
+    (r.lake.root +: r.signatures.filter(_ => r.mapping.mode != TableMode.History)
+      .toSeq.flatMap(s => s.lake.root +: s.labels.map(_.root).toSeq))
+      .map(p => java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString).toSet
+
+  /** `routes` split into groups that share no table root; each group keeps
+    * declared order, and groups are ordered by their first route. */
+  private[graft] def routeGroups(routes: Seq[Route]): Seq[Seq[Route]] =
+    routes.indices.foldLeft(Vector.empty[(Set[String], Vector[Int])]) { (gs, i) =>
+      val roots = rootsOf(routes(i))
+      val (joined, apart) = gs.partition(_._1.exists(roots))
+      apart :+ ((joined.flatMap(_._1).toSet ++ roots,
+        (joined.flatMap(_._2) :+ i).sorted))
+    }.map(_._2).sortBy(_.head).map(_.map(routes))
+
   /** @param format "parquet" (WAL-shaped parquet event log, default) or
     *               "pgoutput" (self-contained pgoutput chunk files decoded
     *               by graft.sources.PgOutput — same checkpoint-as-ack
@@ -131,6 +222,8 @@ object CdcStream {
         throw new IllegalArgumentException(s"unknown event-log format '$other'")
     }
 
+    // one thread per root-disjoint route group (see class doc)
+    val groups = routeGroups(routes)
     src.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -147,8 +240,7 @@ object CdcStream {
         val df = if (multi)
           df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else df0
-        try {
-        routes.foreach { r =>
+        def applyRoute(r: Route): Unit = {
           // (lsn, seq) floor as a Column predicate tree — Or(Gt(lsn),
           // And(Eq(lsn), Gt(seq))) pushes down to the parquet scan, so a
           // healing catch-up replay reads only the row groups past the
@@ -188,6 +280,13 @@ object CdcStream {
               }
             }
         }
+        try {
+          if (groups.size <= 1) routes.foreach(applyRoute)
+          else joinAll(groups.zipWithIndex.map { case (g, i) =>
+            fork(df0.sparkSession.sparkContext, s"graft-route-$batchId-$i") {
+              g.foreach(applyRoute)
+            }
+          })
         } finally if (multi) df.unpersist(blocking = false)
       }
       .start()

@@ -190,10 +190,20 @@ object EventsCdc {
   private def inParallel(work: Seq[() => Unit]): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(4, work.size)))
-    try work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = w()
-    })).foreach(_.get())
-    finally pool.shutdown()
+    try {
+      work.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = w()
+      })).foreach(_.get())
+      pool.shutdown()
+    } catch { case e: Throwable =>
+      // stop the remaining writes before the caller unwinds
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      throw (e match {
+        case x: java.util.concurrent.ExecutionException if x.getCause != null => x.getCause
+        case other => other
+      })
+    }
   }
 
   /** Re-stamp segment files' modification times MONOTONICALLY in segment
@@ -208,9 +218,14 @@ object EventsCdc {
     val base = System.currentTimeMillis()
     segDirs.zipWithIndex.foreach { case (d, i) =>
       Option(d.listFiles()).toSeq.flatten
-        .foreach(_.setLastModified(base + i.toLong * 2000L))
+        .foreach(stamp(_, base + i.toLong * 2000L))
     }
   }
+
+  /** Set `f`'s mtime, failing loudly: batch order depends on it. */
+  private def stamp(f: java.io.File, mtime: Long): Unit =
+    if (!f.setLastModified(mtime))
+      throw new java.io.IOException(s"cannot set the modification time of $f")
 
   private def finalState(lake: LakeTable, cols: Seq[String]): DataFrame =
     lake.read().select(cols.map(col): _*).orderBy(cols.map(col): _*)
@@ -351,8 +366,8 @@ object EventsCdc {
     })
     locally {
       val base = System.currentTimeMillis()
-      (0 until Batches).foreach(b => new java.io.File(
-        f"$tmp/wal/chunk-$b%03d.bin").setLastModified(base + b.toLong * 2000L))
+      (0 until Batches).foreach(b => stamp(new java.io.File(
+        f"$tmp/wal/chunk-$b%03d.bin"), base + b.toLong * 2000L))
     }
     val lake = LakeTable.create(spark, s"$tmp/t", spec())
     val q = graft.streaming.CdcStream.start(spark, s"$tmp/wal/chunk-*.bin",

@@ -7,8 +7,6 @@ import graft.operators.History
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.collection.mutable
-
 /** SCD2 history mode vs a sequential oracle implementing the reference's
   * process_history.go semantics one event at a time (40-history.robot
   * analog): version chaining, soft delete, PK-update close+reinsert,
@@ -18,44 +16,6 @@ class HistorySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private val mapping = TableMapping("transcripts", "transcripts")
-
-  /** Sequential oracle: list of version rows per the reference semantics. */
-  private def oracle(events: Seq[ChangeEvent], mergeKey: Seq[String],
-                     payloadCols: Seq[String]): Seq[Seq[String]] = {
-    case class V(key: Seq[String], var start: String, var end: String,
-                 var deleted: Boolean, vals: Map[String, String])
-    val rows = mutable.ArrayBuffer[V]()
-    def keyOf(ev: ChangeEvent, m: Map[String, String]): Seq[String] =
-      mergeKey.map(c => if (c == "sid") ev.sid else m.getOrElse(c, null))
-    events.sortBy(e => (e.lsn, e.seq)).foreach { ev =>
-      val t = History.histTime(ev.lsn, ev.seq)
-      def closeAll(key: Seq[String], del: Boolean): Unit =
-        rows.filter(v => v.key == key && v.end == History.KVSZ_OPEN).foreach { v =>
-          v.end = t; if (del) v.deleted = true
-        }
-      ev.op match {
-        case "I" =>
-          rows += V(keyOf(ev, ev.after), History.KVSZ_T0, History.KVSZ_OPEN, deleted = false, ev.after)
-        case "U" if ev.old_kind == "K" =>
-          closeAll(keyOf(ev, ev.before), del = false)
-          rows += V(keyOf(ev, ev.after), t, History.KVSZ_OPEN, deleted = false, ev.after)
-        case "U" =>
-          val k = if (ev.old_kind == "O") keyOf(ev, ev.before) else keyOf(ev, ev.after)
-          closeAll(k, del = false)
-          rows += V(k, t, History.KVSZ_OPEN, deleted = false, ev.after)
-        case "D" => closeAll(keyOf(ev, ev.before), del = true)
-        case _ =>
-      }
-    }
-    rows.toSeq.map { v =>
-      v.key ++ payloadCols.filterNot(mergeKey.contains).map(c => v.vals.getOrElse(c, null)) ++
-        Seq(normTs(v.start), normTs(v.end), v.deleted.toString)
-    }.sortBy(_.mkString("\u0001"))
-  }
-
-  /** Spark renders ".000" millis away; normalize oracle strings the same. */
-  private def normTs(s: String): String =
-    if (s.endsWith(".000")) s.dropRight(4) else s
 
   test("history mode equals sequential SCD2 oracle (multi-batch)") {
     val cfg = Gen.Config(numEvents = 12000, numConvs = 60, turnsPerConv = 8,
@@ -77,16 +37,9 @@ class HistorySpec extends AnyFunSuite {
     val mergeKey = spec.mergeKey
     val payloadCols = payload.fieldNames.toSeq
     val localEvents = (0L until cfg.numEvents).map(id => Gen.mkEvent(id, cfg))
-    val want = oracle(localEvents, mergeKey, payloadCols)
+    val want = Scd2Model.versions(localEvents, mergeKey, payloadCols)
 
-    val schema = lake.schema
-    val ordered = mergeKey ++ payloadCols.filterNot(mergeKey.contains) ++
-      Seq("kvsz_start", "kvsz_end", "kvsz_deleted")
-    val got = lake.read()
-      .select(ordered.map(c => col(c).cast("string").as(c)).toIndexedSeq: _*)
-      .collect().toSeq
-      .map(r => ordered.indices.map(i => r.getString(i)))
-      .sortBy(_.mkString("\u0001"))
+    val got = Scd2Model.lakeVersions(lake, mergeKey, payloadCols)
     assert(got.size == want.size, s"versions: engine=${got.size} oracle=${want.size}")
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(g == w, s"version row $i:\n engine=$g\n oracle=$w")
@@ -131,14 +84,8 @@ class HistorySpec extends AnyFunSuite {
       }
     val mergeKey = spec.mergeKey
     val payloadCols = payload.fieldNames.toSeq
-    val want = oracle(localEvents, mergeKey, payloadCols)
-    val ordered = mergeKey ++ payloadCols.filterNot(mergeKey.contains) ++
-      Seq("kvsz_start", "kvsz_end", "kvsz_deleted")
-    val got = lake.read()
-      .select(ordered.map(c => col(c).cast("string").as(c)).toIndexedSeq: _*)
-      .collect().toSeq
-      .map(r => ordered.indices.map(i => r.getString(i)))
-      .sortBy(_.mkString("\u0001"))
+    val want = Scd2Model.versions(localEvents, mergeKey, payloadCols)
+    val got = Scd2Model.lakeVersions(lake, mergeKey, payloadCols)
     assert(got.size == want.size, s"versions: engine=${got.size} oracle=${want.size}")
     got.zip(want).foreach { case (g, w) => assert(g == w, s"\n engine=$g\n oracle=$w") }
     assert(got.forall(r => r(mergeKey.size) == null ||

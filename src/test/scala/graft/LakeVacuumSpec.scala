@@ -146,4 +146,52 @@ class LakeVacuumSpec extends AnyFunSuite {
     assert(growth < 60,
       s"fd count grew by $growth over 60 lake cycles - a directory-stream leak")
   }
+
+  test("concurrent writers: a commit never replaces a committed version") {
+    val dir = SparkTestBase.tmpDir("race")
+    LakeTable.create(spark, dir, Transcripts.spec(numBuckets = 2))
+    val (writers, commitsEach) = (4, 40)
+    // each writer commits through its own handle, retrying a lost race;
+    // every commit a writer saw succeed must be on disk as it wrote it
+    val won = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val twice = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val threads = (0 until writers).map { w =>
+      new Thread(() => {
+        val lake = LakeTable.load(spark, dir)
+        (0 until commitsEach).foreach { k =>
+          var done = false
+          while (!done)
+            try {
+              val s = lake.commit(Nil, Set.empty, properties = Map("writer" -> s"$w-$k"))
+              if (won.putIfAbsent(s.version, s"$w-$k") != null) twice.add(s.version)
+              done = true
+            } catch { case e: IllegalStateException
+                if e.getMessage.startsWith("concurrent commit") => () }
+        }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(twice.isEmpty, s"versions committed twice: ${twice.asScala.mkString(",")}")
+    val lake = LakeTable.load(spark, dir)
+    assert(lake.currentVersion == 1L + writers * commitsEach)
+    assert(won.size == writers * commitsEach)
+    won.asScala.foreach { case (v, id) =>
+      assert(lake.snapshot(v).properties("writer") == id, s"version $v was replaced")
+    }
+    assert(!Files.list(Paths.get(dir, "_meta")).iterator.asScala
+      .exists(_.getFileName.toString.startsWith(".tmp-")), "temp manifests left behind")
+  }
+
+  test("a commit onto an existing version file fails and leaves that file intact") {
+    val dir = SparkTestBase.tmpDir("exists")
+    val lake = LakeTable.create(spark, dir, Transcripts.spec(numBuckets = 2))
+    // another writer's manifest for version 1, published before ours
+    val v1 = Paths.get(dir, "_meta", f"v${1L}%020d.json")
+    val theirs = Files.readAllBytes(v1)
+    val e = intercept[IllegalStateException](
+      LakeTable.create(spark, dir, Transcripts.spec(numBuckets = 4)))
+    assert(e.getMessage.startsWith("concurrent commit"))
+    assert(java.util.Arrays.equals(Files.readAllBytes(v1), theirs))
+    assert(lake.snapshot().numBuckets == 2)
+  }
 }
