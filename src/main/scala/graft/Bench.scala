@@ -104,7 +104,7 @@ object Bench {
   /** Replay the `nBatches` pre-materialized WAL segments into a fresh lake
     * table; returns wall seconds (read + fold + merge + commit). */
   private def replay(spark: SparkSession, walDir: String, nBatches: Int,
-                     tableDir: String, salts: Int): Double = {
+                     tableDir: String): Double = {
     import spark.implicits._
     val lake = LakeTable.create(spark, tableDir,
       Transcripts.spec(numBuckets = 64))
@@ -114,7 +114,7 @@ object Bench {
       val batch = spark.read
         .schema(graft.model.ChangeEvent.schema)
         .parquet(f"$walDir/seg-$b%05d").as[graft.model.ChangeEvent]
-      Replay.applyBatch(lake, batch, mapping, b, salts)
+      Replay.applyBatch(lake, batch, mapping, b)
     }
     (System.nanoTime() - t0) / 1e9
   }
@@ -127,9 +127,6 @@ object Bench {
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "300000").toLong
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_BENCH_BATCHES", "2").toInt
-    // salts=0 = the shipped default (Catalyst fold, map-side combine);
-    // the typed ord-range-salted fold is benchable via GRAFT_SALTS>=1
-    val salts = sys.env.getOrElse("GRAFT_SALTS", "0").toInt
     val coresPerExec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CORES", "2").toInt
     val execMem = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXEC_MEM", "6g")
     val workerMemMb = sys.env.getOrElse("SPARK_GRAFT_BENCH_WORKER_MB", "8192").toInt
@@ -182,9 +179,9 @@ object Bench {
           try {
             runId += 1
             val ctrl = replay(s, s"$work/wal-warm", nBatches,
-              s"$work/warm-$level-$runId", salts) // JIT warmup + noise probe
+              s"$work/warm-$level-$runId") // JIT warmup + noise probe
             result = (ctrl,
-              replay(s, s"$work/wal", nBatches, s"$work/t-$level-$runId", salts))
+              replay(s, s"$work/wal", nBatches, s"$work/t-$level-$runId"))
           } finally s.stop()
         }
       }
@@ -299,7 +296,7 @@ object Bench {
     def arr(xs: Seq[Double]): String = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     def rawSpread(xs: Seq[Double]): Double = xs.max / xs.min
     val json =
-      s"""{"metric":"cdc_replay_events_per_sec","value":${epsHi.round},"unit":"events/sec","queries":$qs,"sf":"$sfDir","scaling":{"events":$events,"batches":$nBatches,"salts":$salts,"runs_per_level":$runs,"extra_samples":$extras,"executors_lo":$loExec,"executors_hi":$hiExec,"cores_per_executor":$coresPerExec,"executors_seen_lo":${execSeen.getOrElse("lo", loExec)},"executors_seen_hi":${execSeen.getOrElse("hi", hiExec)},"master_lo":"$loMaster","master_hi":"$hiMaster","samples_sec_lo":${arr(losRaw)},"samples_sec_hi":${arr(hisRaw)},"controls_sec_lo":${arr(ctrlLo)},"controls_sec_hi":${arr(ctrlHi)},"control_min_sec":${f"$ctrlMin%.2f"},"control_ratio_at_min_lo":${f"$ctrlRatioAtMinLo%.2f"},"control_ratio_at_min_hi":${f"$ctrlRatioAtMinHi%.2f"},"sec_lo":${f"$tLo%.2f"},"sec_hi":${f"$tHi%.2f"},"sec_lo_median":${f"$tLoMed%.2f"},"sec_hi_median":${f"$tHiMed%.2f"},"spread_lo":${f"${rawSpread(losRaw)}%.2f"},"spread_hi":${f"${rawSpread(hisRaw)}%.2f"},"eps_lo":${epsLo.round},"eps_hi":${epsHi.round},"efficiency":${f"$eff%.3f"},"efficiency_median":${f"$effMed%.3f"},"spread_warning":$spreadWarning,"guard_spread_fired":$spreadFired,"guard_eff_floor_fired":$effFloorFired,"guard_budget_sec":$budgetSec,"guard_budget_exhausted":$budgetExhausted,"efficiency_suspect":$efficiencySuspect},"query_suite_total_sec":${f"${queries.map(_._2).sum}%.2f"}}"""
+      s"""{"metric":"cdc_replay_events_per_sec","value":${epsHi.round},"unit":"events/sec","queries":$qs,"sf":"$sfDir","scaling":{"events":$events,"batches":$nBatches,"salts":0,"runs_per_level":$runs,"extra_samples":$extras,"executors_lo":$loExec,"executors_hi":$hiExec,"cores_per_executor":$coresPerExec,"executors_seen_lo":${execSeen.getOrElse("lo", loExec)},"executors_seen_hi":${execSeen.getOrElse("hi", hiExec)},"master_lo":"$loMaster","master_hi":"$hiMaster","samples_sec_lo":${arr(losRaw)},"samples_sec_hi":${arr(hisRaw)},"controls_sec_lo":${arr(ctrlLo)},"controls_sec_hi":${arr(ctrlHi)},"control_min_sec":${f"$ctrlMin%.2f"},"control_ratio_at_min_lo":${f"$ctrlRatioAtMinLo%.2f"},"control_ratio_at_min_hi":${f"$ctrlRatioAtMinHi%.2f"},"sec_lo":${f"$tLo%.2f"},"sec_hi":${f"$tHi%.2f"},"sec_lo_median":${f"$tLoMed%.2f"},"sec_hi_median":${f"$tHiMed%.2f"},"spread_lo":${f"${rawSpread(losRaw)}%.2f"},"spread_hi":${f"${rawSpread(hisRaw)}%.2f"},"eps_lo":${epsLo.round},"eps_hi":${epsHi.round},"efficiency":${f"$eff%.3f"},"efficiency_median":${f"$effMed%.3f"},"spread_warning":$spreadWarning,"guard_spread_fired":$spreadFired,"guard_eff_floor_fired":$effFloorFired,"guard_budget_sec":$budgetSec,"guard_budget_exhausted":$budgetExhausted,"efficiency_suspect":$efficiencySuspect},"query_suite_total_sec":${f"${queries.map(_._2).sum}%.2f"}}"""
     // Record provenance: every run lands in its OWN timestamped file and
     // never overwrites an earlier one — a cited record must keep existing
     // (the round-4 defect: a later noisy run clobbered BENCH_LOCAL.json and

@@ -43,7 +43,7 @@ object Demo {
         // WAL segments on disk -> Structured Streaming foreachBatch merge
         Gen.writeLog(spark, cfg, s"$dir/wal", nBatches)
         graft.streaming.CdcStream.runAvailable(spark, s"$dir/wal/seg-*",
-          s"$dir/ckpt", Seq(graft.streaming.CdcStream.Route(mapping, lake)), salts = 0)
+          s"$dir/ckpt", Seq(graft.streaming.CdcStream.Route(mapping, lake)))
         println(s"stream drained: snapshot=v${lake.currentVersion}")
       case "history" =>
         import spark.implicits._
@@ -58,7 +58,7 @@ object Demo {
         (0 until nBatches).foreach { b =>
           val lo = b * per; val hi = math.min(numEvents, lo + per)
           val batch = spark.range(lo, hi, 1, 8).map(id => Gen.mkEvent(id, cfg))
-          Replay.applyBatch(lake, batch, mapping, batchId = b, salts = 0)
+          Replay.applyBatch(lake, batch, mapping, batchId = b)
           println(s"batch $b applied: events=[${lo}..${hi}) snapshot=v${lake.currentVersion}")
         }
     }

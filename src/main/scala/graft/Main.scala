@@ -101,10 +101,10 @@ object Main {
     val orchestrator =
       if (cfg.drain) {
         Orchestrator.runAvailable(spark, cfg.mapFile, cfg.targetsRoot,
-          specs, cfg.checkpointRoot, salts = cfg.salts)
+          specs, cfg.checkpointRoot)
         None
       } else Some(Orchestrator.runContinuous(spark, cfg.mapFile,
-        cfg.targetsRoot, specs, cfg.checkpointRoot, salts = cfg.salts,
+        cfg.targetsRoot, specs, cfg.checkpointRoot,
         maxFilesPerTrigger = cfg.maxFilesPerTrigger,
         trigger = org.apache.spark.sql.streaming.Trigger
           .ProcessingTime(cfg.triggerMs)))

@@ -41,13 +41,13 @@ object Probe {
     // warmup
     val lakeW = LakeTable.create(spark, s"$work/tw", graft.model.Transcripts.spec(numBuckets = 64))
     val b0 = spark.read.schema(graft.model.ChangeEvent.schema).parquet(f"$work/wal/seg-00000").as[graft.model.ChangeEvent]
-    graft.operators.Replay.applyBatch(lakeW, b0, mapping, 0, salts = sys.env.getOrElse("GRAFT_SALTS","0").toInt)
+    graft.operators.Replay.applyBatch(lakeW, b0, mapping, 0)
     val tAll = System.nanoTime()
     (0 until nB).foreach { b =>
       val t0 = System.nanoTime()
       val batch = spark.read.schema(graft.model.ChangeEvent.schema)
         .parquet(f"$work/wal/seg-$b%05d").as[graft.model.ChangeEvent]
-      graft.operators.Replay.applyBatch(lake, batch, mapping, b, salts = sys.env.getOrElse("GRAFT_SALTS","0").toInt)
+      graft.operators.Replay.applyBatch(lake, batch, mapping, b)
       println(f"[probe] batch $b: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     println(f"[probe] total: ${(System.nanoTime() - tAll) / 1e9}%.2f s cores=$cores events=$events")

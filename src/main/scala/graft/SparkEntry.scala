@@ -23,8 +23,7 @@ object SparkEntry {
     gen.Gen.writeLog(spark, cfg, s"$dir/wal", 4)
     val lake = LakeTable.create(spark, s"$dir/transcripts", Transcripts.spec())
     CdcStream.runAvailable(spark, s"$dir/wal/seg-*", s"$dir/ckpt",
-      Seq(CdcStream.Route(TableMapping("transcripts", "transcripts"), lake)),
-      salts = 0)
+      Seq(CdcStream.Route(TableMapping("transcripts", "transcripts"), lake)))
     lake.read().orderBy("conv_id", "turn_idx")
   }
 

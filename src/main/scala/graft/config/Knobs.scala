@@ -10,7 +10,7 @@ package graft.config
   * boot by [[ProcessConfig]] when the process entry point (`graft.Main`)
   * runs — so `--compact-file-cap` / `compact_file_cap` / the env var all
   * steer the SAME threshold in every reader: the inline compaction inside
-  * `Replay.mergeApply`, the signature-store merge, the admin compact
+  * `Replay.mergeApplyDeferred`, the signature-store merge, the admin compact
   * endpoint's default, and Main's periodic maintenance loop.
   */
 object Knobs {

@@ -34,7 +34,6 @@ final case class ProcessConfig(
     jwtKey: Option[String] = None, // admin auth secret; None = dev mode
     master: String = "local[*]",
     shufflePartitions: Int = 32,
-    salts: Int = 0,
     maxFilesPerTrigger: Int = 1,
     triggerMs: Long = 250L,
     drain: Boolean = false, // true = drain available WAL once and exit
@@ -62,7 +61,7 @@ object ProcessConfig {
 
   private val keys = Seq("map_file", "targets_root", "checkpoint_root",
     "specs_file", "admin_port", "metrics_port", "jwt_key", "master",
-    "shuffle_partitions", "salts", "max_files_per_trigger", "trigger_ms",
+    "shuffle_partitions", "max_files_per_trigger", "trigger_ms",
     "drain", "maintenance_interval_sec", "vacuum_retain",
     "compact_file_cap", "sync_rate", "sync_burst")
 
@@ -133,7 +132,7 @@ object ProcessConfig {
       "GRAFT_CANDIDATE_CAP", "GRAFT_METRICS_DIR",
       "GRAFT_ZONE_STATS", "GRAFT_CALIBRATE",
       "GRAFT_MASTER", "GRAFT_AQE", "GRAFT_WORK_BASE", "GRAFT_PLANS_FULL",
-      "GRAFT_SALTS", "GRAFT_CC_COLLECT_CAP", "GRAFT_CC_DEBUG",
+      "GRAFT_CC_COLLECT_CAP", "GRAFT_CC_DEBUG",
       "GRAFT_BOILER_DF", "GRAFT_PACK_BLOCKS")
     // renamed/retired knobs: still recognized (no "unrecognized" warning,
     // which would be misleading) but called out explicitly — a deployment
@@ -173,7 +172,6 @@ object ProcessConfig {
       jwtKey = opt("jwt_key"),
       master = str("master", dflt.master),
       shufflePartitions = int("shuffle_partitions", dflt.shufflePartitions),
-      salts = int("salts", dflt.salts),
       maxFilesPerTrigger = int("max_files_per_trigger", dflt.maxFilesPerTrigger),
       triggerMs = get("trigger_ms").map(_.toLong).getOrElse(dflt.triggerMs),
       drain = bool("drain", dflt.drain),

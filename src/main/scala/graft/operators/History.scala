@@ -2,8 +2,7 @@ package graft.operators
 
 import graft.lake.{LakeTable, LineageEntry}
 import graft.model.{ChangeEvent, TableMapping}
-import graft.streaming.CdcStream
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -120,9 +119,7 @@ object History {
   def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
                  mapping: TableMapping, batchId: Long,
                  epochKey: String = "commit-epoch"): Boolean = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    Replay.tuneSession(spark)
+    Replay.tuneSession(events.sparkSession)
 
     if (batchId <= lake.snapshot().properties.getOrElse(epochKey, "-1").toLong)
       return false
@@ -137,66 +134,20 @@ object History {
     val envSchema = mapping.sourceSchema.getOrElse(payloadEnv)
     val routed = Replay.filterTransform(routed0, mapping, envSchema)
 
-    locally {
-      // ONE stats pass over the batch (map-side partial agg, tiny result)
-      // yields R-detection, emptiness, per-sid lineage and the per-batch op
-      // counters — the same single-aggregation shape as Replay.applyBatch
-      // (three separate passes cost three scans at micro-batch cadence)
-      def collectStats(): Array[(String, String, Long, Long, Long, Long)] =
-        routed.toDF().select("sid", "op", "lsn", "seq")
-          .groupBy("sid", "op")
-          .agg(min("lsn").as("lo"), max("lsn").as("hi"), count(lit(1)).as("n"),
-            max(Replay.eventOrdCol).as("mo"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5)))
-
-      // OVERLAP the stats job with the window fold (guide §2.6 — the same
-      // independent-job overlap as Replay.applyBatch): the fold plan is
-      // built optimistically against the CURRENT schema and its persist +
-      // touched-bucket pass runs while the stats job computes; the stats
-      // result is consumed BEFORE anything is written — an R message or a
-      // DML-empty batch (both rare) ABORTS the optimistic merge with zero
-      // side effects and the sequential path below redoes it against the
-      // evolved schema. The stats job is forked as in Replay.applyBatch.
-      // GRAFT_OVERLAP=0 restores the sequential order.
-      var stats: Array[(String, String, Long, Long, Long, Long)] = null
-      if (!sys.env.get("GRAFT_OVERLAP").contains("0")) {
-        val statsJob = CdcStream.fork(spark.sparkContext, "graft-stats")(collectStats())
-        val merged =
-          try tryMerge(lake, routed, batchId, epochKey,
-            () => statsJob.join(), rHandled = false)
-          catch { case e: Throwable => statsJob.cancel(); throw e }
-        if (merged) return true
-        stats = statsJob.join() // aborted: R message or DML-empty batch
-      } else stats = collectStats()
-
-      // R-message schema evolution, before the apply (north rule) — same
-      // evolve-then-merge contract as clone mode; the R rows themselves are
-      // a bounded-small collect, taken only when the stats saw one
-      if (stats.exists(_._2 == "R")) {
-        val rels = routed.filter(col("op") === "R").collect().map(_.after).toSeq
-        Replay.evolveSchema(lake, rels)
-      }
-
-      if (!stats.exists(s => s._2 == "I" || s._2 == "U" || s._2 == "D")) {
-        lake.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
-        return true
-      }
-
-      tryMerge(lake, routed, batchId, epochKey, () => stats, rHandled = true)
-    }
+    // the stats∥merge protocol shared with clone mode (Replay.overlapStats)
+    Replay.overlapStats(lake, routed, batchId, epochKey)(
+      tryMerge(lake, routed, batchId, epochKey, _, _))
   }
 
   /** The fold + merge + write + commit body. Consumes `getStats` only
-    * AFTER the fold's touched-bucket pass ran (so a deferred stats job
+    * AFTER the fold's touched-bucket pass ran (so the forked stats job
     * overlaps it) and BEFORE anything is written. Returns false — having
     * written nothing — when the stats reveal an R message (`rHandled` =
-    * false) or a DML-empty batch; the caller then handles both
-    * sequentially and retries with `rHandled = true`. */
+    * false) or a DML-empty batch; Replay.overlapStats then handles both
+    * and retries with `rHandled = true`. */
   private def tryMerge(lake: LakeTable, routed: Dataset[ChangeEvent],
                        batchId: Long, epochKey: String,
-                       getStats: () => Array[(String, String, Long, Long, Long, Long)],
+                       getStats: () => Replay.BatchStats,
                        rHandled: Boolean): Boolean = {
     locally {
       val snap0 = lake.snapshot()
@@ -239,7 +190,7 @@ object History {
       // consume it before anything is written
       val stats = getStats()
       if (!rHandled && stats.exists(_._2 == "R")) return false
-      val dml = stats.filter(s => s._2 == "I" || s._2 == "U" || s._2 == "D")
+      val dml = stats.filter(s => Replay.isDml(s._2))
       if (dml.isEmpty) return false
 
       val target = lake.read(buckets = Some(touched)).alias("t")
@@ -256,7 +207,7 @@ object History {
       // session) — two separate observations deadlocked on exactly that.
       val closing = col("x.__closeT").isNotNull && isOpen
       // SHUFFLE_HASH on the batch-bounded close-instruction side (same
-      // rationale as Replay.mergeApply: skip both sort legs of the SMJ)
+      // rationale as Replay.mergeApplyDeferred: skip both sort legs of the SMJ)
       val updatedTarget = target.join(cdf.alias("x").hint("shuffle_hash"),
           joinCond, "left_outer")
         .select(schema.fields.map { f =>

@@ -3,7 +3,7 @@ package graft.operators
 import graft.lake.{LakeTable, LineageEntry}
 import graft.model._
 import graft.streaming.CdcStream
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,15 +21,19 @@ import org.apache.spark.sql.types._
   *   lake table (W1-W3) -> atomic snapshot commit carrying epoch + LSN
   *   watermark + lineage (A1).
   *
-  * Two equivalent fold strategies (cross-validated by tests + oracle):
-  *   - [[foldToXfDF]] (default, salts = 0): the fold decomposed into
-  *     per-column conditional aggregates — whole-stage codegen, map-side
-  *     partial combine (the pre-merge local reduce for hot keys);
-  *   - [[foldToXf]] (salts >= 1): the typed Xf fold with explicit
-  *     contiguous-ord-range salting — the algebraic reference path.
-  * The per-key Xf transformer is bit-equivalent to the reference's
-  * sequential apply (see XfSpec), so last-write-wins convergence holds
-  * under any partitioning.
+  * One fold, [[foldToXfDF]]: the per-key [[Xf]] fold decomposed into
+  * per-column conditional aggregates over one key-partitioned window —
+  * whole-stage codegen, no object (de)serialization. [[Xf]] stays the
+  * executable spec it is tested against (CoverageSpec, XfSpec); the Xf
+  * transformer is bit-equivalent to the reference's sequential apply, so
+  * last-write-wins convergence holds under any partitioning.
+  *
+  * The fold is NOT skew-safe per key: its only exchange is
+  * `hashpartitioning(key)` BEFORE the window, and both aggregates run
+  * after it (`plans/r07/cdc_replay_clone_after.txt`, `replay-fold-batch0`),
+  * so all of one hot key's ops land in one task. BASELINE.md's Zipf-8 run
+  * (15.0 -> 12.1 s) stayed fast because the hot conversation spreads over
+  * its turn keys, not because of a map-side combine.
   */
 object Replay {
 
@@ -37,7 +41,7 @@ object Replay {
     * session (idempotent, runtime-settable SQL confs only).
     *
     * canChangeCachedPlanOutputPartitioning: every merge path persists its
-    * batch-bounded fold (`mergeApply`'s xdf, the signature fold, the label
+    * batch-bounded fold (`mergeApplyDeferred`'s xdf, the signature fold, the label
     * kernels' pinned frames). With the flag off (Spark's default, kept for
     * plan-stability of long-lived caches) the cached plan materializes at
     * the static shuffle-partition count, so every downstream pass over a
@@ -86,10 +90,6 @@ object Replay {
     * (sub 1) at identical (lsn, seq). */
   final case class KeyedOp(key: Seq[String], lsn: Long, ord: Long,
                            op: String, after: Map[String, String])
-
-  final case class KeyXf(key: Seq[String], maxLsn: Long,
-                         absentExists: Boolean, onAbsent: Map[String, String],
-                         presentKind: Int, onPresent: Map[String, String])
 
   @inline private def packOrd(lsn: Long, seq: Int, sub: Int): Long =
     (lsn << 20) | (seq.toLong << 1) | sub.toLong // seq < 2^19, sub in {0,1}
@@ -238,7 +238,8 @@ object Replay {
   // R2: key extraction + PK-update normalization
   // ---------------------------------------------------------------------
 
-  /** Normalize one event into keyed DML ops. PK-updates (old_kind "K",
+  /** Normalize one event into keyed DML ops — the typed twin of
+    * [[normalizeDF]], kept for StateApply's per-key state store. PK-updates (old_kind "K",
     * `streamer/process_clone.go:48-77`) become delete(oldKey) +
     * insert(newKey) with sub-ordering preserved; replica-identity-full
     * (old_kind "O") takes the whole old row as the key. NOTE (documented
@@ -268,65 +269,13 @@ object Replay {
   }
 
   // ---------------------------------------------------------------------
-  // Salted two-phase fold (the skew strategy)
-  // ---------------------------------------------------------------------
-
-  /** Fold all ops of a batch to one transformer per key.
-    *
-    * Phase A salts by contiguous `ord` range (NOT by hash — Xf composition
-    * is associative but not commutative, so each salt must hold a
-    * contiguous run) and folds locally; phase B composes the <= `salts`
-    * partials per key in range order. A hot conversation's events thus
-    * spread over `salts` reducers before the single per-key compose. */
-  def foldToXf(ops: Dataset[KeyedOp], salts: Int,
-               ordRange: Option[(Long, Long)] = None): Dataset[KeyXf] = {
-    val spark = ops.sparkSession
-    import spark.implicits._
-
-    def foldRun(key: Seq[String], run: Iterator[KeyedOp]): (Seq[String], Long, Xf) = {
-      val sorted = run.toArray.sortBy(_.ord)
-      var xf = Xf.identity
-      var maxLsn = Long.MinValue
-      sorted.foreach { o =>
-        xf = xf.andThen(Xf.ofOp(o.op, o.after))
-        if (o.lsn > maxLsn) maxLsn = o.lsn
-      }
-      (key, maxLsn, xf)
-    }
-
-    val folded: Dataset[(Seq[String], Long, Xf)] =
-      if (salts <= 1) ops.groupByKey(_.key).mapGroups((k, it) => foldRun(k, it))
-      else {
-        val (lo, hi) = ordRange.getOrElse {
-          val Row(l: Long, h: Long) = ops.select(min($"ord"), max($"ord")).head()
-          (l, h)
-        }
-        val span = math.max(1L, hi - lo + 1)
-        ops.groupByKey(o => (o.key, ((o.ord - lo).toDouble * salts / span).toInt))
-          .mapGroups { (ks: (Seq[String], Int), it: Iterator[KeyedOp]) =>
-            val (_, maxLsn, xf) = foldRun(ks._1, it)
-            (ks._1, ks._2, maxLsn, xf)
-          }
-          .groupByKey(_._1)
-          .mapGroups { (k, it) =>
-            val parts = it.toArray.sortBy(_._2) // compose in range order
-            val xf = parts.foldLeft(Xf.identity)((acc, p) => acc.andThen(p._4))
-            (k, parts.map(_._3).max, xf)
-          }
-      }
-    folded.map { case (k, maxLsn, xf) =>
-      KeyXf(k, maxLsn, xf.absentExists, xf.onAbsent, xf.presentKind, xf.onPresent)
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // Catalyst-native fold (default): the Xf fold decomposed into per-column
+  // Catalyst-native fold: the Xf fold decomposed into per-column
   // conditional aggregates — no object (de)serialization, whole-stage
-  // codegen end to end, and partial (map-side) aggregation gives the
-  // pre-merge local reduce for hot keys natively.
+  // codegen end to end. The aggregates run after the key exchange, so
+  // there is no map-side pre-reduce for hot keys (see the class doc).
   //
-  // Derivation (provably equal to the sequential Xf fold; cross-checked
-  // against the typed path + the DuckDB oracle):
+  // Derivation (provably equal to the sequential Xf fold; checked against
+  // Xf.fold by CoverageSpec's property and against the DuckDB oracle):
   //   dl  = max ord of D ops          (segment boundary; null = no delete)
   //   fi  = min ord of I ops > dl     (the insert that creates the row)
   //   live = {op at fi} ∪ {U ops with ord > fi}
@@ -364,10 +313,10 @@ object Replay {
         col("h.op").as("op"), col("h.after").as("after"))
   }
 
-  /** Fold normalized op rows to one KeyXf-shaped row per key — the
-    * Catalyst twin of [[foldToXf]]. One key-partitioned window pass (two
-    * unbounded window aggs share the sort) + one hash aggregation with
-    * map-side combine. */
+  /** Fold normalized op rows to one row per key carrying the key's [[Xf]]
+    * (`key, maxLsn, absentExists, onAbsent, presentKind, onPresent`). One
+    * key-partitioned window pass (two unbounded window aggs share the sort)
+    * + one aggregation over the same partitioning — no second exchange. */
   def foldToXfDF(ops: DataFrame, payloadCols: Seq[String]): DataFrame = {
     // NOTE an A/B (round 2) of pre-projecting the value map to typed
     // (value, present) column pairs before the exchange measured ~7%
@@ -435,25 +384,17 @@ object Replay {
   /** Merge per-key transformers into the table: full-outer join on the
     * (null-safe) merge key over touched buckets only, then pure Catalyst
     * column expressions realize insert / TOAST-coalescing update / delete
-    * — no UDF in the apply path. `keyXfs` is KeyXf-shaped: either
-    * `foldToXf(...).toDF()` (typed salted path) or [[foldToXfDF]]. */
-  def mergeApply(lake: LakeTable, keyXfs: DataFrame, batchId: Long,
-                 lineage: Seq[LineageEntry],
-                 lsnHighWatermark: Long,
-                 extraProps: Map[String, String] = Map.empty,
-                 epochKey: String = "commit-epoch",
-                 metricsRows: Seq[(Long, String, String, String, Long)] = Nil): Map[String, Long] =
-    mergeApplyDeferred(lake, keyXfs, batchId, epochKey,
-      () => Some(CommitInfo(lineage, lsnHighWatermark, extraProps, metricsRows))).get
-
-  /** [[mergeApply]] with the commit-time extras DEFERRED: `commitInfo` is
-    * invoked after the fold + touched-bucket pass has executed and BEFORE
-    * anything is written; returning None aborts the merge with no side
-    * effects (nothing written or committed, the fold cache released).
-    * This is what lets [[applyBatch]] overlap its stats job with the fold
-    * job (guide §2.6): the stats result is only needed at commit time —
-    * unless it reveals an R message or an empty batch, in which case the
-    * abort path discards the optimistically-computed fold. */
+    * — no UDF in the apply path. `keyXfs` is the output of [[foldToXfDF]]
+    * (one [[Xf]] per key).
+    *
+    * The commit-time extras are DEFERRED: `commitInfo` is invoked after
+    * the fold + touched-bucket pass has executed and BEFORE anything is
+    * written; returning None aborts the merge with no side effects
+    * (nothing written or committed, the fold cache released). This is what
+    * lets [[overlapStats]] run the stats job alongside the fold job: the
+    * stats result is only needed at commit time — unless it reveals an R
+    * message or an empty batch, in which case the abort path discards the
+    * optimistically-computed fold. */
   def mergeApplyDeferred(lake: LakeTable, keyXfs: DataFrame, batchId: Long,
                          epochKey: String,
                          commitInfo: () => Option[CommitInfo]): Option[Map[String, Long]] = {
@@ -677,6 +618,61 @@ object Replay {
   // applyBatch: the foreachBatch unit (one destination transaction, W9)
   // ---------------------------------------------------------------------
 
+  /** Per-(sid, op) stats of one routed batch: (sid, op, min lsn, max lsn,
+    * event count, max [[eventOrdCol]]). */
+  type BatchStats = Array[(String, String, Long, Long, Long, Long)]
+
+  private[operators] def isDml(op: String): Boolean = op == "I" || op == "U" || op == "D"
+
+  /** The stats∥merge protocol shared by clone/append ([[applyBatch]]) and
+    * history (History.applyBatch) mode — the idempotent-sink epoch commit:
+    *
+    *  1. ONE stats aggregation over the routed batch (map-side partial
+    *     agg, tiny result) yields lineage, metrics, emptiness and R-message
+    *     detection, forked onto its own thread with the caller's batch context
+    *     (job group, batch id), so a query stop cancels it too;
+    *  2. meanwhile `merge(getStats, rHandled = false)` runs optimistically
+    *     against the CURRENT schema and consumes `getStats()` only after
+    *     its fold executed and before anything is written; it returns false
+    *     — having written nothing — when the stats reveal an R message or a
+    *     DML-empty batch. A merge failure cancels only the stats job;
+    *  3. on abort: R messages evolve the schema first (north rule), a
+    *     DML-empty batch commits the epoch alone (restart skip-logic stays
+    *     monotone), and otherwise the merge is redone with `rHandled`. */
+  private[operators] def overlapStats(lake: LakeTable, routed: Dataset[ChangeEvent],
+                                      batchId: Long, epochKey: String)(
+      merge: (() => BatchStats, Boolean) => Boolean): Boolean = {
+    def collectStats(): BatchStats =
+      timed("stats")(routed.toDF().select("sid", "op", "lsn", "seq")
+        .groupBy("sid", "op")
+        .agg(min("lsn").as("lo"), max("lsn").as("hi"), count(lit(1)).as("n"),
+          max(eventOrdCol).as("mo"))
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))))
+
+    val statsJob = CdcStream.fork(routed.sparkSession.sparkContext, "graft-stats")(collectStats())
+    val merged =
+      try merge(() => statsJob.join(), false)
+      catch { case e: Throwable => statsJob.cancel(); throw e }
+    if (merged) return true
+    val stats = statsJob.join() // aborted: R message or DML-empty batch
+
+    // the R rows themselves are a bounded-small collect, taken only when
+    // the stats saw one
+    if (stats.exists(_._2 == "R")) {
+      val rels = routed.filter(col("op") === "R").collect().map(_.after).toSeq
+      evolveSchema(lake, rels)
+    }
+    if (!stats.exists(s => isDml(s._2))) {
+      lake.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
+      return true
+    }
+    if (!merge(() => stats, true))
+      throw new IllegalStateException("merge aborted on a DML batch with R handled")
+    true
+  }
+
   /** Apply one micro-batch of raw change events for one table mapping.
     * Idempotent: if the lake's commit-epoch already covers `batchId` the
     * batch is skipped (exactly-once on restart — the analog of the
@@ -685,11 +681,8 @@ object Replay {
     */
   def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
                  mapping: TableMapping, batchId: Long,
-                 salts: Int = 0,
                  epochKey: String = "commit-epoch"): Boolean = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    tuneSession(spark)
+    tuneSession(events.sparkSession)
 
     val committed = lake.snapshot().properties.getOrElse(epochKey, "-1").toLong
     if (batchId <= committed) return false // already applied before a crash
@@ -705,137 +698,58 @@ object Replay {
     val envSchema = mapping.sourceSchema.getOrElse(lake.schema)
 
     // P1 row filter + P2 column transform (CEL analog), shared with
-    // history mode — see filterTransform
+    // history mode — see filterTransform. NOT persisted: the batch is
+    // consumed twice (stats pass + fold), but a vectorized parquet re-scan
+    // of the micro-batch is cheaper than the columnar cache build
+    // (dictionary/RLE compressibility scans showed up as a top CPU sink in
+    // thread profiles) — and it avoids pinning executor memory at
+    // 10^10-event scale.
     val transformed: Dataset[ChangeEvent] =
       filterTransform(routed0, mapping, envSchema)
-
     val appendMode = mapping.mode == TableMode.Append
-    // NOT persisted: the batch is consumed twice (stats pass + fold), but a
-    // vectorized parquet re-scan of the micro-batch is cheaper than the
-    // columnar cache build (dictionary/RLE compressibility scans showed up
-    // as a top CPU sink in thread profiles) — and it avoids pinning
-    // executor memory at 10^10-event scale.
-    val cached = transformed
-    locally {
-      // ONE stats pass over the batch (map-side partial agg, tiny result)
-      // yields lineage, metrics, the salt ord-range, emptiness, and
-      // R-message detection — instead of five separate jobs, which at
-      // micro-batch cadence would dominate wall time.
-      def collectStats(): Array[(String, String, Long, Long, Long, Long)] =
-        timed("stats")(cached.toDF().select("sid", "op", "lsn", "seq")
-          .groupBy("sid", "op")
-          .agg(min("lsn").as("lo"), max("lsn").as("hi"), count(lit(1)).as("n"),
-            max(eventOrdCol).as("mo"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5))))
 
-      /** Commit-time extras from the stats rows. None when the batch folds
-        * to nothing, or (unless `rHandled`) carries an R message — both
-        * need the sequential handling below BEFORE any write. */
-      def commitInfoOf(stats: Array[(String, String, Long, Long, Long, Long)],
-                       rHandled: Boolean = false): Option[CommitInfo] = {
-        val dml = stats.filter(s => s._2 != "R" && s._2 != "T")
-        if ((!rHandled && stats.exists(_._2 == "R")) || dml.isEmpty) return None
-        val lin = dml.groupBy(_._1).map { case (sid, ss) =>
-          LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
-        }.toSeq
-        // metrics (A3, the Prometheus-counter analog `streamer/metrics.go:
-        // 11-53`): cumulative received-op counters by op code, carried as
-        // snapshot properties so they commit atomically with the data
-        val prev = lake.snapshot().properties
-        val metricProps = dml.groupBy(_._2).map { case (op, ss) =>
-          val k = s"metrics-ops-$op"
-          k -> (prev.getOrElse(k, "0").toLong + ss.map(_._5).sum).toString
-        } ++ {
-          // event-granular applied watermark (see eventOrdCol), keyed per
-          // EPOCH KEY — i.e. per (stream, mapping), like the epoch itself:
-          // two mappings sharing one target advance independent watermarks,
-          // so one route's commit can never floor the other route's
-          // unapplied events out of a healing catch-up replay
-          val k = s"applied-ord-$epochKey"
-          Map(k -> math.max(dml.map(_._6).max,
-            prev.getOrElse(k, "-1").toLong).toString)
-        }
-        val opRows = dml.toSeq.sortBy(r => (r._1, r._2)).map { case (sid, op, _, _, n, _) =>
-          (batchId, sid, "op", op, n) }
-        Some(CommitInfo(lin, lin.map(_.maxLsn).max, metricProps, opRows))
+    /** Commit-time extras from the stats rows. None when the batch folds
+      * to nothing, or (unless `rHandled`) carries an R message — both
+      * need the sequential handling in [[overlapStats]] BEFORE any write. */
+    def commitInfoOf(stats: BatchStats, rHandled: Boolean): Option[CommitInfo] = {
+      val dml = stats.filter(s => isDml(s._2))
+      if ((!rHandled && stats.exists(_._2 == "R")) || dml.isEmpty) return None
+      val lin = dml.groupBy(_._1).map { case (sid, ss) =>
+        LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
+      }.toSeq
+      // metrics (A3, the Prometheus-counter analog `streamer/metrics.go:
+      // 11-53`): cumulative received-op counters by op code, carried as
+      // snapshot properties so they commit atomically with the data
+      val prev = lake.snapshot().properties
+      val metricProps = dml.groupBy(_._2).map { case (op, ss) =>
+        val k = s"metrics-ops-$op"
+        k -> (prev.getOrElse(k, "0").toLong + ss.map(_._5).sum).toString
+      } ++ {
+        // event-granular applied watermark (see eventOrdCol), keyed per
+        // EPOCH KEY — i.e. per (stream, mapping), like the epoch itself:
+        // two mappings sharing one target advance independent watermarks,
+        // so one route's commit can never floor the other route's
+        // unapplied events out of a healing catch-up replay
+        val k = s"applied-ord-$epochKey"
+        Map(k -> math.max(dml.map(_._6).max,
+          prev.getOrElse(k, "-1").toLong).toString)
       }
+      val opRows = dml.toSeq.sortBy(r => (r._1, r._2)).map { case (sid, op, _, _, n, _) =>
+        (batchId, sid, "op", op, n) }
+      Some(CommitInfo(lin, lin.map(_.maxLsn).max, metricProps, opRows))
+    }
 
-      def foldCatalyst(): DataFrame = {
-        val snap = lake.snapshot()
-        val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
-        val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
-        foldToXfDF(normalizeDF(cached.toDF(), mergeKey, appendMode), payloadCols)
-      }
-
-      // Fast path (salts == 0, the default Catalyst fold): OVERLAP the
-      // stats job with the fold job (guide §2.6 — independent jobs need
-      // not serialize). The fold plan is built optimistically against the
-      // CURRENT schema and its touched-bucket pass runs while the stats
-      // job computes; the stats result is only consumed at commit time —
-      // unless it reveals an R message or an empty batch (both rare), in
-      // which case the merge ABORTS before writing anything and the
-      // sequential path below redoes it against the evolved schema.
-      // The stats job is forked with the caller's batch context (job
-      // group, batch id), so a query stop cancels it too; a fold failure
-      // cancels only the stats job. GRAFT_OVERLAP=0 restores the fully
-      // sequential order (A/Bs).
-      var stats: Array[(String, String, Long, Long, Long, Long)] = null
-      if (salts <= 0 && !sys.env.get("GRAFT_OVERLAP").contains("0")) {
-        val statsJob = CdcStream.fork(spark.sparkContext, "graft-stats")(collectStats())
-        val merged =
-          try {
-            val xfs = foldCatalyst()
-            explain(s"replay-fold-batch$batchId", xfs)
-            mergeApplyDeferred(lake, xfs, batchId, epochKey,
-              () => commitInfoOf(statsJob.join()))
-          } catch { case e: Throwable =>
-            statsJob.cancel(); throw e
-          }
-        if (merged.isDefined) return true
-        stats = statsJob.join() // aborted: R message or empty batch
-      } else stats = collectStats()
-
-      val dml = stats.filter(s => s._2 != "R" && s._2 != "T")
-
-      // schema evolution from R messages, before the merge (north rule)
-      if (stats.exists(_._2 == "R")) {
-        val rels = cached.filter(col("op") === "R").collect().map(_.after).toSeq
-        evolveSchema(lake, rels)
-      }
-
-      if (dml.isEmpty) {
-        // still advance the epoch so restart skip-logic stays monotone
-        lake.commit(Nil, Set.empty,
-          properties = Map(epochKey -> batchId.toString))
-        return true
-      }
-
-      // fold strategy: salts == 0 (default) -> the Catalyst-native fold
-      // (codegen, map-side combine; here = the post-evolution redo of an
-      // aborted overlap merge); salts >= 1 -> the typed Xf fold with
-      // explicit ord-range salting (the algebraic reference path; both are
-      // cross-validated by tests and the oracle harness)
-      val xfs: DataFrame =
-        if (salts <= 0) foldCatalyst()
-        else {
-          val snap = lake.snapshot()
-          val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
-          val ops = cached.flatMap(e => normalize(e, mergeKey, appendMode))
-          // salt range derived from the already-known lsn span: ord is
-          // monotone in (lsn, seq, sub), so lsn bounds bound ord
-          val loOrd = packOrd(dml.map(_._3).min, 0, 0)
-          val hiOrd = packOrd(dml.map(_._4).max + 1, 0, 0) - 1
-          foldToXf(ops, salts, Some((loOrd, hiOrd))).toDF()
-        }
-
-      val ci = commitInfoOf(stats, rHandled = true).getOrElse(
-        throw new IllegalStateException("unreachable: dml checked non-empty"))
+    // the fold plan is built against the schema as of this call: the
+    // optimistic merge sees the current schema, its redo the evolved one
+    overlapStats(lake, transformed, batchId, epochKey) { (getStats, rHandled) =>
+      val snap = lake.snapshot()
+      val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
+      val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
+      val xfs = foldToXfDF(normalizeDF(transformed.toDF(), mergeKey, appendMode),
+        payloadCols)
       explain(s"replay-fold-batch$batchId", xfs)
-      mergeApply(lake, xfs, batchId, ci.lineage, ci.lsnHighWatermark,
-        ci.extraProps, epochKey, ci.metricsRows)
-      true
+      mergeApplyDeferred(lake, xfs, batchId, epochKey,
+        () => commitInfoOf(getStats(), rHandled)).isDefined
     }
   }
 }

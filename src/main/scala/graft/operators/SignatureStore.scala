@@ -160,7 +160,7 @@ object SignatureStore {
       val bucketOf = pmod(xxhash64(col("doc_id")), lit(snap.numBuckets))
       // ONE stats pass yields the touched buckets AND the batch's doc_id
       // bounds — zone predicates on the signature read, mirroring
-      // Replay.mergeApply: a narrow-key batch (incremental steady state)
+      // Replay.mergeApplyDeferred: a narrow-key batch (incremental steady state)
       // prunes whole signature files inside touched buckets instead of
       // rewriting every file of every touched bucket per micro-batch
       // (which at 10^10 docs would rewrite nearly the whole companion
@@ -196,7 +196,7 @@ object SignatureStore {
         zoneExemptBuckets = fragmented)
 
       // SHUFFLE_HASH on the batch-bounded fold (same rationale as the doc
-      // merge in Replay.mergeApply: skip both sort legs of the default SMJ)
+      // merge in Replay.mergeApplyDeferred: skip both sort legs of the default SMJ)
       val j = target.alias("t").join(f.alias("x").hint("shuffle_hash"),
         col("t.doc_id") <=> col("x.doc_id"), "full_outer")
       val fNull = col("x.presentKind").isNull

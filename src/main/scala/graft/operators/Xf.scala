@@ -25,13 +25,14 @@ package graft.operators
   *       TO_ROW(m)    — the row's identity was wiped (a D occurred) and it
   *                      ends up as the concrete row m
   *
-  * Composition of these representations is closed and **associative**, so a
-  * micro-batch can be folded with salting + local reduce (pre-reduce per
-  * (key, contiguous-LSN-range salt), then compose the per-salt partials in
-  * range order) — the skew strategy the north rule requires — while
-  * remaining bit-identical to the reference's sequential apply. It is NOT
-  * commutative: segments must be composed in (lsn, seq) order, which the
-  * contiguous-range salting preserves.
+  * Composition of these representations is closed and **associative**
+  * (XfSpec: any contiguous segmentation folds to the same transformer) and
+  * bit-identical to the reference's sequential apply. It is NOT
+  * commutative: segments must be composed in (lsn, seq) order.
+  *
+  * This is the executable spec of the engine's one fold,
+  * `Replay.foldToXfDF`, which computes the same per-key transformer with
+  * Catalyst aggregates; CoverageSpec checks the two agree row by row.
   *
   * Maps use the ChangeEvent text encoding: key absent = column untouched,
   * key -> null = genuine SQL NULL.

@@ -196,7 +196,6 @@ object CdcStream {
             eventLogGlob: String,
             checkpointDir: String,
             routes: Seq[Route],
-            salts: Int = 0,
             maxFilesPerTrigger: Int = 1,
             trigger: Trigger = Trigger.AvailableNow(),
             format: String = "parquet"): StreamingQuery = {
@@ -262,7 +261,7 @@ object CdcStream {
             if (r.mapping.mode == TableMode.History)
               History.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)
             else
-              Replay.applyBatch(r.lake, events, r.mapping, batchId, salts, r.epochKey)
+              Replay.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)
           }
           r.signatures.filter(_ => r.mapping.mode != TableMode.History)
             .foreach { s =>
@@ -296,9 +295,9 @@ object CdcStream {
     * tests and batch-style backfills). */
   def runAvailable(spark: SparkSession, eventLogGlob: String,
                    checkpointDir: String, routes: Seq[Route],
-                   salts: Int = 0, maxFilesPerTrigger: Int = 1,
+                   maxFilesPerTrigger: Int = 1,
                    format: String = "parquet"): Unit = {
-    val q = start(spark, eventLogGlob, checkpointDir, routes, salts,
+    val q = start(spark, eventLogGlob, checkpointDir, routes,
       maxFilesPerTrigger, Trigger.AvailableNow(), format)
     q.awaitTermination()
   }

@@ -56,7 +56,6 @@ object Orchestrator {
             specs: Map[String, TableSpec],
             checkpointRoot: String,
             backfill: (String, String) => Option[DataFrame] = (_, _) => None,
-            salts: Int = 0,
             maxFilesPerTrigger: Int = 1,
             trigger: org.apache.spark.sql.streaming.Trigger =
               org.apache.spark.sql.streaming.Trigger.AvailableNow()): Seq[Handle] = {
@@ -302,7 +301,7 @@ object Orchestrator {
         java.nio.file.Files.write(markerFile,
           healedRoutes.map(_.mapping.target).sorted.mkString("\n").getBytes("UTF-8"))
         val q = CdcStream.start(spark, u.url, ckptDir.toString, healedRoutes,
-          salts = salts, maxFilesPerTrigger = maxFilesPerTrigger,
+          maxFilesPerTrigger = maxFilesPerTrigger,
           trigger = trigger, format = u.format.getOrElse("parquet"))
         Handle(db.name, u.url, u.sid, q)
       }
@@ -319,10 +318,9 @@ object Orchestrator {
     * the batch-style entry point (tests, driver queries, catch-up runs). */
   def runAvailable(spark: SparkSession, mapPath: String, targetsRoot: String,
                    specs: Map[String, TableSpec], checkpointRoot: String,
-                   backfill: (String, String) => Option[DataFrame] = (_, _) => None,
-                   salts: Int = 0): Seq[Handle] = {
+                   backfill: (String, String) => Option[DataFrame] = (_, _) => None): Seq[Handle] = {
     val hs = start(spark, MapConfig.load(mapPath), targetsRoot, specs,
-      checkpointRoot, backfill, salts)
+      checkpointRoot, backfill)
     hs.foreach(_.query.awaitTermination())
     hs
   }
@@ -409,13 +407,12 @@ object Orchestrator {
   def runContinuous(spark: SparkSession, mapPath: String, targetsRoot: String,
                     specs: Map[String, TableSpec], checkpointRoot: String,
                     backfill: (String, String) => Option[DataFrame] = (_, _) => None,
-                    salts: Int = 0,
                     maxFilesPerTrigger: Int = 1,
                     pollMs: Long = 250,
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.ProcessingTime(250)): ContinuousHandle = {
     def boot(): Seq[Handle] = start(spark, MapConfig.load(mapPath), targetsRoot,
-      specs, checkpointRoot, backfill, salts, maxFilesPerTrigger, trigger)
+      specs, checkpointRoot, backfill, maxFilesPerTrigger, trigger)
     val stopFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
     def mtime: Long = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(mapPath)).toMillis
@@ -466,7 +463,6 @@ object Orchestrator {
   def runWatched(spark: SparkSession, mapPath: String, targetsRoot: String,
                  specs: Map[String, TableSpec], checkpointRoot: String,
                  backfill: (String, String) => Option[DataFrame] = (_, _) => None,
-                 salts: Int = 0,
                  pollMs: Long = 200,
                  until: () => Boolean): Int = {
     var cycles = 0
@@ -481,8 +477,7 @@ object Orchestrator {
         lastMtime = mt
         dbMap = MapConfig.load(mapPath)
       }
-      val hs = start(spark, dbMap, targetsRoot, specs, checkpointRoot,
-        backfill, salts)
+      val hs = start(spark, dbMap, targetsRoot, specs, checkpointRoot, backfill)
       hs.foreach(_.query.awaitTermination())
       cycles += 1
       if (!until()) Thread.sleep(pollMs)

@@ -155,7 +155,7 @@ object EventsCdc {
     * through the engine into a fresh lake table; returns the table. */
   def replay(spark: SparkSession, dir: String, mapping: TableMapping,
              tspec: TableSpec, pkUpdate: Boolean = false, sidMod: Int = 1,
-             routed: Boolean = false, salts: Int = 0): LakeTable = {
+             routed: Boolean = false): LakeTable = {
     val events = derive(spark, dir, pkUpdate, sidMod, routed)
     val tmp = Files.createTempDirectory("graft-q").toString
     val lake = LakeTable.create(spark, s"$tmp/t", tspec)
@@ -167,7 +167,7 @@ object EventsCdc {
       if (mapping.mode == TableMode.History)
         History.applyBatch(lake, batch, mapping, b)
       else
-        Replay.applyBatch(lake, batch, mapping, b, salts)
+        Replay.applyBatch(lake, batch, mapping, b)
     }
     lake
   }

@@ -3,7 +3,10 @@ package graft
 import graft.config.MapConfig
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec, Transcripts}
-import graft.operators.{Backfill, Replay}
+import graft.operators.{Backfill, Replay, Xf}
+import graft.verify.Oracle
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -217,24 +220,78 @@ class CoverageSpec extends AnyFunSuite {
     assert(lakeB.snapshot().properties("commit-epoch") == "1")
   }
 
-  test("fold strategies agree: Catalyst fold == typed salted Xf fold") {
+  test("Catalyst fold over two batches equals the sequential oracle") {
     import spark.implicits._
     val cfg = graft.gen.Gen.Config(numEvents = 30000L, numConvs = 120,
       turnsPerConv = 8, skew = 2.5, pPkUpdate = 0.15, pToast = 0.3, numSids = 2)
     val events = graft.gen.Gen.events(spark, cfg)
     val mapping = TableMapping("transcripts", "transcripts")
-    def run(salts: Int): Seq[String] = {
-      val dir = SparkTestBase.tmpDir(s"ab$salts")
-      val lake = LakeTable.create(spark, s"$dir/t", graft.model.Transcripts.spec())
-      // two batches so cross-batch present/absent transitions are hit
-      Replay.applyBatch(lake, events.filter(_.lsn <= 4000), mapping, 0, salts)
-      Replay.applyBatch(lake, events.filter(_.lsn > 4000), mapping, 1, salts)
-      lake.read().orderBy("conv_id", "turn_idx")
-        .collect().map(_.mkString("")).toSeq
+    val spec = Transcripts.spec()
+    val lake = LakeTable.create(spark, s"${SparkTestBase.tmpDir("fold2")}/t", spec)
+    // two batches so cross-batch present/absent transitions are hit
+    Replay.applyBatch(lake, events.filter(_.lsn <= 4000), mapping, 0)
+    Replay.applyBatch(lake, events.filter(_.lsn > 4000), mapping, 1)
+    val cols = spec.schema.fieldNames.toSeq
+    val got = lake.read().select(cols.map(c => col(c).cast("string")): _*)
+      .collect().map(r => cols.indices.map(r.getString).mkString("\u0001")).sorted.toSeq
+    val local = (0L until cfg.numEvents).map(graft.gen.Gen.mkEvent(_, cfg))
+    val want = Oracle.canonical(Oracle.replay(local, spec, mapping), cols)
+      .map(_._2.mkString("\u0001")).sorted
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("property: each foldToXfDF row equals Xf.fold over the key's ops in ord order") {
+    import org.scalacheck.{Gen => G, Prop, Test => Check}
+    import spark.implicits._
+    val payload = Seq("a", "b", "c")
+    val keys = (0 until 12).map(i => s"k$i")
+    // genuine NULLs ride as key -> null; an update omits its unchanged
+    // (TOAST) columns; a PK-update splits into D(old key) + I(new key)
+    val value = G.frequency(1 -> G.const(null: String), 3 -> G.alphaLowerStr.map(_.take(4)))
+    def values(cs: Seq[String]) = G.listOfN(cs.size, value).map(cs.zip(_).toMap)
+    val toasted = G.someOf(payload).flatMap(cs => values(cs.toSeq))
+    val none = Map.empty[String, String]
+    val event = for {
+      k <- G.oneOf(keys)
+      k2 <- G.oneOf(keys)
+      full <- values(payload)
+      part <- toasted
+      ev <- G.frequency(
+        3 -> G.const(("I", "none", none, full + ("k" -> k))),
+        4 -> G.const(("U", "none", none, part + ("k" -> k))),
+        2 -> G.const(("D", "K", Map("k" -> k), none)),
+        2 -> G.const(("U", "K", Map("k" -> k), part + ("k" -> k2))))
+    } yield ev
+    val batch = G.choose(0, 300).flatMap(G.listOfN(_, event)).map(_.zipWithIndex.map {
+      case ((op, oldKind, before, after), i) =>
+        ChangeEvent(i / 3 + 1L, i % 3, op, "t", "s0", oldKind, before, after)
+    })
+    def keyOf(r: Row): List[String] = r.getSeq[String](r.fieldIndex("key")).toList
+    def asMap(r: Row, c: String): Map[String, String] =
+      Option(r.getMap[String, String](r.fieldIndex(c))).map(_.toMap).getOrElse(none)
+
+    val prop = Prop.forAllNoShrink(batch) { evs =>
+      val ops = Replay.normalizeDF(evs.toDS().toDF(), Seq("k"), appendMode = false)
+      val want = ops.collect().toSeq
+        .groupBy(keyOf)
+        .map { case (k, rs) =>
+          val run = rs.sortBy(_.getAs[Long]("ord"))
+          k -> (run.map(_.getAs[Long]("lsn")).max,
+            // the fold carries payload columns only; the merge takes the
+            // key columns from the key itself
+            Xf.fold(run.iterator.map(r =>
+              (r.getAs[String]("op"), asMap(r, "after").filter(e => payload.contains(e._1))))))
+        }
+      val got = Replay.foldToXfDF(ops, payload).collect().map { r =>
+        keyOf(r) -> (r.getAs[Long]("maxLsn"),
+          Xf(r.getAs[Boolean]("absentExists"), asMap(r, "onAbsent"),
+            r.getAs[Int]("presentKind"), asMap(r, "onPresent")))
+      }.toMap
+      Prop(got == want) :| (got.toSet diff want.toSet).mkString("differs: ", "; ", "")
     }
-    val sql = run(0)
-    val typed = run(4)
-    assert(sql.nonEmpty && sql == typed)
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20)
+      .withInitialSeed(org.scalacheck.rng.Seed(20L)), prop)
+    assert(res.passed, res.status)
   }
 
   test("watermark calibration guard: streaming result matches the batch-(N-2) model") {

@@ -3,8 +3,10 @@ package graft
 import graft.gen.Gen
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, Transcripts}
-import graft.operators.History
+import graft.operators.{History, Replay}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SCD2 history mode vs a sequential oracle implementing the reference's
@@ -124,36 +126,44 @@ class HistorySpec extends AnyFunSuite {
       .startsWith("9999-01-01")) // still open
   }
 
-  test("history DML-empty batch aborts the optimistic merge: epoch-only commit") {
-    import spark.implicits._
-    val spec = Transcripts.spec(numBuckets = 2)
-      .copy(schema = History.historySchema(Transcripts.schema))
-    val lake = LakeTable.create(spark, SparkTestBase.tmpDir("histempty"), spec)
-    def full(turn: Int, text: String) =
-      Map("conv_id" -> "c1", "turn_idx" -> turn.toString, "role" -> "user",
-        "text" -> text, "tool" -> null, "ts" -> "2024-01-01 00:00:00")
-    History.applyBatch(lake, spark.createDataset(Seq(
-      ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "v1")))),
-      mapping, 0)
-    val filesAfter0 = lake.snapshot().files.map(_.path).toSet
-    // batch 1 routes but folds to nothing (R only): the overlapped merge
-    // must abort with ZERO side effects and the sequential path commits
-    // the epoch alone — same files, advanced epoch
-    assert(History.applyBatch(lake, spark.createDataset(Seq(
-      ChangeEvent(2, 0, "R", "transcripts", "s0", "none", Map.empty, Map(
-        "conv_id" -> "string", "turn_idx" -> "int", "role" -> "string",
-        "text" -> "string", "tool" -> "string", "ts" -> "timestamp",
-        "tokens" -> "int")))),
-      mapping, 1))
-    val snap = lake.snapshot()
-    assert(snap.properties("commit-epoch") == "1")
-    assert(snap.files.map(_.path).toSet == filesAfter0,
-      "a DML-empty batch must not rewrite any data file")
-    assert(lake.schema.fieldNames.contains("tokens"), "the R still evolves")
-    // idempotence: replaying the covered batch is a no-op
-    assert(!History.applyBatch(lake, spark.createDataset(Seq(
-      ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "dup")))),
-      mapping, 1))
+  // one stats∥merge protocol (Replay.overlapStats) serves both modes, so
+  // both take the same abort path
+  Seq[(String, StructType, (LakeTable, Dataset[ChangeEvent], Long) => Boolean)](
+    ("history", History.historySchema(Transcripts.schema),
+      (l, b, id) => History.applyBatch(l, b, mapping, id)),
+    ("clone", Transcripts.schema,
+      (l, b, id) => Replay.applyBatch(l, b, mapping, id))
+  ).foreach { case (mode, schema, applyBatch) =>
+    test(s"$mode DML-empty batch aborts the optimistic merge: epoch-only commit") {
+      import spark.implicits._
+      val spec = Transcripts.spec(numBuckets = 2).copy(schema = schema)
+      val lake = LakeTable.create(spark, SparkTestBase.tmpDir(s"${mode}empty"), spec)
+      def full(turn: Int, text: String) =
+        Map("conv_id" -> "c1", "turn_idx" -> turn.toString, "role" -> "user",
+          "text" -> text, "tool" -> null, "ts" -> "2024-01-01 00:00:00")
+      applyBatch(lake, spark.createDataset(Seq(
+        ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "v1")))),
+        0)
+      val filesAfter0 = lake.snapshot().files.map(_.path).toSet
+      // batch 1 routes but folds to nothing (R only): the overlapped merge
+      // must abort with ZERO side effects and the sequential path commits
+      // the epoch alone — same files, advanced epoch
+      assert(applyBatch(lake, spark.createDataset(Seq(
+        ChangeEvent(2, 0, "R", "transcripts", "s0", "none", Map.empty, Map(
+          "conv_id" -> "string", "turn_idx" -> "int", "role" -> "string",
+          "text" -> "string", "tool" -> "string", "ts" -> "timestamp",
+          "tokens" -> "int")))),
+        1))
+      val snap = lake.snapshot()
+      assert(snap.properties("commit-epoch") == "1")
+      assert(snap.files.map(_.path).toSet == filesAfter0,
+        "a DML-empty batch must not rewrite any data file")
+      assert(lake.schema.fieldNames.contains("tokens"), "the R still evolves")
+      // idempotence: replaying the covered batch is a no-op
+      assert(!applyBatch(lake, spark.createDataset(Seq(
+        ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "dup")))),
+        1))
+    }
   }
 
   test("history timestamps roll seq >= 1000 milliseconds into seconds") {

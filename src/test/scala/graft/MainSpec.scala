@@ -18,15 +18,15 @@ class MainSpec extends AnyFunSuite {
   test("config layering: flags > env > settings file > defaults; typos fail") {
     val dir = SparkTestBase.tmpDir("pcfg")
     Files.writeString(Paths.get(s"$dir/settings.json"),
-      """{"map_file":"from-file.json","admin_port":"1234","salts":"3"}""")
+      """{"map_file":"from-file.json","admin_port":"1234","vacuum_retain":"3"}""")
     val cfg = ProcessConfig.resolve(
       Seq("--config", s"$dir/settings.json", "--admin-port=7777",
         "--metrics-port", "9090"),
-      env = Map("GRAFT_SALTS" -> "5", "GRAFT_MAP_FILE" -> "from-env.json"))
+      env = Map("GRAFT_VACUUM_RETAIN" -> "5", "GRAFT_MAP_FILE" -> "from-env.json"))
     assert(cfg.mapFile == "from-env.json", "env beats file")
     assert(cfg.adminPort == 7777, "flag beats file")
     assert(cfg.metricsPort == 9090, "--k v form works")
-    assert(cfg.salts == 5, "env beats file for salts")
+    assert(cfg.vacuumRetain == 5, "env beats file for vacuum_retain")
     assert(cfg.targetsRoot == "targets", "untouched keys keep defaults")
     // the compaction cap resolves through the same layering (env name =
     // the knob Replay/SignatureStore honor), and the retired occupancy-cap
@@ -43,6 +43,11 @@ class MainSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](
       ProcessConfig.resolve(Seq("--config", s"$dir/bad.json")))
       .getMessage.contains("map_fil"))
+    // the retired fold selector is an unknown key like any typo
+    Files.writeString(Paths.get(s"$dir/salts.json"), """{"salts":"3"}""")
+    assert(intercept[IllegalArgumentException](
+      ProcessConfig.resolve(Seq("--config", s"$dir/salts.json")))
+      .getMessage.contains("salts"))
   }
 
   test("TOML settings file: reference-style config, same keys + typo policy") {
@@ -120,9 +125,9 @@ class MainSpec extends AnyFunSuite {
       s"$dir/kuvasz-streamer.toml", "--admin-port=1")).adminPort == 1)
     // engine flat keys before the first section header coexist
     Files.writeString(Paths.get(s"$dir/mixed.toml"),
-      "salts = 2\n[app]\nmap_file = \"m.yaml\"\n")
+      "vacuum_retain = 2\n[app]\nmap_file = \"m.yaml\"\n")
     val mixed = ProcessConfig.resolve(Seq("--config", s"$dir/mixed.toml"))
-    assert(mixed.salts == 2 && mixed.mapFile == "m.yaml")
+    assert(mixed.vacuumRetain == 2 && mixed.mapFile == "m.yaml")
     // a reference file with a typo'd section key fails loudly
     Files.writeString(Paths.get(s"$dir/typo.toml"),
       "[app]\nmap_fil = \"m.yaml\"\n")

@@ -36,7 +36,7 @@ class ReplaySpec extends AnyFunSuite {
     Oracle.canonical(Oracle.replay(events, spec, mapping), columns)
 
   private def runAndCompare(cfg: Gen.Config, spec: TableSpec,
-                            mapping: TableMapping, salts: Int = 1,
+                            mapping: TableMapping,
                             nBatches: Int = 1): Unit = {
     val lake = LakeTable.create(spark, SparkTestBase.tmpDir("lake"), spec)
     val all = Gen.events(spark, cfg)
@@ -47,7 +47,7 @@ class ReplaySpec extends AnyFunSuite {
       // batch slice by id range == lsn-contiguous (ordered replay)
       val batch = all.filter(e => (e.lsn - 1) * cfg.txnSize + e.seq >= lo &&
         (e.lsn - 1) * cfg.txnSize + e.seq < hi)
-      Replay.applyBatch(lake, batch, mapping, batchId = b, salts = salts)
+      Replay.applyBatch(lake, batch, mapping, batchId = b)
     }
     val localEvents = (0L until n).map(id => Gen.mkEvent(id, cfg))
     val want = oracleCanonical(localEvents, spec, mapping, spec.schema.fieldNames.toSeq)
@@ -71,10 +71,10 @@ class ReplaySpec extends AnyFunSuite {
       Transcripts.spec(numBuckets = 8), mapping, nBatches = 4)
   }
 
-  test("e2e: hot-key skew with salted two-phase fold equals oracle") {
+  test("e2e: hot-key skew (Zipf 4.0) equals oracle") {
     runAndCompare(
       Gen.Config(numEvents = 30000, numConvs = 50, skew = 4.0, seed = 3),
-      Transcripts.spec(numBuckets = 8), mapping, salts = 8)
+      Transcripts.spec(numBuckets = 8), mapping)
   }
 
   test("e2e: multi-sid fan-in (sid joins the merge key)") {

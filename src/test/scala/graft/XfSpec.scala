@@ -6,9 +6,9 @@ import scala.util.Random
 
 /** The Xf algebra must reproduce the reference's sequential per-row apply
   * (insert-on-conflict-do-nothing / update-if-present-with-TOAST-override /
-  * delete) under ANY contiguous segmentation — that is what makes the
-  * salted two-phase reduce correct. Properties checked with seeded random
-  * event runs (deterministic). */
+  * delete) under ANY contiguous segmentation. Xf is the executable spec of
+  * the engine's fold (CoverageSpec checks `Replay.foldToXfDF` against it).
+  * Properties checked with seeded random event runs (deterministic). */
 class XfSpec extends AnyFunSuite {
 
   type Ev = (String, Map[String, String])
@@ -58,7 +58,7 @@ class XfSpec extends AnyFunSuite {
       val evs = List.fill(r.nextInt(16))(randEvent(r))
       val row = randAfter(r, full = true)
       val full = Xf.fold(evs.iterator)
-      val segSize = 1 + r.nextInt(5) // salted local-reduce shape
+      val segSize = 1 + r.nextInt(5)
       val composed = evs.grouped(segSize)
         .map(s => Xf.fold(s.iterator))
         .foldLeft(Xf.identity)(_ andThen _)
