@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.Gen
 import graft.lake.LakeTable
-import graft.model.{TableMapping, Transcripts}
+import graft.model.{TableMapping, TableMode, Transcripts}
 import graft.operators.Replay
 import org.apache.spark.sql.SparkSession
 
@@ -34,7 +34,9 @@ object Demo {
         Transcripts.spec().copy(schema = graft.operators.History.historySchema(Transcripts.schema))
       else Transcripts.spec()
     val lake = LakeTable.create(spark, s"$dir/transcripts", spec)
-    val mapping = TableMapping("transcripts", "transcripts")
+    val mapping0 = TableMapping("transcripts", "transcripts")
+    val mapping =
+      if (mode == "history") mapping0.copy(mode = TableMode.History) else mapping0
 
     val per = (numEvents + nBatches - 1) / nBatches
     val t0 = System.nanoTime()
@@ -45,14 +47,6 @@ object Demo {
         graft.streaming.CdcStream.runAvailable(spark, s"$dir/wal/seg-*",
           s"$dir/ckpt", Seq(graft.streaming.CdcStream.Route(mapping, lake)))
         println(s"stream drained: snapshot=v${lake.currentVersion}")
-      case "history" =>
-        import spark.implicits._
-        (0 until nBatches).foreach { b =>
-          val lo = b * per; val hi = math.min(numEvents, lo + per)
-          val batch = spark.range(lo, hi, 1, 8).map(id => Gen.mkEvent(id, cfg))
-          graft.operators.History.applyBatch(lake, batch, mapping, batchId = b)
-          println(s"history batch $b applied: events=[${lo}..${hi}) snapshot=v${lake.currentVersion}")
-        }
       case _ =>
         import spark.implicits._
         (0 until nBatches).foreach { b =>

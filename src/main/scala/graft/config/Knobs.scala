@@ -10,8 +10,10 @@ package graft.config
   * boot by [[ProcessConfig]] when the process entry point (`graft.Main`)
   * runs — so `--compact-file-cap` / `compact_file_cap` / the env var all
   * steer the SAME threshold in every reader: the inline compaction inside
-  * `Replay.mergeApplyDeferred`, the signature-store merge, the admin compact
-  * endpoint's default, and Main's periodic maintenance loop.
+  * `LakeTable.rewriteSet` (the rewrite set of the clone/append, signature
+  * and label merges; history merges pass no zones, so nothing to exempt),
+  * the admin compact endpoint's default, and Main's periodic maintenance
+  * loop.
   */
 object Knobs {
 

@@ -125,12 +125,11 @@ object ProcessConfig {
       }
 
     // the flag and file layers reject typos outright; env vars are shared
-    // with the engine's runtime knobs (GRAFT_TIMING, GRAFT_OCCUPANCY, ...),
+    // with the engine's runtime knobs (GRAFT_TIMING, GRAFT_METRICS_DIR, ...),
     // so an unrecognized GRAFT_* gets a loud WARNING instead of a hard
     // failure — a typo'd GRAFT_MAP_FIL must not silently fall back
-    val runtimeKnobs = Set("GRAFT_CONFIG", "GRAFT_TIMING", "GRAFT_OCCUPANCY",
-      "GRAFT_CANDIDATE_CAP", "GRAFT_METRICS_DIR",
-      "GRAFT_ZONE_STATS", "GRAFT_CALIBRATE",
+    val runtimeKnobs = Set("GRAFT_CONFIG", "GRAFT_TIMING",
+      "GRAFT_CANDIDATE_CAP", "GRAFT_METRICS_DIR", "GRAFT_CALIBRATE",
       "GRAFT_MASTER", "GRAFT_AQE", "GRAFT_WORK_BASE", "GRAFT_PLANS_FULL",
       "GRAFT_CC_COLLECT_CAP", "GRAFT_CC_DEBUG",
       "GRAFT_BOILER_DF", "GRAFT_PACK_BLOCKS")

@@ -114,16 +114,15 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   private def statCompare(dt: DataType)(a: String, b: String): Int =
     LakeTable.statCompare(dt)(a, b)
 
-  /** The files a (buckets, zones)-constrained scan must read: bucket
-    * pruning first, then zone-map pruning — a file survives unless some
-    * zone's [lo, hi] provably misses its recorded [min, max].
-    * `zoneExemptBuckets` skip the zone filter entirely (the merge uses
-    * this to force a full rewrite of over-fragmented buckets). */
-  private[graft] def selectFiles(version: Long = -1L,
+  /** The files a (buckets, zones)-constrained scan of snapshot `s` must
+    * read: bucket pruning first, then zone-map pruning — a file survives
+    * unless some zone's [lo, hi] provably misses its recorded [min, max].
+    * `zoneExemptBuckets` skip the zone filter entirely ([[rewriteSet]]'s
+    * fragmentation rule). */
+  private[graft] def selectFiles(s: Snapshot = snapshot(),
                                  buckets: Option[Set[Int]] = None,
                                  zones: Seq[Zone] = Nil,
                                  zoneExemptBuckets: Set[Int] = Set.empty): Seq[DataFile] = {
-    val s = snapshot(version)
     val want = buckets.getOrElse(null)
     val schema = s.schema
     s.files
@@ -148,12 +147,41 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * `zones` prunes by the per-file min/max zone maps; note the surviving
     * files may still contain rows outside the zone — apply the row-level
     * filter on the returned frame (pruning is an I/O optimization, not a
-    * predicate). */
+    * predicate). The manifest is resolved ONCE: its schema map and its
+    * file list belong to the same version even while commits land. */
   def read(version: Long = -1L, buckets: Option[Set[Int]] = None,
-           zones: Seq[Zone] = Nil,
-           zoneExemptBuckets: Set[Int] = Set.empty): DataFrame = {
+           zones: Seq[Zone] = Nil): DataFrame = {
     val s = snapshot(version)
-    val files = selectFiles(version, buckets, zones, zoneExemptBuckets)
+    scan(s, selectFiles(s, buckets, zones))
+  }
+
+  /** The target side of a copy-on-write merge over snapshot `snap`: the
+    * read of the `touched` buckets, zone-pruned by `zones`, and EXACTLY
+    * the paths that read scanned — the files the merge's commit removes. A
+    * zone-pruned file was neither read nor rewritten, so it stays live.
+    *
+    * Fragmentation cap (the zone-pruning trade-off closed): files a zone
+    * skips are not rewritten, so a bucket hit by many narrow-key batches
+    * accumulates small files. Once a touched bucket holds more than
+    * [[graft.config.Knobs.compactFileCap]] files, its zone pruning is
+    * disabled for this merge, so the whole bucket rewrites into O(1)
+    * files — inline compaction with write amplification bounded by the
+    * cap. */
+  def rewriteSet(snap: Snapshot, touched: Set[Int],
+                 zones: Seq[Zone]): (DataFrame, Set[String]) = {
+    val fragmented: Set[Int] =
+      if (zones.isEmpty) Set.empty
+      else {
+        val perBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size).toMap
+        touched.filter(b => perBucket.getOrElse(b, 0) > graft.config.Knobs.compactFileCap)
+      }
+    val files = selectFiles(snap, Some(touched), zones, fragmented)
+    (scan(snap, files), files.map(_.path).toSet)
+  }
+
+  /** `files` of snapshot `s`, each scanned with its stored schema and
+    * aligned to `s`'s current schema. */
+  private def scan(s: Snapshot, files: Seq[DataFile]): DataFrame = {
     val cur = s.schema
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur)
@@ -229,7 +257,6 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     // writers; the footer reader only needs open/seek
     c
   }
-  private val zoneStatsEnabled = !sys.env.get("GRAFT_ZONE_STATS").contains("0")
 
   /** Harvest per-column min/max from the parquet FOOTER (row-group
     * statistics — no data pages are read). This is how lake writers record
@@ -245,7 +272,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * => must scan" (the conservative default selectFiles already applies).
     */
   private def footerStats(p: Path, statCols: Map[String, DataType]): Map[String, ColStats] = {
-    if (statCols.isEmpty || !zoneStatsEnabled) return Map.empty
+    if (statCols.isEmpty) return Map.empty
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -322,7 +349,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     val over = snap.files.groupBy(_.bucket).filter(_._2.size > maxFilesPerBucket)
     if (over.isEmpty) return 0
     val buckets = over.keySet
-    val df = read(buckets = Some(buckets))
+    val df = scan(snap, over.values.flatten.toSeq)
       .withColumn("__bucket",
         pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
     val newFiles = writeDataFiles(df, snap.currentSchemaId)

@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.lake.{LakeTable, LineageEntry}
-import graft.model.{ChangeEvent, TableMapping}
+import graft.lake.LakeTable
+import graft.model.ChangeEvent
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,6 +27,12 @@ import org.apache.spark.sql.types._
   * Documented divergence: the reference stamps wall-clock `now()`
   * (non-reproducible); we derive t deterministically from (lsn, seq) so
   * replay is verifiable — same shape, reproducible values.
+  *
+  * Entry point: `Replay.applyBatch` with a History-mode mapping. It routes,
+  * filters and sets once for every mode, runs the shared stats∥merge
+  * protocol (`Replay.overlapStats`), and dispatches here only for the SCD2
+  * fold and merge body ([[tryMerge]]), which commits through the same
+  * `Replay.commitMerge` step as clone mode.
   */
 object History {
 
@@ -114,163 +120,115 @@ object History {
     (versions, closes, o)
   }
 
-  /** Apply one batch of events in history mode. Same idempotence and
-    * routing contract as Replay.applyBatch. */
-  def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
-                 mapping: TableMapping, batchId: Long,
-                 epochKey: String = "commit-epoch"): Boolean = {
-    Replay.tuneSession(events.sparkSession)
-
-    if (batchId <= lake.snapshot().properties.getOrElse(epochKey, "-1").toLong)
-      return false
-
-    val routed0 = events.filter(Replay.routeCond(mapping))
-    // P1 filter / P2 set over the decoded env, exactly as in clone mode —
-    // the reference applies CEL BEFORE dispatching to history apply
-    // (process_message.go:287-321). Env = the pre-evolution schema (CEL
-    // programs are compiled as of map-refresh, mapping_table.go:156-169).
-    val payloadEnv = StructType(
-      lake.schema.fields.filterNot(_.name.startsWith("kvsz_")))
-    val envSchema = mapping.sourceSchema.getOrElse(payloadEnv)
-    val routed = Replay.filterTransform(routed0, mapping, envSchema)
-
-    // the stats∥merge protocol shared with clone mode (Replay.overlapStats)
-    Replay.overlapStats(lake, routed, batchId, epochKey)(
-      tryMerge(lake, routed, batchId, epochKey, _, _))
-  }
-
-  /** The fold + merge + write + commit body. Consumes `getStats` only
+  /** History's merge body, run by Replay.applyBatch (which routes,
+    * filters and sets first) inside Replay.overlapStats: the SCD2 fold,
+    * the close-and-append merge over the touched buckets, the write, and
+    * the shared commit step (Replay.commitMerge). Calls `commitInfo` only
     * AFTER the fold's touched-bucket pass ran (so the forked stats job
-    * overlaps it) and BEFORE anything is written. Returns false — having
-    * written nothing — when the stats reveal an R message (`rHandled` =
-    * false) or a DML-empty batch; Replay.overlapStats then handles both
-    * and retries with `rHandled = true`. */
-  private def tryMerge(lake: LakeTable, routed: Dataset[ChangeEvent],
-                       batchId: Long, epochKey: String,
-                       getStats: () => Replay.BatchStats,
-                       rHandled: Boolean): Boolean = {
-    locally {
-      val snap0 = lake.snapshot()
-      val schema = snap0.schema
-      val mergeKey = (if (snap0.hasSid) Seq("sid") else Nil) ++ snap0.keyCols
+    * overlaps it) and BEFORE anything is written; returns false — having
+    * written nothing — when it yields None (an R message not yet handled,
+    * or a DML-empty batch). */
+  private[operators] def tryMerge(lake: LakeTable, routed: Dataset[ChangeEvent],
+                                  batchId: Long, epochKey: String,
+                                  commitInfo: () => Option[Replay.CommitInfo]): Boolean = {
+    val snap0 = lake.snapshot()
+    val schema = snap0.schema
+    val mergeKey = (if (snap0.hasSid) Seq("sid") else Nil) ++ snap0.keyCols
 
-      val (versions, closes0, foldedOps) = foldDF(routed.toDF(), mergeKey)
-      try {
-      val newTyped = versions.select(schema.fields.map { f =>
-        f.name match {
-          case "kvsz_start" => col("kvsz_start").cast(TimestampType).as(f.name)
-          case "kvsz_end" => col("kvsz_end").cast(TimestampType).as(f.name)
-          case "kvsz_deleted" => col("kvsz_deleted").as(f.name)
-          case n if mergeKey.contains(n) =>
-            element_at(col("key"), mergeKey.indexOf(n) + 1).cast(f.dataType).as(n)
-          case n => Replay.castText(element_at(col("vals"), n), f.dataType).as(n)
-        }
-      }.toIndexedSeq: _*)
-
-      val cdf = closes0.select(
-        (mergeKey.zipWithIndex.map { case (c, i) =>
-          element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
-        } ++ Seq(col("closeT").cast(TimestampType).as("__closeT"),
-          col("closeDel").as("__closeDel"))): _*)
-
-      // every op row is either a version or a closer, so the touched key
-      // set is ONE distinct over the persisted fold (the union of the two
-      // projections re-derived both sides)
-      val allKeysB = foldedOps.select(col("key")).distinct()
-        .select(
-          mergeKey.zipWithIndex.map { case (c, i) =>
-            element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
-          }: _*)
-      val bucketOf = pmod(xxhash64(snap0.bucketCols.map(c => col(s"__k_$c")): _*),
-        lit(snap0.numBuckets))
-      val touched = allKeysB.select(bucketOf.cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-
-      // the overlapped stats job has had the fold's wall time to finish;
-      // consume it before anything is written
-      val stats = getStats()
-      if (!rHandled && stats.exists(_._2 == "R")) return false
-      val dml = stats.filter(s => Replay.isDml(s._2))
-      if (dml.isEmpty) return false
-
-      val target = lake.read(buckets = Some(touched)).alias("t")
-      val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c")).reduce(_ && _)
-      val isOpen = col("t.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
-      // Merge-outcome counters observed on the UNION via marker columns
-      // (CollectMetrics — no extra pass): pre-existing open versions closed
-      // by this batch, soft deletes among them, new version rows — clone-
-      // mode parity for the reference's per-op result counters
-      // (`streamer/metrics.go:11-53`). ONE observation, attached to a node
-      // descending from the target side: inside foreachBatch the batch DF
-      // belongs to the micro-batch's cloned session, and an Observation
-      // registered there never sees the write (which executes on the lake's
-      // session) — two separate observations deadlocked on exactly that.
-      val closing = col("x.__closeT").isNotNull && isOpen
-      // SHUFFLE_HASH on the batch-bounded close-instruction side (same
-      // rationale as Replay.mergeApplyDeferred: skip both sort legs of the SMJ)
-      val updatedTarget = target.join(cdf.alias("x").hint("shuffle_hash"),
-          joinCond, "left_outer")
-        .select(schema.fields.map { f =>
-          f.name match {
-            case "kvsz_end" =>
-              when(closing, col("x.__closeT"))
-                .otherwise(col("t.kvsz_end")).as(f.name)
-            case "kvsz_deleted" =>
-              when(closing && col("x.__closeDel"),
-                lit(true)).otherwise(col("t.kvsz_deleted")).as(f.name)
-            case n => col(s"t.$n").as(n)
-          }
-        }.toIndexedSeq :+ closing.as("__closed") :+
-          (closing && col("x.__closeDel")).as("__softdel") :+
-          lit(false).as("__isnew"): _*)
-
-      val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
-      val merged = updatedTarget
-        .unionByName(newTyped
-          .withColumn("__closed", lit(false))
-          .withColumn("__softdel", lit(false))
-          .withColumn("__isnew", lit(true)))
-        .observe(obs,
-          sum(when(col("__closed"), 1L).otherwise(0L)).as("closed"),
-          sum(when(col("__softdel"), 1L).otherwise(0L)).as("soft_deleted"),
-          sum(when(col("__isnew"), 1L).otherwise(0L)).as("inserted"))
-        .drop("__closed", "__softdel", "__isnew")
-      val withBucket = merged.withColumn("__bucket",
-        pmod(xxhash64(snap0.bucketCols.map(col): _*), lit(snap0.numBuckets)))
-
-      Replay.explain(s"history-merge-batch$batchId", merged)
-      val newFiles = lake.writeDataFiles(withBucket, snap0.currentSchemaId)
-      val removed = snap0.files.filter(f => touched.contains(f.bucket)).map(_.path).toSet
-      // the write job ran -> the observation is available (an all-empty
-      // union observes its sums as null -> 0)
-      val m = obs.get.map { case (k, v) =>
-        k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
-      val lin = dml.groupBy(_._1).map { case (sid, ss) =>
-        LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
-      }.toSeq
-      lake.writeMetrics(s"$epochKey-$batchId",
-        dml.toSeq.sortBy(r => (r._1, r._2)).map { case (sid, op, _, _, n, _) =>
-          (batchId, sid, "op", op, n) } ++
-          m.toSeq.sortBy(_._1).map { case (k, v) =>
-            (batchId, null: String, "merge", k, v) })
-      // event-granular applied watermark (Replay.eventOrdCol), keyed per
-      // epoch key — per (stream, mapping), like the epoch itself — so a
-      // shared-target sibling route's commit can never floor this route's
-      // unapplied events out of a healing catch-up replay
-      val ordProps = {
-        val k = s"applied-ord-$epochKey"
-        Map(k -> math.max(dml.map(_._6).max,
-          snap0.properties.getOrElse(k, "-1").toLong).toString)
+    val (versions, closes0, foldedOps) = foldDF(routed.toDF(), mergeKey)
+    try {
+    val newTyped = versions.select(schema.fields.map { f =>
+      f.name match {
+        case "kvsz_start" => col("kvsz_start").cast(TimestampType).as(f.name)
+        case "kvsz_end" => col("kvsz_end").cast(TimestampType).as(f.name)
+        case "kvsz_deleted" => col("kvsz_deleted").as(f.name)
+        case n if mergeKey.contains(n) =>
+          element_at(col("key"), mergeKey.indexOf(n) + 1).cast(f.dataType).as(n)
+        case n => Replay.castText(element_at(col("vals"), n), f.dataType).as(n)
       }
-      lake.commit(newFiles, removed,
-        properties = ordProps ++ Map(
-          epochKey -> batchId.toString,
-          "lsn-high-watermark" -> math.max(
-            if (lin.isEmpty) -1L else lin.map(_.maxLsn).max,
-            snap0.properties.getOrElse("lsn-high-watermark", "-1").toLong).toString),
-        lineage = lin)
-      true
-      } finally foldedOps.unpersist(blocking = false)
+    }.toIndexedSeq: _*)
+
+    val cdf = closes0.select(
+      (mergeKey.zipWithIndex.map { case (c, i) =>
+        element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
+      } ++ Seq(col("closeT").cast(TimestampType).as("__closeT"),
+        col("closeDel").as("__closeDel"))): _*)
+
+    // every op row is either a version or a closer, so the touched key
+    // set is ONE distinct over the persisted fold (the union of the two
+    // projections re-derived both sides)
+    val allKeysB = foldedOps.select(col("key")).distinct()
+      .select(
+        mergeKey.zipWithIndex.map { case (c, i) =>
+          element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
+        }: _*)
+    val bucketOf = pmod(xxhash64(snap0.bucketCols.map(c => col(s"__k_$c")): _*),
+      lit(snap0.numBuckets))
+    val touched = allKeysB.select(bucketOf.cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+
+    // the overlapped stats job has had the fold's wall time to finish;
+    // consume it before anything is written
+    val ci = commitInfo() match {
+      case Some(c) => c
+      case None => return false // finally releases the fold cache
     }
+
+    // no zones: every version row of a touched key's bucket is rewritten
+    val (target0, removed) = lake.rewriteSet(snap0, touched, Nil)
+    val target = target0.alias("t")
+    val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c")).reduce(_ && _)
+    val isOpen = col("t.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
+    // Merge-outcome counters observed on the UNION via marker columns
+    // (CollectMetrics — no extra pass): pre-existing open versions closed
+    // by this batch, soft deletes among them, new version rows — clone-
+    // mode parity for the reference's per-op result counters
+    // (`streamer/metrics.go:11-53`). ONE observation, attached to a node
+    // descending from the target side: inside foreachBatch the batch DF
+    // belongs to the micro-batch's cloned session, and an Observation
+    // registered there never sees the write (which executes on the lake's
+    // session) — two separate observations deadlocked on exactly that.
+    val closing = col("x.__closeT").isNotNull && isOpen
+    // SHUFFLE_HASH on the batch-bounded close-instruction side (same
+    // rationale as Replay.mergeApplyDeferred: skip both sort legs of the SMJ)
+    val updatedTarget = target.join(cdf.alias("x").hint("shuffle_hash"),
+        joinCond, "left_outer")
+      .select(schema.fields.map { f =>
+        f.name match {
+          case "kvsz_end" =>
+            when(closing, col("x.__closeT"))
+              .otherwise(col("t.kvsz_end")).as(f.name)
+          case "kvsz_deleted" =>
+            when(closing && col("x.__closeDel"),
+              lit(true)).otherwise(col("t.kvsz_deleted")).as(f.name)
+          case n => col(s"t.$n").as(n)
+        }
+      }.toIndexedSeq :+ closing.as("__closed") :+
+        (closing && col("x.__closeDel")).as("__softdel") :+
+        lit(false).as("__isnew"): _*)
+
+    val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
+    val merged = updatedTarget
+      .unionByName(newTyped
+        .withColumn("__closed", lit(false))
+        .withColumn("__softdel", lit(false))
+        .withColumn("__isnew", lit(true)))
+      .observe(obs,
+        sum(when(col("__closed"), 1L).otherwise(0L)).as("closed"),
+        sum(when(col("__softdel"), 1L).otherwise(0L)).as("soft_deleted"),
+        sum(when(col("__isnew"), 1L).otherwise(0L)).as("inserted"))
+      .drop("__closed", "__softdel", "__isnew")
+    val withBucket = merged.withColumn("__bucket",
+      pmod(xxhash64(snap0.bucketCols.map(col): _*), lit(snap0.numBuckets)))
+
+    Replay.explain(s"history-merge-batch$batchId", merged)
+    val newFiles = lake.writeDataFiles(withBucket, snap0.currentSchemaId)
+    // the write job ran -> the observation is available (an all-empty
+    // union observes its sums as null -> 0)
+    val m = obs.get.map { case (k, v) =>
+      k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
+    Replay.commitMerge(lake, snap0, ci, batchId, epochKey, newFiles, removed, m)
+    true
+    } finally foldedOps.unpersist(blocking = false)
   }
 }

@@ -302,18 +302,11 @@ object LabelStore {
         }
         val zones = Seq(graft.lake.Zone("doc_id",
           lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-        val fileCap = graft.config.Knobs.compactFileCap
-        val perBucket = lsnap.files.groupBy(_.bucket).view.mapValues(_.size).toMap
-        val fragmented = touchedBuckets.filter(b =>
-          perBucket.getOrElse(b, 0) > fileCap)
-        val target = labels.read(buckets = Some(touchedBuckets), zones = zones,
-          zoneExemptBuckets = fragmented)
+        val (target, removed) = labels.rewriteSet(lsnap, touchedBuckets, zones)
         val out = target.join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
           .select(col("doc_id"), col("cluster_id"))
           .unionAll(diff.filter(col("cluster_id").isNotNull))
           .withColumn("__bucket", bucketOf)
-        val removed = labels.selectFiles(buckets = Some(touchedBuckets),
-          zones = zones, zoneExemptBuckets = fragmented).map(_.path).toSet
         labels.commit(labels.writeDataFiles(out, lsnap.currentSchemaId),
           removed, properties = Map(epochKey -> batchId.toString))
         lap("merge-write")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.lake.{LakeTable, LineageEntry}
+import graft.lake.{DataFile, LakeTable, LineageEntry, Snapshot}
 import graft.model._
 import graft.streaming.CdcStream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -149,11 +149,11 @@ object Replay {
     expr(rewritten.sql)
   }
 
-  /** P1 row filter + P2 column transform over the decoded row env — shared
-    * by clone/append ([[applyBatch]]) and history (History.applyBatch)
-    * modes, matching the reference's order: filter, then set, then mode
-    * dispatch (`process_message.go:287-321` — history tables get the same
-    * CEL stages before `process_history.go`).
+  /** P1 row filter + P2 column transform over the decoded row env — run
+    * once by [[applyBatch]] for every table mode, matching the reference's
+    * order: filter, then set, then mode dispatch
+    * (`process_message.go:287-321` — history tables get the same CEL
+    * stages before `process_history.go`).
     *
     * Filter: NULL result => keep, mirroring the reference's fail-open rule
     * (`process_message.go:116-135`) — e.g. a delete's old tuple carries
@@ -373,31 +373,72 @@ object Replay {
   // W1-W3: merge apply against the lake table
   // ---------------------------------------------------------------------
 
-  /** Commit-time extras of one merge, produced by the stats pass: per-sid
-    * lineage, the LSN high-watermark, cumulative-metric snapshot
-    * properties, and the per-batch metrics-sidecar rows. */
+  /** Commit bookkeeping of one batch, derived by [[overlapStats]] from the
+    * stats pass: per-sid lineage, the batch's received-op counts by op
+    * code, its max [[eventOrdCol]], and the per-(sid, op) metrics-sidecar
+    * rows. [[commitMerge]] turns it into snapshot properties. */
   final case class CommitInfo(lineage: Seq[LineageEntry],
-                              lsnHighWatermark: Long,
-                              extraProps: Map[String, String],
-                              metricsRows: Seq[(Long, String, String, String, Long)])
+                              opCounts: Map[String, Long],
+                              maxOrd: Long,
+                              opRows: Seq[(Long, String, String, String, Long)])
+
+  /** The one commit step of every merge body (clone/append here, history
+    * in History.tryMerge): the per-batch `_metrics` sidecar (`ci`'s op
+    * rows + the merge's observed `outcomes`), then the atomic snapshot
+    * commit. The sidecar goes FIRST: a crash between the two replays the
+    * batch and overwrites the same file (idempotent). The commit carries
+    * the epoch, the LSN high-watermark, the cumulative received-op
+    * counters `metrics-ops-<op>` (A3, the Prometheus-counter analog
+    * `streamer/metrics.go:11-53`), the event-granular applied watermark,
+    * the lineage, and the caller's `extraProps`. Cumulative values build
+    * on `snap`, the snapshot the merge read. */
+  private[operators] def commitMerge(lake: LakeTable, snap: Snapshot, ci: CommitInfo,
+                                     batchId: Long, epochKey: String,
+                                     newFiles: Seq[DataFile], removed: Set[String],
+                                     outcomes: Map[String, Long],
+                                     extraProps: Map[String, String] = Map.empty): Unit = {
+    lake.writeMetrics(s"$epochKey-$batchId",
+      ci.opRows ++ outcomes.toSeq.sortBy(_._1).map { case (k, v) =>
+        (batchId, null: String, "merge", k, v) })
+    val prev = snap.properties
+    val opProps = ci.opCounts.map { case (op, n) =>
+      val k = s"metrics-ops-$op"
+      k -> (prev.getOrElse(k, "0").toLong + n).toString
+    }
+    // event-granular applied watermark (see eventOrdCol), keyed per EPOCH
+    // KEY — i.e. per (stream, mapping), like the epoch itself: two mappings
+    // sharing one target advance independent watermarks, so one route's
+    // commit can never floor the other route's unapplied events out of a
+    // healing catch-up replay
+    val ordKey = s"applied-ord-$epochKey"
+    lake.commit(newFiles, removed,
+      properties = extraProps ++ opProps ++ Map(
+        epochKey -> batchId.toString,
+        ordKey -> math.max(ci.maxOrd, prev.getOrElse(ordKey, "-1").toLong).toString,
+        "lsn-high-watermark" -> math.max(ci.lineage.map(_.maxLsn).max,
+          prev.getOrElse("lsn-high-watermark", "-1").toLong).toString),
+      lineage = ci.lineage)
+  }
 
   /** Merge per-key transformers into the table: full-outer join on the
     * (null-safe) merge key over touched buckets only, then pure Catalyst
     * column expressions realize insert / TOAST-coalescing update / delete
     * — no UDF in the apply path. `keyXfs` is the output of [[foldToXfDF]]
-    * (one [[Xf]] per key).
+    * (one [[Xf]] per key). The target read and the files the commit
+    * removes come from ONE [[LakeTable.rewriteSet]] call.
     *
-    * The commit-time extras are DEFERRED: `commitInfo` is invoked after
-    * the fold + touched-bucket pass has executed and BEFORE anything is
+    * The commit bookkeeping is DEFERRED: `commitInfo` is invoked after the
+    * fold + touched-bucket pass has executed and BEFORE anything is
     * written; returning None aborts the merge with no side effects
-    * (nothing written or committed, the fold cache released). This is what
-    * lets [[overlapStats]] run the stats job alongside the fold job: the
-    * stats result is only needed at commit time — unless it reveals an R
-    * message or an empty batch, in which case the abort path discards the
-    * optimistically-computed fold. */
+    * (nothing written or committed, the fold cache released) and returns
+    * false. This is what lets [[overlapStats]] run the stats job alongside
+    * the fold job: the stats result is only needed at commit time — unless
+    * it reveals an R message or an empty batch, in which case the abort
+    * path discards the optimistically-computed fold. The commit itself is
+    * [[commitMerge]], carrying the `metrics-delete-miss` drift counter. */
   def mergeApplyDeferred(lake: LakeTable, keyXfs: DataFrame, batchId: Long,
                          epochKey: String,
-                         commitInfo: () => Option[CommitInfo]): Option[Map[String, Long]] = {
+                         commitInfo: () => Option[CommitInfo]): Boolean = {
     val spark = lake.spark
     val snap = lake.snapshot()
     val schema = snap.schema
@@ -441,7 +482,7 @@ object Replay {
     // before anything is written; None = abort (R message / empty batch)
     val ci = commitInfo() match {
       case Some(c) => c
-      case None => return None // finally releases the fold cache
+      case None => return false // finally releases the fold cache
     }
     val touched: Set[Int] = statRows.map(_.getInt(0)).toSet
     val zones: Seq[graft.lake.Zone] =
@@ -460,21 +501,7 @@ object Replay {
         }
       }
 
-    // Fragmentation cap (the zone-pruning trade-off closed): files a zone
-    // skips are NOT rewritten, so a bucket hit by many narrow-key batches
-    // accumulates small files. Once a touched bucket exceeds the cap, its
-    // zone pruning is disabled for this merge, so the whole bucket
-    // rewrites into O(1) files — inline compaction with write
-    // amplification bounded by the cap. (Knobs.compactFileCap — the
-    // GRAFT_COMPACT_FILE_CAP / --compact-file-cap layered knob, def. 8.)
-    val fileCap = graft.config.Knobs.compactFileCap
-    val perBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size).toMap
-    val fragmented: Set[Int] =
-      if (zones.isEmpty) Set.empty
-      else touched.filter(b => perBucket.getOrElse(b, 0) > fileCap)
-
-    val target = lake.read(buckets = Some(touched), zones = zones,
-      zoneExemptBuckets = fragmented)
+    val (target, removed) = lake.rewriteSet(snap, touched, zones)
     val t = target.alias("t")
     // SHUFFLE_HASH hint on the batch side (guide §3.1): the folded delta is
     // micro-batch-bounded, so building its per-partition hash table is safe,
@@ -537,31 +564,16 @@ object Replay {
 
     val newFiles = timed("merge+write")(lake.writeDataFiles(withBucket, snap.currentSchemaId))
     timed("commit") {
-    // remove EXACTLY the files the target read scanned: a zone-pruned file
-    // was neither read nor rewritten, so it must stay live in the snapshot
-    val removed = lake.selectFiles(buckets = Some(touched), zones = zones,
-      zoneExemptBuckets = fragmented).map(_.path).toSet
     // the write job ran -> observed merge-outcome counters are available
     val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    // per-batch metrics sidecar, BEFORE the commit: a crash between the
-    // two replays the batch and overwrites the same file (idempotent)
-    lake.writeMetrics(s"$epochKey-$batchId",
-      ci.metricsRows ++ m.toSeq.sortBy(_._1).map { case (k, v) =>
-        (batchId, null: String, "merge", k, v) })
     // cumulative drift counter rides the same atomic commit (the
     // reference's delete-affected-0-rows alarm, process_clone.go:306-311)
-    val drift = Map("metrics-delete-miss" ->
-      (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
-        m.getOrElse("delete_miss", 0L)).toString)
-    lake.commit(newFiles, removed,
-      properties = ci.extraProps ++ drift ++ Map(
-        epochKey -> batchId.toString,
-        "lsn-high-watermark" ->
-          math.max(ci.lsnHighWatermark,
-            snap.properties.getOrElse("lsn-high-watermark", "-1").toLong).toString),
-      lineage = ci.lineage)
-    Some(m)
+    commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m,
+      extraProps = Map("metrics-delete-miss" ->
+        (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
+          m.getOrElse("delete_miss", 0L)).toString))
     }
+    true
     } finally xdf.unpersist()
   }
 
@@ -620,28 +632,31 @@ object Replay {
 
   /** Per-(sid, op) stats of one routed batch: (sid, op, min lsn, max lsn,
     * event count, max [[eventOrdCol]]). */
-  type BatchStats = Array[(String, String, Long, Long, Long, Long)]
+  private type BatchStats = Array[(String, String, Long, Long, Long, Long)]
 
-  private[operators] def isDml(op: String): Boolean = op == "I" || op == "U" || op == "D"
+  private def isDml(op: String): Boolean = op == "I" || op == "U" || op == "D"
 
-  /** The stats∥merge protocol shared by clone/append ([[applyBatch]]) and
-    * history (History.applyBatch) mode — the idempotent-sink epoch commit:
+  /** The stats∥merge protocol every table mode runs ([[applyBatch]]) — the
+    * idempotent-sink epoch commit:
     *
     *  1. ONE stats aggregation over the routed batch (map-side partial
     *     agg, tiny result) yields lineage, metrics, emptiness and R-message
     *     detection, forked onto its own thread with the caller's batch context
     *     (job group, batch id), so a query stop cancels it too;
-    *  2. meanwhile `merge(getStats, rHandled = false)` runs optimistically
-    *     against the CURRENT schema and consumes `getStats()` only after
-    *     its fold executed and before anything is written; it returns false
-    *     — having written nothing — when the stats reveal an R message or a
-    *     DML-empty batch. A merge failure cancels only the stats job;
+    *  2. meanwhile `merge(commitInfo)` runs optimistically against the
+    *     CURRENT schema and calls `commitInfo()` only after its fold
+    *     executed and before anything is written. That call turns the
+    *     stats into the batch's [[CommitInfo]], or None — and the merge
+    *     returns false, having written nothing — when the stats reveal an
+    *     R message or a DML-empty batch. A merge failure cancels only the
+    *     stats job;
     *  3. on abort: R messages evolve the schema first (north rule), a
     *     DML-empty batch commits the epoch alone (restart skip-logic stays
-    *     monotone), and otherwise the merge is redone with `rHandled`. */
+    *     monotone), and otherwise the merge is redone, its `commitInfo()`
+    *     now ignoring the handled R message. */
   private[operators] def overlapStats(lake: LakeTable, routed: Dataset[ChangeEvent],
                                       batchId: Long, epochKey: String)(
-      merge: (() => BatchStats, Boolean) => Boolean): Boolean = {
+      merge: (() => Option[CommitInfo]) => Boolean): Boolean = {
     def collectStats(): BatchStats =
       timed("stats")(routed.toDF().select("sid", "op", "lsn", "seq")
         .groupBy("sid", "op")
@@ -651,9 +666,25 @@ object Replay {
         .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))))
 
+    /** None when the batch folds to nothing, or (unless `rHandled`)
+      * carries an R message — both need the sequential handling below
+      * BEFORE any write. */
+    def commitInfoOf(stats: BatchStats, rHandled: Boolean): Option[CommitInfo] = {
+      val dml = stats.filter(s => isDml(s._2))
+      if ((!rHandled && stats.exists(_._2 == "R")) || dml.isEmpty) None
+      else Some(CommitInfo(
+        lineage = dml.groupBy(_._1).map { case (sid, ss) =>
+          LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
+        }.toSeq,
+        opCounts = dml.groupBy(_._2).map { case (op, ss) => op -> ss.map(_._5).sum },
+        maxOrd = dml.map(_._6).max,
+        opRows = dml.toSeq.sortBy(r => (r._1, r._2)).map {
+          case (sid, op, _, _, n, _) => (batchId, sid, "op", op, n) }))
+    }
+
     val statsJob = CdcStream.fork(routed.sparkSession.sparkContext, "graft-stats")(collectStats())
     val merged =
-      try merge(() => statsJob.join(), false)
+      try merge(() => commitInfoOf(statsJob.join(), rHandled = false))
       catch { case e: Throwable => statsJob.cancel(); throw e }
     if (merged) return true
     val stats = statsJob.join() // aborted: R message or DML-empty batch
@@ -668,16 +699,21 @@ object Replay {
       lake.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
       return true
     }
-    if (!merge(() => stats, true))
+    if (!merge(() => commitInfoOf(stats, rHandled = true)))
       throw new IllegalStateException("merge aborted on a DML batch with R handled")
     true
   }
 
-  /** Apply one micro-batch of raw change events for one table mapping.
-    * Idempotent: if the lake's commit-epoch already covers `batchId` the
-    * batch is skipped (exactly-once on restart — the analog of the
-    * reference's `ON CONFLICT DO NOTHING` replay tolerance +
-    * LSN-ack-after-commit, `worker.go:135-165`). Returns true if applied.
+  /** Apply one micro-batch of raw change events for one table mapping —
+    * the one per-batch entry for every table mode. Like the reference
+    * (`process_message.go:287-321`), it routes and runs the filter and set
+    * stages once, then dispatches on `mapping.mode` to the merge body:
+    * the [[Xf]] fold + [[mergeApplyDeferred]] for clone/append, the SCD2
+    * fold + merge of History for history. Idempotent: if the lake's
+    * commit-epoch already covers `batchId` the batch is skipped
+    * (exactly-once on restart — the analog of the reference's `ON
+    * CONFLICT DO NOTHING` replay tolerance + LSN-ack-after-commit,
+    * `worker.go:135-165`). Returns true if applied.
     */
   def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
                  mapping: TableMapping, batchId: Long,
@@ -689,16 +725,22 @@ object Replay {
 
     // route: exact name or partitions-regex (mapping_table.go:57-81)
     val routed0 = events.filter(routeCond(mapping))
+    val history = mapping.mode == TableMode.History
     // env schema for filter/set expressions: the source-row layout (CEL is
     // evaluated over source columns in the reference) or, absent an explicit
-    // source schema, the target layout. Like the reference — whose CEL
+    // source schema, the target layout — for history targets its payload
+    // columns, without kvsz_*. Like the reference — whose CEL
     // programs are compiled against the catalog as of map-refresh
     // (`mapping_table.go:156-169`) — a column added by an R message in this
     // same batch is not yet visible to filter/set expressions.
-    val envSchema = mapping.sourceSchema.getOrElse(lake.schema)
+    val envSchema = mapping.sourceSchema.getOrElse {
+      val target = lake.schema
+      if (history) StructType(target.fields.filterNot(_.name.startsWith("kvsz_")))
+      else target
+    }
 
-    // P1 row filter + P2 column transform (CEL analog), shared with
-    // history mode — see filterTransform. NOT persisted: the batch is
+    // P1 row filter + P2 column transform (CEL analog) — see
+    // filterTransform. NOT persisted: the batch is
     // consumed twice (stats pass + fold), but a vectorized parquet re-scan
     // of the micro-batch is cheaper than the columnar cache build
     // (dictionary/RLE compressibility scans showed up as a top CPU sink in
@@ -708,48 +750,19 @@ object Replay {
       filterTransform(routed0, mapping, envSchema)
     val appendMode = mapping.mode == TableMode.Append
 
-    /** Commit-time extras from the stats rows. None when the batch folds
-      * to nothing, or (unless `rHandled`) carries an R message — both
-      * need the sequential handling in [[overlapStats]] BEFORE any write. */
-    def commitInfoOf(stats: BatchStats, rHandled: Boolean): Option[CommitInfo] = {
-      val dml = stats.filter(s => isDml(s._2))
-      if ((!rHandled && stats.exists(_._2 == "R")) || dml.isEmpty) return None
-      val lin = dml.groupBy(_._1).map { case (sid, ss) =>
-        LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
-      }.toSeq
-      // metrics (A3, the Prometheus-counter analog `streamer/metrics.go:
-      // 11-53`): cumulative received-op counters by op code, carried as
-      // snapshot properties so they commit atomically with the data
-      val prev = lake.snapshot().properties
-      val metricProps = dml.groupBy(_._2).map { case (op, ss) =>
-        val k = s"metrics-ops-$op"
-        k -> (prev.getOrElse(k, "0").toLong + ss.map(_._5).sum).toString
-      } ++ {
-        // event-granular applied watermark (see eventOrdCol), keyed per
-        // EPOCH KEY — i.e. per (stream, mapping), like the epoch itself:
-        // two mappings sharing one target advance independent watermarks,
-        // so one route's commit can never floor the other route's
-        // unapplied events out of a healing catch-up replay
-        val k = s"applied-ord-$epochKey"
-        Map(k -> math.max(dml.map(_._6).max,
-          prev.getOrElse(k, "-1").toLong).toString)
-      }
-      val opRows = dml.toSeq.sortBy(r => (r._1, r._2)).map { case (sid, op, _, _, n, _) =>
-        (batchId, sid, "op", op, n) }
-      Some(CommitInfo(lin, lin.map(_.maxLsn).max, metricProps, opRows))
-    }
-
     // the fold plan is built against the schema as of this call: the
     // optimistic merge sees the current schema, its redo the evolved one
-    overlapStats(lake, transformed, batchId, epochKey) { (getStats, rHandled) =>
-      val snap = lake.snapshot()
-      val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
-      val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
-      val xfs = foldToXfDF(normalizeDF(transformed.toDF(), mergeKey, appendMode),
-        payloadCols)
-      explain(s"replay-fold-batch$batchId", xfs)
-      mergeApplyDeferred(lake, xfs, batchId, epochKey,
-        () => commitInfoOf(getStats(), rHandled)).isDefined
+    overlapStats(lake, transformed, batchId, epochKey) { commitInfo =>
+      if (history) History.tryMerge(lake, transformed, batchId, epochKey, commitInfo)
+      else {
+        val snap = lake.snapshot()
+        val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
+        val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
+        val xfs = foldToXfDF(normalizeDF(transformed.toDF(), mergeKey, appendMode),
+          payloadCols)
+        explain(s"replay-fold-batch$batchId", xfs)
+        mergeApplyDeferred(lake, xfs, batchId, epochKey, commitInfo)
+      }
     }
   }
 }

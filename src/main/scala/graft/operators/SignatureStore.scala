@@ -183,17 +183,9 @@ object SignatureStore {
         if (touched.isEmpty || statRow.getInt(3) != 0) Nil
         else Seq(graft.lake.Zone("doc_id",
           lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-      // self-compaction cap (same knob as the doc merge): a bucket past the
-      // cap loses its zone pruning for this merge, so the whole bucket
-      // rewrites into O(1) files — bounding the small-file accumulation
-      // zone pruning would otherwise cause
-      val fileCap = graft.config.Knobs.compactFileCap
-      val perBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size).toMap
-      val fragmented: Set[Int] =
-        if (zones.isEmpty) Set.empty
-        else touched.filter(b => perBucket.getOrElse(b, 0) > fileCap)
-      val target = sig.read(buckets = Some(touched), zones = zones,
-        zoneExemptBuckets = fragmented)
+      // the target read + the files the commit removes, one rewrite set
+      // (self-compacting past the file cap, like the doc merge)
+      val (target, removed) = sig.rewriteSet(snap, touched, zones)
 
       // SHUFFLE_HASH on the batch-bounded fold (same rationale as the doc
       // merge in Replay.mergeApplyDeferred: skip both sort legs of the default SMJ)
@@ -228,10 +220,6 @@ object SignatureStore {
         Replay.explain(s"sigstore-merge-batch$batchId", out)
         val newFiles = sig.writeDataFiles(out, snap.currentSchemaId)
         lap("sign+write")
-        // remove EXACTLY what the target read scanned: a zone-pruned file
-        // was neither read nor rewritten, so it must stay live
-        val removed = sig.selectFiles(buckets = Some(touched), zones = zones,
-          zoneExemptBuckets = fragmented).map(_.path).toSet
         sig.commit(newFiles, removed,
           properties = Map(epochKey -> batchId.toString))
         true

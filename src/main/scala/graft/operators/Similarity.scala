@@ -108,7 +108,7 @@ ORDER BY query_id, rnk"""
   // and pinned an O(corpus) cached frame per operator; see VERDICT r4 #1).
   // A QueryExecutionListener harvests the observed row when the action
   // completes and records it in the registry + stderr + the
-  // GRAFT_METRICS_DIR sidecar. GRAFT_OCCUPANCY=0 opts OUT (A/B runs only).
+  // GRAFT_METRICS_DIR sidecar.
   // ---------------------------------------------------------------------
 
   final case class Occupancy(buckets: Long, maxOccupancy: Long,
@@ -155,7 +155,6 @@ ORDER BY query_id, rnk"""
     statsRegistry.keySet.asScala.toSet
   }
 
-  private val occupancyOff = sys.env.get("GRAFT_OCCUPANCY").contains("0")
   // candidate-volume alarm threshold: fire when one operator invocation's
   // candidate join exceeds this many pairs (quadratic-blowup signal —
   // raise the operator's planes/bandBits/K/dfCap knob)
@@ -229,7 +228,6 @@ ORDER BY query_id, rnk"""
     * entirely), there was no candidate volume to alarm on — and no cost. */
   private[graft] def observeCandidates(op: String, candidates: DataFrame,
                                        bucketKey: Column): DataFrame = {
-    if (occupancyOff) return candidates
     ensureListener(candidates.sparkSession)
     candidates.observe(s"$ObsPrefix$op#${obsCounter.incrementAndGet()}",
       count(lit(1)).as("pairs"),

@@ -34,13 +34,12 @@ object TextPipeline {
     * round-robin first; at real scale the condition is false and this is
     * a zero-cost no-op — the adaptive version of a fixed repartition(n),
     * which would be tuned to one host. */
-  private val spreadEnabled = !sys.env.get("GRAFT_SPREAD").contains("0")
   private[operators] def spreadTinyScan(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val par = spark.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    if (spreadEnabled && bytes < BigInt(maxSplit) * par) df.repartition(par)
+    if (bytes < BigInt(maxSplit) * par) df.repartition(par)
     else df
   }
 

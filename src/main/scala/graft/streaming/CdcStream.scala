@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode}
-import graft.operators.{History, Replay}
+import graft.operators.Replay
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
@@ -22,7 +22,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     checkpoint commit, the batch is replayed on restart and skipped by
   *     the epoch check in `Replay.applyBatch` (commit-epoch snapshot
   *     property) — the idempotent-replay analog of `ON CONFLICT DO
-  *     NOTHING` (`process_clone.go:195`).
+  *     NOTHING` (`process_clone.go:195`). `Replay.applyBatch` is the one
+  *     per-batch entry for every table mode, history included: it
+  *     dispatches on the mapping's mode itself.
   *   - One stream fans out to many table mappings (the reference's
   *     multi-table map, `streamer/map.go`): each target table carries its
   *     own epoch, so a crash between two tables' commits in one batch also
@@ -258,10 +260,7 @@ object CdcStream {
             case None => floored
           }).as[ChangeEvent]
           lockFor(r.lake.root).synchronized {
-            if (r.mapping.mode == TableMode.History)
-              History.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)
-            else
-              Replay.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)
+            Replay.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)
           }
           r.signatures.filter(_ => r.mapping.mode != TableMode.History)
             .foreach { s =>

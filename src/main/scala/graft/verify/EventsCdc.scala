@@ -13,7 +13,7 @@ import java.time.format.DateTimeFormatter
 
 /** Driver-facing correctness harness: interprets the shared `events` test
   * table as a logical-replication change log and replays it through the
-  * REAL engine (`Replay.applyBatch` / `History.applyBatch`), so the
+  * REAL engine (`Replay.applyBatch`, for clone and history mappings), so the
   * driver's DuckDB oracle independently recomputes the reference's apply
   * semantics (`streamer/process_clone.go`, see `Oracle`) in SQL.
   *
@@ -164,10 +164,7 @@ object EventsCdc {
     (0 until Batches).foreach { b =>
       val lo = b * per; val hi = lo + per
       val batch = events.filter(col("lsn") >= lo && col("lsn") < hi)
-      if (mapping.mode == TableMode.History)
-        History.applyBatch(lake, batch, mapping, b)
-      else
-        Replay.applyBatch(lake, batch, mapping, b)
+      Replay.applyBatch(lake, batch, mapping, b)
     }
     lake
   }

@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.Gen
 import graft.lake.LakeTable
-import graft.model.{ChangeEvent, TableMapping, Transcripts}
+import graft.model.{ChangeEvent, TableMapping, TableMode, Transcripts}
 import graft.operators.{History, Replay}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -18,6 +18,7 @@ class HistorySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
   private val mapping = TableMapping("transcripts", "transcripts")
+  private val histMapping = mapping.copy(mode = TableMode.History)
 
   test("history mode equals sequential SCD2 oracle (multi-batch)") {
     val cfg = Gen.Config(numEvents = 12000, numConvs = 60, turnsPerConv = 8,
@@ -33,7 +34,7 @@ class HistorySpec extends AnyFunSuite {
       val lo = b * per; val hi = math.min(cfg.numEvents, (b + 1) * per)
       val batch = all.filter(e => (e.lsn - 1) * cfg.txnSize + e.seq >= lo &&
         (e.lsn - 1) * cfg.txnSize + e.seq < hi)
-      History.applyBatch(lake, batch, mapping, batchId = b)
+      Replay.applyBatch(lake, batch, histMapping, batchId = b)
     }
 
     val mergeKey = spec.mergeKey
@@ -56,12 +57,12 @@ class HistorySpec extends AnyFunSuite {
       .copy(schema = History.historySchema(payload))
     val lake = LakeTable.create(spark, SparkTestBase.tmpDir("histfs"), spec)
     // filter literal 'tool' is also a column name (structural-rewrite check)
-    val m = mapping.copy(mode = graft.model.TableMode.History,
+    val m = histMapping.copy(
       filter = Some("role <> 'tool'"),
       set = Some(Seq("conv_id" -> "conv_id", "turn_idx" -> "turn_idx",
         "role" -> "upper(role)", "text" -> "text", "tool" -> "tool",
         "ts" -> "ts")))
-    History.applyBatch(lake, Gen.events(spark, cfg), m, 0)
+    Replay.applyBatch(lake, Gen.events(spark, cfg), m, 0)
 
     // oracle: apply the same filter + set to the local event stream, then
     // the UNMODIFIED sequential SCD2 fold — verifying the engine's stage
@@ -102,18 +103,18 @@ class HistorySpec extends AnyFunSuite {
     def full(turn: Int, text: String, extra: Map[String, String] = Map.empty) =
       Map("conv_id" -> "c1", "turn_idx" -> turn.toString, "role" -> "user",
         "text" -> text, "tool" -> null, "ts" -> "2024-01-01 00:00:00") ++ extra
-    History.applyBatch(lake, spark.createDataset(Seq(
+    Replay.applyBatch(lake, spark.createDataset(Seq(
       ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "v1")))),
-      mapping, 0)
+      histMapping, 0)
     // batch 1: R adds `tokens`, then an update carrying it
-    History.applyBatch(lake, spark.createDataset(Seq(
+    Replay.applyBatch(lake, spark.createDataset(Seq(
       ChangeEvent(2, 0, "R", "transcripts", "s0", "none", Map.empty, Map(
         "conv_id" -> "string", "turn_idx" -> "int", "role" -> "string",
         "text" -> "string", "tool" -> "string", "ts" -> "timestamp",
         "tokens" -> "int")),
       ChangeEvent(3, 0, "U", "transcripts", "s0", "none", Map.empty,
         full(0, "v2", Map("tokens" -> "42"))))),
-      mapping, 1)
+      histMapping, 1)
     val schema = lake.schema
     assert(schema.fieldNames.contains("tokens"), "R message must add the column")
     val rows = lake.read().orderBy("kvsz_start").collect()
@@ -126,14 +127,14 @@ class HistorySpec extends AnyFunSuite {
       .startsWith("9999-01-01")) // still open
   }
 
-  // one stats∥merge protocol (Replay.overlapStats) serves both modes, so
-  // both take the same abort path
-  Seq[(String, StructType, (LakeTable, Dataset[ChangeEvent], Long) => Boolean)](
-    ("history", History.historySchema(Transcripts.schema),
-      (l, b, id) => History.applyBatch(l, b, mapping, id)),
-    ("clone", Transcripts.schema,
-      (l, b, id) => Replay.applyBatch(l, b, mapping, id))
-  ).foreach { case (mode, schema, applyBatch) =>
+  // one entry (Replay.applyBatch) and one stats∥merge protocol
+  // (Replay.overlapStats) serve both modes, so both take the same abort path
+  Seq[(String, StructType, TableMapping)](
+    ("history", History.historySchema(Transcripts.schema), histMapping),
+    ("clone", Transcripts.schema, mapping)
+  ).foreach { case (mode, schema, m) =>
+    def applyBatch(l: LakeTable, b: Dataset[ChangeEvent], id: Long): Boolean =
+      Replay.applyBatch(l, b, m, id)
     test(s"$mode DML-empty batch aborts the optimistic merge: epoch-only commit") {
       import spark.implicits._
       val spec = Transcripts.spec(numBuckets = 2).copy(schema = schema)
@@ -178,7 +179,7 @@ class HistorySpec extends AnyFunSuite {
       ChangeEvent(5, 1500, "U", "transcripts", "s0", "none", Map.empty,
         Map("conv_id" -> "c1", "turn_idx" -> "0", "role" -> "user",
           "text" -> "v2", "tool" -> null, "ts" -> "2024-01-01 00:00:01")))
-    History.applyBatch(lake, spark.createDataset(evs), mapping, 0)
+    Replay.applyBatch(lake, spark.createDataset(evs), histMapping, 0)
     val closed = lake.read().filter(col("text") === "v1").collect().head
     // histTime(5, 1500) = 2001-01-01 + 5s + 1.5s = 00:00:06.5 (a string
     // lpad of seq would have produced the NON-monotone 00:00:05.150)
@@ -202,7 +203,7 @@ class HistorySpec extends AnyFunSuite {
           "text" -> "hello v2", "tool" -> null, "ts" -> "2024-01-01 00:00:01")),
       ChangeEvent(3, 0, "D", "transcripts", "s0", "K",
         Map("conv_id" -> "c1", "turn_idx" -> "0"), Map.empty))
-    History.applyBatch(lake, spark.createDataset(evs), mapping, 0)
+    Replay.applyBatch(lake, spark.createDataset(evs), histMapping, 0)
     val rows = lake.read().orderBy("kvsz_start").collect()
     assert(rows.length == 2)
     val r0 = rows(0); val r1 = rows(1)
@@ -222,17 +223,24 @@ class HistorySpec extends AnyFunSuite {
       "role" -> "user", "text" -> txt, "tool" -> null,
       "ts" -> "2024-01-01 00:00:00")
     // batch 0: two inserts (no pre-existing versions -> nothing closes)
-    History.applyBatch(lake, Seq(
+    Replay.applyBatch(lake, Seq(
       ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, t("a", "x")),
       ChangeEvent(2, 0, "I", "transcripts", "s0", "none", Map.empty, t("b", "y")))
-      .toDS(), mapping, 0)
+      .toDS(), histMapping, 0)
+    // cumulative op counters ride the commit, as in clone mode (/metrics'
+    // graft_ops_total reads them from the snapshot properties)
+    assert(lake.snapshot().properties.get("metrics-ops-I").contains("2"))
     // batch 1: update a (closes a's open version + one new version),
     // delete b (soft-closes b's open version)
-    History.applyBatch(lake, Seq(
+    Replay.applyBatch(lake, Seq(
       ChangeEvent(3, 0, "U", "transcripts", "s0", "none", Map.empty, t("a", "x2")),
       ChangeEvent(4, 0, "D", "transcripts", "s0", "K",
         Map("conv_id" -> "b", "turn_idx" -> "0"), Map.empty))
-      .toDS(), mapping, 1)
+      .toDS(), histMapping, 1)
+    val props = lake.snapshot().properties
+    assert(props.get("metrics-ops-I").contains("2"), s"got $props")
+    assert(props.get("metrics-ops-U").contains("1"), s"got $props")
+    assert(props.get("metrics-ops-D").contains("1"), s"got $props")
     val m = lake.metrics().collect()
       .map(r => (r.getLong(0), r.getString(2), r.getString(3), r.getLong(4))).toSet
     assert(m.contains((0L, "op", "I", 2L)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.Gen
-import graft.lake.LakeTable
+import graft.lake.{DataFile, LakeTable}
 import graft.model.{TableMapping, Transcripts}
 import graft.operators.Replay
 import org.scalatest.funsuite.AnyFunSuite
@@ -180,6 +180,61 @@ class LakeVacuumSpec extends AnyFunSuite {
     }
     assert(!Files.list(Paths.get(dir, "_meta")).iterator.asScala
       .exists(_.getFileName.toString.startsWith(".tmp-")), "temp manifests left behind")
+  }
+
+  test("a reader racing schema-evolving commits resolves one manifest per read") {
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
+    import org.apache.spark.sql.types.{IntegerType, StructType}
+    val dir = SparkTestBase.tmpDir("readrace")
+    val lake = LakeTable.create(spark, dir, Transcripts.spec(numBuckets = 1))
+    val base = lake.schema
+    val versions = 120
+    // version k adds column x<k> AND replaces the table's one file with
+    // file k (schema id k), in ONE commit. One job stages every file up
+    // front, so the commits land while the readers read: file k holds the
+    // row of version k under the widest schema, whose columns past x<k>
+    // are NULL and outside schema k (a prefix of the widest one)
+    val widest = (1 to versions).foldLeft(base)((s, k) => s.add(s"x$k", IntegerType))
+    val out = Paths.get(dir, "staged")
+    spark.range(1, versions + 1).select(widest.fields.map { f =>
+      (f.name match {
+        case "conv_id" => concat(lit("c"), col("id"))
+        case "turn_idx" => col("id")
+        case n if n.startsWith("x") => when(col("id") === n.tail.toInt, col("id"))
+        case _ => lit(null)
+      }).cast(f.dataType).as(f.name)
+    }.toIndexedSeq :+ col("id").as("k"): _*)
+      .repartition(col("k")).write.partitionBy("k").parquet(out.toString)
+    val staged = (1 to versions).map { k =>
+      val p = LakeTable.listDir(out.resolve(s"k=$k"))(
+        _.filter(_.toString.endsWith(".parquet")).toSeq).head
+      (StructType(widest.take(base.size + k)),
+        DataFile(p.toString, bucket = 0, Files.size(p), schemaId = k))
+    }
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    // a latest-version read must pair the schema map and the file list of
+    // ONE manifest: a file under a schema id its manifest does not know yet
+    // must never reach it
+    val readers = (0 until 4).map(_ => new Thread(() => {
+      val r = LakeTable.load(spark, dir)
+      while (!done)
+        try { r.read().collect(); reads.incrementAndGet() }
+        catch { case e: Throwable => errors.add(e) }
+    }))
+    readers.foreach(_.start())
+    try staged.foldLeft(Set.empty[String]) { case (prev, (schema, f)) =>
+      lake.commit(Seq(f), prev, newSchema = Some(schema))
+      Thread.sleep(10)
+      Set(f.path)
+    } finally { done = true; readers.foreach(_.join()) }
+    assert(errors.isEmpty, s"${errors.size} of ${reads.get + errors.size} reads " +
+      s"failed, first: ${Option(errors.peek).map(_.toString).orNull}")
+    assert(reads.get > 0)
+    assert(lake.snapshot().currentSchemaId == versions)
+    val rows = lake.read().collect()
+    assert(rows.length == 1 && rows.head.getAs[Int](s"x$versions") == versions)
   }
 
   test("a commit onto an existing version file fails and leaves that file intact") {
