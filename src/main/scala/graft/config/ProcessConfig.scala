@@ -130,8 +130,7 @@ object ProcessConfig {
     // failure — a typo'd GRAFT_MAP_FIL must not silently fall back
     val runtimeKnobs = Set("GRAFT_CONFIG", "GRAFT_TIMING",
       "GRAFT_CANDIDATE_CAP", "GRAFT_METRICS_DIR", "GRAFT_CALIBRATE",
-      "GRAFT_MASTER", "GRAFT_AQE", "GRAFT_WORK_BASE", "GRAFT_PLANS_FULL",
-      "GRAFT_CC_COLLECT_CAP", "GRAFT_CC_DEBUG",
+      "GRAFT_MASTER", "GRAFT_AQE", "GRAFT_WORK_BASE", "GRAFT_CC_COLLECT_CAP",
       "GRAFT_BOILER_DF", "GRAFT_PACK_BLOCKS")
     // renamed/retired knobs: still recognized (no "unrecognized" warning,
     // which would be misleading) but called out explicitly — a deployment

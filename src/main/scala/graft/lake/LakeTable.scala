@@ -150,10 +150,15 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * predicate). The manifest is resolved ONCE: its schema map and its
     * file list belong to the same version even while commits land. */
   def read(version: Long = -1L, buckets: Option[Set[Int]] = None,
-           zones: Seq[Zone] = Nil): DataFrame = {
-    val s = snapshot(version)
+           zones: Seq[Zone] = Nil): DataFrame =
+    readAt(snapshot(version), buckets, zones)
+
+  /** [[read]] of an already-resolved snapshot: a caller that makes several
+    * reads of one table (and commits against the same snapshot) resolves
+    * its manifest once. */
+  def readAt(s: Snapshot, buckets: Option[Set[Int]] = None,
+             zones: Seq[Zone] = Nil): DataFrame =
     scan(s, selectFiles(s, buckets, zones))
-  }
 
   /** The target side of a copy-on-write merge over snapshot `snap`: the
     * read of the `touched` buckets, zone-pruned by `zones`, and EXACTLY

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,38 +10,33 @@ import org.apache.spark.sql.types._
   * steady state, riding the same micro-batches as the signature companion
   * (SURVEY §2.7 X14b/X14c): as each applied batch upserts the signature
   * table, the label table (doc_id -> cluster_id, rows for dup-involved
-  * docs only; absence = singleton) folds forward by composing two
-  * DELTA-FORM kernels inlined in [[applyBatch]] (the full-table analogs,
-  * [[TextPipeline.clustersAfterDeletes]] / [[TextPipeline.clustersAgainstLabels]],
-  * serve the driver-contract queries):
+  * docs only; absence = singleton) folds forward through
+  * [[TextPipeline.foldLabels]] — the one incremental label kernel, which
+  * the driver-contract queries `dedup_clusters_incremental` and
+  * `dedup_clusters_deletes` run on full frames. Here it runs on the lake:
   *
-  *   1. delete kernel, over every doc the batch TOUCHED (deleted,
-  *      inserted, or text-changed): a touched doc's OLD edges die —
-  *      deletion obviously, but a text update equally (its pairs
-  *      re-derive from the new signature) — so exactly the members of
-  *      clusters that contained touched docs recompute their labels over
-  *      the survivors' current signature pairs;
-  *   2. merge kernel, with the touched docs' CURRENT pairs (one-pass
-  *      inline band probe of the post-commit signature rows vs the whole
-  *      signature table): endpoint roots resolve from the delete delta +
-  *      pruned label lookups, the min-label fixpoint runs over the ROOT
-  *      graph only, and merged-root members relabel via broadcast-semi
-  *      label scans.
+  *   - touched = every doc the batch deleted, inserted or text-changed
+  *     (a touched doc's old edges die with its old signature; TOAST and
+  *     meta-only updates are edge-neutral and filtered out);
+  *   - the label and signature lookups it asks for are bucket- AND
+  *     zone-pruned lake reads;
+  *   - its `pairsOf` is one asymmetric band probe of the whole signature
+  *     table against the members' post-commit signatures.
   *
-  * Both kernels emit (doc_id, new, old) rows, so the write-set is a pure
+  * The kernel emits (doc_id, new, old) rows, so the write-set is a pure
   * new-vs-old filter — no full next-state table is materialized and no
-  * corpus-sized join runs. The composition preserves the one invariant
-  * the whole family speaks: labels == connected components over ALL
-  * current signature-agreement pairs (the D5 predicate) — however
-  * incrementally it got there (LabelStoreSpec re-derives it from scratch
-  * after every batch).
+  * corpus-sized join runs. The invariant it preserves: labels ==
+  * connected components over ALL current signature-agreement pairs (the
+  * D5 predicate) — LabelStoreSpec re-derives it from scratch after every
+  * batch, on clique- and chain-shaped clusters.
   *
   * Per-batch corpus cost: TWO broadcast-semi label-table scans + ONE
   * signature band probe (no shuffle, cache, or temp write of anything
-  * corpus-sized); all per-doc lookups are bucket- AND zone-pruned lake
-  * reads; corpus TEXT is never read. The write back into the label lake
-  * is a bucket- and zone-pruned merge of exactly the CHANGED label rows,
-  * mirroring `SignatureStore.applyBatch`.
+  * corpus-sized); corpus TEXT is never read. Each table's manifest is
+  * resolved once per batch, and every read and the commit use that
+  * snapshot. The write back into the label lake is a bucket- and
+  * zone-pruned merge of exactly the CHANGED label rows, mirroring
+  * `SignatureStore.applyBatch`.
   *
   * Exactly-once: the label table keeps its own `commit-epoch` on its own
   * snapshot — a crash between the signature commit and the label commit
@@ -76,7 +71,7 @@ object LabelStore {
     // parquet must not outlive the call (the ingest loop runs forever)
     TextPipeline.scopedTmp {
     val ssnap = sig.snapshot()
-    val sigs = sigCols(sig.read())
+    val sigs = sigCols(sig.readAt(ssnap))
     val lbl = TextPipeline.propagateLabels(sigs.sparkSession,
       TextPipeline.signatureAgreementPairs(sigs, sigs, "labels_bootstrap"))
     val rows = lbl.select(col("doc_id").cast("string").as("doc_id"),
@@ -100,10 +95,10 @@ object LabelStore {
                  batchId: Long, epochKey: String = "commit-epoch"): Boolean = {
     val spark = events.sparkSession
     Replay.tuneSession(spark)
-    val lsnap0 = labels.snapshot()
-    val committed = lsnap0.properties.getOrElse(epochKey, "-1").toLong
+    val lsnap = labels.snapshot()
+    val committed = lsnap.properties.getOrElse(epochKey, "-1").toLong
     if (batchId <= committed) return false
-    // scope the kernels' temp parquet to this batch: everything lands in
+    // scope the kernel's temp parquet to this batch: everything lands in
     // the label lake before return, and the ingest loop calls this once
     // per micro-batch — without the scope, temp dirs accumulate until
     // JVM exit on a long-running orchestrator
@@ -135,11 +130,10 @@ object LabelStore {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       lap("touched-set")
-      // ONE stats pass over the batch-bounded id set: emptiness check,
-      // RAW doc_id hashes (per-lake buckets derive on the driver, so the
-      // label and signature lakes share the same job even with different
-      // bucket counts) and zone bounds — where the previous shape paid an
-      // isEmpty job plus one stats job per pruned lookup of the same set.
+      // ONE stats pass over a batch-bounded id set: emptiness check, RAW
+      // doc_id hashes (per-lake buckets derive on the driver, so the label
+      // and signature lakes share the same job even with different bucket
+      // counts) and zone bounds
       final case class IdStats(n: Long, hashes: Seq[Long], lo: String, hi: String)
       def statsOf(ids: DataFrame): IdStats = {
         val st = ids.agg(count(lit(1)).as("n"),
@@ -154,164 +148,61 @@ object LabelStore {
         return true
       }
       lap("touched-stats")
-      val old = labels.read().select(col("doc_id"), col("cluster_id"))
-      val sigsNow = sigCols(sig.read())
+      val ssnap = sig.snapshot()
       // batch-bounded lake lookup: "rows OF these docs" answered by a
-      // bucket- AND zone-PRUNED read (the same pruning the signature merge
-      // uses) followed by an exact semi join — O(touched FILES) per call,
-      // never a full corpus scan.
-      def prunedRowsOf(lake: LakeTable, ids: DataFrame, st: IdStats): DataFrame = {
-        val snap = lake.snapshot()
+      // bucket- AND zone-PRUNED read of the batch's snapshot (the same
+      // pruning the signature merge uses) followed by an exact semi join —
+      // O(touched FILES) per call, never a full corpus scan
+      def prunedRowsOf(lake: LakeTable, snap: graft.lake.Snapshot,
+                       ids: DataFrame): DataFrame = {
+        val st = if (ids eq touched) tStats else statsOf(ids) // touched's are in hand
         val zones = Seq(graft.lake.Zone("doc_id",
           lo = Option(st.lo), hi = Option(st.hi)))
         val buckets = st.hashes
           .map(h => java.lang.Math.floorMod(h, snap.numBuckets)).toSet
-        lake.read(buckets = Some(buckets), zones = zones)
+        lake.readAt(snap, buckets = Some(buckets), zones = zones)
           .join(broadcast(ids), Seq("doc_id"), "left_semi")
       }
-      def sigRowsOf(ids: DataFrame, st: IdStats): DataFrame =
-        sigCols(prunedRowsOf(sig, ids, st))
-      def labelRowsOf(ids: DataFrame, st: IdStats): DataFrame =
-        prunedRowsOf(labels, ids, st).select(col("doc_id"), col("cluster_id"))
-      val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      def pin(df: DataFrame): DataFrame = {
-        pinned += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-      try {
-
-      // The whole fold below is DELTA-form: both kernels CONSTRUCT the set
-      // of rows they change instead of materializing a full next-state
-      // label table and discovering the change set by a corpus×corpus
-      // FULL OUTER JOIN (which exchanges both sides — the one per-batch
-      // corpus SHUFFLE this replaces). Per batch the label table is only
-      // ever SCANNED (twice, broadcast-semi), the signature table is read
-      // pruned except the one inherent band probe, and every join/cache/
-      // temp artifact is O(batch ∪ touched clusters).
-
-      // Every frame below carries `oc` — the doc's CURRENT (pre-batch)
-      // label — alongside its proposed new label, so the final write-set
-      // is a pure filter (no re-read of the label table to diff against).
-
-      // ---- delete kernel, delta form: the only rows it can change are
-      // members (incl. the touched docs themselves) of old clusters
-      // containing a touched doc
-      val touchedCl = labelRowsOf(touched, tStats).select("cluster_id").distinct()
-      val oldMembers = pin(old
-        .join(broadcast(touchedCl), Seq("cluster_id"), "left_semi"))
-      // survivors re-pair off POST-commit signatures; a touched doc
-      // (deleted OR text-changed) leaves first — the merge kernel re-adds
-      // it off its new signature's pairs
-      val survivors = oldMembers
-        .join(broadcast(touched), Seq("doc_id"), "left_anti").select("doc_id")
-      val memberSigs = pin(sigRowsOf(survivors, statsOf(survivors)))
-      val sub = TextPipeline.propagateLabels(spark, TextPipeline
-        .signatureAgreementPairs(memberSigs, memberSigs, "labels_ingest_del"),
-        bounded = true)
-      // every old member's post-delete row (oc = its pre-batch label);
-      // NULL cluster_id = removed (deleted, touched, or left pairless —
-      // absent docs read as singletons). LANDED, not persisted: it is a
-      // batch-bounded hub frame referenced by four later actions, and a
-      // persist leaves every one of them re-PLANNING its full producing
-      // tree (label scan + CC + joins) — the land makes them replan from
-      // a constant-size scan leaf (same rationale as propagateLabels).
-      val delDelta = TextPipeline.landTmp(oldMembers
-        .select(col("doc_id"), col("cluster_id").as("oc"))
-        .join(sub, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("cluster_id"), col("oc")), "graft-deldelta")
-      lap("delete-kernel")
-
-      // ---- merge kernel, delta form: touched docs re-pair against the
-      // whole signature table (the band probe over sigsNow is the one
-      // inherent corpus-signature pass)
-      val touchedSigs = pin(sigRowsOf(touched, tStats))
-      // landed for the same lineage-cut reason as delDelta: the band-probe
-      // tree (corpus signature scan + broadcast join) would otherwise be
-      // re-planned by every downstream action that references the pairs
-      val newPairsFrame = TextPipeline.agreementPairsAgainst(
-        sigsNow, touchedSigs, "labels_ingest")
-      Replay.explain(s"labels-band-probe-batch$batchId", newPairsFrame)
-      val newPairs = TextPipeline.landTmp(newPairsFrame, "graft-newpairs")
-      val ends = newPairs.select(col("a").as("doc_id"))
-        .unionAll(newPairs.select(col("b").as("doc_id"))).distinct()
-      // each endpoint's POST-DELETE root: its delete-kernel outcome when
-      // it was an old member (dl, with oc along), else its old label
-      // (pruned read), else itself
-      val endOld = labelRowsOf(ends, statsOf(ends))
-        .withColumnRenamed("cluster_id", "ol")
-      val roots = pin(ends
-        .join(delDelta.select(col("doc_id"), col("cluster_id").as("dl"),
-          col("oc").as("moc")), Seq("doc_id"), "left_outer")
-        .join(endOld, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          // moc non-null <=> the endpoint was an old member (oc of a label
-          // row is never null), so its post-delete label is dl
-          coalesce(when(col("moc").isNotNull, col("dl")).otherwise(col("ol")),
-            col("doc_id")).as("root"),
-          coalesce(col("moc"), col("ol")).as("oc")))
-      val rootEdges = newPairs
-        .join(roots.select(col("doc_id").as("a"), col("root").as("ra")), "a")
-        .join(roots.select(col("doc_id").as("b"), col("root").as("rb")), "b")
-        .select(col("ra").as("a"), col("rb").as("b"))
-        .filter(col("a") =!= col("b"))
-      // min-label fixpoint over the ROOT graph only (batch-bounded)
-      val rootMap = TextPipeline.propagateLabels(spark, rootEdges, bounded = true)
-        .select(col("doc_id").as("root"), col("cluster_id").as("new_cl"))
-      val changedRoots = rootMap.filter(col("root") =!= col("new_cl"))
-      // rows to relabel = post-delete members of merged roots: old rows
-      // outside the delete set (the second broadcast-semi label scan)
-      // plus delete-kernel outcomes that landed in a merged root
-      val chSet = changedRoots.select(col("root").as("cluster_id"))
-      val oldInChanged = old
-        .join(broadcast(chSet), Seq("cluster_id"), "left_semi")
-        .join(broadcast(delDelta.select("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_id").as("oc"))
-      val delInChanged = delDelta.filter(col("cluster_id").isNotNull)
-        .join(broadcast(chSet), Seq("cluster_id"), "left_semi")
-      val relabeled = oldInChanged.unionAll(delInChanged)
-        .join(broadcast(changedRoots), col("cluster_id") === col("root"))
-        .select(col("doc_id"), col("new_cl").as("cluster_id"), col("oc"))
-      // endpoints land at their (possibly remapped) root; overlapping
-      // rows between the two frames agree by construction
-      val endNew = roots.join(broadcast(rootMap), Seq("root"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("new_cl"), col("root")).as("cluster_id"), col("oc"))
-      val mergeRows = pin(endNew.unionAll(relabeled).dropDuplicates("doc_id"))
-      lap("merge-kernel")
-
-      // merge outcomes win over delete outcomes for the same doc; the
-      // write-set is then a pure new-vs-current filter, LANDED once (the
+      val rows = TextPipeline.foldLabels(spark, touched,
+        ids => prunedRowsOf(labels, lsnap, ids),
+        labels.readAt(lsnap),
+        // post-commit signatures: a deleted doc has none, an edited doc
+        // re-pairs off its new one; the band probe over the whole
+        // signature table is the fold's one corpus-signature pass
+        ids => {
+          val pairs = TextPipeline.agreementPairsAgainst(sigCols(sig.readAt(ssnap)),
+            sigCols(prunedRowsOf(sig, ssnap, ids)), "labels_ingest")
+          Replay.explain(s"labels-band-probe-batch$batchId", pairs)
+          pairs
+        })
+      // the write-set is a pure new-vs-current filter, LANDED once (the
       // fold's plan tree is deep and Catalyst re-plans the full tree per
       // action — the write path below runs several)
-      val proposed = mergeRows.unionAll(delDelta
-        .join(broadcast(mergeRows.select("doc_id")), Seq("doc_id"), "left_anti"))
       val diff = TextPipeline.landTmp(
-        proposed.filter(!(col("cluster_id") <=> col("oc")))
+        rows.filter(!(col("cluster_id") <=> col("oc")))
           .select(col("doc_id"), col("cluster_id")), "graft-delta")
-      lap("diff")
-        val lsnap = labels.snapshot()
-        val bucketOf = pmod(xxhash64(col("doc_id")), lit(lsnap.numBuckets))
-        val statRow = diff.agg(
-          collect_set(bucketOf.cast("int")).as("bs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
-        val touchedBuckets = statRow.getSeq[Int](0).toSet
-        if (touchedBuckets.isEmpty) {
-          labels.commit(Nil, Set.empty,
-            properties = Map(epochKey -> batchId.toString))
-          return true
-        }
-        val zones = Seq(graft.lake.Zone("doc_id",
-          lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-        val (target, removed) = labels.rewriteSet(lsnap, touchedBuckets, zones)
-        val out = target.join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"))
-          .unionAll(diff.filter(col("cluster_id").isNotNull))
-          .withColumn("__bucket", bucketOf)
-        labels.commit(labels.writeDataFiles(out, lsnap.currentSchemaId),
-          removed, properties = Map(epochKey -> batchId.toString))
-        lap("merge-write")
-        true
-      } finally pinned.foreach(_.unpersist(blocking = false))
+      lap("fold")
+      val bucketOf = pmod(xxhash64(col("doc_id")), lit(lsnap.numBuckets))
+      val statRow = diff.agg(
+        collect_set(bucketOf.cast("int")).as("bs"),
+        min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
+      val touchedBuckets = statRow.getSeq[Int](0).toSet
+      if (touchedBuckets.isEmpty) {
+        labels.commit(Nil, Set.empty,
+          properties = Map(epochKey -> batchId.toString))
+        return true
+      }
+      val zones = Seq(graft.lake.Zone("doc_id",
+        lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
+      val (target, removed) = labels.rewriteSet(lsnap, touchedBuckets, zones)
+      val out = target.join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("cluster_id"))
+        .unionAll(diff.filter(col("cluster_id").isNotNull))
+        .withColumn("__bucket", bucketOf)
+      labels.commit(labels.writeDataFiles(out, lsnap.currentSchemaId),
+        removed, properties = Map(epochKey -> batchId.toString))
+      lap("merge-write")
+      true
     } finally touched.unpersist(blocking = false)
     }
   }

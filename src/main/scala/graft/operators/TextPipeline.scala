@@ -541,7 +541,7 @@ ORDER BY corpus_id, new_id"""
 
   /** Min-label propagation to fixpoint over an undirected pair graph
     * (a, b) — the distributed connected-components kernel shared by the
-    * full ([[dedupClusters]]) and incremental ([[clustersAgainstLabels]])
+    * full ([[dedupClusters]]) and incremental ([[foldLabels]])
     * paths. Returns the converged (doc_id, cluster_id) frame for
     * PAIR-INVOLVED vertices only: a LOCAL relation (driver union-find)
     * for graphs at or under [[graft.config.Knobs.ccCollectCap]] pairs —
@@ -648,7 +648,6 @@ ORDER BY corpus_id, new_id"""
         require(iters < ClusterMaxIters,
           s"label propagation did not converge in $ClusterMaxIters rounds")
         iters += 1
-        val t0 = System.nanoTime()
         val nbrMin = edges.join(labels, edges("b") === labels("doc_id"))
           .groupBy(edges("a").as("doc_id"))
           .agg(min(col("cluster_id")).as("nbr_min"))
@@ -672,9 +671,6 @@ ORDER BY corpus_id, new_id"""
         val landed = spark.read.parquet(s"$art/labels-$iters.parquet")
         val changed = landed
           .agg(coalesce(sum(col("changed")), lit(0L))).head().getLong(0)
-        if (sys.env.get("GRAFT_CC_DEBUG").contains("1"))
-          println(f"[cc] round=$iters changed=$changed " +
-            f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
         labels = landed.select(col("doc_id"), col("cluster_id"))
         converged = changed == 0
       }
@@ -720,21 +716,26 @@ ORDER BY l.doc_id"""
   // ---------------------------------------------------------------------
   // D7: INCREMENTAL clustering — X14 at steady state. dedupClusters
   // recomputes connected components from scratch; under continuous ingest
-  // the signatures update per batch (X13) and a delta batch only ever
-  // MERGES clusters (new edges never split components), so the persisted
-  // label table is maintained by a union-find over ROOTS instead:
-  //   1. map each new-pair endpoint to its current root (persisted
-  //      cluster_id; unlabeled docs are their own root);
-  //   2. min-label propagation over the ROOT graph — vertices are the
-  //      touched roots only, far below even the dup-involved doc count,
-  //      so the fixpoint iteration is near-free;
-  //   3. rewrite exactly (a) members of clusters whose root changed (a
-  //      join on cluster_id — bucket/zone-prunable when the label table
-  //      is lake-backed) and (b) the newly-labeled endpoints; the
-  //      untouched remainder passes through (and in a lake-backed merge
-  //      would not be rewritten at all).
-  // Per-batch cost: O(new pairs + members of merged clusters) — never the
-  // corpus text, never a from-scratch CC.
+  // a batch TOUCHES some docs (inserted, deleted, text-changed) and the
+  // label table (doc_id -> min doc_id of its component, pair-involved docs
+  // only) folds forward through ONE delta-form kernel, [[foldLabels]],
+  // which the ingest stream (LabelStore, pruned lake lookups) and both
+  // driver-contract queries (full frames) run alike. The maintained
+  // invariant — labels == connected components of the CURRENT agreement
+  // pairs — bounds what a batch can change:
+  //   1. members = the touched docs plus every old member of a cluster
+  //      holding one (a touched doc's old edges die, so such a cluster
+  //      may split or dissolve);
+  //   2. one pairsOf(members) yields every current pair that can bind a
+  //      member — the touched docs' new edges and the survivors' edges;
+  //   3. an endpoint outside the members collapses to its current label:
+  //      its cluster holds no touched doc, so it is intact;
+  //   4. one min-label fixpoint over that members + collapsed-roots graph;
+  //   5. members take their new labels (NULL = left pairless), and every
+  //      untouched cluster whose root moved relabels through one scan of
+  //      the label table against the broadcast map of moved roots.
+  // Per-batch cost: O(members + their pairs) plus two label-table scans
+  // — never the corpus text, never a from-scratch CC.
   // ---------------------------------------------------------------------
 
   /** Candidate + signature-agreement verified pairs of a signature table
@@ -840,110 +841,87 @@ ORDER BY l.doc_id"""
       .filter(col("match_cnt") >= IncMinMatch)
   }
 
-  /** Incremental union-find: fold a batch of newly-verified pairs into a
-    * persisted (doc_id, cluster_id) label table. Returns the UPDATED label
-    * table (same shape), touching only merged clusters and new endpoints —
-    * the SignatureStore-composition analog for cluster state. */
-  def clustersAgainstLabels(spark: SparkSession, labels: DataFrame,
-                            newPairsIn: DataFrame): DataFrame = {
-    // the pair batch's producing DAG can be arbitrarily expensive (band
-    // join + signature verify over text-derived delta signatures) and is
-    // referenced from several places below — materialize it ONCE; it is
-    // O(batch pairs), the smallest frame in the whole fold
-    val newPairs = newPairsIn.select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a pair-free batch merges nothing: pass the table through (pairless
-      // endpoints would not enter the label table anyway)
-      if (newPairs.isEmpty) return labels
-      // endpoint set is bounded by the batch's pair count — broadcast it so
-      // the (corpus-sized) label table is never SHUFFLED, only scanned:
-      // endpoint labels come from a broadcast-right semi join, and the
-      // relabel pass below is a broadcast-left-outer against the tiny root
-      // map — two scans, zero exchanges of the big side (lake-backed, the
-      // scans would additionally zone-prune on cluster_id/doc_id)
-      val ends = newPairs.select(col("a").as("doc_id"))
-        .unionAll(newPairs.select(col("b").as("doc_id"))).distinct()
-      val endLabels = labels.join(broadcast(ends), Seq("doc_id"), "left_semi")
-      // referenced three times below (both rootEdges sides + fresh) and
-      // its plan includes a label-table scan — materialize once
-      val roots = ends.join(endLabels, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("root"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val rootEdges = newPairs
-        .join(roots.select(col("doc_id").as("a"), col("root").as("ra")), "a")
-        .join(roots.select(col("doc_id").as("b"), col("root").as("rb")), "b")
-        .select(col("ra").as("a"), col("rb").as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-      // fixpoint over the ROOT graph only; rounds = diameter of the merge
-      // graph, vertices = touched roots (batch-bounded: direct probe)
-      val rootMap = propagateLabels(spark, rootEdges, bounded = true)
-        .select(col("doc_id").as("root"), col("cluster_id").as("new_root"))
-      val relabeled = labels.as("l")
-        .join(broadcast(rootMap), col("l.cluster_id") === col("root"), "left_outer")
-        .select(col("l.doc_id"),
-          coalesce(col("new_root"), col("l.cluster_id")).as("cluster_id"))
-      val fresh = roots.join(endLabels.select("doc_id"), Seq("doc_id"), "left_anti")
-        .join(rootMap, Seq("root"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("new_root"), col("root")).as("cluster_id"))
-      // land the updated label table (the production analog writes it back
-      // to the label LAKE table) so downstream consumers — clusterFrame
-      // reads it twice — do not re-execute the whole fold per reference
-      val art = java.nio.file.Files.createTempDirectory("graft-labels")
-      registerTmp(art)
-      relabeled.unionAll(fresh).write.parquet(s"$art/labels.parquet")
-      roots.unpersist(blocking = false)
-      spark.read.parquet(s"$art/labels.parquet")
-    } finally { newPairs.unpersist(blocking = false) }
+  /** THE incremental label fold (D7) — one delta-form kernel behind the
+    * ingest stream ([[LabelStore.applyBatch]]) and the driver-contract
+    * queries ([[dedupClustersIncremental]], [[dedupClustersDeletes]]).
+    *
+    * @param touched   distinct doc ids (`doc_id`) whose existence or text
+    *                  changed — their old edges are gone
+    * @param labelsOf  the current (doc_id, cluster_id) rows of the given
+    *                  ids (a pruned lookup where the table is lake-backed)
+    * @param labelScan the whole current label table; scanned twice, each
+    *                  time against a broadcast batch-bounded cluster set
+    * @param pairsOf   every CURRENT agreement pair (a, b) that touches the
+    *                  given ids, deleted docs having none
+    * @return (doc_id, cluster_id, oc) for every row the batch may change:
+    *         `oc` is the current label (NULL = no row), `cluster_id` the
+    *         new one (NULL = the row leaves the table). Rows left out of
+    *         it keep their label. */
+  private[graft] def foldLabels(spark: SparkSession, touched: DataFrame,
+                                labelsOf: DataFrame => DataFrame,
+                                labelScan: DataFrame,
+                                pairsOf: DataFrame => DataFrame): DataFrame = {
+    val idType = touched.schema("doc_id").dataType
+    // every frame below is batch-bounded and read by several later
+    // actions, so each is LANDED once (a plan cut, as in propagateLabels)
+    // and the corpus-sized scans it embeds run once
+    val tl = labelsOf(touched).select(col("doc_id"), col("cluster_id"))
+    val members = landTmp(labelScan
+      .join(broadcast(tl.select("cluster_id").distinct()), Seq("cluster_id"), "left_semi")
+      .select(col("doc_id"), col("cluster_id").as("oc"))
+      .unionAll(touched.join(broadcast(tl), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), lit(null).cast(idType).as("oc"))), "graft-members")
+    val pairs = landTmp(pairsOf(members.select("doc_id")).select("a", "b"), "graft-pairs")
+    val outside = pairs.select(col("a").as("doc_id"))
+      .unionAll(pairs.select(col("b").as("doc_id"))).distinct()
+      .join(broadcast(members), Seq("doc_id"), "left_anti")
+    val roots = landTmp(outside
+      .join(labelsOf(outside).select(col("doc_id"), col("cluster_id")),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("root"),
+        col("cluster_id").as("oc")), "graft-roots")
+    val vertex = members.select(col("doc_id"), col("doc_id").as("v"))
+      .unionAll(roots.select(col("doc_id"), col("root").as("v")))
+    val cc = propagateLabels(spark, pairs
+      .join(vertex.toDF("a", "va"), "a").join(vertex.toDF("b", "vb"), "b")
+      .select(col("va").as("a"), col("vb").as("b")), bounded = true)
+    val byRoot = cc.select(col("doc_id").as("root"), col("cluster_id").as("nl"))
+    // every union below selects its columns explicitly: a USING join puts
+    // its key column first, and unionAll matches columns by position
+    val memberRows = members.join(cc, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("cluster_id"), col("oc"))
+    val freshRows = roots.filter(col("oc").isNull).join(byRoot, "root")
+      .select(col("doc_id"), col("nl").as("cluster_id"), col("oc"))
+    val movedRoots = roots.filter(col("oc").isNotNull).select("root").distinct()
+      .join(byRoot, "root").filter(col("nl") =!= col("root"))
+      .select(col("root").as("cluster_id"), col("nl"))
+    val movedRows = labelScan.join(broadcast(movedRoots), Seq("cluster_id"))
+      .select(col("doc_id"), col("nl").as("cluster_id"), col("cluster_id").as("oc"))
+    memberRows.unionAll(freshRows).unionAll(movedRows)
   }
 
-  /** Delete-aware incremental clustering — the other half of X14b's
-    * steady state: a CDC DELETE removes a doc's signature row
-    * (SignatureStore net-delete), and unlike new edges, a lost vertex can
-    * SPLIT its component. But never across clusters — the maintained
-    * invariant keeps every agreement pair INSIDE one cluster — so only
-    * the clusters that contained a deleted doc recompute: their remaining
-    * members' pairs re-derive from the signature lake and a CC fixpoint
-    * runs over that subgraph alone. Untouched clusters pass through
-    * (lake-backed, they would not be rewritten at all); members left
-    * pairless drop OUT of the label table (absent docs read as
-    * singletons). Cost: O(members of touched clusters + their pairs) —
-    * the delete-side mirror of [[clustersAgainstLabels]]'s merge bound. */
-  def clustersAfterDeletes(spark: SparkSession, labels: DataFrame,
-                           sigs: DataFrame, deletedIn: DataFrame): DataFrame = {
-    // batch-bounded (the micro-batch's delete set) — broadcast both it and
-    // everything derived from it so the corpus-sized label/signature
-    // tables are only ever scanned, never shuffled
-    val deleted = deletedIn.select(col("doc_id")).distinct()
-    val touched = labels.join(broadcast(deleted), Seq("doc_id"), "left_semi")
-      .select("cluster_id").distinct()
-    // no touched cluster (e.g. the very first batch onto empty labels, or
-    // deletes of pure singletons): the table passes through unchanged —
-    // one tiny job instead of the whole kernel
-    if (touched.isEmpty) return labels
-    // remaining members of touched clusters: bounded by those clusters'
-    // sizes (the same bound the merge path's rewrite set has). A deleted
-    // singleton has no label row and correctly touches nothing.
-    val members = labels.join(broadcast(touched), Seq("cluster_id"), "left_semi")
-      .join(broadcast(deleted), Seq("doc_id"), "left_anti")
-      .select("doc_id")
-    // the member signatures feed both sides of the agreement join (bands +
-    // verify: 4 subtree references) — materialize the tiny frame once.
-    // (The per-batch ingest path does NOT come through here: LabelStore's
-    // delta-form fold answers "signatures OF these docs" with bucket/zone-
-    // pruned lake reads; this full-table entry serves the driver-contract
-    // queries, whose stand-in signature frames are query-local.)
-    val memberSigs = sigs.join(broadcast(members), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sub = propagateLabels(spark, signatureAgreementPairs(
-        memberSigs, memberSigs, "dedup_clusters_delete"), bounded = true)
-      labels.join(broadcast(touched), Seq("cluster_id"), "left_anti")
-        .select(col("doc_id"), col("cluster_id"))
-        .unionAll(sub.select(col("doc_id"), col("cluster_id")))
-    } finally memberSigs.unpersist(blocking = false)
+  /** [[foldLabels]] over a full (doc_id, cluster_id) label frame: returns
+    * the next label frame. Every row of a changed cluster is in the fold's
+    * output, so the rest passes through one broadcast anti join on the
+    * (batch-bounded) set of changed clusters — the label table is scanned,
+    * never shuffled. */
+  private[graft] def foldLabelFrame(spark: SparkSession, labels: DataFrame,
+                                    touched: DataFrame,
+                                    pairsOf: DataFrame => DataFrame): DataFrame = {
+    val rows = foldLabels(spark, touched,
+      ids => labels.join(broadcast(ids), Seq("doc_id"), "left_semi"), labels, pairsOf)
+    labels.join(broadcast(rows.select(col("oc").as("cluster_id")).distinct()),
+        Seq("cluster_id"), "left_anti")
+      .select(col("doc_id"), col("cluster_id"))
+      .unionAll(rows.filter(col("cluster_id").isNotNull)
+        .select(col("doc_id"), col("cluster_id")))
   }
+
+  /** `pairsOf` over a full signature frame: one asymmetric band probe of
+    * `sigs` against the given ids' own signatures. */
+  private def pairsAgainst(sigs: DataFrame, opLabel: String): DataFrame => DataFrame =
+    ids => agreementPairsAgainst(sigs,
+      sigs.join(broadcast(ids), Seq("doc_id"), "left_semi"), opLabel)
 
   /** Driver-contract entry for the delete fold: the whole corpus plays
     * ingested state (signature lake + labels computed once from it), then
@@ -959,7 +937,9 @@ ORDER BY l.doc_id"""
     val labels0 = propagateLabels(spark,
       signatureAgreementPairs(sigs, sigs, "dedup_clusters_del_base"))
     val deleted = d.filter(col("doc_id") % 7 === 0).select("doc_id")
-    val folded = clustersAfterDeletes(spark, labels0, sigs, deleted)
+    // the current signatures: a deleted doc's row is gone with it
+    val folded = foldLabelFrame(spark, labels0, deleted, pairsAgainst(
+      sigs.join(broadcast(deleted), Seq("doc_id"), "left_anti"), "dedup_clusters_delete"))
     clusterFrame(d.filter(col("doc_id") % 7 =!= 0), folded)
   }
 
@@ -1025,11 +1005,10 @@ ORDER BY l.doc_id"""
     val deltaSigs = minhashSignatures(d.filter(col("doc_id") >= split))
       .select(corpusSigs.columns.map(col).toSeq: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val newPairs = agreementPairsAgainst(
-        corpusSigs.unionAll(deltaSigs), deltaSigs, "dedup_clusters_incremental")
-      clusterFrame(spark, dir, clustersAgainstLabels(spark, labels0, newPairs))
-    } finally deltaSigs.unpersist(blocking = false)
+    try clusterFrame(spark, dir, foldLabelFrame(spark, labels0,
+      deltaSigs.select("doc_id"),
+      pairsAgainst(corpusSigs.unionAll(deltaSigs), "dedup_clusters_incremental")))
+    finally deltaSigs.unpersist(blocking = false)
   }
 
   val dedupClustersIncrementalOracle: String = {

@@ -7,12 +7,12 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cluster labels maintained BY the CDC ingest loop (X14 at steady
-  * state): per applied micro-batch the label table folds forward by the
-  * delete kernel (touched docs' old edges die) then the merge kernel
-  * (touched docs' current pairs re-attach). The invariant — labels ==
+  * state): per applied micro-batch the label table folds forward through
+  * the one label kernel (touched docs' old edges die, the members of their
+  * clusters re-pair off the current signatures). The invariant — labels ==
   * connected components over the CURRENT signature-agreement pairs — is
   * re-checked from scratch after every batch via LabelStore.bootstrap
-  * into a fresh table. */
+  * into a fresh table, on clique- and chain-shaped clusters. */
 class LabelStoreSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -132,6 +132,64 @@ class LabelStoreSpec extends AnyFunSuite {
     assert(labelRows(fresh) == labelRows(lbl))
   }
 
+  // chain-shaped text, as the replay benchmark's `dedup` workload writes it:
+  // doc t reads words t..t+18, so neighbours share 18 words, docs a few
+  // apart fewer, and every cluster is a chain with no shortcut around its
+  // middle
+  private def chain(t: Int): String = (t until t + 19).map(w => s"w$w").mkString(" ")
+
+  private final class Chained(name: String) {
+    val dir: String = SparkTestBase.tmpDir(name)
+    val docs: LakeTable = LakeTable.create(spark, s"$dir/docs", docSpec)
+    val sig: LakeTable = LakeTable.create(spark, s"$dir/sigs", SignatureStore.spec())
+    val lbl: LakeTable = LakeTable.create(spark, s"$dir/labels", LabelStore.spec())
+    private var checks = 0
+    def apply(b: Long, evs: Seq[ChangeEvent]): Unit = {
+      graft.operators.Replay.applyBatch(docs, evs.toDS(), mapping, b)
+      SignatureStore.applyBatch(sig, evs.toDS(), mapping, docs, batchId = b)
+      LabelStore.applyBatch(lbl, sig, evs.toDS(), mapping, docs, batchId = b)
+      checks += 1
+      val fresh = LakeTable.create(spark, s"$dir/check$checks", LabelStore.spec())
+      assert(LabelStore.bootstrap(fresh, sig))
+      assert(labelRows(lbl) == labelRows(fresh),
+        s"batch $b: incremental fold diverged from the from-scratch CC")
+    }
+  }
+
+  test("chained clusters: an edit in the middle splits the chain, an insert rejoins it") {
+    // shrunk from a seeded chain run: 0..7 chain through 1 and 4; editing
+    // 1 and 4 away splits it into {0} and {5, 7} (5 and 7 pair directly),
+    // and the inserted 2 rejoins 0 with 5 — so 7 must follow 5 to label 0
+    val c = new Chained("lblchain")
+    c(0, Seq(0, 1, 4, 5, 7).map(t => iEv(t + 1, t, chain(t))))
+    assert(labelRows(c.lbl) == Seq(0, 1, 4, 5, 7).map(t => t.toString -> "0").toMap)
+    c(1, Seq(uEv(10, 1, Map("text" -> chain(51))),
+      uEv(11, 4, Map("text" -> chain(54))), iEv(12, 2, chain(2))))
+    // a delete in the middle splits the chain the other way
+    c(2, Seq(dEv(20, 2)))
+  }
+
+  test("seeded insert/update/delete batches over chains keep labels == bootstrap") {
+    val c = new Chained("lblseeded")
+    val rnd = new scala.util.Random(20261017L)
+    val live = scala.collection.mutable.Set[Int]()
+    var lsn = 0L
+    def next(): Long = { lsn += 1; lsn }
+    for (b <- 0L until 6L) {
+      // per batch: ~12 ops over 3 chains of 16 docs; a key is touched at
+      // most once per batch, so each batch's net effect is unambiguous
+      val keys = rnd.shuffle((0 until 48).toList).take(12)
+      val evs = keys.map { k =>
+        val t = (k / 16) * 100 + k % 16
+        if (!live(t)) { live += t; iEv(next(), t, chain(t)) }
+        else if (rnd.nextInt(3) == 0) { live -= t; dEv(next(), t) }
+        else uEv(next(), t, Map("text" ->
+          chain(if (rnd.nextBoolean()) t else t + 50)))
+      }
+      c(b, evs)
+    }
+  }
+
   test("ingest-loop temp artifacts are batch-scoped, not JVM-lifetime") {
     // the kernels land pairs/labels parquet in temp dirs; the CDC loop
     // calls applyBatch once per micro-batch FOREVER, so those dirs must
@@ -145,8 +203,8 @@ class LabelStoreSpec extends AnyFunSuite {
     def kernelTmp(): Set[String] = {
       val t = new java.io.File(System.getProperty("java.io.tmpdir"))
       Option(t.list()).getOrElse(Array.empty)
-        .filter(n => n.startsWith("graft-clusters") ||
-          n.startsWith("graft-labels") || n.startsWith("graft-delta")).toSet
+        .filter(n => Seq("graft-clusters", "graft-labels", "graft-delta",
+          "graft-members", "graft-pairs", "graft-roots").exists(n.startsWith)).toSet
     }
     val before = kernelTmp()
     val evs = Seq(iEv(1, 1, txt("aa")), iEv(2, 2, txt("aa")))

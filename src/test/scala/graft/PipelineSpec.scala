@@ -227,7 +227,11 @@ class PipelineSpec extends AnyFunSuite {
     // cluster {9} and singleton 30 are untouched
     val newPairs = Seq((1L, 100L), (6L, 100L), (101L, 102L), (20L, 103L))
       .toDF("a", "b")
-    val updated = TextPipeline.clustersAgainstLabels(spark, labels, newPairs)
+    // the one label kernel: the delta docs are the touched set, and pairsOf
+    // answers from the batch's pair frame
+    val updated = TextPipeline.foldLabelFrame(spark, labels,
+      Seq(100L, 101L, 102L, 103L).toDF("doc_id"),
+      ids => newPairs.join(ids, $"a" === $"doc_id" || $"b" === $"doc_id", "left_semi"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // merged component {0,1,5,6,100} takes the global-min root 0
     assert(Seq(0L, 1L, 5L, 6L, 100L).forall(updated(_) == 0L), updated.toString)
@@ -408,8 +412,12 @@ class PipelineSpec extends AnyFunSuite {
     // delete the bridge b, the singleton f (no label row), and r from the
     // all-identical {p,q,r} (shrinks without splitting)
     val deleted = Seq(2L, 20L, 32L).toDF("doc_id")
+    // the one label kernel: the deleted docs are the touched set, and
+    // pairsOf probes the signatures that remain
+    val live = sigs.join(deleted, Seq("doc_id"), "left_anti")
     val got = graft.operators.TextPipeline
-      .clustersAfterDeletes(spark, labels, sigs, deleted)
+      .foldLabelFrame(spark, labels, deleted, ids => graft.operators.TextPipeline
+        .agreementPairsAgainst(live, live.join(ids, Seq("doc_id"), "left_semi"), "test"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // a and c fall out (pairless after the split -> singletons by absence)
     assert(got == Map(10L -> 10L, 11L -> 10L, 30L -> 30L, 31L -> 30L), got)
@@ -546,5 +554,63 @@ class PipelineSpec extends AnyFunSuite {
     f1.foreach(r => assert(r.getInt(1).toLong == chars(r.getLong(0))))
     // feature vectors have the declared fixed width
     f1.foreach(r => assert(r.getSeq[Float](5).length == Multimodal.FeatureDim))
+  }
+
+  test("plan audit: no all-pairs join, required scale shapes present, label table never shuffled") {
+    val queries = Seq(
+      "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
+      "dedup_incremental", "dedup_clusters", "dedup_clusters_incremental",
+      "dedup_clusters_deletes",
+      "embed_cosine_dedup", "embed_ann_lsh", "embed_ann_ivf", "embed_knn_topk",
+      "pipeline_pack_sequences", "pipeline_decontaminate",
+      "pipeline_mix_sample", "text_repetition", "pipeline_boilerplate")
+    // knnBrute deliberately broadcasts the 5-row query side into a non-equi
+    // join; annIvf's probe selection cross-joins queries with the BROADCAST
+    // K-row centroid table (the required Q x K scoring work, bounded by K).
+    // Every other query must stay free of all-pairs operators — and the
+    // allowed ones must still show their REQUIRED scale shapes, so a
+    // regression of annIvf's corpus-side lookup from hash join to NLJ fails
+    // the audit even though an NLJ is allowed elsewhere in its plan.
+    val allowedNlj = Set("embed_knn_topk", "embed_ann_ivf")
+    val requiredShapes = Map(
+      "embed_ann_ivf" -> Seq("BroadcastHashJoin [cluster", "WindowGroupLimit"),
+      "embed_knn_topk" -> Seq("WindowGroupLimit"),
+      // the incremental relabel pass must stay a BROADCAST of the tiny root
+      // map against the big label table (a SortMergeJoin here would shuffle
+      // the whole persisted label table per delta batch)
+      "dedup_clusters_incremental" -> Seq("BroadcastHashJoin [cluster_id"),
+      // untouched clusters must pass through via a broadcast anti-join on
+      // the (tiny) touched-cluster set — never a shuffle of the label table
+      "dedup_clusters_deletes" -> Seq("BroadcastHashJoin [cluster_id"),
+      // packing's block offsets must BROADCAST back (a sort-merge join here
+      // would shuffle the corpus a third time), and the corpus-side window
+      // must be partitioned by blk (a global-order window = one task)
+      "pipeline_pack_sequences" -> Seq("BroadcastHashJoin [blk"),
+      // eval grams must broadcast against the corpus gram stream
+      "pipeline_decontaminate" -> Seq("BroadcastHashJoin [gram"),
+      // the tiny per-source totals must broadcast back onto the corpus scan
+      "pipeline_mix_sample" -> Seq("BroadcastHashJoin [source"),
+      // the frequent-gram set must broadcast back onto the gram stream
+      "pipeline_boilerplate" -> Seq("BroadcastHashJoin [g"))
+    // the cluster-size join of the result frame also reads
+    // "BroadcastHashJoin [cluster_id", so the label fold's own cluster_id
+    // joins are held to the broadcast form by ruling out the shuffled ones
+    val labelShuffles = Seq("SortMergeJoin [cluster_id", "ShuffledHashJoin [cluster_id")
+    val forbiddenShapes = Map(
+      "dedup_clusters_incremental" -> labelShuffles,
+      "dedup_clusters_deletes" -> labelShuffles)
+    val bad = queries.flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // force the adaptive final plan
+      val plan = df.queryExecution.executedPlan.toString
+      val nlj = plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct")
+      val missing = requiredShapes.getOrElse(name, Nil).filterNot(plan.contains)
+      val forbidden = forbiddenShapes.getOrElse(name, Nil).filter(plan.contains)
+      if (nlj && !allowedNlj.contains(name)) Some(s"$name: all-pairs join")
+      else if (missing.nonEmpty) Some(s"$name: missing shape $missing")
+      else if (forbidden.nonEmpty) Some(s"$name: forbidden shape $forbidden")
+      else None
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 }
