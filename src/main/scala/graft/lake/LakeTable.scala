@@ -207,17 +207,22 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * the DataFile entries (not yet committed). Rows are clustered by
     * bucket first so each bucket lands in O(1) files instead of
     * (tasks x buckets) — the small-file explosion that otherwise makes
-    * every subsequent scan slower (standard lake-writer practice). */
-  def writeDataFiles(df: DataFrame, schemaId: Int): Seq[DataFile] = {
+    * every subsequent scan slower (standard lake-writer practice). The
+    * files are written with schema `schemaId` of the latest manifest. */
+  def writeDataFiles(df: DataFrame, schemaId: Int): Seq[DataFile] =
+    writeDataFiles(df, snapshot().copy(currentSchemaId = schemaId))
+
+  /** [[writeDataFiles]] against an already-resolved snapshot, with its
+    * current schema: a merge writes and commits against the snapshot it
+    * read, so it resolves the manifest once. */
+  def writeDataFiles(df: DataFrame, snap: Snapshot): Seq[DataFile] = {
+    val schemaId = snap.currentSchemaId
     val tmp = dataDir.resolve(s"tmp-${UUID.randomUUID()}")
     df.repartition(col("__bucket")).write.partitionBy("__bucket").parquet(tmp.toString)
-    val snap = snapshot()
     // zone-map columns: the merge key, restricted to stat-comparable types
-    val written = DataType.fromJson(snap.schemas(schemaId.toString))
-      .asInstanceOf[StructType]
     val statCols: Map[String, DataType] =
       ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols)
-        .flatMap(c => written.fields.find(_.name == c))
+        .flatMap(c => snap.schema.fields.find(_.name == c))
         .collect { case f if LakeTable.statComparable(f.dataType) =>
           f.name -> f.dataType }.toMap
     val moved = scala.collection.mutable.ArrayBuffer[(Path, Int)]()
@@ -357,7 +362,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     val df = scan(snap, over.values.flatten.toSeq)
       .withColumn("__bucket",
         pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
-    val newFiles = writeDataFiles(df, snap.currentSchemaId)
+    val newFiles = writeDataFiles(df, snap)
     commit(newFiles, over.values.flatten.map(_.path).toSet)
     buckets.size
   }

@@ -70,7 +70,7 @@ object Backfill {
 
     pacing match {
       case None =>
-        val files = lake.writeDataFiles(withBucket, snap.currentSchemaId)
+        val files = lake.writeDataFiles(withBucket, snap)
         lake.commit(files, Set.empty, properties = doneProps)
 
       case Some(p) =>
@@ -98,7 +98,7 @@ object Backfill {
             return // simulated crash / operator stop: resumable via progress
           val t0 = System.nanoTime()
           val part = withBucket.filter(col("__bucket").isin(bs: _*))
-          val files = lake.writeDataFiles(part, snap.currentSchemaId)
+          val files = lake.writeDataFiles(part, snap)
           val isLast = i == chunks.size - 1
           lake.commit(files, Set.empty, properties =
             Map(s"$propKey-chunks-done" -> (i + 1).toString) ++

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.lake.LakeTable
-import graft.model.ChangeEvent
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import graft.lake.{LakeTable, Snapshot}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,10 +28,11 @@ import org.apache.spark.sql.types._
   * replay is verifiable — same shape, reproducible values.
   *
   * Entry point: `Replay.applyBatch` with a History-mode mapping. It routes,
-  * filters and sets once for every mode, runs the shared stats∥merge
-  * protocol (`Replay.overlapStats`), and dispatches here only for the SCD2
-  * fold and merge body ([[tryMerge]]), which commits through the same
-  * `Replay.commitMerge` step as clone mode.
+  * filters and sets once for every mode, probes the batch once
+  * (`Replay.probe`: commit bookkeeping and touched buckets before any fold
+  * is planned), and dispatches here only for the SCD2 fold and merge body
+  * ([[merge]]), which commits through the same `Replay.commitMerge` step
+  * as clone mode.
   */
 object History {
 
@@ -59,12 +59,9 @@ object History {
     * ordered window finds each version's next closer (its kvsz_end /
     * soft-delete flag) and each key's FIRST closer (which ends the
     * target's pre-existing open versions). Returns (newVersions,
-    * closeInstructions, windowedOps) DataFrames with `key: array<string>`
-    * plus typed payload columns; `windowedOps` is PERSISTED (the fold is
-    * consumed by the touched-bucket probe AND the write — without it the
-    * whole window fold executed twice per batch) and must be unpersisted
-    * by the caller after the write. */
-  private def foldDF(routed: DataFrame, mergeKey: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+    * closeInstructions) DataFrames with `key: array<string>` plus typed
+    * payload columns, each consumed once, by the merge's write. */
+  private def foldDF(routed: DataFrame, mergeKey: Seq[String]): (DataFrame, DataFrame) = {
     def keyArr(src: Column): Column = array(mergeKey.map(c =>
       if (c == "sid") col("sid") else element_at(src, c)): _*)
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 4
@@ -104,7 +101,6 @@ object History {
       struct(col("ord").as("o"), col("t").as("ct"),
         (col("kind") === "CD").as("cd")))
     val o = ops.withColumn("nx", min(closer).over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val versions = o.filter(col("kind").isin("I", "V")).select(
       col("key"),
       when(col("kind") === "I", lit(KVSZ_T0)).otherwise(col("t")).as("kvsz_start"),
@@ -117,26 +113,20 @@ object History {
       .agg(min(struct(col("ord").as("o"), col("t").as("ct"),
         (col("kind") === "CD").as("cd"))).as("fc"))
       .select(col("key"), col("fc.ct").as("closeT"), col("fc.cd").as("closeDel"))
-    (versions, closes, o)
+    (versions, closes)
   }
 
   /** History's merge body, run by Replay.applyBatch (which routes,
-    * filters and sets first) inside Replay.overlapStats: the SCD2 fold,
-    * the close-and-append merge over the touched buckets, the write, and
-    * the shared commit step (Replay.commitMerge). Calls `commitInfo` only
-    * AFTER the fold's touched-bucket pass ran (so the forked stats job
-    * overlaps it) and BEFORE anything is written; returns false — having
-    * written nothing — when it yields None (an R message not yet handled,
-    * or a DML-empty batch). */
-  private[operators] def tryMerge(lake: LakeTable, routed: Dataset[ChangeEvent],
-                                  batchId: Long, epochKey: String,
-                                  commitInfo: () => Option[Replay.CommitInfo]): Boolean = {
-    val snap0 = lake.snapshot()
-    val schema = snap0.schema
-    val mergeKey = (if (snap0.hasSid) Seq("sid") else Nil) ++ snap0.keyCols
+    * filters, sets and probes first): the SCD2 fold, the close-and-append
+    * merge over the probe's `touched` buckets of `snap`, the write, and the
+    * shared commit step (Replay.commitMerge). */
+  private[operators] def merge(lake: LakeTable, snap: Snapshot, routed: DataFrame,
+                               ci: Replay.CommitInfo, touched: Set[Int],
+                               batchId: Long, epochKey: String): Unit = {
+    val schema = snap.schema
+    val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
 
-    val (versions, closes0, foldedOps) = foldDF(routed.toDF(), mergeKey)
-    try {
+    val (versions, closes0) = foldDF(routed, mergeKey)
     val newTyped = versions.select(schema.fields.map { f =>
       f.name match {
         case "kvsz_start" => col("kvsz_start").cast(TimestampType).as(f.name)
@@ -154,28 +144,8 @@ object History {
       } ++ Seq(col("closeT").cast(TimestampType).as("__closeT"),
         col("closeDel").as("__closeDel"))): _*)
 
-    // every op row is either a version or a closer, so the touched key
-    // set is ONE distinct over the persisted fold (the union of the two
-    // projections re-derived both sides)
-    val allKeysB = foldedOps.select(col("key")).distinct()
-      .select(
-        mergeKey.zipWithIndex.map { case (c, i) =>
-          element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
-        }: _*)
-    val bucketOf = pmod(xxhash64(snap0.bucketCols.map(c => col(s"__k_$c")): _*),
-      lit(snap0.numBuckets))
-    val touched = allKeysB.select(bucketOf.cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-    // the overlapped stats job has had the fold's wall time to finish;
-    // consume it before anything is written
-    val ci = commitInfo() match {
-      case Some(c) => c
-      case None => return false // finally releases the fold cache
-    }
-
     // no zones: every version row of a touched key's bucket is rewritten
-    val (target0, removed) = lake.rewriteSet(snap0, touched, Nil)
+    val (target0, removed) = lake.rewriteSet(snap, touched, Nil)
     val target = target0.alias("t")
     val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c")).reduce(_ && _)
     val isOpen = col("t.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
@@ -190,7 +160,7 @@ object History {
     // session) — two separate observations deadlocked on exactly that.
     val closing = col("x.__closeT").isNotNull && isOpen
     // SHUFFLE_HASH on the batch-bounded close-instruction side (same
-    // rationale as Replay.mergeApplyDeferred: skip both sort legs of the SMJ)
+    // rationale as Replay.mergeApply: skip both sort legs of the SMJ)
     val updatedTarget = target.join(cdf.alias("x").hint("shuffle_hash"),
         joinCond, "left_outer")
       .select(schema.fields.map { f =>
@@ -219,16 +189,14 @@ object History {
         sum(when(col("__isnew"), 1L).otherwise(0L)).as("inserted"))
       .drop("__closed", "__softdel", "__isnew")
     val withBucket = merged.withColumn("__bucket",
-      pmod(xxhash64(snap0.bucketCols.map(col): _*), lit(snap0.numBuckets)))
+      pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
 
     Replay.explain(s"history-merge-batch$batchId", merged)
-    val newFiles = lake.writeDataFiles(withBucket, snap0.currentSchemaId)
+    val newFiles = lake.writeDataFiles(withBucket, snap)
     // the write job ran -> the observation is available (an all-empty
     // union observes its sums as null -> 0)
     val m = obs.get.map { case (k, v) =>
       k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
-    Replay.commitMerge(lake, snap0, ci, batchId, epochKey, newFiles, removed, m)
-    true
-    } finally foldedOps.unpersist(blocking = false)
+    Replay.commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m)
   }
 }

@@ -78,7 +78,7 @@ object LabelStore {
         col("cluster_id").cast("string").as("cluster_id"))
       .withColumn("__bucket",
         pmod(xxhash64(col("doc_id")), lit(lsnap.numBuckets)))
-    labels.commit(labels.writeDataFiles(rows, lsnap.currentSchemaId),
+    labels.commit(labels.writeDataFiles(rows, lsnap),
       lsnap.files.map(_.path).toSet,
       properties = Map("labels-bootstrap" -> ssnap.version.toString))
     true
@@ -199,7 +199,7 @@ object LabelStore {
         .select(col("doc_id"), col("cluster_id"))
         .unionAll(diff.filter(col("cluster_id").isNotNull))
         .withColumn("__bucket", bucketOf)
-      labels.commit(labels.writeDataFiles(out, lsnap.currentSchemaId),
+      labels.commit(labels.writeDataFiles(out, lsnap),
         removed, properties = Map(epochKey -> batchId.toString))
       lap("merge-write")
       true

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.lake.{DataFile, LakeTable, LineageEntry, Snapshot}
+import graft.lake.{DataFile, LakeTable, LineageEntry, Snapshot, Zone}
 import graft.model._
-import graft.streaming.CdcStream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +13,9 @@ import org.apache.spark.sql.types._
   * apply into a set-oriented plan:
   *
   *   mode filter (W4) -> row filter / column transform (P1, P2; the CEL
-  *   analog as Catalyst `expr`) -> key extraction + PK-update normalization
+  *   analog as Catalyst `expr`) -> pre-merge probe (one aggregation: commit
+  *   bookkeeping, R-message detection, touched buckets and key zones) ->
+  *   key extraction + PK-update normalization
   *   (R2) -> per-key fold to one row-state transformer (Xf algebra;
   *   replaces the per-table single-worker ordering,
   *   `streamer/worker.go:106-108`) -> bucket-pruned merge join against the
@@ -40,9 +41,10 @@ object Replay {
   /** Session-level runtime tuning the engine depends on, applied once per
     * session (idempotent, runtime-settable SQL confs only).
     *
-    * canChangeCachedPlanOutputPartitioning: every merge path persists its
-    * batch-bounded fold (`mergeApplyDeferred`'s xdf, the signature fold, the label
-    * kernels' pinned frames). With the flag off (Spark's default, kept for
+    * canChangeCachedPlanOutputPartitioning: the companion merges persist
+    * their batch-bounded folds (the signature fold, the label kernels'
+    * pinned frames; the clone and History folds are consumed once, by the
+    * write, and are not cached). With the flag off (Spark's default, kept for
     * plan-stability of long-lived caches) the cached plan materializes at
     * the static shuffle-partition count, so every downstream pass over a
     * tiny cached fold pays a full-width stage of near-empty tasks; with it
@@ -286,25 +288,38 @@ object Replay {
   //                        : onAbsent   (suffix fold after the delete)
   // ---------------------------------------------------------------------
 
+  /** The keyed halves of one event as an array column, built by `half(key,
+    * sub, op, after)`: a PK-update (old_kind K) splits into D(old key, sub
+    * 0) + I(new key, sub 1); a delete or a replica-identity-full update
+    * (old_kind O) is keyed by its old tuple, anything else by its new one.
+    * NULL for events that fold to nothing: R, T, and deletes in append
+    * mode (W4). Shared by [[normalizeDF]] and [[probe]], so the probe's
+    * touched keys are exactly the fold's. */
+  private def keyHalves(mergeKey: Seq[String], appendMode: Boolean)(
+      half: (Column, Int, Column, Column) => Column): Column = {
+    def keyArr(src: Column): Column = array(mergeKey.map(c =>
+      if (c == "sid") col("sid") else element_at(src, c)): _*)
+    val emptyMap = map().cast("map<string,string>")
+    when(col("op") === "U" && col("old_kind") === "K",
+      array(
+        half(keyArr(col("before")), 0, lit("D"), emptyMap),
+        half(keyArr(col("after")), 1, lit("I"), col("after"))))
+      .when(col("op").isin("I", "U") || (col("op") === "D" && !lit(appendMode)),
+        array(half(
+          when(col("op") === "D" || col("old_kind") === "O", keyArr(col("before")))
+            .otherwise(keyArr(col("after"))),
+          1, col("op"),
+          when(col("op") === "D", emptyMap).otherwise(col("after")))))
+  }
+
   /** Normalize routed DML events (R/T pre-filtered) into keyed op rows via
     * pure expressions; PK-updates explode into D(old)+I(new) halves. */
   def normalizeDF(routed: DataFrame, mergeKey: Seq[String],
                   appendMode: Boolean): DataFrame = {
-    def keyArr(src: Column): Column = array(mergeKey.map(c =>
-      if (c == "sid") col("sid") else element_at(src, c)): _*)
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 2
-    val emptyMap = map().cast("map<string,string>")
-    def half(key: Column, sub: Int, op: Column, after: Column): Column =
+    val halves = keyHalves(mergeKey, appendMode) { (key, sub, op, after) =>
       struct(key.as("key"), (ordBase + sub).as("ord"), op.as("op"), after.as("after"))
-    val halves = when(col("op") === "U" && col("old_kind") === "K",
-      array(
-        half(keyArr(col("before")), 0, lit("D"), emptyMap),
-        half(keyArr(col("after")), 1, lit("I"), col("after"))))
-      .otherwise(array(half(
-        when(col("op") === "D" || col("old_kind") === "O", keyArr(col("before")))
-          .otherwise(keyArr(col("after"))),
-        1, col("op"),
-        when(col("op") === "D", emptyMap).otherwise(col("after")))))
+    }
     routed
       .filter(col("op").isin("I", "U", "D") &&
         !(lit(appendMode) && col("op") === "D"))
@@ -373,17 +388,95 @@ object Replay {
   // W1-W3: merge apply against the lake table
   // ---------------------------------------------------------------------
 
-  /** Commit bookkeeping of one batch, derived by [[overlapStats]] from the
-    * stats pass: per-sid lineage, the batch's received-op counts by op
-    * code, its max [[eventOrdCol]], and the per-(sid, op) metrics-sidecar
-    * rows. [[commitMerge]] turns it into snapshot properties. */
+  /** Commit bookkeeping of one batch, derived by [[probe]]: per-sid
+    * lineage, the batch's received-op counts by op code, its max
+    * [[eventOrdCol]], and the per-(sid, op) metrics-sidecar rows.
+    * [[commitMerge]] turns it into snapshot properties. */
   final case class CommitInfo(lineage: Seq[LineageEntry],
                               opCounts: Map[String, Long],
                               maxOrd: Long,
                               opRows: Seq[(Long, String, String, String, Long)])
 
+  /** What [[probe]] learned about one batch before anything is folded:
+    * whether it carries an R message, its [[CommitInfo]] (None = no DML),
+    * the buckets its keys touch, and the zones bounding those keys. */
+  private[graft] final case class Probe(hasR: Boolean, ci: Option[CommitInfo],
+                                        touched: Set[Int], zones: Seq[Zone])
+
+  /** The merge key of `snap` with each column's type (sid is a string). */
+  private def keyTypes(snap: Snapshot): Seq[(String, DataType)] =
+    ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols).map(c =>
+      c -> (if (c == "sid") StringType else snap.schema(c).dataType))
+
+  /** The pre-merge probe: ONE aggregation over the routed, filtered and set
+    * batch. Each event explodes into the key halves the fold will see
+    * ([[keyHalves]]), typed with `snap`'s key types, grouped by (sid, op,
+    * bucket). Per (sid, op) that yields the lineage LSN bounds, the event
+    * count (first halves only) and the max [[eventOrdCol]]; per bucket,
+    * the min/max/null flags of each zone column. The touched-bucket set
+    * and zones are those of the fold's keys, because the fold emits one
+    * row per distinct normalized key.
+    *
+    * The zones bound the target read: when a batch touches a narrow key
+    * range (incremental steady state), whole files inside touched buckets
+    * prune away and stay un-rewritten. Sound because a target row whose
+    * key null-safe-equals some batch key has every key column inside the
+    * batch's [min, max], so its file can never prune; columns where the
+    * batch carries a NULL key value get no zone (stats don't cover nulls). */
+  private[graft] def probe(snap: Snapshot, batch: DataFrame, appendMode: Boolean,
+                           batchId: Long): Probe = {
+    val keys = keyTypes(snap)
+    val halves = keyHalves(keys.map(_._1), appendMode)((key, _, _, _) =>
+      struct(key.as("key")))
+    val typed = batch
+      .select(col("sid"), col("op"), col("lsn"), eventOrdCol.as("eo"),
+        posexplode_outer(halves).as(Seq("pos", "h")))
+      .select(Seq(col("sid"), col("op"), col("lsn"), col("eo"), col("pos"),
+        col("h.key").isNotNull.as("keyed")) ++
+        keys.zipWithIndex.map { case ((c, dt), i) =>
+          element_at(col("h.key"), i + 1).cast(dt).as(s"__k_$c") }: _*)
+    val bucket = when(col("keyed"),
+      pmod(xxhash64(snap.bucketCols.map(c => col(s"__k_$c")): _*), lit(snap.numBuckets)))
+    val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
+    val aggs = Seq(min("lsn"), max("lsn"),
+      count(when(coalesce(col("pos"), lit(0)) === 0, 1)), max("eo")) ++
+      zoneKeys.flatMap { case (c, _) => Seq(min(s"__k_$c"), max(s"__k_$c"),
+        max(col(s"__k_$c").isNull.cast("int"))) }
+    val rows = timed("probe")(typed
+      .groupBy(col("sid"), col("op"), bucket.cast("int").as("b"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect())
+
+    val dml = rows.filter(r => Seq("I", "U", "D").contains(r.getString(1)))
+      .groupBy(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
+      .map { case ((sid, op), rs) => (sid, op, rs.map(_.getLong(3)).min,
+        rs.map(_.getLong(4)).max, rs.map(_.getLong(5)).sum, rs.map(_.getLong(6)).max) }
+    val ci = if (dml.isEmpty) None else Some(CommitInfo(
+      lineage = dml.groupBy(_._1).toSeq.sortBy(_._1).map { case (sid, ss) =>
+        LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
+      },
+      opCounts = dml.groupBy(_._2).map { case (op, ss) => op -> ss.map(_._5).sum },
+      maxOrd = dml.map(_._6).max,
+      opRows = dml.map { case (sid, op, _, _, n, _) => (batchId, sid, "op", op, n) }))
+
+    val keyed = rows.filterNot(_.isNullAt(2))
+    val zones = if (keyed.isEmpty) Nil else zoneKeys.zipWithIndex.flatMap { case ((c, dt), i) =>
+      val at = 7 + 3 * i
+      val vals = keyed.flatMap(r => Seq(r.get(at), r.get(at + 1))).filter(_ != null)
+        .map(_.toString)
+      if (keyed.exists(_.getInt(at + 2) != 0) || vals.isEmpty) None
+      else {
+        val cmp = LakeTable.statCompare(dt) _
+        Some(Zone(c,
+          lo = Some(vals.reduce((a, b) => if (cmp(a, b) <= 0) a else b)),
+          hi = Some(vals.reduce((a, b) => if (cmp(a, b) >= 0) a else b))))
+      }
+    }
+    Probe(rows.exists(_.getString(1) == "R"), ci, keyed.map(_.getInt(2)).toSet, zones)
+  }
+
   /** The one commit step of every merge body (clone/append here, history
-    * in History.tryMerge): the per-batch `_metrics` sidecar (`ci`'s op
+    * in History.merge): the per-batch `_metrics` sidecar (`ci`'s op
     * rows + the merge's observed `outcomes`), then the atomic snapshot
     * commit. The sidecar goes FIRST: a crash between the two replays the
     * batch and overwrites the same file (idempotent). The commit carries
@@ -424,82 +517,23 @@ object Replay {
     * (null-safe) merge key over touched buckets only, then pure Catalyst
     * column expressions realize insert / TOAST-coalescing update / delete
     * — no UDF in the apply path. `keyXfs` is the output of [[foldToXfDF]]
-    * (one [[Xf]] per key). The target read and the files the commit
-    * removes come from ONE [[LakeTable.rewriteSet]] call.
-    *
-    * The commit bookkeeping is DEFERRED: `commitInfo` is invoked after the
-    * fold + touched-bucket pass has executed and BEFORE anything is
-    * written; returning None aborts the merge with no side effects
-    * (nothing written or committed, the fold cache released) and returns
-    * false. This is what lets [[overlapStats]] run the stats job alongside
-    * the fold job: the stats result is only needed at commit time — unless
-    * it reveals an R message or an empty batch, in which case the abort
-    * path discards the optimistically-computed fold. The commit itself is
+    * (one [[Xf]] per key), consumed once, by the join. `snap` is the
+    * snapshot [[probe]] typed the batch's keys against; `touched` and
+    * `zones` are its result. The target read and the files the commit
+    * removes come from ONE [[LakeTable.rewriteSet]] call; the commit is
     * [[commitMerge]], carrying the `metrics-delete-miss` drift counter. */
-  def mergeApplyDeferred(lake: LakeTable, keyXfs: DataFrame, batchId: Long,
-                         epochKey: String,
-                         commitInfo: () => Option[CommitInfo]): Boolean = {
-    val spark = lake.spark
-    val snap = lake.snapshot()
+  def mergeApply(lake: LakeTable, snap: Snapshot, keyXfs: DataFrame, ci: CommitInfo,
+                 touched: Set[Int], zones: Seq[Zone], batchId: Long,
+                 epochKey: String): Unit = {
     val schema = snap.schema
-    val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
-    val keyType: Map[String, DataType] =
-      mergeKey.map(c => c -> (if (c == "sid") StringType
-        else schema(c).dataType)).toMap
-
-    // flatten: key array -> typed key columns. Persisted: it is consumed
-    // twice (touched-bucket pruning + the merge join) and recomputing it
-    // would replay the whole fold, shuffles included.
-    val x0 = keyXfs
-    val xdf = x0.select(
-      (mergeKey.zipWithIndex.map { case (c, i) =>
-        element_at(col("key"), i + 1).cast(keyType(c)).as(s"__k_$c")
+    val keys = keyTypes(snap)
+    val mergeKey = keys.map(_._1)
+    // flatten: key array -> typed key columns
+    val xdf = keyXfs.select(
+      (keys.zipWithIndex.map { case ((c, dt), i) =>
+        element_at(col("key"), i + 1).cast(dt).as(s"__k_$c")
       } ++ Seq(col("maxLsn"), col("absentExists"), col("onAbsent"),
         col("presentKind"), col("onPresent"))): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-
-    val xBucket = pmod(xxhash64(snap.bucketCols.map(c => col(s"__k_$c")): _*),
-      lit(snap.numBuckets))
-    // ONE pass over the folded keys yields both the touched-bucket set and
-    // the batch's per-key-column bounds. The bounds double as ZONE
-    // predicates on the target read: when a batch touches a narrow key
-    // range (incremental steady state), whole files inside touched buckets
-    // prune away and stay un-rewritten. Sound because a target row whose
-    // key null-safe-equals some batch key has every key column inside the
-    // batch's [min, max], so its file can never prune; columns where the
-    // batch carries a NULL key value get no zone (stats don't cover nulls).
-    val zoneCols = mergeKey.filter(c => graft.lake.LakeTable.statComparable(keyType(c)))
-    val bucketAggs = zoneCols.flatMap(c => Seq(
-      min(col(s"__k_$c")).as(s"mn_$c"), max(col(s"__k_$c")).as(s"mx_$c"),
-      max(col(s"__k_$c").isNull.cast("int")).as(s"nl_$c")))
-    val statRows = timed("fold+touched")(
-      (if (bucketAggs.isEmpty) xdf.select(xBucket.cast("int").as("b")).distinct()
-       else xdf.groupBy(xBucket.cast("int").as("b"))
-         .agg(bucketAggs.head, bucketAggs.tail: _*))
-        .collect())
-    // the stats-pass outcome gates the merge here — after the fold ran,
-    // before anything is written; None = abort (R message / empty batch)
-    val ci = commitInfo() match {
-      case Some(c) => c
-      case None => return false // finally releases the fold cache
-    }
-    val touched: Set[Int] = statRows.map(_.getInt(0)).toSet
-    val zones: Seq[graft.lake.Zone] =
-      if (statRows.isEmpty || bucketAggs.isEmpty) Nil
-      else zoneCols.flatMap { c =>
-        val vals = statRows.flatMap(r => Seq(r.getAs[Any](s"mn_$c"),
-          r.getAs[Any](s"mx_$c"))).filter(_ != null).map(_.toString)
-        val anyNull = statRows.exists(r => r.getAs[Int](s"nl_$c") != 0) ||
-          vals.length < statRows.length * 2
-        if (anyNull || vals.isEmpty) None
-        else {
-          val cmp = graft.lake.LakeTable.statCompare(keyType(c)) _
-          Some(graft.lake.Zone(c,
-            lo = Some(vals.reduce((a, b) => if (cmp(a, b) <= 0) a else b)),
-            hi = Some(vals.reduce((a, b) => if (cmp(a, b) >= 0) a else b))))
-        }
-      }
 
     val (target, removed) = lake.rewriteSet(snap, touched, zones)
     val t = target.alias("t")
@@ -562,7 +596,7 @@ object Replay {
     val withBucket = merged.withColumn("__bucket",
       pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
 
-    val newFiles = timed("merge+write")(lake.writeDataFiles(withBucket, snap.currentSchemaId))
+    val newFiles = timed("merge+write")(lake.writeDataFiles(withBucket, snap))
     timed("commit") {
     // the write job ran -> observed merge-outcome counters are available
     val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
@@ -573,8 +607,6 @@ object Replay {
         (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
           m.getOrElse("delete_miss", 0L)).toString))
     }
-    true
-    } finally xdf.unpersist()
   }
 
   // ---------------------------------------------------------------------
@@ -630,87 +662,24 @@ object Replay {
   // applyBatch: the foreachBatch unit (one destination transaction, W9)
   // ---------------------------------------------------------------------
 
-  /** Per-(sid, op) stats of one routed batch: (sid, op, min lsn, max lsn,
-    * event count, max [[eventOrdCol]]). */
-  private type BatchStats = Array[(String, String, Long, Long, Long, Long)]
-
-  private def isDml(op: String): Boolean = op == "I" || op == "U" || op == "D"
-
-  /** The stats∥merge protocol every table mode runs ([[applyBatch]]) — the
-    * idempotent-sink epoch commit:
-    *
-    *  1. ONE stats aggregation over the routed batch (map-side partial
-    *     agg, tiny result) yields lineage, metrics, emptiness and R-message
-    *     detection, forked onto its own thread with the caller's batch context
-    *     (job group, batch id), so a query stop cancels it too;
-    *  2. meanwhile `merge(commitInfo)` runs optimistically against the
-    *     CURRENT schema and calls `commitInfo()` only after its fold
-    *     executed and before anything is written. That call turns the
-    *     stats into the batch's [[CommitInfo]], or None — and the merge
-    *     returns false, having written nothing — when the stats reveal an
-    *     R message or a DML-empty batch. A merge failure cancels only the
-    *     stats job;
-    *  3. on abort: R messages evolve the schema first (north rule), a
-    *     DML-empty batch commits the epoch alone (restart skip-logic stays
-    *     monotone), and otherwise the merge is redone, its `commitInfo()`
-    *     now ignoring the handled R message. */
-  private[operators] def overlapStats(lake: LakeTable, routed: Dataset[ChangeEvent],
-                                      batchId: Long, epochKey: String)(
-      merge: (() => Option[CommitInfo]) => Boolean): Boolean = {
-    def collectStats(): BatchStats =
-      timed("stats")(routed.toDF().select("sid", "op", "lsn", "seq")
-        .groupBy("sid", "op")
-        .agg(min("lsn").as("lo"), max("lsn").as("hi"), count(lit(1)).as("n"),
-          max(eventOrdCol).as("mo"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5))))
-
-    /** None when the batch folds to nothing, or (unless `rHandled`)
-      * carries an R message — both need the sequential handling below
-      * BEFORE any write. */
-    def commitInfoOf(stats: BatchStats, rHandled: Boolean): Option[CommitInfo] = {
-      val dml = stats.filter(s => isDml(s._2))
-      if ((!rHandled && stats.exists(_._2 == "R")) || dml.isEmpty) None
-      else Some(CommitInfo(
-        lineage = dml.groupBy(_._1).map { case (sid, ss) =>
-          LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
-        }.toSeq,
-        opCounts = dml.groupBy(_._2).map { case (op, ss) => op -> ss.map(_._5).sum },
-        maxOrd = dml.map(_._6).max,
-        opRows = dml.toSeq.sortBy(r => (r._1, r._2)).map {
-          case (sid, op, _, _, n, _) => (batchId, sid, "op", op, n) }))
-    }
-
-    val statsJob = CdcStream.fork(routed.sparkSession.sparkContext, "graft-stats")(collectStats())
-    val merged =
-      try merge(() => commitInfoOf(statsJob.join(), rHandled = false))
-      catch { case e: Throwable => statsJob.cancel(); throw e }
-    if (merged) return true
-    val stats = statsJob.join() // aborted: R message or DML-empty batch
-
-    // the R rows themselves are a bounded-small collect, taken only when
-    // the stats saw one
-    if (stats.exists(_._2 == "R")) {
-      val rels = routed.filter(col("op") === "R").collect().map(_.after).toSeq
-      evolveSchema(lake, rels)
-    }
-    if (!stats.exists(s => isDml(s._2))) {
-      lake.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
-      return true
-    }
-    if (!merge(() => commitInfoOf(stats, rHandled = true)))
-      throw new IllegalStateException("merge aborted on a DML batch with R handled")
-    true
-  }
-
   /** Apply one micro-batch of raw change events for one table mapping —
-    * the one per-batch entry for every table mode. Like the reference
-    * (`process_message.go:287-321`), it routes and runs the filter and set
-    * stages once, then dispatches on `mapping.mode` to the merge body:
-    * the [[Xf]] fold + [[mergeApplyDeferred]] for clone/append, the SCD2
-    * fold + merge of History for history. Idempotent: if the lake's
-    * commit-epoch already covers `batchId` the batch is skipped
+    * the one per-batch entry for every table mode, and one destination
+    * transaction (the reference's `worker.go:61-165` apply loop). Like the
+    * reference (`process_message.go:287-321`), it routes and runs the
+    * filter and set stages once; then it decides the batch from ONE
+    * [[probe]] before any fold is planned:
+    *
+    *  - an R message evolves the schema first (north rule), and the batch
+    *    is probed again with the evolved key types;
+    *  - a batch with no DML for this mapping (R only, or a route miss)
+    *    commits the epoch alone, so restart skip-logic stays monotone;
+    *  - otherwise it merges once, dispatching on `mapping.mode`: the [[Xf]]
+    *    fold + [[mergeApply]] for clone/append, the SCD2 fold + merge of
+    *    [[History.merge]] for history.
+    *
+    * The target manifest is resolved once and that snapshot is threaded
+    * through the probe, the merge and the data write. Idempotent: if the
+    * lake's commit-epoch already covers `batchId` the batch is skipped
     * (exactly-once on restart — the analog of the reference's `ON
     * CONFLICT DO NOTHING` replay tolerance + LSN-ack-after-commit,
     * `worker.go:135-165`). Returns true if applied.
@@ -720,7 +689,8 @@ object Replay {
                  epochKey: String = "commit-epoch"): Boolean = {
     tuneSession(events.sparkSession)
 
-    val committed = lake.snapshot().properties.getOrElse(epochKey, "-1").toLong
+    val snap0 = lake.snapshot()
+    val committed = snap0.properties.getOrElse(epochKey, "-1").toLong
     if (batchId <= committed) return false // already applied before a crash
 
     // route: exact name or partitions-regex (mapping_table.go:57-81)
@@ -734,36 +704,45 @@ object Replay {
     // (`mapping_table.go:156-169`) — a column added by an R message in this
     // same batch is not yet visible to filter/set expressions.
     val envSchema = mapping.sourceSchema.getOrElse {
-      val target = lake.schema
+      val target = snap0.schema
       if (history) StructType(target.fields.filterNot(_.name.startsWith("kvsz_")))
       else target
     }
 
     // P1 row filter + P2 column transform (CEL analog) — see
     // filterTransform. NOT persisted: the batch is
-    // consumed twice (stats pass + fold), but a vectorized parquet re-scan
+    // consumed twice (probe + fold), but a vectorized parquet re-scan
     // of the micro-batch is cheaper than the columnar cache build
     // (dictionary/RLE compressibility scans showed up as a top CPU sink in
     // thread profiles) — and it avoids pinning executor memory at
     // 10^10-event scale.
-    val transformed: Dataset[ChangeEvent] =
-      filterTransform(routed0, mapping, envSchema)
+    val transformed = filterTransform(routed0, mapping, envSchema).toDF()
     val appendMode = mapping.mode == TableMode.Append
 
-    // the fold plan is built against the schema as of this call: the
-    // optimistic merge sees the current schema, its redo the evolved one
-    overlapStats(lake, transformed, batchId, epochKey) { commitInfo =>
-      if (history) History.tryMerge(lake, transformed, batchId, epochKey, commitInfo)
+    val p0 = probe(snap0, transformed, appendMode, batchId)
+    val (snap, p) =
+      if (!p0.hasR) (snap0, p0)
       else {
-        val snap = lake.snapshot()
-        val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
-        val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
-        val xfs = foldToXfDF(normalizeDF(transformed.toDF(), mergeKey, appendMode),
-          payloadCols)
-        explain(s"replay-fold-batch$batchId", xfs)
-        mergeApplyDeferred(lake, xfs, batchId, epochKey, commitInfo)
+        // the R rows themselves are a bounded-small collect, taken only
+        // when the probe saw one
+        evolveSchema(lake, transformed.filter(col("op") === "R")
+          .select("after").collect().map(_.getMap[String, String](0).toMap).toSeq)
+        val s = lake.snapshot()
+        (s, probe(s, transformed, appendMode, batchId))
       }
+    p.ci match {
+      case None =>
+        lake.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
+      case Some(ci) if history =>
+        History.merge(lake, snap, transformed, ci, p.touched, batchId, epochKey)
+      case Some(ci) =>
+        val mergeKey = keyTypes(snap).map(_._1)
+        val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
+        val xfs = foldToXfDF(normalizeDF(transformed, mergeKey, appendMode), payloadCols)
+        explain(s"replay-fold-batch$batchId", xfs)
+        mergeApply(lake, snap, xfs, ci, p.touched, p.zones, batchId, epochKey)
     }
+    true
   }
 }
 

@@ -105,7 +105,7 @@ object SignatureStore {
       col(textCol).as("text"))
     val rows = signaturesOf(docs, uniqueIds = true).withColumn("__bucket",
       pmod(xxhash64(col("doc_id")), lit(ssnap.numBuckets)))
-    sig.commit(sig.writeDataFiles(rows, ssnap.currentSchemaId),
+    sig.commit(sig.writeDataFiles(rows, ssnap),
       ssnap.files.map(_.path).toSet,
       properties = Map("signatures-bootstrap" -> dsnap.version.toString))
     true
@@ -129,7 +129,10 @@ object SignatureStore {
       println(f"[sigstore] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       t0 = System.nanoTime()
     }
-    val committed = sig.snapshot().properties.getOrElse(epochKey, "-1").toLong
+    // one signature manifest per batch: the epoch check, the rewrite set
+    // and the write all read this snapshot
+    val snap = sig.snapshot()
+    val committed = snap.properties.getOrElse(epochKey, "-1").toLong
     if (batchId <= committed) return false
 
     val docSnap = docLake.snapshot()
@@ -156,11 +159,10 @@ object SignatureStore {
       element_at(col("onPresent"), textCol).as("p_txt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val snap = sig.snapshot()
       val bucketOf = pmod(xxhash64(col("doc_id")), lit(snap.numBuckets))
       // ONE stats pass yields the touched buckets AND the batch's doc_id
       // bounds — zone predicates on the signature read, mirroring
-      // Replay.mergeApplyDeferred: a narrow-key batch (incremental steady state)
+      // Replay.probe: a narrow-key batch (incremental steady state)
       // prunes whole signature files inside touched buckets instead of
       // rewriting every file of every touched bucket per micro-batch
       // (which at 10^10 docs would rewrite nearly the whole companion
@@ -188,7 +190,7 @@ object SignatureStore {
       val (target, removed) = sig.rewriteSet(snap, touched, zones)
 
       // SHUFFLE_HASH on the batch-bounded fold (same rationale as the doc
-      // merge in Replay.mergeApplyDeferred: skip both sort legs of the default SMJ)
+      // merge in Replay.mergeApply: skip both sort legs of the default SMJ)
       val j = target.alias("t").join(f.alias("x").hint("shuffle_hash"),
         col("t.doc_id") <=> col("x.doc_id"), "full_outer")
       val fNull = col("x.presentKind").isNull
@@ -218,7 +220,7 @@ object SignatureStore {
         val out = keep.unionByName(signed)
           .withColumn("__bucket", pmod(xxhash64(col("doc_id")), lit(snap.numBuckets)))
         Replay.explain(s"sigstore-merge-batch$batchId", out)
-        val newFiles = sig.writeDataFiles(out, snap.currentSchemaId)
+        val newFiles = sig.writeDataFiles(out, snap)
         lap("sign+write")
         sig.commit(newFiles, removed,
           properties = Map(epochKey -> batchId.toString))

@@ -398,7 +398,7 @@ SELECT a, b, hamming FROM pairs WHERE hamming <= 3 ORDER BY a, b"""
     val snap = sig.snapshot()
     val withB = rows.withColumn("__bucket",
       pmod(xxhash64(col("doc_id")), lit(snap.numBuckets)))
-    sig.commit(sig.writeDataFiles(withB, snap.currentSchemaId), Set.empty)
+    sig.commit(sig.writeDataFiles(withB, snap), Set.empty)
     sig
   }
 

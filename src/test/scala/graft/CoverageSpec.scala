@@ -294,6 +294,86 @@ class CoverageSpec extends AnyFunSuite {
     assert(res.passed, res.status)
   }
 
+  test("property: the probe's touched buckets, zones and commit info equal the fold's") {
+    import org.scalacheck.{Gen => G, Prop, Test => Check}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val spec = TableSpec("t", StructType(Seq(
+        StructField("sid", StringType), StructField("k", IntegerType),
+        StructField("j", StringType), StructField("a", StringType))),
+      keyCols = Seq("k", "j"), bucketCols = Seq("k", "j"), numBuckets = 4, hasSid = true)
+    val snap = LakeTable.create(spark, SparkTestBase.tmpDir("probe"), spec).snapshot()
+    val mergeKey = Seq("sid", "k", "j")
+    val none = Map.empty[String, String]
+    // key values include genuine NULLs (no zone may form over them)
+    val k = G.frequency(1 -> G.const(null: String), 6 -> G.choose(0, 9).map(_.toString))
+    val j = G.frequency(1 -> G.const(null: String), 6 -> G.oneOf("x", "y", "z"))
+    val keyMap = for (kv <- k; jv <- j) yield Map("k" -> kv, "j" -> jv)
+    val event = for {
+      sid <- G.oneOf("s0", "s1")
+      key <- keyMap
+      key2 <- keyMap
+      a <- G.alphaLowerStr.map(_.take(3))
+      ev <- G.frequency(
+        3 -> G.const(("I", "none", none, key + ("a" -> a))),
+        3 -> G.const(("U", "none", none, key + ("a" -> a))),
+        2 -> G.const(("U", "K", key, key2 + ("a" -> a))),
+        2 -> G.const(("U", "O", key + ("a" -> "old"), key + ("a" -> a))),
+        2 -> G.const(("D", "K", key, none)),
+        1 -> G.const(("R", "none", none, Map("k" -> "int", "j" -> "string", "a" -> "string"))),
+        1 -> G.const(("T", "none", none, none)))
+    } yield (sid, ev)
+    val batch = for {
+      appendMode <- G.oneOf(false, true)
+      evs <- G.choose(0, 60).flatMap(G.listOfN(_, event))
+    } yield (appendMode, evs.zipWithIndex.map {
+      case ((sid, (op, oldKind, before, after)), i) =>
+        ChangeEvent(i / 4 + 1L, i % 4, op, "t", sid, oldKind, before, after)
+    })
+
+    val prop = Prop.forAllNoShrink(batch) { case (appendMode, evs) =>
+      val df = evs.toDS().toDF()
+      val p = Replay.probe(snap, df, appendMode, batchId = 3L)
+
+      // touched buckets and zones from the keys the fold emits
+      val keys = Replay.foldToXfDF(Replay.normalizeDF(df, mergeKey, appendMode), Seq("a"))
+        .select(col("key").getItem(0).as("sid"), col("key").getItem(1).cast("int").as("k"),
+          col("key").getItem(2).as("j"))
+      val touched = keys.select(pmod(xxhash64(col("k"), col("j")), lit(4)).cast("int"))
+        .distinct().collect().map(_.getInt(0)).toSet
+      val bounds = keys.agg(count(lit(1)), mergeKey.flatMap(c => Seq(min(c), max(c),
+        max(col(c).isNull.cast("int")))): _*).head()
+      val zones = if (bounds.getLong(0) == 0L) Nil else mergeKey.zipWithIndex.flatMap {
+        case (c, i) =>
+          val at = 1 + 3 * i
+          if (bounds.isNullAt(at + 2) || bounds.getInt(at + 2) != 0) None
+          else Some(graft.lake.Zone(c, Some(bounds.get(at).toString),
+            Some(bounds.get(at + 1).toString)))
+      }
+
+      // commit info from a plain per-(sid, op) aggregation of the DML events
+      val stats = df.filter(col("op").isin("I", "U", "D")).groupBy("sid", "op")
+        .agg(min("lsn"), max("lsn"), count(lit(1)), max(Replay.eventOrdCol))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))).toSeq
+      val ci = if (stats.isEmpty) None else Some(Replay.CommitInfo(
+        lineage = stats.groupBy(_._1).map { case (sid, ss) =>
+          graft.lake.LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, 3L, -1L)
+        }.toSeq.sortBy(_.sid),
+        opCounts = stats.groupBy(_._2).map { case (op, ss) => op -> ss.map(_._5).sum },
+        maxOrd = stats.map(_._6).max,
+        opRows = stats.sortBy(s => (s._1, s._2)).map(s => (3L, s._1, "op", s._2, s._5))))
+
+      (Prop(p.touched == touched) :| s"touched ${p.touched} vs fold $touched") &&
+        (Prop(p.zones == zones) :| s"zones ${p.zones} vs fold $zones") &&
+        (Prop(p.ci == ci) :| s"commit info ${p.ci} vs $ci") &&
+        (Prop(p.hasR == evs.exists(_.op == "R")) :| "R detection")
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)
+    assert(res.passed, res.status)
+  }
+
   test("watermark calibration guard: streaming result matches the batch-(N-2) model") {
     // The guard moved out of the timed qWatermarkAgg path (GRAFT_CALIBRATE=1
     // re-enables it there); this test keeps it running on every sbt pass so

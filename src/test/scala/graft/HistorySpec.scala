@@ -127,15 +127,15 @@ class HistorySpec extends AnyFunSuite {
       .startsWith("9999-01-01")) // still open
   }
 
-  // one entry (Replay.applyBatch) and one stats∥merge protocol
-  // (Replay.overlapStats) serve both modes, so both take the same abort path
+  // one entry (Replay.applyBatch) and one pre-merge probe (Replay.probe)
+  // serve both modes, so both take the same epoch-only path
   Seq[(String, StructType, TableMapping)](
     ("history", History.historySchema(Transcripts.schema), histMapping),
     ("clone", Transcripts.schema, mapping)
   ).foreach { case (mode, schema, m) =>
     def applyBatch(l: LakeTable, b: Dataset[ChangeEvent], id: Long): Boolean =
       Replay.applyBatch(l, b, m, id)
-    test(s"$mode DML-empty batch aborts the optimistic merge: epoch-only commit") {
+    test(s"$mode DML-empty batch commits the epoch alone, before any fold") {
       import spark.implicits._
       val spec = Transcripts.spec(numBuckets = 2).copy(schema = schema)
       val lake = LakeTable.create(spark, SparkTestBase.tmpDir(s"${mode}empty"), spec)
@@ -146,9 +146,9 @@ class HistorySpec extends AnyFunSuite {
         ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, full(0, "v1")))),
         0)
       val filesAfter0 = lake.snapshot().files.map(_.path).toSet
-      // batch 1 routes but folds to nothing (R only): the overlapped merge
-      // must abort with ZERO side effects and the sequential path commits
-      // the epoch alone — same files, advanced epoch
+      // batch 1 routes but folds to nothing (R only): the probe finds no
+      // DML, so no merge runs and the epoch commits alone — same files,
+      // advanced epoch
       assert(applyBatch(lake, spark.createDataset(Seq(
         ChangeEvent(2, 0, "R", "transcripts", "s0", "none", Map.empty, Map(
           "conv_id" -> "string", "turn_idx" -> "int", "role" -> "string",

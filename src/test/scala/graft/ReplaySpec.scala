@@ -7,6 +7,7 @@ import graft.operators.Replay
 import graft.verify.Oracle
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end batch replay vs the sequential oracle: the engine's final
   * table must equal the reference-semantics fold of the same event log —
@@ -232,4 +233,63 @@ class ReplaySpec extends AnyFunSuite {
     assert(tags.nonEmpty && tags.forall(t => t == null || t.endsWith("-text")),
       s"set literal '-text' must survive: ${tags.take(5).mkString(",")}")
   }
+
+  /** Spark jobs submitted by `body`, counted by its job group (forked work
+    * carries the caller's group). A marker job run afterwards flushes the
+    * asynchronous listener bus: once its start is seen, every earlier job
+    * start has been delivered. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener bus did not deliver the marker job")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job-count guard: a small clone batch and a small History batch run fewer Spark jobs") {
+    val events = Seq(
+      ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, turn("c1", 0, "a")),
+      ChangeEvent(1, 1, "I", "transcripts", "s0", "none", Map.empty, turn("c2", 0, "b")),
+      ChangeEvent(2, 0, "U", "transcripts", "s0", "none", Map.empty, turn("c1", 0, "a2")),
+      ChangeEvent(3, 0, "D", "transcripts", "s0", "K",
+        Map("conv_id" -> "c2", "turn_idx" -> "0"), Map.empty),
+      ChangeEvent(4, 0, "I", "transcripts", "s0", "none", Map.empty, turn("c3", 0, "c")))
+    def jobsFor(mode: TableMode, schema: org.apache.spark.sql.types.StructType): Int = {
+      val spec = Transcripts.spec(numBuckets = 2).copy(schema = schema)
+      val lake = LakeTable.create(spark, SparkTestBase.tmpDir("jobs"), spec)
+      val m = mapping.copy(mode = mode)
+      Replay.applyBatch(lake, events.take(2).toDS(), m, 0) // warm: a non-empty target
+      val n = jobsOf(assert(Replay.applyBatch(lake, events.drop(2).toDS(), m, 1)))
+      assert(lake.snapshot().properties("commit-epoch") == "1")
+      n
+    }
+    val clone = jobsFor(TableMode.Clone, Transcripts.schema)
+    val history = jobsFor(TableMode.History,
+      graft.operators.History.historySchema(Transcripts.schema))
+    info(s"jobs per batch: clone $clone, history $history")
+    // the stats-overlap protocol (forked stats job + persisted fold +
+    // touched-bucket collect before the write) submitted 10 and
+    // 11 jobs for these two batches (clone, History)
+    assert(clone < 10, s"clone batch ran $clone jobs")
+    assert(history < 11, s"history batch ran $history jobs")
+  }
+
+  private def turn(conv: String, idx: Int, text: String): Map[String, String] =
+    Map("conv_id" -> conv, "turn_idx" -> idx.toString, "role" -> "user",
+      "text" -> text, "tool" -> null, "ts" -> "2024-01-01 00:00:00")
 }
