@@ -59,14 +59,28 @@ object ProcessConfig {
 
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  private val keys = Seq("map_file", "targets_root", "checkpoint_root",
+  private[graft] val keys = Seq("map_file", "targets_root", "checkpoint_root",
     "specs_file", "admin_port", "metrics_port", "jwt_key", "master",
     "shuffle_partitions", "max_files_per_trigger", "trigger_ms",
     "drain", "maintenance_interval_sec", "vacuum_retain",
     "compact_file_cap", "sync_rate", "sync_burst")
 
+  /** The env spelling of settings key `key` (`map_file` ->
+    * `GRAFT_MAP_FILE`); `config` names the settings file itself. */
+  private[graft] def envName(key: String): String = "GRAFT_" + key.toUpperCase
+
+  /** Env names read outside the settings layering: engine knobs with no
+    * settings key. */
+  private[graft] val runtimeKnobs = Set("GRAFT_CANDIDATE_CAP",
+    "GRAFT_CC_COLLECT_CAP")
+  /** Renamed/retired knobs: still recognized (no "unrecognized" warning,
+    * which would be misleading) but called out explicitly — a deployment
+    * still setting the old name gets neither effect nor silence. */
+  private[graft] val deprecatedKnobs = Map(
+    "GRAFT_OCCUPANCY_CAP" -> "GRAFT_CANDIDATE_CAP")
+
   /** Resolve the config from `args` + `env` (+ the settings file named by
-    * `--config`/GRAFT_CONFIG, if any). */
+    * `--config` or its env spelling, if any). */
   def resolve(args: Seq[String],
               env: Map[String, String] = sys.env): ProcessConfig = {
     // --k=v and --k v forms; later flags win
@@ -92,7 +106,7 @@ object ProcessConfig {
     }
 
     val fileVals: Map[String, String] =
-      flags.get("config").orElse(env.get("GRAFT_CONFIG")) match {
+      flags.get("config").orElse(env.get(envName("config"))) match {
         case None => Map.empty
         case Some(path) =>
           val text = Files.readString(Paths.get(path))
@@ -125,24 +139,15 @@ object ProcessConfig {
       }
 
     // the flag and file layers reject typos outright; env vars are shared
-    // with the engine's runtime knobs (GRAFT_TIMING, GRAFT_METRICS_DIR, ...),
-    // so an unrecognized GRAFT_* gets a loud WARNING instead of a hard
-    // failure — a typo'd GRAFT_MAP_FIL must not silently fall back
-    val runtimeKnobs = Set("GRAFT_CONFIG", "GRAFT_TIMING",
-      "GRAFT_CANDIDATE_CAP", "GRAFT_METRICS_DIR", "GRAFT_CALIBRATE",
-      "GRAFT_MASTER", "GRAFT_AQE", "GRAFT_WORK_BASE", "GRAFT_CC_COLLECT_CAP",
-      "GRAFT_BOILER_DF", "GRAFT_PACK_BLOCKS")
-    // renamed/retired knobs: still recognized (no "unrecognized" warning,
-    // which would be misleading) but called out explicitly — a deployment
-    // still setting the old name gets neither effect nor silence
-    val deprecatedKnobs = Map(
-      "GRAFT_OCCUPANCY_CAP" -> "GRAFT_CANDIDATE_CAP")
+    // with the engine's runtime knobs (GRAFT_CANDIDATE_CAP, ...), so an
+    // unrecognized GRAFT_* gets a loud WARNING instead of a hard failure —
+    // a typo'd GRAFT_MAP_FIL must not silently fall back
     deprecatedKnobs.foreach { case (old, now) =>
       if (env.contains(old))
         System.err.println(s"[config] WARNING: '$old' is deprecated and has " +
           s"no effect — set '$now' instead")
     }
-    val knownEnv = keys.map(k => "GRAFT_" + k.toUpperCase).toSet ++
+    val knownEnv = (keys :+ "config").map(envName).toSet ++
       runtimeKnobs ++ deprecatedKnobs.keySet
     env.keys.filter(k => k.startsWith("GRAFT_") && !knownEnv.contains(k))
       .foreach(k => System.err.println(
@@ -151,7 +156,7 @@ object ProcessConfig {
 
     def get(key: String): Option[String] =
       flags.get(key)
-        .orElse(env.get("GRAFT_" + key.toUpperCase))
+        .orElse(env.get(envName(key)))
         .orElse(fileVals.get(key))
     def str(key: String, d: String): String = get(key).getOrElse(d)
     def opt(key: String): Option[String] = get(key).filter(_.nonEmpty)

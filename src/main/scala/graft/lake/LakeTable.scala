@@ -3,7 +3,8 @@ package graft.lake
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.model.TableSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.obs.Phases
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
 
@@ -103,14 +104,6 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     TableSpec(name, s.schema, s.keyCols, s.bucketCols, s.numBuckets, s.hasSid)
   }
 
-  /** Bucket id expression over typed bucket columns. Both the target rows
-    * and the (string-typed, cast-first) batch keys hash identically because
-    * xxhash64 operates on the cast value. */
-  def bucketExpr(colFor: String => org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val s = snapshot()
-    pmod(xxhash64(s.bucketCols.map(colFor): _*), lit(s.numBuckets))
-  }
-
   private def statCompare(dt: DataType)(a: String, b: String): Int =
     LakeTable.statCompare(dt)(a, b)
 
@@ -208,55 +201,62 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * bucket first so each bucket lands in O(1) files instead of
     * (tasks x buckets) — the small-file explosion that otherwise makes
     * every subsequent scan slower (standard lake-writer practice). The
-    * files are written with schema `schemaId` of the latest manifest. */
-  def writeDataFiles(df: DataFrame, schemaId: Int): Seq[DataFile] =
+    * files are written with schema `schemaId` of the latest manifest.
+    * `df` is taken by name, so a caller can build its plan inside the
+    * `write` phase. */
+  def writeDataFiles(df: => DataFrame, schemaId: Int): Seq[DataFile] =
     writeDataFiles(df, snapshot().copy(currentSchemaId = schemaId))
 
   /** [[writeDataFiles]] against an already-resolved snapshot, with its
     * current schema: a merge writes and commits against the snapshot it
     * read, so it resolves the manifest once. */
-  def writeDataFiles(df: DataFrame, snap: Snapshot): Seq[DataFile] = {
+  def writeDataFiles(df: => DataFrame, snap: Snapshot): Seq[DataFile] = {
     val schemaId = snap.currentSchemaId
-    val tmp = dataDir.resolve(s"tmp-${UUID.randomUUID()}")
-    df.repartition(col("__bucket")).write.partitionBy("__bucket").parquet(tmp.toString)
+    val moved = Phases.run(this, "write")(writeBuckets(df))
     // zone-map columns: the merge key, restricted to stat-comparable types
     val statCols: Map[String, DataType] =
       ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols)
         .flatMap(c => snap.schema.fields.find(_.name == c))
         .collect { case f if LakeTable.statComparable(f.dataType) =>
           f.name -> f.dataType }.toMap
-    val moved = scala.collection.mutable.ArrayBuffer[(Path, Int)]()
-    LakeTable.listDir(tmp)(_.filter(
-      p => p.getFileName.toString.startsWith("__bucket=")).toSeq)
-      .foreach { bdir =>
-        val bucket = bdir.getFileName.toString.stripPrefix("__bucket=").toInt
-        LakeTable.listDir(bdir)(_.filter(
-          _.getFileName.toString.endsWith(".parquet")).toSeq)
-          .foreach { f =>
-            val dest = dataDir.resolve(s"b$bucket-${UUID.randomUUID()}.parquet")
-            Files.move(f, dest, StandardCopyOption.ATOMIC_MOVE)
-            moved += ((dest, bucket))
-          }
-      }
-    deleteRecursively(tmp)
     // footer harvest in parallel: one commit registers O(buckets) files and
     // a serial per-file footer read is avoidable driver time on the
     // micro-batch critical path
-    val out =
-      if (moved.isEmpty) Seq.empty[DataFile]
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, moved.size))
-        try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          Await.result(Future.sequence(moved.toSeq.map { case (dest, bucket) =>
-            Future(DataFile(dest.toString, bucket, Files.size(dest), schemaId,
-              footerStats(dest, statCols)))
-          }), scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
+    if (moved.isEmpty) Seq.empty[DataFile]
+    else Phases.run(this, "footer") {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, moved.size))
+      try {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        Await.result(Future.sequence(moved.map { case (dest, bucket) =>
+          Future(DataFile(dest.toString, bucket, Files.size(dest), schemaId,
+            footerStats(dest, statCols)))
+        }), scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
+    }
+  }
+
+  /** Write `df` partitioned by `__bucket` into a temp directory, then move
+    * each file into `data/` under a bucket-prefixed unique name.
+    * @return (final path, bucket) per written file */
+  private def writeBuckets(df: DataFrame): Seq[(Path, Int)] = {
+    val tmp = dataDir.resolve(s"tmp-${UUID.randomUUID()}")
+    df.repartition(col("__bucket")).write.partitionBy("__bucket").parquet(tmp.toString)
+    val moved = LakeTable.listDir(tmp)(_.filter(
+      p => p.getFileName.toString.startsWith("__bucket=")).toSeq)
+      .flatMap { bdir =>
+        val bucket = bdir.getFileName.toString.stripPrefix("__bucket=").toInt
+        LakeTable.listDir(bdir)(_.filter(
+          _.getFileName.toString.endsWith(".parquet")).toSeq)
+          .map { f =>
+            val dest = dataDir.resolve(s"b$bucket-${UUID.randomUUID()}.parquet")
+            Files.move(f, dest, StandardCopyOption.ATOMIC_MOVE)
+            (dest, bucket)
+          }
       }
-    out
+    deleteRecursively(tmp)
+    moved
   }
 
   // one Hadoop conf for all footer reads (newHadoopConf clones the full
@@ -328,25 +328,26 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   def commit(addFiles: Seq[DataFile], removePaths: Set[String],
              newSchema: Option[StructType] = None,
              properties: Map[String, String] = Map.empty,
-             lineage: Seq[LineageEntry] = Nil): Snapshot = {
-    val cur = snapshot()
-    val (schemas2, schemaId2) = newSchema match {
-      case Some(sch) if sch.json != cur.schemas(cur.currentSchemaId.toString) =>
-        val id = cur.schemas.keys.map(_.toInt).max + 1
-        (cur.schemas + (id.toString -> sch.json), id)
-      case _ => (cur.schemas, cur.currentSchemaId)
+             lineage: Seq[LineageEntry] = Nil): Snapshot =
+    Phases.run(this, "commit") {
+      val cur = snapshot()
+      val (schemas2, schemaId2) = newSchema match {
+        case Some(sch) if sch.json != cur.schemas(cur.currentSchemaId.toString) =>
+          val id = cur.schemas.keys.map(_.toInt).max + 1
+          (cur.schemas + (id.toString -> sch.json), id)
+        case _ => (cur.schemas, cur.currentSchemaId)
+      }
+      val next = cur.copy(
+        version = cur.version + 1,
+        currentSchemaId = schemaId2,
+        schemas = schemas2,
+        files = cur.files.filterNot(f => removePaths.contains(f.path)) ++ addFiles,
+        properties = cur.properties ++ properties,
+        lineage = cur.lineage ++ lineage.map(_.copy(snapshotVersion = cur.version + 1)),
+        timestampMs = System.currentTimeMillis())
+      writeManifest(next)
+      next
     }
-    val next = cur.copy(
-      version = cur.version + 1,
-      currentSchemaId = schemaId2,
-      schemas = schemas2,
-      files = cur.files.filterNot(f => removePaths.contains(f.path)) ++ addFiles,
-      properties = cur.properties ++ properties,
-      lineage = cur.lineage ++ lineage.map(_.copy(snapshotVersion = cur.version + 1)),
-      timestampMs = System.currentTimeMillis())
-    writeManifest(next)
-    next
-  }
 
   /** Maintenance compaction: rewrite every bucket holding more than
     * `maxFilesPerBucket` files into freshly-clustered files (one commit).
@@ -360,8 +361,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     if (over.isEmpty) return 0
     val buckets = over.keySet
     val df = scan(snap, over.values.flatten.toSeq)
-      .withColumn("__bucket",
-        pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
+      .withColumn("__bucket", bucketOf(snap))
     val newFiles = writeDataFiles(df, snap)
     commit(newFiles, over.values.flatten.map(_.path).toSet)
     buckets.size
@@ -484,6 +484,13 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
 object LakeTable {
   private val VersionFile = "v(\\d{20})\\.json".r
 
+  /** The bucket of a row of `snap`'s table: `pmod(xxhash64(bucket
+    * columns), numBuckets)`, each bucket column read through `colFor`.
+    * The one bucket rule of every writer and probe: a string-typed batch
+    * key cast to the column's type first hashes like the stored value. */
+  def bucketOf(snap: Snapshot, colFor: String => Column = col): Column =
+    pmod(xxhash64(snap.bucketCols.map(colFor): _*), lit(snap.numBuckets))
+
   /** Types whose per-file min/max zone stats are recorded and comparable. */
   private[graft] def statComparable(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | StringType => true
@@ -528,6 +535,11 @@ object LakeTable {
     t.currentVersion // fail fast if absent
     t
   }
+
+  /** One spelling of a table root (relative paths, `./` segments
+    * resolved): the key by which route grouping and the phase registry
+    * tell tables apart. */
+  def rootKey(root: String): String = Paths.get(root).toAbsolutePath.normalize.toString
 
   def exists(root: String): Boolean = {
     val meta = Paths.get(root, "_meta")

@@ -61,8 +61,7 @@ object Backfill {
         case n => lit(null).cast(f.dataType).as(n)
       }
     }: _*)
-    val withBucket = projected.withColumn("__bucket",
-      pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
+    val withBucket = projected.withColumn("__bucket", LakeTable.bucketOf(snap))
     val doneProps = Map(
       propKey -> "true",
       "lsn-high-watermark" -> math.max(lsnFloor,

@@ -119,10 +119,27 @@ object History {
   /** History's merge body, run by Replay.applyBatch (which routes,
     * filters, sets and probes first): the SCD2 fold, the close-and-append
     * merge over the probe's `touched` buckets of `snap`, the write, and the
-    * shared commit step (Replay.commitMerge). */
+    * shared commit step (Replay.commitMerge). The fold and merge plans are
+    * built inside the write phase, whose job runs them. */
   private[operators] def merge(lake: LakeTable, snap: Snapshot, routed: DataFrame,
                                ci: Replay.CommitInfo, touched: Set[Int],
                                batchId: Long, epochKey: String): Unit = {
+    // no zones: every version row of a touched key's bucket is rewritten
+    val (target, removed) = lake.rewriteSet(snap, touched, Nil)
+    val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
+    val newFiles = lake.writeDataFiles(mergePlan(snap, routed, target, obs), snap)
+    // the write job ran -> the observation is available (an all-empty
+    // union observes its sums as null -> 0)
+    val m = obs.get.map { case (k, v) =>
+      k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
+    Replay.commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m)
+  }
+
+  /** The rows [[merge]] writes, with their `__bucket`: the `target` read
+    * with its open versions closed, plus the batch's new versions; the
+    * outcome counts go to `obs`. */
+  private def mergePlan(snap: Snapshot, routed: DataFrame, target0: DataFrame,
+                        obs: org.apache.spark.sql.Observation): DataFrame = {
     val schema = snap.schema
     val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
 
@@ -144,8 +161,6 @@ object History {
       } ++ Seq(col("closeT").cast(TimestampType).as("__closeT"),
         col("closeDel").as("__closeDel"))): _*)
 
-    // no zones: every version row of a touched key's bucket is rewritten
-    val (target0, removed) = lake.rewriteSet(snap, touched, Nil)
     val target = target0.alias("t")
     val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c")).reduce(_ && _)
     val isOpen = col("t.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
@@ -177,8 +192,7 @@ object History {
         (closing && col("x.__closeDel")).as("__softdel") :+
         lit(false).as("__isnew"): _*)
 
-    val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
-    val merged = updatedTarget
+    updatedTarget
       .unionByName(newTyped
         .withColumn("__closed", lit(false))
         .withColumn("__softdel", lit(false))
@@ -188,15 +202,6 @@ object History {
         sum(when(col("__softdel"), 1L).otherwise(0L)).as("soft_deleted"),
         sum(when(col("__isnew"), 1L).otherwise(0L)).as("inserted"))
       .drop("__closed", "__softdel", "__isnew")
-    val withBucket = merged.withColumn("__bucket",
-      pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
-
-    Replay.explain(s"history-merge-batch$batchId", merged)
-    val newFiles = lake.writeDataFiles(withBucket, snap)
-    // the write job ran -> the observation is available (an all-empty
-    // union observes its sums as null -> 0)
-    val m = obs.get.map { case (k, v) =>
-      k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
-    Replay.commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m)
+      .withColumn("__bucket", LakeTable.bucketOf(snap))
   }
 }

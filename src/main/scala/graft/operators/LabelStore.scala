@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec}
+import graft.obs.Phases
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -76,8 +77,7 @@ object LabelStore {
       TextPipeline.signatureAgreementPairs(sigs, sigs, "labels_bootstrap"))
     val rows = lbl.select(col("doc_id").cast("string").as("doc_id"),
         col("cluster_id").cast("string").as("cluster_id"))
-      .withColumn("__bucket",
-        pmod(xxhash64(col("doc_id")), lit(lsnap.numBuckets)))
+      .withColumn("__bucket", LakeTable.bucketOf(lsnap))
     labels.commit(labels.writeDataFiles(rows, lsnap),
       lsnap.files.map(_.path).toSet,
       properties = Map("labels-bootstrap" -> ssnap.version.toString))
@@ -103,12 +103,6 @@ object LabelStore {
     // per micro-batch — without the scope, temp dirs accumulate until
     // JVM exit on a long-running orchestrator
     TextPipeline.scopedTmp {
-    val timing = sys.env.get("GRAFT_TIMING").contains("1")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (timing) {
-      println(f"[labels] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     val docSnap = docLake.snapshot()
     val mergeKey = (if (docSnap.hasSid) Seq("sid") else Nil) ++ docSnap.keyCols
     val envSchema = mapping.sourceSchema.getOrElse(docSnap.schema)
@@ -129,7 +123,6 @@ object LabelStore {
       .distinct().filter(col("doc_id").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      lap("touched-set")
       // ONE stats pass over a batch-bounded id set: emptiness check, RAW
       // doc_id hashes (per-lake buckets derive on the driver, so the label
       // and signature lakes share the same job even with different bucket
@@ -141,13 +134,12 @@ object LabelStore {
           min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
         IdStats(st.getLong(0), st.getSeq[Long](1), st.getString(2), st.getString(3))
       }
-      val tStats = statsOf(touched)
+      val tStats = Phases.run(labels, "touched")(statsOf(touched))
       if (tStats.n == 0L) {
         labels.commit(Nil, Set.empty,
           properties = Map(epochKey -> batchId.toString))
         return true
       }
-      lap("touched-stats")
       val ssnap = sig.snapshot()
       // batch-bounded lake lookup: "rows OF these docs" answered by a
       // bucket- AND zone-PRUNED read of the batch's snapshot (the same
@@ -158,34 +150,34 @@ object LabelStore {
         val st = if (ids eq touched) tStats else statsOf(ids) // touched's are in hand
         val zones = Seq(graft.lake.Zone("doc_id",
           lo = Option(st.lo), hi = Option(st.hi)))
+        // driver-side twin of LakeTable.bucketOf over the one bucket
+        // column doc_id: floorMod(xxhash64, n) == pmod(xxhash64, n); the
+        // two must agree or the pruned read misses rows
         val buckets = st.hashes
           .map(h => java.lang.Math.floorMod(h, snap.numBuckets)).toSet
         lake.readAt(snap, buckets = Some(buckets), zones = zones)
           .join(broadcast(ids), Seq("doc_id"), "left_semi")
       }
-      val rows = TextPipeline.foldLabels(spark, touched,
-        ids => prunedRowsOf(labels, lsnap, ids),
-        labels.readAt(lsnap),
-        // post-commit signatures: a deleted doc has none, an edited doc
-        // re-pairs off its new one; the band probe over the whole
-        // signature table is the fold's one corpus-signature pass
-        ids => {
-          val pairs = TextPipeline.agreementPairsAgainst(sigCols(sig.readAt(ssnap)),
-            sigCols(prunedRowsOf(sig, ssnap, ids)), "labels_ingest")
-          Replay.explain(s"labels-band-probe-batch$batchId", pairs)
-          pairs
-        })
-      // the write-set is a pure new-vs-current filter, LANDED once (the
-      // fold's plan tree is deep and Catalyst re-plans the full tree per
-      // action — the write path below runs several)
-      val diff = TextPipeline.landTmp(
-        rows.filter(!(col("cluster_id") <=> col("oc")))
-          .select(col("doc_id"), col("cluster_id")), "graft-delta")
-      lap("fold")
-      val bucketOf = pmod(xxhash64(col("doc_id")), lit(lsnap.numBuckets))
-      val statRow = diff.agg(
-        collect_set(bucketOf.cast("int")).as("bs"),
-        min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
+      val bucketOf = LakeTable.bucketOf(lsnap)
+      val (diff, statRow) = Phases.run(labels, "fold") {
+        val rows = TextPipeline.foldLabels(spark, touched,
+          ids => prunedRowsOf(labels, lsnap, ids),
+          labels.readAt(lsnap),
+          // post-commit signatures: a deleted doc has none, an edited doc
+          // re-pairs off its new one; the band probe over the whole
+          // signature table is the fold's one corpus-signature pass
+          ids => TextPipeline.agreementPairsAgainst(sigCols(sig.readAt(ssnap)),
+            sigCols(prunedRowsOf(sig, ssnap, ids)), "labels_ingest"))
+        // the write-set is a pure new-vs-current filter, LANDED once (the
+        // fold's plan tree is deep and Catalyst re-plans the full tree per
+        // action — the write path below runs several)
+        val diff = TextPipeline.landTmp(
+          rows.filter(!(col("cluster_id") <=> col("oc")))
+            .select(col("doc_id"), col("cluster_id")), "graft-delta")
+        (diff, diff.agg(
+          collect_set(bucketOf.cast("int")).as("bs"),
+          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head())
+      }
       val touchedBuckets = statRow.getSeq[Int](0).toSet
       if (touchedBuckets.isEmpty) {
         labels.commit(Nil, Set.empty,
@@ -201,7 +193,6 @@ object LabelStore {
         .withColumn("__bucket", bucketOf)
       labels.commit(labels.writeDataFiles(out, lsnap),
         removed, properties = Map(epochKey -> batchId.toString))
-      lap("merge-write")
       true
     } finally touched.unpersist(blocking = false)
     }

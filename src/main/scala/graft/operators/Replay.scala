@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.lake.{DataFile, LakeTable, LineageEntry, Snapshot, Zone}
 import graft.model._
+import graft.obs.Phases
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,33 +60,6 @@ object Replay {
     if (tunedSessions.add(spark))
       spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-
-  /** GRAFT_EXPLAIN=1: print `.explain("formatted")` of the named internal
-    * frame to stdout between BEGIN/END markers (plan-evidence capture for
-    * the merge/fold shapes, which never appear in a returned DataFrame). */
-  private[graft] val explainPlans = sys.env.get("GRAFT_EXPLAIN").contains("1")
-  private[graft] def explain(name: String, df: DataFrame): Unit =
-    if (explainPlans) {
-      println(s"==== PLAN BEGIN $name ====")
-      df.explain("formatted")
-      println(s"==== PLAN END $name ====")
-    }
-
-  /** Phase timing to stderr when GRAFT_TIMING=1 (perf diagnosis). The
-    * label also becomes the Spark job description (thread-local, guide-
-    * style job labeling) so job-level listeners/UI attribute time. */
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  @inline private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-      sc.setJobDescription(s"graft:$label")
-      val t0 = System.nanoTime()
-      val r = try f finally sc.setJobDescription(null)
-      System.err.println(f"[timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
 
   /** A normalized, keyed DML op: `ord` = (lsn, seq, sub) packed so that the
     * delete half of a PK-update (sub 0) sorts before its insert half
@@ -435,17 +409,16 @@ object Replay {
         col("h.key").isNotNull.as("keyed")) ++
         keys.zipWithIndex.map { case ((c, dt), i) =>
           element_at(col("h.key"), i + 1).cast(dt).as(s"__k_$c") }: _*)
-    val bucket = when(col("keyed"),
-      pmod(xxhash64(snap.bucketCols.map(c => col(s"__k_$c")): _*), lit(snap.numBuckets)))
+    val bucket = when(col("keyed"), LakeTable.bucketOf(snap, c => col(s"__k_$c")))
     val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
     val aggs = Seq(min("lsn"), max("lsn"),
       count(when(coalesce(col("pos"), lit(0)) === 0, 1)), max("eo")) ++
       zoneKeys.flatMap { case (c, _) => Seq(min(s"__k_$c"), max(s"__k_$c"),
         max(col(s"__k_$c").isNull.cast("int"))) }
-    val rows = timed("probe")(typed
+    val rows = typed
       .groupBy(col("sid"), col("op"), bucket.cast("int").as("b"))
       .agg(aggs.head, aggs.tail: _*)
-      .collect())
+      .collect()
 
     val dml = rows.filter(r => Seq("I", "U", "D").contains(r.getString(1)))
       .groupBy(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
@@ -521,10 +494,30 @@ object Replay {
     * snapshot [[probe]] typed the batch's keys against; `touched` and
     * `zones` are its result. The target read and the files the commit
     * removes come from ONE [[LakeTable.rewriteSet]] call; the commit is
-    * [[commitMerge]], carrying the `metrics-delete-miss` drift counter. */
-  def mergeApply(lake: LakeTable, snap: Snapshot, keyXfs: DataFrame, ci: CommitInfo,
+    * [[commitMerge]], carrying the `metrics-delete-miss` drift counter.
+    * `keyXfs` is taken by name: the fold and merge plans are built inside
+    * the write phase, whose job runs them. */
+  def mergeApply(lake: LakeTable, snap: Snapshot, keyXfs: => DataFrame, ci: CommitInfo,
                  touched: Set[Int], zones: Seq[Zone], batchId: Long,
                  epochKey: String): Unit = {
+    val (target, removed) = lake.rewriteSet(snap, touched, zones)
+    val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId")
+    val newFiles = lake.writeDataFiles(mergePlan(snap, keyXfs, target, obs), snap)
+    // the write job ran -> observed merge-outcome counters are available
+    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+    // cumulative drift counter rides the same atomic commit (the
+    // reference's delete-affected-0-rows alarm, process_clone.go:306-311)
+    commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m,
+      extraProps = Map("metrics-delete-miss" ->
+        (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
+          m.getOrElse("delete_miss", 0L)).toString))
+  }
+
+  /** The rows [[mergeApply]] writes, with their `__bucket`: `target` (the
+    * touched buckets' read) full-outer joined with `keyXfs`, merge
+    * outcomes counted into `obs`. */
+  private def mergePlan(snap: Snapshot, keyXfs: DataFrame, target: DataFrame,
+                        obs: org.apache.spark.sql.Observation): DataFrame = {
     val schema = snap.schema
     val keys = keyTypes(snap)
     val mergeKey = keys.map(_._1)
@@ -535,7 +528,6 @@ object Replay {
       } ++ Seq(col("maxLsn"), col("absentExists"), col("onAbsent"),
         col("presentKind"), col("onPresent"))): _*)
 
-    val (target, removed) = lake.rewriteSet(snap, touched, zones)
     val t = target.alias("t")
     // SHUFFLE_HASH hint on the batch side (guide §3.1): the folded delta is
     // micro-batch-bounded, so building its per-partition hash table is safe,
@@ -560,7 +552,6 @@ object Replay {
     val toAbsent = col("x.presentKind") === lit(Xf.TO_ABSENT)
     def cnt(cond: Column): Column =
       sum(when(!xn && cond, 1L).otherwise(0L))
-    val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId")
     val joined = joined0.observe(obs,
       cnt(!tExists && col("x.absentExists")).as("inserted"),
       cnt(tExists && !toAbsent).as("updated"),
@@ -590,23 +581,9 @@ object Replay {
       }
     }
 
-    val merged = joined.filter(exists)
+    joined.filter(exists)
       .select(schema.fields.map(valOf).toIndexedSeq: _*)
-    explain(s"replay-merge-batch$batchId", merged)
-    val withBucket = merged.withColumn("__bucket",
-      pmod(xxhash64(snap.bucketCols.map(col): _*), lit(snap.numBuckets)))
-
-    val newFiles = timed("merge+write")(lake.writeDataFiles(withBucket, snap))
-    timed("commit") {
-    // the write job ran -> observed merge-outcome counters are available
-    val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
-    // cumulative drift counter rides the same atomic commit (the
-    // reference's delete-affected-0-rows alarm, process_clone.go:306-311)
-    commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m,
-      extraProps = Map("metrics-delete-miss" ->
-        (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
-          m.getOrElse("delete_miss", 0L)).toString))
-    }
+      .withColumn("__bucket", LakeTable.bucketOf(snap))
   }
 
   // ---------------------------------------------------------------------
@@ -620,10 +597,12 @@ object Replay {
   /** Diff in-stream Relation messages against the table schema and commit
     * added columns / widened types (vs the reference's ignore-until-dest-
     * altered rule, `docs/080-schema-modification.md:9-19` — we implement
-    * the stronger evolve-then-merge rule). */
-  def evolveSchema(lake: LakeTable, relations: Seq[Map[String, String]]): Unit = {
+    * the stronger evolve-then-merge rule). `snap` is the snapshot the
+    * batch read. */
+  def evolveSchema(lake: LakeTable, snap: Snapshot,
+                   relations: Seq[Map[String, String]]): Unit = {
     if (relations.isEmpty) return
-    val cur = lake.schema
+    val cur = snap.schema
     var fields = cur.fields.toVector
     var changed = false
     relations.foreach { rel =>
@@ -719,16 +698,20 @@ object Replay {
     val transformed = filterTransform(routed0, mapping, envSchema).toDF()
     val appendMode = mapping.mode == TableMode.Append
 
-    val p0 = probe(snap0, transformed, appendMode, batchId)
+    def probed(s: Snapshot): Probe =
+      Phases.run(lake, "probe")(probe(s, transformed, appendMode, batchId))
+    val p0 = probed(snap0)
     val (snap, p) =
       if (!p0.hasR) (snap0, p0)
       else {
         // the R rows themselves are a bounded-small collect, taken only
         // when the probe saw one
-        evolveSchema(lake, transformed.filter(col("op") === "R")
-          .select("after").collect().map(_.getMap[String, String](0).toMap).toSeq)
+        val relations = Phases.run(lake, "evolve")(transformed
+          .filter(col("op") === "R").select("after").collect()
+          .map(_.getMap[String, String](0).toMap).toSeq)
+        evolveSchema(lake, snap0, relations)
         val s = lake.snapshot()
-        (s, probe(s, transformed, appendMode, batchId))
+        (s, probed(s))
       }
     p.ci match {
       case None =>
@@ -738,9 +721,9 @@ object Replay {
       case Some(ci) =>
         val mergeKey = keyTypes(snap).map(_._1)
         val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
-        val xfs = foldToXfDF(normalizeDF(transformed, mergeKey, appendMode), payloadCols)
-        explain(s"replay-fold-batch$batchId", xfs)
-        mergeApply(lake, snap, xfs, ci, p.touched, p.zones, batchId, epochKey)
+        mergeApply(lake, snap,
+          foldToXfDF(normalizeDF(transformed, mergeKey, appendMode), payloadCols),
+          ci, p.touched, p.zones, batchId, epochKey)
     }
     true
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec}
+import graft.obs.Phases
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -66,11 +67,11 @@ object SignatureStore {
     * The ingest loop computes BOTH families (the one-table artifact); a
     * caller rebuilding a stand-in table for one query may disable the
     * family it will not read (the disabled columns stay in the schema as
-    * NULLs). */
-  /** @param uniqueIds caller PROMISES one row per doc_id (a per-key fold
-    *                   output or a keyed table read): the row-preserving
-    *                   id frame then skips its distinct — one exchange
-    *                   less on the per-micro-batch re-sign path. */
+    * NULLs).
+    * @param uniqueIds caller PROMISES one row per doc_id (a per-key fold
+    *                  output or a keyed table read): the row-preserving
+    *                  id frame then skips its distinct — one exchange
+    *                  less on the per-micro-batch re-sign path. */
   def signaturesOf(docs: DataFrame, minhash: Boolean = true,
                    simhash: Boolean = true,
                    uniqueIds: Boolean = false): DataFrame = {
@@ -103,8 +104,8 @@ object SignatureStore {
     val docs = docLake.read().select(
       docIdCol(mergeKey.map(col)).as("doc_id"),
       col(textCol).as("text"))
-    val rows = signaturesOf(docs, uniqueIds = true).withColumn("__bucket",
-      pmod(xxhash64(col("doc_id")), lit(ssnap.numBuckets)))
+    val rows = signaturesOf(docs, uniqueIds = true)
+      .withColumn("__bucket", LakeTable.bucketOf(ssnap))
     sig.commit(sig.writeDataFiles(rows, ssnap),
       ssnap.files.map(_.path).toSet,
       properties = Map("signatures-bootstrap" -> dsnap.version.toString))
@@ -123,12 +124,6 @@ object SignatureStore {
                  epochKey: String = "commit-epoch"): Boolean = {
     val spark = events.sparkSession
     Replay.tuneSession(spark)
-    val timing = sys.env.get("GRAFT_TIMING").contains("1")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (timing) {
-      println(f"[sigstore] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     // one signature manifest per batch: the epoch check, the rewrite set
     // and the write all read this snapshot
     val snap = sig.snapshot()
@@ -159,7 +154,6 @@ object SignatureStore {
       element_at(col("onPresent"), textCol).as("p_txt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val bucketOf = pmod(xxhash64(col("doc_id")), lit(snap.numBuckets))
       // ONE stats pass yields the touched buckets AND the batch's doc_id
       // bounds — zone predicates on the signature read, mirroring
       // Replay.probe: a narrow-key batch (incremental steady state)
@@ -169,12 +163,11 @@ object SignatureStore {
       // table per batch). doc_id is the rendered merge key: a NULL single-
       // column key renders to NULL doc_id, so the null flag drops the zone
       // (stats don't cover nulls — same soundness rule as the doc merge).
-      val statRow = f.agg(
-        collect_set(bucketOf.cast("int")).as("bs"),
+      val statRow = Phases.run(sig, "stats")(f.agg(
+        collect_set(LakeTable.bucketOf(snap).cast("int")).as("bs"),
         min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
         max(col("doc_id").isNull.cast("int")).as("nl"),
-        count(lit(1)).as("n")).head()
-      lap("fold-stats")
+        count(lit(1)).as("n")).head())
       if (statRow.getLong(4) == 0L) { // empty fold: advance the epoch only
         sig.commit(Nil, Set.empty,
           properties = Map(epochKey -> batchId.toString))
@@ -218,10 +211,8 @@ object SignatureStore {
         val signed = signaturesOf(rows.filter(col("__resign"))
           .select(col("doc_id"), col("__text").as("text")), uniqueIds = true)
         val out = keep.unionByName(signed)
-          .withColumn("__bucket", pmod(xxhash64(col("doc_id")), lit(snap.numBuckets)))
-        Replay.explain(s"sigstore-merge-batch$batchId", out)
+          .withColumn("__bucket", LakeTable.bucketOf(snap))
         val newFiles = sig.writeDataFiles(out, snap)
-        lap("sign+write")
         sig.commit(newFiles, removed,
           properties = Map(epochKey -> batchId.toString))
         true

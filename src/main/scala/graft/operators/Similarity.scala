@@ -107,8 +107,7 @@ ORDER BY query_id, rnk"""
   // frames (the round-4 eager-persist variant cost 4-5 s per invocation
   // and pinned an O(corpus) cached frame per operator; see VERDICT r4 #1).
   // A QueryExecutionListener harvests the observed row when the action
-  // completes and records it in the registry + stderr + the
-  // GRAFT_METRICS_DIR sidecar.
+  // completes and records it in the registry, which /metrics renders.
   // ---------------------------------------------------------------------
 
   final case class Occupancy(buckets: Long, maxOccupancy: Long,
@@ -174,25 +173,11 @@ ORDER BY query_id, rnk"""
 
   private def record(op: String, s: CandidateStats): Unit = {
     statsRegistry.put(op, s)
-    System.err.println(s"[occupancy] op=$op candidate_pairs=${s.candidatePairs} " +
-      s"colliding_buckets~=${s.collidingBuckets} max_occupancy<=${s.maxOccupancyBound}")
     if (s.candidatePairs > candidateCap)
       System.err.println(s"[occupancy] WARNING op=$op candidate volume " +
         s"${s.candidatePairs} > cap $candidateCap — going quadratic; raise " +
         "the operator's bucket knob (planes / bandBits / K / dfCap); run " +
         "Similarity.occupancy(...) for the exact hot-bucket histogram")
-    sys.env.get("GRAFT_METRICS_DIR").foreach { d =>
-      try {
-        val dir = java.nio.file.Paths.get(d)
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.writeString(dir.resolve("occupancy.jsonl"),
-          s"""{"op":"$op","candidate_pairs":${s.candidatePairs},"colliding_buckets":${s.collidingBuckets},"max_occupancy_bound":${s.maxOccupancyBound}}""" + "\n",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      } catch { case e: Throwable =>
-        System.err.println(s"[occupancy] sidecar write failed: ${e.getMessage}")
-      }
-    }
   }
 
   private def ensureListener(spark: SparkSession): Unit =

@@ -396,8 +396,7 @@ SELECT a, b, hamming FROM pairs WHERE hamming <= 3 ORDER BY a, b"""
         corpus.select(col("doc_id").cast("string").as("doc_id"), col("text"))),
       minhash = minhash, simhash = simhash, uniqueIds = true)
     val snap = sig.snapshot()
-    val withB = rows.withColumn("__bucket",
-      pmod(xxhash64(col("doc_id")), lit(snap.numBuckets)))
+    val withB = rows.withColumn("__bucket", graft.lake.LakeTable.bucketOf(snap))
     sig.commit(sig.writeDataFiles(withB, snap), Set.empty)
     sig
   }
@@ -1355,8 +1354,7 @@ FROM documents ORDER BY doc_id"""
     * window and the broadcast both hold <= this many rows. At 100 TB
     * raise it (1M blocks = ~16 MB broadcast) so per-block window state
     * stays ~corpus/PackBlocks rows. */
-  val PackBlocks: Long =
-    sys.env.get("GRAFT_PACK_BLOCKS").map(_.toLong).getOrElse(4096L)
+  val PackBlocks: Long = 4096L
 
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1567,8 +1565,7 @@ FROM a ORDER BY doc_id"""
   /** Document-frequency threshold: a gram in >= this many distinct docs
     * counts as boilerplate. At 100 TB raise it (or cap the broadcast set
     * like DfCap) so the frequent-gram set stays broadcast-sized. */
-  val BoilerDf: Long =
-    sys.env.get("GRAFT_BOILER_DF").map(_.toLong).getOrElse(3L)
+  val BoilerDf: Long = 3L
 
   def boilerplate(spark: SparkSession, dir: String): DataFrame = {
     val grams = docs(spark, dir)

@@ -178,7 +178,7 @@ object CdcStream {
   private def rootsOf(r: Route): Set[String] =
     (r.lake.root +: r.signatures.filter(_ => r.mapping.mode != TableMode.History)
       .toSeq.flatMap(s => s.lake.root +: s.labels.map(_.root).toSeq))
-      .map(p => java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString).toSet
+      .map(LakeTable.rootKey).toSet
 
   /** `routes` split into groups that share no table root; each group keeps
     * declared order, and groups are ordered by their first route. */
@@ -202,6 +202,7 @@ object CdcStream {
             trigger: Trigger = Trigger.AvailableNow(),
             format: String = "parquet"): StreamingQuery = {
     import spark.implicits._
+    ProgressLog.attach(spark)
     val src = format match {
       case "parquet" =>
         spark.readStream

@@ -2,6 +2,7 @@ package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.lake.LakeTable
+import graft.obs.Phases
 
 import java.net.InetSocketAddress
 
@@ -19,14 +20,26 @@ import java.net.InetSocketAddress
   * and a crash loses nothing. Uses the JDK's built-in httpserver — zero
   * added dependencies.
   *
-  * Exported families (labels: table, plus op/source where applicable):
+  * Exported families (labels: table, plus op/source/phase where applicable):
   *   graft_ops_total{table,op}            cumulative received DML ops (A3)
   *   graft_delete_miss_total{table}       drift alarm (W3 delete-affected-0)
   *   graft_lsn_high_watermark{table}      committed-LSN watermark (A1)
   *   graft_snapshot_version{table}        current snapshot version
   *   graft_commit_epoch{table,source}     per-(stream, mapping) epoch
   *   graft_data_files{table} / graft_data_bytes{table}
-  *   graft_stream_batches_total           micro-batches seen (ProgressLog)
+  *   graft_batch_phase_seconds_total{table,phase} /
+  *   graft_batch_phase_count_total{table,phase}
+  *                                        batch phases run in this JVM
+  *                                        (graft.obs.Phases)
+  *   graft_stream_batches_total           micro-batches reported (ProgressLog)
+  *   graft_stream_trigger_seconds_total{phase}
+  *                                        streaming trigger durations
+  *   graft_candidate_pairs{op} / graft_colliding_buckets{op} /
+  *   graft_bucket_max_occupancy_bound{op} candidate volume of the bucketed
+  *                                        operators (Similarity)
+  *
+  * The phase and trigger families are in-process counters: they cover
+  * the batches this JVM ran since it started.
   */
 object MetricsHttp {
 
@@ -47,8 +60,7 @@ object MetricsHttp {
 
   /** Render the current counters for `tables` (name -> lake root). */
   def render(spark: org.apache.spark.sql.SparkSession,
-             tables: Map[String, String],
-             progress: Option[ProgressLog] = None): String = {
+             tables: Map[String, String]): String = {
     val sb = new StringBuilder
     def mkLine(out: StringBuilder)(family: String,
                                    labels: Seq[(String, String)], v: String): Unit = {
@@ -97,11 +109,29 @@ object MetricsHttp {
           mkLine(sb)("graft_table_scrape_error", Seq("table" -> name), "1")
       }
     }
-    progress.foreach(p =>
-      sb.append(s"graft_stream_batches_total ${p.batches.get()}\n"))
+    val phases = Phases.totals.toSeq.sortBy(_._1)
+    val named = tables.map { case (name, root) => LakeTable.rootKey(root) -> name }
+    sb.append("# TYPE graft_batch_phase_seconds_total counter\n")
+    sb.append("# TYPE graft_batch_phase_count_total counter\n")
+    for (((scope, phase), t) <- phases; name <- named.get(scope)) {
+      val l = Seq("table" -> name, "phase" -> phase)
+      mkLine(sb)("graft_batch_phase_seconds_total", l, t.seconds.toString)
+      mkLine(sb)("graft_batch_phase_count_total", l, t.count.toString)
+    }
+    // every progress event reports triggerExecution: its count is the
+    // number of micro-batches
+    val trigger = phases.filter(_._1._1 == Phases.Stream)
+    val batches = trigger.collectFirst { case ((_, "triggerExecution"), t) => t.count }
+    sb.append("# TYPE graft_stream_batches_total counter\n")
+    sb.append(s"graft_stream_batches_total ${batches.getOrElse(0L)}\n")
+    sb.append("# TYPE graft_stream_trigger_seconds_total counter\n")
+    trigger.foreach { case ((_, phase), t) =>
+      mkLine(sb)("graft_stream_trigger_seconds_total", Seq("phase" -> phase),
+        t.seconds.toString)
+    }
     // candidate-volume telemetry from the bucketed dedup/ANN operators
     // (Similarity.observeCandidates registry) — the 100 TB quadratic-blowup
-    // alarm, scrapeable instead of stderr-only
+    // alarm
     val occ = graft.operators.Similarity.observedOps.toSeq.sorted
     if (occ.nonEmpty) {
       sb.append("# TYPE graft_candidate_pairs gauge\n")
@@ -124,21 +154,19 @@ object MetricsHttp {
     * returned handle). */
   def start(spark: org.apache.spark.sql.SparkSession,
             tables: Map[String, String],
-            port: Int = 0,
-            progress: Option[ProgressLog] = None): Server =
-    startDynamic(spark, () => tables, port, progress)
+            port: Int = 0): Server =
+    startDynamic(spark, () => tables, port)
 
   /** Like [[start]] but the table map is re-resolved PER SCRAPE — for
     * deployments whose map file is live-reloadable (graft.Main), so a
     * table added mid-run appears on /metrics without a restart. */
   def startDynamic(spark: org.apache.spark.sql.SparkSession,
                    tables: () => Map[String, String],
-                   port: Int = 0,
-                   progress: Option[ProgressLog] = None): Server = {
+                   port: Int = 0): Server = {
     val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     srv.createContext("/metrics", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
-        val body = render(spark, tables(), progress).getBytes("UTF-8")
+        val body = render(spark, tables()).getBytes("UTF-8")
         ex.getResponseHeaders.add("Content-Type",
           "text/plain; version=0.0.4; charset=utf-8")
         ex.sendResponseHeaders(200, body.length)

@@ -59,7 +59,6 @@ object Orchestrator {
             maxFilesPerTrigger: Int = 1,
             trigger: org.apache.spark.sql.streaming.Trigger =
               org.apache.spark.sql.streaming.Trigger.AvailableNow()): Seq[Handle] = {
-    ProgressLog.attach(spark)
     dbMap.databases.flatMap { db =>
       // CEL filter/set translation is type-dependent: hint column kinds
       // from the target spec's schema (the source-row env for clone/append)

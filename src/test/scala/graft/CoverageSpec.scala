@@ -375,9 +375,9 @@ class CoverageSpec extends AnyFunSuite {
   }
 
   test("watermark calibration guard: streaming result matches the batch-(N-2) model") {
-    // The guard moved out of the timed qWatermarkAgg path (GRAFT_CALIBRATE=1
-    // re-enables it there); this test keeps it running on every sbt pass so
-    // a Spark-version watermark-propagation change fails loudly here.
+    // The guard is not on the timed qWatermarkAgg path; this test keeps it
+    // running on every sbt pass so a Spark-version watermark-propagation
+    // change fails loudly here.
     val dir = "/root/testdata/sf0.001"
     val result = graft.verify.EventsCdc.qWatermarkAgg(spark, dir)
     graft.verify.EventsCdc.watermarkCalibrationGuard(spark,

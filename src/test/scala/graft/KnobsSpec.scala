@@ -207,6 +207,25 @@ class KnobsSpec extends AnyFunSuite {
     assert(TextPipeline.tokenCount(spark, dir).count() == 2)
   }
 
+  test("env names: every GRAFT_* name in src/main is recognized, every runtime knob is read") {
+    import graft.config.ProcessConfig
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(java.nio.file.Files.readString).toList finally walk.close()
+    assert(sources.nonEmpty)
+    val quoted = "\"((?:SPARK_)?GRAFT_[A-Z_]+)\"".r
+    val names = sources.flatMap(quoted.findAllMatchIn(_).map(_.group(1))).toSet
+    val recognized = (ProcessConfig.keys :+ "config").map(ProcessConfig.envName).toSet ++
+      ProcessConfig.runtimeKnobs ++ ProcessConfig.deprecatedKnobs.keySet
+    val stray = names.filterNot(n => n.startsWith("SPARK_GRAFT_") || recognized(n))
+    assert(stray.isEmpty, s"env names outside the recognized set: $stray")
+    val reads = "env\\.(?:get|getOrElse|contains)\\(\"(GRAFT_[A-Z_]+)\"".r
+    val read = sources.flatMap(reads.findAllMatchIn(_).map(_.group(1))).toSet
+    assert(ProcessConfig.runtimeKnobs.subsetOf(read),
+      s"recognized but never read: ${ProcessConfig.runtimeKnobs -- read}")
+  }
+
   test("minhash (K, bands) knob: r = K/bands wiring holds at non-defaults") {
     // K=12, bands=6 -> r=2 (looser S-curve): candidates are a superset of
     // the default 4x3 banding's VERIFIED pairs at the same threshold

@@ -289,6 +289,62 @@ class ReplaySpec extends AnyFunSuite {
     assert(history < 11, s"history batch ran $history jobs")
   }
 
+  test("phases: a clone batch's jobs run under graft: descriptions and the caller's description comes back") {
+    val sc = spark.sparkContext
+    val lake = LakeTable.create(spark, SparkTestBase.tmpDir("phases"),
+      Transcripts.spec(numBuckets = 4))
+    val cfg = Gen.Config(numEvents = 4000, numConvs = 40, seed = 42)
+    Replay.applyBatch(lake, Gen.events(spark, cfg), mapping, 0) // a non-empty target
+    val group = s"phases-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seenGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = e.properties.getProperty("spark.jobGroup.id")
+        if (g != null) seenGroups.add(g)
+        if (g == group)
+          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+      }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.add((s.description, s.physicalPlanDescription))
+          case _ =>
+        }
+    }
+    val scope = LakeTable.rootKey(lake.root)
+    def phaseSeconds: Map[String, Double] = graft.obs.Phases.totals.collect {
+      case ((`scope`, ph), t) => ph -> t.seconds }
+    val events = Gen.events(spark, cfg.copy(seed = 43))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "outer")
+      val (s0, t0) = (phaseSeconds, System.nanoTime())
+      try {
+        assert(Replay.applyBatch(lake, events, mapping, 1))
+        val wall = (System.nanoTime() - t0) / 1e9
+        val split = phaseSeconds.map { case (ph, s) => ph -> (s - s0.getOrElse(ph, 0.0)) }
+        info(f"phases cover ${split.values.sum / wall * 100}%.1f%% of $wall%.3f s: " +
+          split.toSeq.sorted.map { case (ph, s) => f"$ph $s%.3f s" }.mkString(", "))
+        assert(sc.getLocalProperty("spark.job.description") == "outer")
+      } finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!seenGroups.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(seenGroups.contains(marker), "listener bus did not deliver the marker job")
+      val d = descs.asScala.toSeq
+      assert(d.nonEmpty && d.forall(_.startsWith("graft:")), d.mkString("\n"))
+      val tableName = java.nio.file.Paths.get(lake.root).getFileName.toString
+      assert(plans.asScala.exists { case (desc, plan) =>
+        desc == s"graft:$tableName:write" && plan.contains("FullOuter") },
+        plans.asScala.map(_._1).mkString("\n"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   private def turn(conv: String, idx: Int, text: String): Map[String, String] =
     Map("conv_id" -> conv, "turn_idx" -> idx.toString, "role" -> "user",
       "text" -> text, "tool" -> null, "ts" -> "2024-01-01 00:00:00")
