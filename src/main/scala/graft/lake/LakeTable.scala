@@ -72,8 +72,9 @@ final case class Snapshot(
   *
   * Single-writer-per-table by design (the reference likewise has one
   * apply pipeline per destination); the version-file create is
-  * fail-if-exists so a concurrent second writer aborts rather than
-  * clobbering.
+  * fail-if-exists, and a rewriting commit fails unless the version it
+  * read is still the latest ([[commit]]'s `base`), so a concurrent second
+  * writer aborts rather than clobbering.
   */
 final class LakeTable private (val spark: SparkSession, val root: String) {
 
@@ -153,10 +154,11 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
              zones: Seq[Zone] = Nil): DataFrame =
     scan(s, selectFiles(s, buckets, zones))
 
-  /** The target side of a copy-on-write merge over snapshot `snap`: the
-    * read of the `touched` buckets, zone-pruned by `zones`, and EXACTLY
-    * the paths that read scanned — the files the merge's commit removes. A
-    * zone-pruned file was neither read nor rewritten, so it stays live.
+  /** The files a copy-on-write merge over snapshot `snap` reads and
+    * rewrites: the `touched` buckets, zone-pruned by `zones`. Its commit
+    * removes EXACTLY these paths; a zone-pruned file was neither read nor
+    * rewritten, so it stays live. The merge reads them with [[scan]]
+    * inside its write phase.
     *
     * Fragmentation cap (the zone-pruning trade-off closed): files a zone
     * skips are not rewritten, so a bucket hit by many narrow-key batches
@@ -165,21 +167,19 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * disabled for this merge, so the whole bucket rewrites into O(1)
     * files — inline compaction with write amplification bounded by the
     * cap. */
-  def rewriteSet(snap: Snapshot, touched: Set[Int],
-                 zones: Seq[Zone]): (DataFrame, Set[String]) = {
+  def rewriteSet(snap: Snapshot, touched: Set[Int], zones: Seq[Zone]): Seq[DataFile] = {
     val fragmented: Set[Int] =
       if (zones.isEmpty) Set.empty
       else {
         val perBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size).toMap
         touched.filter(b => perBucket.getOrElse(b, 0) > graft.config.Knobs.compactFileCap)
       }
-    val files = selectFiles(snap, Some(touched), zones, fragmented)
-    (scan(snap, files), files.map(_.path).toSet)
+    selectFiles(snap, Some(touched), zones, fragmented)
   }
 
   /** `files` of snapshot `s`, each scanned with its stored schema and
     * aligned to `s`'s current schema. */
-  private def scan(s: Snapshot, files: Seq[DataFile]): DataFrame = {
+  private[graft] def scan(s: Snapshot, files: Seq[DataFile]): DataFrame = {
     val cur = s.schema
     if (files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur)
@@ -209,10 +209,14 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
 
   /** [[writeDataFiles]] against an already-resolved snapshot, with its
     * current schema: a merge writes and commits against the snapshot it
-    * read, so it resolves the manifest once. */
-  def writeDataFiles(df: => DataFrame, snap: Snapshot): Seq[DataFile] = {
+    * read, so it resolves the manifest once. `clustered`: `df` already
+    * arrives hash-partitioned by `__bucket` and sorted by it within each
+    * partition (a merge plan's own exchange and sort), so the write adds
+    * neither. */
+  def writeDataFiles(df: => DataFrame, snap: Snapshot,
+                     clustered: Boolean = false): Seq[DataFile] = {
     val schemaId = snap.currentSchemaId
-    val moved = Phases.run(this, "write")(writeBuckets(df))
+    val moved = Phases.run(this, "write")(writeBuckets(df, clustered))
     // zone-map columns: the merge key, restricted to stat-comparable types
     val statCols: Map[String, DataType] =
       ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols)
@@ -240,9 +244,10 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   /** Write `df` partitioned by `__bucket` into a temp directory, then move
     * each file into `data/` under a bucket-prefixed unique name.
     * @return (final path, bucket) per written file */
-  private def writeBuckets(df: DataFrame): Seq[(Path, Int)] = {
+  private def writeBuckets(df: DataFrame, clustered: Boolean): Seq[(Path, Int)] = {
     val tmp = dataDir.resolve(s"tmp-${UUID.randomUUID()}")
-    df.repartition(col("__bucket")).write.partitionBy("__bucket").parquet(tmp.toString)
+    (if (clustered) df else df.repartition(col("__bucket")))
+      .write.partitionBy("__bucket").parquet(tmp.toString)
     val moved = LakeTable.listDir(tmp)(_.filter(
       p => p.getFileName.toString.startsWith("__bucket=")).toSeq)
       .flatMap { bdir =>
@@ -322,15 +327,29 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     } finally reader.close()
   }
 
-  /** Atomic commit: next manifest version via fail-if-exists rename.
-    * `removePaths` files stay on disk (time travel reads them); a vacuum
-    * would reclaim them (not needed in this sandbox). */
+  /** Atomic commit: next manifest version, published fail-if-exists.
+    * `removePaths` files stay on disk (time travel reads them) until a
+    * [[vacuum]] reclaims them.
+    *
+    * `base` is the snapshot the commit was computed from. A commit that
+    * rewrites (removes files, or derives cumulative properties from what
+    * it read) passes it, and fails if any other commit landed since: its
+    * removals would otherwise miss files a concurrent writer replaced (a
+    * compaction), leaving its rewritten rows next to their compacted
+    * copies. A commit without a base only adds (files, properties, a
+    * schema) and applies on top of the latest version. */
   def commit(addFiles: Seq[DataFile], removePaths: Set[String],
              newSchema: Option[StructType] = None,
              properties: Map[String, String] = Map.empty,
-             lineage: Seq[LineageEntry] = Nil): Snapshot =
+             lineage: Seq[LineageEntry] = Nil,
+             base: Option[Snapshot] = None): Snapshot =
     Phases.run(this, "commit") {
       val cur = snapshot()
+      base.foreach { b =>
+        if (b.version != cur.version)
+          throw new IllegalStateException(
+            s"stale commit: read v${b.version} of $root, but v${cur.version} is the latest")
+      }
       val (schemas2, schemaId2) = newSchema match {
         case Some(sch) if sch.json != cur.schemas(cur.currentSchemaId.toString) =>
           val id = cur.schemas.keys.map(_.toInt).max + 1
@@ -360,10 +379,9 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     val over = snap.files.groupBy(_.bucket).filter(_._2.size > maxFilesPerBucket)
     if (over.isEmpty) return 0
     val buckets = over.keySet
-    val df = scan(snap, over.values.flatten.toSeq)
-      .withColumn("__bucket", bucketOf(snap))
-    val newFiles = writeDataFiles(df, snap)
-    commit(newFiles, over.values.flatten.map(_.path).toSet)
+    val files = over.values.flatten.toSeq
+    val newFiles = writeDataFiles(scan(snap, files).withColumn("__bucket", bucketOf(snap)), snap)
+    commit(newFiles, files.map(_.path).toSet, base = Some(snap))
     buckets.size
   }
 

@@ -54,16 +54,13 @@ object History {
     t.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
   }
 
-  /** Catalyst-native batch fold (the twin of Replay.foldToXfDF for SCD2):
-    * normalize events to HOp rows via expressions, then one key-partitioned
-    * ordered window finds each version's next closer (its kvsz_end /
-    * soft-delete flag) and each key's FIRST closer (which ends the
-    * target's pre-existing open versions). Returns (newVersions,
-    * closeInstructions) DataFrames with `key: array<string>` plus typed
-    * payload columns, each consumed once, by the merge's write. */
-  private def foldDF(routed: DataFrame, mergeKey: Seq[String]): (DataFrame, DataFrame) = {
-    def keyArr(src: Column): Column = array(mergeKey.map(c =>
-      if (c == "sid") col("sid") else element_at(src, c)): _*)
+  /** The batch's SCD2 ops (the twin of Replay.normalizeDF): each event
+    * as `key` (the typed merge key `keys`, `Replay.typedKey`), `ord`,
+    * `op` (I insert, V new version, C close, CD soft-delete close), `t`
+    * (its logical time) and `after` (its value map). */
+  private def opsDF(routed: DataFrame, keys: Seq[(String, DataType)]): DataFrame = {
+    def keyArr(src: Column): Column = array(keys.map { case (c, _) =>
+      if (c == "sid") col("sid") else element_at(src, c) }: _*)
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 4
     val emptyMap = map().cast("map<string,string>")
     // whole timestamp from lsn seconds + seq milliseconds in ONE interval,
@@ -73,8 +70,8 @@ object History {
       make_dt_interval(lit(0), lit(0), lit(0),
         (col("lsn") * 1000L + col("seq")).cast("decimal(23,0)") / 1000),
       "yyyy-MM-dd HH:mm:ss.SSS")
-    def h(key: Column, sub: Int, kind: String, t: Column, after: Column): Column =
-      struct(key.as("key"), (ordBase + sub).as("ord"), lit(kind).as("kind"),
+    def h(key: Column, sub: Int, op: String, t: Column, after: Column): Column =
+      struct(key.as("key"), (ordBase + sub).as("ord"), lit(op).as("op"),
         t.as("t"), after.as("after"))
     val halves =
       when(col("op") === "I",
@@ -90,118 +87,89 @@ object History {
             .otherwise(keyArr(col("after"))), 1, "V", histT, col("after"))))
       .when(col("op") === "D",
         array(h(keyArr(col("before")), 1, "CD", histT, emptyMap)))
-    val ops = routed.filter(col("op").isin("I", "U", "D"))
+    routed.filter(col("op").isin("I", "U", "D"))
       .select(explode(halves).as("x")).select("x.*")
-
-    // next closer strictly after each row, per key: min struct(ord, t, del)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("ord"))
-      .rowsBetween(1, org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val closer = when(col("kind").isin("C", "CD"),
-      struct(col("ord").as("o"), col("t").as("ct"),
-        (col("kind") === "CD").as("cd")))
-    val o = ops.withColumn("nx", min(closer).over(w))
-    val versions = o.filter(col("kind").isin("I", "V")).select(
-      col("key"),
-      when(col("kind") === "I", lit(KVSZ_T0)).otherwise(col("t")).as("kvsz_start"),
-      coalesce(col("nx.ct"), lit(KVSZ_OPEN)).as("kvsz_end"),
-      coalesce(col("nx.cd"), lit(false)).as("kvsz_deleted"),
-      col("after").as("vals"))
-    // first closer per key ends the target's pre-existing open versions
-    val closes = ops.filter(col("kind").isin("C", "CD"))
-      .groupBy(col("key"))
-      .agg(min(struct(col("ord").as("o"), col("t").as("ct"),
-        (col("kind") === "CD").as("cd"))).as("fc"))
-      .select(col("key"), col("fc.ct").as("closeT"), col("fc.cd").as("closeDel"))
-    (versions, closes)
+      .withColumn("key", Replay.typedKey(keys))
   }
 
   /** History's merge body, run by Replay.applyBatch (which routes,
-    * filters, sets and probes first): the SCD2 fold, the close-and-append
-    * merge over the probe's `touched` buckets of `snap`, the write, and the
-    * shared commit step (Replay.commitMerge). The fold and merge plans are
-    * built inside the write phase, whose job runs them. */
+    * filters, sets and probes first): the SCD2 close-and-append pass
+    * ([[mergePlan]]) over the probe's `touched` buckets of `snap`, the
+    * write, and the shared commit step (Replay.commitMerge). The target
+    * scan and the pass's plan are built inside the write phase, whose job
+    * runs them. */
   private[operators] def merge(lake: LakeTable, snap: Snapshot, routed: DataFrame,
                                ci: Replay.CommitInfo, touched: Set[Int],
                                batchId: Long, epochKey: String): Unit = {
     // no zones: every version row of a touched key's bucket is rewritten
-    val (target, removed) = lake.rewriteSet(snap, touched, Nil)
+    val files = lake.rewriteSet(snap, touched, Nil)
     val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
-    val newFiles = lake.writeDataFiles(mergePlan(snap, routed, target, obs), snap)
-    // the write job ran -> the observation is available (an all-empty
-    // union observes its sums as null -> 0)
+    val newFiles = lake.writeDataFiles(
+      mergePlan(snap, routed, lake.scan(snap, files), obs), snap, clustered = true)
+    // the write job ran -> the observation is available (an empty pass
+    // observes its sums as null -> 0)
     val m = obs.get.map { case (k, v) =>
       k -> Option(v).map(_.asInstanceOf[Long]).getOrElse(0L) }
-    Replay.commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m)
+    Replay.commitMerge(lake, snap, ci, batchId, epochKey, newFiles,
+      files.map(_.path).toSet, m)
   }
 
-  /** The rows [[merge]] writes, with their `__bucket`: the `target` read
-    * with its open versions closed, plus the batch's new versions; the
-    * outcome counts go to `obs`. */
-  private def mergePlan(snap: Snapshot, routed: DataFrame, target0: DataFrame,
+  /** The rows [[merge]] writes, with their `__bucket`, from ONE
+    * key-partitioned, ord-sorted window pass over the `target` read and
+    * the batch's ops together (`Replay.withTargetRows`). Target rows enter
+    * as op T ahead of every op; each row's next closer (min struct(ord, t,
+    * del) over the rows after it) is then, for a target row, the key's
+    * FIRST closer — which ends the pre-existing open versions — and, for a
+    * new version, its own kvsz_end / soft-delete flag. No join, no
+    * aggregation, and one exchange (on the bucket, which the write
+    * reuses). The outcome counts go to `obs`. */
+  private def mergePlan(snap: Snapshot, routed: DataFrame, target: DataFrame,
                         obs: org.apache.spark.sql.Observation): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val schema = snap.schema
-    val mergeKey = (if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols
+    val keys = Replay.keyTypes(snap)
+    val mergeKey = keys.map(_._1)
 
-    val (versions, closes0) = foldDF(routed, mergeKey)
-    val newTyped = versions.select(schema.fields.map { f =>
-      f.name match {
-        case "kvsz_start" => col("kvsz_start").cast(TimestampType).as(f.name)
-        case "kvsz_end" => col("kvsz_end").cast(TimestampType).as(f.name)
-        case "kvsz_deleted" => col("kvsz_deleted").as(f.name)
-        case n if mergeKey.contains(n) =>
-          element_at(col("key"), mergeKey.indexOf(n) + 1).cast(f.dataType).as(n)
-        case n => Replay.castText(element_at(col("vals"), n), f.dataType).as(n)
-      }
-    }.toIndexedSeq: _*)
+    val rows = Replay.withTargetRows(snap, target, opsDF(routed, keys))
+    val closer = when(col("op").isin("C", "CD"),
+      struct(col("ord").as("o"), col("t").as("ct"), (col("op") === "CD").as("cd")))
+    val o = rows.withColumn("nx", min(closer).over(Window.partitionBy(col("__bucket"), col("key"))
+      .orderBy(col("ord")).rowsBetween(1, Window.unboundedFollowing)))
+      .filter(col("op").isin("T", "I", "V"))
 
-    val cdf = closes0.select(
-      (mergeKey.zipWithIndex.map { case (c, i) =>
-        element_at(col("key"), i + 1).cast(schema(c).dataType).as(s"__k_$c")
-      } ++ Seq(col("closeT").cast(TimestampType).as("__closeT"),
-        col("closeDel").as("__closeDel"))): _*)
-
-    val target = target0.alias("t")
-    val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c")).reduce(_ && _)
-    val isOpen = col("t.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
-    // Merge-outcome counters observed on the UNION via marker columns
-    // (CollectMetrics — no extra pass): pre-existing open versions closed
-    // by this batch, soft deletes among them, new version rows — clone-
-    // mode parity for the reference's per-op result counters
-    // (`streamer/metrics.go:11-53`). ONE observation, attached to a node
-    // descending from the target side: inside foreachBatch the batch DF
-    // belongs to the micro-batch's cloned session, and an Observation
-    // registered there never sees the write (which executes on the lake's
-    // session) — two separate observations deadlocked on exactly that.
-    val closing = col("x.__closeT").isNotNull && isOpen
-    // SHUFFLE_HASH on the batch-bounded close-instruction side (same
-    // rationale as Replay.mergeApply: skip both sort legs of the SMJ)
-    val updatedTarget = target.join(cdf.alias("x").hint("shuffle_hash"),
-        joinCond, "left_outer")
+    val isT = col("op") === "T"
+    val closeT = col("nx.ct").cast(TimestampType)
+    val closing = isT && col("nx").isNotNull &&
+      col("row.kvsz_end") === lit(KVSZ_OPEN).cast(TimestampType)
+    // Merge-outcome counters observed on the pass itself (CollectMetrics —
+    // no extra pass): pre-existing open versions closed by this batch,
+    // soft deletes among them, new version rows — clone-mode parity for
+    // the reference's per-op result counters (`streamer/metrics.go:11-53`).
+    // ONE observation, attached to a node descending from the target side:
+    // inside foreachBatch the batch DF belongs to the micro-batch's cloned
+    // session, and an Observation registered there never sees the write
+    // (which executes on the lake's session) — two separate observations
+    // deadlocked on exactly that.
+    o.observe(obs,
+        sum(when(closing, 1L).otherwise(0L)).as("closed"),
+        sum(when(closing && col("nx.cd"), 1L).otherwise(0L)).as("soft_deleted"),
+        sum(when(isT, 0L).otherwise(1L)).as("inserted"))
       .select(schema.fields.map { f =>
-        f.name match {
-          case "kvsz_end" =>
-            when(closing, col("x.__closeT"))
-              .otherwise(col("t.kvsz_end")).as(f.name)
-          case "kvsz_deleted" =>
-            when(closing && col("x.__closeDel"),
-              lit(true)).otherwise(col("t.kvsz_deleted")).as(f.name)
-          case n => col(s"t.$n").as(n)
+        val v = f.name match {
+          case "kvsz_start" =>
+            when(col("op") === "I", lit(KVSZ_T0)).otherwise(col("t")).cast(TimestampType)
+          case "kvsz_end" => coalesce(col("nx.ct"), lit(KVSZ_OPEN)).cast(TimestampType)
+          case "kvsz_deleted" => coalesce(col("nx.cd"), lit(false))
+          case n if mergeKey.contains(n) => col("key").getField(n)
+          case n => Replay.castText(element_at(col("after"), n), f.dataType)
         }
-      }.toIndexedSeq :+ closing.as("__closed") :+
-        (closing && col("x.__closeDel")).as("__softdel") :+
-        lit(false).as("__isnew"): _*)
-
-    updatedTarget
-      .unionByName(newTyped
-        .withColumn("__closed", lit(false))
-        .withColumn("__softdel", lit(false))
-        .withColumn("__isnew", lit(true)))
-      .observe(obs,
-        sum(when(col("__closed"), 1L).otherwise(0L)).as("closed"),
-        sum(when(col("__softdel"), 1L).otherwise(0L)).as("soft_deleted"),
-        sum(when(col("__isnew"), 1L).otherwise(0L)).as("inserted"))
-      .drop("__closed", "__softdel", "__isnew")
-      .withColumn("__bucket", LakeTable.bucketOf(snap))
+        val kept = f.name match {
+          case "kvsz_end" => when(closing, closeT).otherwise(col("row.kvsz_end"))
+          case "kvsz_deleted" =>
+            when(closing && col("nx.cd"), lit(true)).otherwise(col("row.kvsz_deleted"))
+          case n => col("row").getField(n)
+        }
+        when(isT, kept).otherwise(v).as(f.name)
+      }.toIndexedSeq :+ col("__bucket"): _*)
   }
 }

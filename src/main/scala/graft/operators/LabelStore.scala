@@ -80,7 +80,7 @@ object LabelStore {
       .withColumn("__bucket", LakeTable.bucketOf(lsnap))
     labels.commit(labels.writeDataFiles(rows, lsnap),
       lsnap.files.map(_.path).toSet,
-      properties = Map("labels-bootstrap" -> ssnap.version.toString))
+      properties = Map("labels-bootstrap" -> ssnap.version.toString), base = Some(lsnap))
     true
     }
   }
@@ -186,13 +186,13 @@ object LabelStore {
       }
       val zones = Seq(graft.lake.Zone("doc_id",
         lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-      val (target, removed) = labels.rewriteSet(lsnap, touchedBuckets, zones)
-      val out = target.join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
+      val files = labels.rewriteSet(lsnap, touchedBuckets, zones)
+      val out = labels.scan(lsnap, files).join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("cluster_id"))
         .unionAll(diff.filter(col("cluster_id").isNotNull))
         .withColumn("__bucket", bucketOf)
-      labels.commit(labels.writeDataFiles(out, lsnap),
-        removed, properties = Map(epochKey -> batchId.toString))
+      labels.commit(labels.writeDataFiles(out, lsnap), files.map(_.path).toSet,
+        properties = Map(epochKey -> batchId.toString), base = Some(lsnap))
       true
     } finally touched.unpersist(blocking = false)
     }

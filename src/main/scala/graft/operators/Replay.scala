@@ -14,26 +14,36 @@ import org.apache.spark.sql.types._
   * apply into a set-oriented plan:
   *
   *   mode filter (W4) -> row filter / column transform (P1, P2; the CEL
-  *   analog as Catalyst `expr`) -> pre-merge probe (one aggregation: commit
+  *   analog as Catalyst `expr`) -> pre-merge probe (one pass: commit
   *   bookkeeping, R-message detection, touched buckets and key zones) ->
   *   key extraction + PK-update normalization
   *   (R2) -> per-key fold to one row-state transformer (Xf algebra;
   *   replaces the per-table single-worker ordering,
-  *   `streamer/worker.go:106-108`) -> bucket-pruned merge join against the
-  *   lake table (W1-W3) -> atomic snapshot commit carrying epoch + LSN
+  *   `streamer/worker.go:106-108`), applied to the bucket-pruned target
+  *   rows (W1-W3) -> atomic snapshot commit carrying epoch + LSN
   *   watermark + lineage (A1).
   *
-  * One fold, [[foldToXfDF]]: the per-key [[Xf]] fold decomposed into
-  * per-column conditional aggregates over one key-partitioned window —
-  * whole-stage codegen, no object (de)serialization. [[Xf]] stays the
-  * executable spec it is tested against (CoverageSpec, XfSpec); the Xf
-  * transformer is bit-equivalent to the reference's sequential apply, so
-  * last-write-wins convergence holds under any partitioning.
+  * One fold, [[foldToXfDF]]: the per-key [[Xf]] read off one
+  * key-partitioned, ord-sorted pass of two window operators ([[xfRows]])
+  * — whole-stage codegen, no object (de)serialization, no aggregation
+  * operator. [[Xf]] stays the executable spec it is tested against
+  * (CoverageSpec, XfSpec); the Xf transformer is bit-equivalent to the
+  * reference's sequential apply, so last-write-wins convergence holds
+  * under any partitioning.
   *
-  * The fold is NOT skew-safe per key: its only exchange is
-  * `hashpartitioning(key)` BEFORE the window, and both aggregates run
-  * after it (`plans/r07/cdc_replay_clone_after.txt`, `replay-fold-batch0`),
-  * so all of one hot key's ops land in one task. BASELINE.md's Zipf-8 run
+  * The clone merge ([[mergeApply]]) runs that pass over the target's rows
+  * and the batch's ops together, so its write plan is: one exchange on
+  * the bucket, one sort, the two windows, then the parquet write — no
+  * join and no second exchange. Every generated class costs a compile
+  * when Spark's codegen cache (100 entries) evicts it, and a tail batch's
+  * working set has to fit that cache to run compiled code; fewer
+  * operators per plan is what keeps it there. The round-7 plan (`plans/r07/
+  * cdc_replay_clone_after.txt`, `replay-fold-batch0`) predates this:
+  * exchange on the key, two windows, two sort aggregates, and an
+  * exchange and a full-outer join against the target.
+  *
+  * The fold is NOT skew-safe: all of one key's ops, and in the merge all
+  * of one bucket's rows, land in one task. BASELINE.md's Zipf-8 run
   * (15.0 -> 12.1 s) stayed fast because the hot conversation spreads over
   * its turn keys, not because of a map-side combine.
   */
@@ -245,21 +255,25 @@ object Replay {
   }
 
   // ---------------------------------------------------------------------
-  // Catalyst-native fold: the Xf fold decomposed into per-column
-  // conditional aggregates — no object (de)serialization, whole-stage
-  // codegen end to end. The aggregates run after the key exchange, so
+  // Catalyst-native fold: the Xf fold decomposed into per-row window
+  // values over the key's ops — no object (de)serialization, no
+  // aggregation operator. The window runs after the key exchange, so
   // there is no map-side pre-reduce for hot keys (see the class doc).
   //
   // Derivation (provably equal to the sequential Xf fold; checked against
   // Xf.fold by CoverageSpec's property and against the DuckDB oracle):
   //   dl  = max ord of D ops          (segment boundary; null = no delete)
   //   fi  = min ord of I ops > dl     (the insert that creates the row)
-  //   live = {op at fi} ∪ {U ops with ord > fi}
-  //   onAbsent  = per column, last present value among live
+  //   upd = per column, the last U op carrying it
+  //   onAbsent  = per column, upd if it comes after fi, else fi's value
+  //               (the last present value among fi and the U ops after it)
   //   absentExists = fi ≠ null
   //   presentKind = dl null ? OVERRIDE : (fi ≠ null ? TO_ROW : TO_ABSENT)
-  //   onPresent = OVERRIDE ? per-column last present among ALL U ops
+  //   onPresent = OVERRIDE ? upd (the last present value among ALL U ops)
   //                        : onAbsent   (suffix fold after the delete)
+  // Every term but onAbsent is a whole-key window value, and onAbsent
+  // needs only the fi row's own values, so the key's Xf is read off ONE
+  // row: fi's, or (no fi) the key's last op.
   // ---------------------------------------------------------------------
 
   /** The keyed halves of one event as an array column, built by `half(key,
@@ -287,7 +301,9 @@ object Replay {
   }
 
   /** Normalize routed DML events (R/T pre-filtered) into keyed op rows via
-    * pure expressions; PK-updates explode into D(old)+I(new) halves. */
+    * pure expressions; PK-updates explode into D(old)+I(new) halves. The
+    * `key` is the merge key's text values, `array<string>`; [[typedKey]]
+    * turns it into the typed key a merge folds by. */
   def normalizeDF(routed: DataFrame, mergeKey: Seq[String],
                   appendMode: Boolean): DataFrame = {
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 2
@@ -302,60 +318,91 @@ object Replay {
         col("h.op").as("op"), col("h.after").as("after"))
   }
 
-  /** Fold normalized op rows to one row per key carrying the key's [[Xf]]
-    * (`key, maxLsn, absentExists, onAbsent, presentKind, onPresent`). One
-    * key-partitioned window pass (two unbounded window aggs share the sort)
-    * + one aggregation over the same partitioning — no second exchange. */
-  def foldToXfDF(ops: DataFrame, payloadCols: Seq[String]): DataFrame = {
+  /** The merge key `keys` (name, type) read off a text key array `arr`:
+    * one struct of the typed key columns, named like the table's — the
+    * same value as a target row's `struct(key columns)`, so a merge's
+    * window pass meets a batch key and its target row in one partition.
+    * Partitioning and struct comparison treat NULL fields as equal, so
+    * NULL key values still match null-safely. */
+  private[operators] def typedKey(keys: Seq[(String, DataType)],
+                                  arr: Column = col("key")): Column =
+    struct(keys.zipWithIndex.map { case ((c, dt), i) =>
+      element_at(arr, i + 1).cast(dt).as(c) }: _*)
+
+  /** Fold normalized op rows to one row per `key` carrying the key's [[Xf]]
+    * (`key, maxLsn, absentExists, onAbsent, presentKind, onPresent`): one
+    * exchange on `key`, one sort, two window operators over it and a
+    * filter keeping one row per key ([[xfRows]]). */
+  def foldToXfDF(ops: DataFrame, payloadCols: Seq[String]): DataFrame =
+    xfRows(ops, payloadCols).select("key", "maxLsn", "absentExists", "onAbsent",
+      "presentKind", "onPresent")
+
+  /** The one row per `key` of `rows` (`key, ord, op, after, lsn`) that
+    * carries the key's [[Xf]] over its I/U/D ops, with its `op` and the
+    * `carry` window values (name, aggregate over the key's rows). Rows
+    * of any other op ride along without folding: [[mergePlan]] passes the
+    * target's rows this way, as op T ahead of every op. `clusterBy` are
+    * functions of the key the window partitions by as well, so input
+    * already partitioned by them is not exchanged again. */
+  private def xfRows(rows: DataFrame, payloadCols: Seq[String],
+                     carry: Seq[(String, Column)] = Nil,
+                     clusterBy: Seq[Column] = Nil): DataFrame = {
     // NOTE an A/B (round 2) of pre-projecting the value map to typed
     // (value, present) column pairs before the exchange measured ~7%
     // SLOWER at the 1x2-core level — Tungsten's map encoding is already
     // compact and the extra projection node costs more than the per-row
     // key strings save. The map rides the shuffle as-is.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
-    val o = ops
-      .withColumn("dl", max(when(col("op") === "D", col("ord"))).over(w))
+    import org.apache.spark.sql.expressions.Window
+    val byKey = Window.partitionBy(clusterBy :+ col("key"): _*).orderBy(col("ord"))
+    val all = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // per column, the latest U carrying it: max over struct(ord, v) ignores
+    // nulls and compares by the unique ord — genuine NULL values ride in v
+    val o = rows.select(clusterBy ++ Seq(col("key"), col("ord"), col("op"), col("after"),
+      max(col("lsn")).over(all).as("maxLsn"), max(col("ord")).over(all).as("last"),
+      max(when(col("op") === "D", col("ord"))).over(all).as("dl")) ++
+      payloadCols.map(c => max(when(col("op") === "U" && map_contains_key(col("after"), c),
+        struct(col("ord").as("o"), element_at(col("after"), c).as("v")))).over(all)
+        .as(s"__upd_$c")) ++
+      carry.map { case (n, c) => c.over(all).as(n) }: _*)
+      // fi reads dl: a second window operator over the first's partitioning
+      // and order (no exchange, no sort). Each operator keeps ONE frame
+      // group: Spark orders an operator's groups by a hash of keys that can
+      // carry expression ids (`first(x, ignoreNulls)` becomes `nth_value`
+      // keyed by x), so with two groups the generated code can change
+      // between plannings and miss the codegen cache.
       .withColumn("fi", min(when(col("op") === "I" &&
-        col("ord") > coalesce(col("dl"), lit(Long.MinValue)), col("ord"))).over(w))
-    val live = col("ord") === col("fi") ||
-      (col("op") === "U" && col("ord") > col("fi")) // fi null => false
+        col("ord") > coalesce(col("dl"), lit(Long.MinValue)), col("ord"))).over(all))
+    val fiExists = col("fi").isNotNull
 
-    // per-column candidate: latest (ord, value) among rows matching cond
-    // that carry the column; max over struct(ord, v) ignores nulls and
-    // compares by the unique ord — genuine NULL values ride inside v
-    def cand(cond: Column, c: String): Column =
-      max(when(cond && map_contains_key(col("after"), c),
-        struct(col("ord").as("o"),
-          element_at(col("after"), c).as("v"))))
-
-    val aggs =
-      Seq(max(col("lsn")).as("maxLsn"), max(col("dl")).as("dl"),
-        max(col("fi")).as("fi")) ++
-      payloadCols.map(c => cand(live, c).as(s"__abs_$c")) ++
-      payloadCols.map(c => cand(col("op") === "U", c).as(s"__upd_$c"))
-    val g = o.groupBy(col("key")).agg(aggs.head, aggs.tail: _*)
-
-    def mapOf(prefix: String): Column = map_from_entries(transform(
+    // a map of the payload columns whose `present` holds
+    def mapOf(entry: String => (Column, Column)): Column = map_from_entries(transform(
       filter(
-        array(payloadCols.map(c =>
-          struct(lit(c).as("key"),
-            col(s"__${prefix}_$c").getField("v").as("value"),
-            col(s"__${prefix}_$c").isNotNull.as("present"))): _*),
+        array(payloadCols.map { c =>
+          val (present, value) = entry(c)
+          struct(lit(c).as("key"), value.as("value"), present.as("present"))
+        }: _*),
         e => e.getField("present")),
       e => struct(e.getField("key").as("key"), e.getField("value").as("value"))))
 
-    val absMap = mapOf("abs")
-    g.select(
-      col("key"), col("maxLsn"),
-      col("fi").isNotNull.as("absentExists"),
-      when(col("fi").isNotNull, absMap).otherwise(map().cast("map<string,string>"))
-        .as("onAbsent"),
+    // on the fi row: the U after it carrying c, else its own value
+    val absMap = mapOf { c =>
+      val upd = col(s"__upd_$c")
+      val late = upd.getField("o") > col("ord")
+      (late || map_contains_key(col("after"), c),
+        when(late, upd.getField("v")).otherwise(element_at(col("after"), c)))
+    }
+    o.filter(col("ord") === coalesce(col("fi"), col("last"))).select(clusterBy ++ Seq(
+      col("key"), col("op"), col("maxLsn"),
+      fiExists.as("absentExists"),
+      when(fiExists, absMap).otherwise(map().cast("map<string,string>")).as("onAbsent"),
       when(col("dl").isNull, lit(Xf.OVERRIDE))
-        .when(col("fi").isNotNull, lit(Xf.TO_ROW))
+        .when(fiExists, lit(Xf.TO_ROW))
         .otherwise(lit(Xf.TO_ABSENT)).as("presentKind"),
-      when(col("dl").isNull, mapOf("upd"))
-        .when(col("fi").isNotNull, absMap)
-        .otherwise(map().cast("map<string,string>")).as("onPresent"))
+      when(col("dl").isNull, mapOf { c =>
+        (col(s"__upd_$c").isNotNull, col(s"__upd_$c").getField("v")) })
+        .when(fiExists, absMap)
+        .otherwise(map().cast("map<string,string>")).as("onPresent")) ++
+      carry.map { case (n, _) => col(n) }: _*)
   }
 
   // ---------------------------------------------------------------------
@@ -378,18 +425,37 @@ object Replay {
                                         touched: Set[Int], zones: Seq[Zone])
 
   /** The merge key of `snap` with each column's type (sid is a string). */
-  private def keyTypes(snap: Snapshot): Seq[(String, DataType)] =
+  private[operators] def keyTypes(snap: Snapshot): Seq[(String, DataType)] =
     ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols).map(c =>
       c -> (if (c == "sid") StringType else snap.schema(c).dataType))
 
-  /** The pre-merge probe: ONE aggregation over the routed, filtered and set
+  /** One (sid, op, bucket) group of [[probe]]'s aggregation: the LSN
+    * bounds, the event count (first halves only), the max
+    * [[eventOrdCol]], and per zone column the min, max and whether a NULL
+    * was seen (values rendered as zone-map strings). */
+  private final case class ProbeGroup(minLsn: Long, maxLsn: Long, n: Long, maxEo: Long,
+                                      lo: Seq[String], hi: Seq[String], nul: Seq[Boolean]) {
+    def merge(o: ProbeGroup, types: Seq[DataType]): ProbeGroup = {
+      def pick(a: Seq[String], b: Seq[String], sign: Int) = a.indices.map { i =>
+        if (a(i) == null) b(i) else if (b(i) == null) a(i)
+        else if (LakeTable.statCompare(types(i))(a(i), b(i)) * sign <= 0) a(i) else b(i)
+      }
+      ProbeGroup(math.min(minLsn, o.minLsn), math.max(maxLsn, o.maxLsn), n + o.n,
+        math.max(maxEo, o.maxEo), pick(lo, o.lo, 1), pick(hi, o.hi, -1),
+        nul.zip(o.nul).map { case (x, y) => x || y })
+    }
+  }
+
+  /** The pre-merge probe: ONE pass over the routed, filtered and set
     * batch. Each event explodes into the key halves the fold will see
-    * ([[keyHalves]]), typed with `snap`'s key types, grouped by (sid, op,
-    * bucket). Per (sid, op) that yields the lineage LSN bounds, the event
-    * count (first halves only) and the max [[eventOrdCol]]; per bucket,
-    * the min/max/null flags of each zone column. The touched-bucket set
-    * and zones are those of the fold's keys, because the fold emits one
-    * row per distinct normalized key.
+    * ([[keyHalves]]), typed with `snap`'s key types, and is aggregated by
+    * (sid, op, bucket) within its partition; the collected groups of all
+    * partitions are merged here, so the pass has no exchange and its
+    * result is bounded by the group count. Per (sid, op) that yields the lineage LSN
+    * bounds, the event count and the max [[eventOrdCol]]; per bucket, the
+    * min/max/null flags of each zone column. The touched-bucket set and
+    * zones are those of the fold's keys, because the fold emits one row
+    * per distinct normalized key.
     *
     * The zones bound the target read: when a batch touches a narrow key
     * range (incremental steady state), whole files inside touched buckets
@@ -401,51 +467,49 @@ object Replay {
                            batchId: Long): Probe = {
     val keys = keyTypes(snap)
     val halves = keyHalves(keys.map(_._1), appendMode)((key, _, _, _) =>
-      struct(key.as("key")))
-    val typed = batch
+      struct(typedKey(keys, key).as("key")))
+    val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
+    val types = zoneKeys.map(_._2)
+    val rows = batch
       .select(col("sid"), col("op"), col("lsn"), eventOrdCol.as("eo"),
         posexplode_outer(halves).as(Seq("pos", "h")))
-      .select(Seq(col("sid"), col("op"), col("lsn"), col("eo"), col("pos"),
-        col("h.key").isNotNull.as("keyed")) ++
-        keys.zipWithIndex.map { case ((c, dt), i) =>
-          element_at(col("h.key"), i + 1).cast(dt).as(s"__k_$c") }: _*)
-    val bucket = when(col("keyed"), LakeTable.bucketOf(snap, c => col(s"__k_$c")))
-    val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
-    val aggs = Seq(min("lsn"), max("lsn"),
-      count(when(coalesce(col("pos"), lit(0)) === 0, 1)), max("eo")) ++
-      zoneKeys.flatMap { case (c, _) => Seq(min(s"__k_$c"), max(s"__k_$c"),
-        max(col(s"__k_$c").isNull.cast("int"))) }
-    val rows = typed
-      .groupBy(col("sid"), col("op"), bucket.cast("int").as("b"))
-      .agg(aggs.head, aggs.tail: _*)
+      .select(Seq(col("sid"), col("op"),
+        when(col("h").isNotNull, LakeTable.bucketOf(snap, c => col(s"h.key.$c"))).cast("int"),
+        col("lsn"), col("eo"), coalesce(col("pos"), lit(0)) === 0) ++
+        zoneKeys.map { case (c, _) => col(s"h.key.$c").cast(StringType) }: _*)
+      .rdd.mapPartitions { it =>
+        val groups = scala.collection.mutable.HashMap[(String, String, Any), ProbeGroup]()
+        it.foreach { r =>
+          val zone = (6 until r.length).map(r.getString)
+          val g = ProbeGroup(r.getLong(3), r.getLong(3), if (r.getBoolean(5)) 1L else 0L,
+            r.getLong(4), zone, zone, zone.map(_ == null))
+          groups.updateWith((r.getString(0), r.getString(1), r.get(2)))(
+            prev => Some(prev.fold(g)(_.merge(g, types))))
+        }
+        groups.iterator
+      }
       .collect()
+      .groupMapReduce(_._1)(_._2)(_.merge(_, types)).toSeq
 
-    val dml = rows.filter(r => Seq("I", "U", "D").contains(r.getString(1)))
-      .groupBy(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
-      .map { case ((sid, op), rs) => (sid, op, rs.map(_.getLong(3)).min,
-        rs.map(_.getLong(4)).max, rs.map(_.getLong(5)).sum, rs.map(_.getLong(6)).max) }
+    val dml = rows.filter { case ((_, op, _), _) => Seq("I", "U", "D").contains(op) }
+      .groupMapReduce { case ((sid, op, _), _) => (sid, op) }(_._2)(_.merge(_, types))
+      .toSeq.sortBy(_._1)
     val ci = if (dml.isEmpty) None else Some(CommitInfo(
-      lineage = dml.groupBy(_._1).toSeq.sortBy(_._1).map { case (sid, ss) =>
-        LineageEntry(sid, ss.map(_._3).min, ss.map(_._4).max, batchId, -1L)
+      lineage = dml.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (sid, gs) =>
+        LineageEntry(sid, gs.map(_._2.minLsn).min, gs.map(_._2.maxLsn).max, batchId, -1L)
       },
-      opCounts = dml.groupBy(_._2).map { case (op, ss) => op -> ss.map(_._5).sum },
-      maxOrd = dml.map(_._6).max,
-      opRows = dml.map { case (sid, op, _, _, n, _) => (batchId, sid, "op", op, n) }))
+      opCounts = dml.groupBy(_._1._2).map { case (op, gs) => op -> gs.map(_._2.n).sum },
+      maxOrd = dml.map(_._2.maxEo).max,
+      opRows = dml.map { case ((sid, op), g) => (batchId, sid, "op", op, g.n) }))
 
-    val keyed = rows.filterNot(_.isNullAt(2))
-    val zones = if (keyed.isEmpty) Nil else zoneKeys.zipWithIndex.flatMap { case ((c, dt), i) =>
-      val at = 7 + 3 * i
-      val vals = keyed.flatMap(r => Seq(r.get(at), r.get(at + 1))).filter(_ != null)
-        .map(_.toString)
-      if (keyed.exists(_.getInt(at + 2) != 0) || vals.isEmpty) None
-      else {
-        val cmp = LakeTable.statCompare(dt) _
-        Some(Zone(c,
-          lo = Some(vals.reduce((a, b) => if (cmp(a, b) <= 0) a else b)),
-          hi = Some(vals.reduce((a, b) => if (cmp(a, b) >= 0) a else b))))
+    val keyed = rows.collect { case ((_, _, b: Int), g) => (b, g) }
+    val zones = if (keyed.isEmpty) Nil else {
+      val all = keyed.map(_._2).reduce(_.merge(_, types))
+      zoneKeys.indices.flatMap { i =>
+        if (all.nul(i)) None else Some(Zone(zoneKeys(i)._1, Option(all.lo(i)), Option(all.hi(i))))
       }
     }
-    Probe(rows.exists(_.getString(1) == "R"), ci, keyed.map(_.getInt(2)).toSet, zones)
+    Probe(rows.exists(_._1._2 == "R"), ci, keyed.map(_._1).toSet, zones)
   }
 
   /** The one commit step of every merge body (clone/append here, history
@@ -457,7 +521,8 @@ object Replay {
     * counters `metrics-ops-<op>` (A3, the Prometheus-counter analog
     * `streamer/metrics.go:11-53`), the event-granular applied watermark,
     * the lineage, and the caller's `extraProps`. Cumulative values build
-    * on `snap`, the snapshot the merge read. */
+    * on `snap`, the snapshot the merge read, and the commit fails unless
+    * `snap` is still the latest version (`LakeTable.commit`'s base). */
   private[operators] def commitMerge(lake: LakeTable, snap: Snapshot, ci: CommitInfo,
                                      batchId: Long, epochKey: String,
                                      newFiles: Seq[DataFile], removed: Set[String],
@@ -483,107 +548,113 @@ object Replay {
         ordKey -> math.max(ci.maxOrd, prev.getOrElse(ordKey, "-1").toLong).toString,
         "lsn-high-watermark" -> math.max(ci.lineage.map(_.maxLsn).max,
           prev.getOrElse("lsn-high-watermark", "-1").toLong).toString),
-      lineage = ci.lineage)
+      lineage = ci.lineage, base = Some(snap))
   }
 
-  /** Merge per-key transformers into the table: full-outer join on the
-    * (null-safe) merge key over touched buckets only, then pure Catalyst
-    * column expressions realize insert / TOAST-coalescing update / delete
-    * — no UDF in the apply path. `keyXfs` is the output of [[foldToXfDF]]
-    * (one [[Xf]] per key), consumed once, by the join. `snap` is the
-    * snapshot [[probe]] typed the batch's keys against; `touched` and
-    * `zones` are its result. The target read and the files the commit
-    * removes come from ONE [[LakeTable.rewriteSet]] call; the commit is
-    * [[commitMerge]], carrying the `metrics-delete-miss` drift counter.
-    * `keyXfs` is taken by name: the fold and merge plans are built inside
-    * the write phase, whose job runs them. */
-  def mergeApply(lake: LakeTable, snap: Snapshot, keyXfs: => DataFrame, ci: CommitInfo,
-                 touched: Set[Int], zones: Seq[Zone], batchId: Long,
+  /** Merge one routed batch into the table over touched buckets only:
+    * the target's rows and the batch's keyed ops ([[normalizeDF]], keyed
+    * by [[typedKey]]) fold together in ONE key-partitioned, ord-sorted
+    * pass ([[xfRows]]), and pure Catalyst column expressions apply each key's
+    * [[Xf]] to its target row — insert / TOAST-coalescing update / delete,
+    * no UDF and no join in the apply path. `snap` is the snapshot [[probe]]
+    * typed the batch's keys against; `touched` and `zones` are its result.
+    * The target read and the files the commit removes are ONE
+    * [[LakeTable.rewriteSet]]; the commit is [[commitMerge]], carrying the
+    * `metrics-delete-miss` drift counter. The target scan and the merge
+    * plan are built inside the write phase, whose job runs them. */
+  def mergeApply(lake: LakeTable, snap: Snapshot, transformed: DataFrame, appendMode: Boolean,
+                 ci: CommitInfo, touched: Set[Int], zones: Seq[Zone], batchId: Long,
                  epochKey: String): Unit = {
-    val (target, removed) = lake.rewriteSet(snap, touched, zones)
+    val files = lake.rewriteSet(snap, touched, zones)
     val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId")
-    val newFiles = lake.writeDataFiles(mergePlan(snap, keyXfs, target, obs), snap)
+    val newFiles = lake.writeDataFiles(
+      mergePlan(snap, transformed, appendMode, lake.scan(snap, files), obs), snap,
+      clustered = true)
     // the write job ran -> observed merge-outcome counters are available
     val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
     // cumulative drift counter rides the same atomic commit (the
     // reference's delete-affected-0-rows alarm, process_clone.go:306-311)
-    commitMerge(lake, snap, ci, batchId, epochKey, newFiles, removed, m,
+    commitMerge(lake, snap, ci, batchId, epochKey, newFiles, files.map(_.path).toSet, m,
       extraProps = Map("metrics-delete-miss" ->
         (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
           m.getOrElse("delete_miss", 0L)).toString))
   }
 
-  /** The rows [[mergeApply]] writes, with their `__bucket`: `target` (the
-    * touched buckets' read) full-outer joined with `keyXfs`, merge
-    * outcomes counted into `obs`. */
-  private def mergePlan(snap: Snapshot, keyXfs: DataFrame, target: DataFrame,
-                        obs: org.apache.spark.sql.Observation): DataFrame = {
+  /** A merge's window-pass input: the `target` rows of `snap` as op T,
+    * each whole row in `row` and ordered ahead of every op, together with
+    * the batch's `ops` (`key` by [[typedKey]], `ord`, `op`, ...; a column
+    * one side lacks is NULL there), hash-partitioned by `__bucket`. The
+    * pass's window partitions by bucket and key, so this is its one
+    * exchange, and the write reuses it. */
+  private[operators] def withTargetRows(snap: Snapshot, target: DataFrame,
+                                        ops: DataFrame): DataFrame =
+    target.select(struct(keyTypes(snap).map(k => col(k._1)): _*).as("key"),
+        lit(Long.MinValue).as("ord"), lit("T").as("op"),
+        struct(snap.schema.fieldNames.map(col).toIndexedSeq: _*).as("row"))
+      .unionByName(ops, allowMissingColumns = true)
+      .withColumn("__bucket", LakeTable.bucketOf(snap, c => col("key").getField(c)))
+      .repartition(col("__bucket"))
+
+  /** The rows [[mergeApply]] writes, with their `__bucket`. The `target`
+    * rows (the touched buckets' read) enter the fold as op T ahead of
+    * every op, each key's pass carries its target row (`tRow`), and the
+    * key's [[Xf]] applies to it; merge outcomes are counted into `obs`.
+    * The pass's one exchange is on the bucket (the window partitions by
+    * bucket and key), so the write adds no exchange and no sort. */
+  private def mergePlan(snap: Snapshot, transformed: DataFrame, appendMode: Boolean,
+                        target: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame = {
     val schema = snap.schema
     val keys = keyTypes(snap)
     val mergeKey = keys.map(_._1)
-    // flatten: key array -> typed key columns
-    val xdf = keyXfs.select(
-      (keys.zipWithIndex.map { case ((c, dt), i) =>
-        element_at(col("key"), i + 1).cast(dt).as(s"__k_$c")
-      } ++ Seq(col("maxLsn"), col("absentExists"), col("onAbsent"),
-        col("presentKind"), col("onPresent"))): _*)
+    val rows = withTargetRows(snap, target,
+      normalizeDF(transformed, mergeKey, appendMode).withColumn("key", typedKey(keys)))
+    val folded = xfRows(rows, schema.fieldNames.filterNot(mergeKey.contains).toSeq,
+      carry = Seq("tRow" -> max_by(col("row"), col("op") === "T")),
+      clusterBy = Seq(col("__bucket")))
 
-    val t = target.alias("t")
-    // SHUFFLE_HASH hint on the batch side (guide §3.1): the folded delta is
-    // micro-batch-bounded, so building its per-partition hash table is safe,
-    // and the full-outer merge then skips BOTH sides' sorts (sort-merge was
-    // the planner default). Full-outer broadcast is not a thing, so the
-    // choice is SMJ vs SHJ; SHJ wins whenever one side is per-partition
-    // hashable — exactly the delta's contract.
-    val x = xdf.alias("x").hint("shuffle_hash")
-    val joinCond = mergeKey.map(c => col(s"t.$c") <=> col(s"x.__k_$c"))
-      .reduce(_ && _)
-    val joined0 = t.join(x, joinCond, "full_outer")
+    // the key has a target row / no op
+    val tExists = col("tRow").isNotNull
+    val xNull = col("op") === "T"
 
-    val tExists = mergeKey.map(c => col(s"t.$c").isNotNull).reduce(_ || _)
-
-    // Merge-outcome counters observed ON the join itself (CollectMetrics —
+    // Merge-outcome counters observed on the pass itself (CollectMetrics —
     // no extra pass over the data). `delete_miss` is the reference's drift
     // alarm: a DELETE whose key is absent on the target
     // (`process_clone.go:306-311` logs + counts it); here it is the
     // batch-level analog — a per-key fold whose net effect is delete,
     // applied to a key the target does not have.
-    val xn = col("x.presentKind").isNull
-    val toAbsent = col("x.presentKind") === lit(Xf.TO_ABSENT)
+    val toAbsent = col("presentKind") === lit(Xf.TO_ABSENT)
     def cnt(cond: Column): Column =
-      sum(when(!xn && cond, 1L).otherwise(0L))
-    val joined = joined0.observe(obs,
-      cnt(!tExists && col("x.absentExists")).as("inserted"),
+      sum(when(!xNull && cond, 1L).otherwise(0L))
+    val counted = folded.observe(obs,
+      cnt(!tExists && col("absentExists")).as("inserted"),
       cnt(tExists && !toAbsent).as("updated"),
       cnt(tExists && toAbsent).as("deleted"),
-      cnt(!tExists && !col("x.absentExists") && toAbsent).as("delete_miss"),
-      cnt(!tExists && !col("x.absentExists") && !toAbsent).as("update_miss"))
-    val xNull = col("x.presentKind").isNull
+      cnt(!tExists && !col("absentExists") && toAbsent).as("delete_miss"),
+      cnt(!tExists && !col("absentExists") && !toAbsent).as("update_miss"))
     val exists =
       when(xNull, lit(true)) // untouched row in a touched bucket
-        .when(tExists, col("x.presentKind") =!= lit(Xf.TO_ABSENT))
-        .otherwise(col("x.absentExists"))
+        .when(tExists, !toAbsent)
+        .otherwise(col("absentExists"))
 
     def valOf(f: StructField): Column = {
-      if (mergeKey.contains(f.name))
-        coalesce(col(s"t.${f.name}"), col(s"x.__k_${f.name}")).as(f.name)
+      if (mergeKey.contains(f.name)) col("key").getField(f.name).as(f.name)
       else {
-        val fromAbsent = castText(element_at(col("x.onAbsent"), f.name), f.dataType)
-        val fromPresent = castText(element_at(col("x.onPresent"), f.name), f.dataType)
-        when(xNull, col(s"t.${f.name}"))
+        val old = col("tRow").getField(f.name)
+        val fromAbsent = castText(element_at(col("onAbsent"), f.name), f.dataType)
+        val fromPresent = castText(element_at(col("onPresent"), f.name), f.dataType)
+        when(xNull, old)
           .when(!tExists, fromAbsent)
-          .when(col("x.presentKind") === lit(Xf.TO_ROW), fromPresent)
+          .when(col("presentKind") === lit(Xf.TO_ROW), fromPresent)
           // OVERRIDE: present key wins (incl. genuine NULL); absent key
           // keeps the target value (unchanged-TOAST, process_message.go:67-72)
-          .when(map_contains_key(col("x.onPresent"), f.name), fromPresent)
-          .otherwise(col(s"t.${f.name}"))
+          .when(map_contains_key(col("onPresent"), f.name), fromPresent)
+          .otherwise(old)
           .as(f.name)
       }
     }
 
-    joined.filter(exists)
-      .select(schema.fields.map(valOf).toIndexedSeq: _*)
-      .withColumn("__bucket", LakeTable.bucketOf(snap))
+    counted.filter(exists)
+      .select(schema.fields.map(valOf).toIndexedSeq :+ col("__bucket"): _*)
   }
 
   // ---------------------------------------------------------------------
@@ -598,10 +669,10 @@ object Replay {
     * added columns / widened types (vs the reference's ignore-until-dest-
     * altered rule, `docs/080-schema-modification.md:9-19` — we implement
     * the stronger evolve-then-merge rule). `snap` is the snapshot the
-    * batch read. */
+    * batch read; the result is the snapshot the batch goes on with (the
+    * evolved one, or `snap` when nothing changed). */
   def evolveSchema(lake: LakeTable, snap: Snapshot,
-                   relations: Seq[Map[String, String]]): Unit = {
-    if (relations.isEmpty) return
+                   relations: Seq[Map[String, String]]): Snapshot = {
     val cur = snap.schema
     var fields = cur.fields.toVector
     var changed = false
@@ -619,8 +690,8 @@ object Replay {
         }
       }
     }
-    if (changed)
-      lake.commit(Nil, Set.empty, newSchema = Some(StructType(fields)))
+    if (!changed) snap
+    else lake.commit(Nil, Set.empty, newSchema = Some(StructType(fields)), base = Some(snap))
   }
 
   private def parseType(t: String): DataType = t.toLowerCase match {
@@ -709,8 +780,7 @@ object Replay {
         val relations = Phases.run(lake, "evolve")(transformed
           .filter(col("op") === "R").select("after").collect()
           .map(_.getMap[String, String](0).toMap).toSeq)
-        evolveSchema(lake, snap0, relations)
-        val s = lake.snapshot()
+        val s = evolveSchema(lake, snap0, relations)
         (s, probed(s))
       }
     p.ci match {
@@ -719,11 +789,7 @@ object Replay {
       case Some(ci) if history =>
         History.merge(lake, snap, transformed, ci, p.touched, batchId, epochKey)
       case Some(ci) =>
-        val mergeKey = keyTypes(snap).map(_._1)
-        val payloadCols = snap.schema.fieldNames.filterNot(mergeKey.contains).toSeq
-        mergeApply(lake, snap,
-          foldToXfDF(normalizeDF(transformed, mergeKey, appendMode), payloadCols),
-          ci, p.touched, p.zones, batchId, epochKey)
+        mergeApply(lake, snap, transformed, appendMode, ci, p.touched, p.zones, batchId, epochKey)
     }
     true
   }

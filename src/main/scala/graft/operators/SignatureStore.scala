@@ -108,7 +108,7 @@ object SignatureStore {
       .withColumn("__bucket", LakeTable.bucketOf(ssnap))
     sig.commit(sig.writeDataFiles(rows, ssnap),
       ssnap.files.map(_.path).toSet,
-      properties = Map("signatures-bootstrap" -> dsnap.version.toString))
+      properties = Map("signatures-bootstrap" -> dsnap.version.toString), base = Some(ssnap))
     true
   }
 
@@ -180,11 +180,12 @@ object SignatureStore {
           lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
       // the target read + the files the commit removes, one rewrite set
       // (self-compacting past the file cap, like the doc merge)
-      val (target, removed) = sig.rewriteSet(snap, touched, zones)
+      val files = sig.rewriteSet(snap, touched, zones)
 
-      // SHUFFLE_HASH on the batch-bounded fold (same rationale as the doc
-      // merge in Replay.mergeApply: skip both sort legs of the default SMJ)
-      val j = target.alias("t").join(f.alias("x").hint("shuffle_hash"),
+      // SHUFFLE_HASH on the batch-bounded fold: building its per-partition
+      // hash table is safe, and the full-outer join then skips both sort
+      // legs of the default SMJ
+      val j = sig.scan(snap, files).alias("t").join(f.alias("x").hint("shuffle_hash"),
         col("t.doc_id") <=> col("x.doc_id"), "full_outer")
       val fNull = col("x.presentKind").isNull
       val sigExists = col("t.doc_id").isNotNull
@@ -213,8 +214,8 @@ object SignatureStore {
         val out = keep.unionByName(signed)
           .withColumn("__bucket", LakeTable.bucketOf(snap))
         val newFiles = sig.writeDataFiles(out, snap)
-        sig.commit(newFiles, removed,
-          properties = Map(epochKey -> batchId.toString))
+        sig.commit(newFiles, files.map(_.path).toSet,
+          properties = Map(epochKey -> batchId.toString), base = Some(snap))
         true
       } finally rows.unpersist()
     } finally f.unpersist()

@@ -34,12 +34,14 @@ import java.net.InetSocketAddress
   *   graft_stream_batches_total           micro-batches reported (ProgressLog)
   *   graft_stream_trigger_seconds_total{phase}
   *                                        streaming trigger durations
+  *   graft_codegen_compiles_total         generated-code compiles (Spark's
+  *                                        CodegenMetrics)
   *   graft_candidate_pairs{op} / graft_colliding_buckets{op} /
   *   graft_bucket_max_occupancy_bound{op} candidate volume of the bucketed
   *                                        operators (Similarity)
   *
-  * The phase and trigger families are in-process counters: they cover
-  * the batches this JVM ran since it started.
+  * The phase, trigger and compile families are in-process counters: they
+  * cover what this JVM ran since it started.
   */
 object MetricsHttp {
 
@@ -129,6 +131,12 @@ object MetricsHttp {
       mkLine(sb)("graft_stream_trigger_seconds_total", Seq("phase" -> phase),
         t.seconds.toString)
     }
+    // Janino compiles of Spark's code generator in this JVM: a steady-state
+    // batch whose generated classes all fit the codegen cache adds none,
+    // so a count that climbs every batch is recompile churn
+    sb.append("# TYPE graft_codegen_compiles_total counter\n")
+    sb.append("graft_codegen_compiles_total " +
+      s"${org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount}\n")
     // candidate-volume telemetry from the bucketed dedup/ANN operators
     // (Similarity.observeCandidates registry) — the 100 TB quadratic-blowup
     // alarm

@@ -63,6 +63,11 @@ class MetricsHttpSpec extends AnyFunSuite {
       case l if l.startsWith("graft_stream_batches_total ") => l.split(' ')(1).toLong
     }.getOrElse(fail(s"no graft_stream_batches_total in:\n$body"))
 
+  private def compilesTotal(body: String): Long =
+    body.linesIterator.collectFirst {
+      case l if l.startsWith("graft_codegen_compiles_total ") => l.split(' ')(1).toLong
+    }.getOrElse(fail(s"no graft_codegen_compiles_total in:\n$body"))
+
   test("batch phases and stream batches are on /metrics for every mode and companion") {
     val dir = SparkTestBase.tmpDir("metphase")
     val cfg = Gen.Config(numEvents = 600, numConvs = 12, seed = 24)
@@ -78,7 +83,8 @@ class MetricsHttpSpec extends AnyFunSuite {
       .map(t => t -> s"$dir/$t").toMap
     val srv = MetricsHttp.start(spark, tables)
     try {
-      val before = batchesTotal(scrape(srv.port))
+      val body0 = scrape(srv.port)
+      val before = batchesTotal(body0)
       // one WAL segment = one micro-batch through a route with both companions
       Gen.writeLog(spark, cfg, s"$dir/wal", 1)
       val docs = LakeTable.create(spark, s"$dir/docs", Transcripts.spec(numBuckets = 4))
@@ -105,6 +111,8 @@ class MetricsHttpSpec extends AnyFunSuite {
         assert(body.contains(count(t, ph)), s"body:\n$body")
       assert(body.contains("""graft_batch_phase_seconds_total{table="clone",phase="write"} """))
       assert(body.contains("""graft_stream_trigger_seconds_total{phase="addBatch"} """))
+      // the compile counter renders and never decreases
+      assert(compilesTotal(body) >= compilesTotal(body0), s"body:\n$body")
     } finally srv.stop()
   }
 

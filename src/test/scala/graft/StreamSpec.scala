@@ -270,4 +270,66 @@ class StreamSpec extends AnyFunSuite {
     compare(good, cfg, cfg.numEvents)
     compare(bad, cfg, cfg.numEvents)
   }
+
+  test("codegen guard: warm tail-shaped batches compile no new code") {
+    // a tail-shaped stream: self-contained pgoutput chunks carrying two
+    // source tables, one routed to a clone table and one to a History
+    // table; every compile Spark's code generator runs counts here
+    import graft.sources.PgOutput.Wire
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = SparkTestBase.tmpDir("stream-codegen")
+    val srcs = Seq("transcripts", "transcripts_audit")
+    val base = Gen.Config(numEvents = Long.MaxValue, numConvs = 300, sourceTables = srcs,
+      seed = 29)
+    val preload = base.copy(pInsert = 0.9, pUpdate = 0.08)
+    val tailCfg = base.copy(pInsert = 0.2, pUpdate = 0.6, pToast = 0.4)
+    val cols = Transcripts.schema.fieldNames.toSeq
+    val oids = Seq(25, 23, 25, 25, 25, 1114) // text int4 text text text timestamp
+    def chunk(events: Seq[ChangeEvent]): Array[Byte] = {
+      def vals(m: Map[String, String]) = cols.map(c => m.get(c).flatMap(Option(_)))
+      val rel = srcs.zipWithIndex.map { case (t, i) => t -> (i + 1) }.toMap
+      Wire.chunk(rel.toSeq.sortBy(_._2).map { case (t, id) =>
+        Wire.relation(id, "public", t, cols.zip(oids)) } ++
+        events.groupBy(_.lsn).toSeq.sortBy(_._1).flatMap { case (lsn, es) =>
+          Wire.begin(lsn, lsn.toInt) +: es.sortBy(_.seq).map { e =>
+            val id = rel(e.source_table)
+            e.op match {
+              case "I" => Wire.insert(id, vals(e.after))
+              case "U" => Wire.update(id, vals(e.after),
+                oldKey = if (e.old_kind == "K") Some(('K', vals(e.before))) else None,
+                toastAbsent = cols.indices.filterNot(i => e.after.contains(cols(i))).toSet)
+              case "D" => Wire.delete(id, 'K', vals(e.before))
+            }
+          } :+ Wire.commit(lsn)
+        })
+    }
+    // chunk 0 preloads both targets; chunks 1-4 are 480 update-heavy events
+    val ranges = (0L, 2400L) +: (0 until 4).map(k => (2400L + 480L * k, 2880L + 480L * k))
+    val clone = LakeTable.create(spark, s"$dir/clone", Transcripts.spec(numBuckets = 16))
+    val hist = LakeTable.create(spark, s"$dir/hist", Transcripts.spec(numBuckets = 16)
+      .copy(schema = History.historySchema(Transcripts.schema)))
+    val routes = Seq(
+      CdcStream.Route(TableMapping("transcripts", "transcripts"), clone, sidOverride = Some("s0")),
+      CdcStream.Route(TableMapping("transcripts_audit", "transcripts_audit",
+        mode = TableMode.History), hist, sidOverride = Some("s0")))
+    val in = Files.createDirectories(Paths.get(s"$dir/in"))
+    val q = CdcStream.start(spark, s"$in/chunk-*.bin", s"$dir/ckpt", routes,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(50L),
+      format = "pgoutput")
+    val compiles = try ranges.zipWithIndex.map { case ((lo, hi), k) =>
+      val cfg = if (k == 0) preload else tailCfg
+      val f = in.resolve(f"chunk-$k%05d.bin")
+      Files.write(f, chunk((lo until hi).map(Gen.mkEvent(_, cfg))))
+      require(f.toFile.setLastModified(System.currentTimeMillis() - 60000L + k))
+      q.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    } finally q.stop()
+    assert(clone.snapshot().properties("commit-epoch") == "4")
+    assert(hist.snapshot().properties("commit-epoch") == "4")
+    val perBatch = compiles.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    info(s"compiles in batches 1-4: ${perBatch.mkString(", ")}")
+    // batch 0 preloads, tail batches 1 and 2 warm the code cache; 3 and 4
+    // must find every class there
+    assert(perBatch.drop(2) == Seq(0L, 0L), s"compiles per batch: $perBatch")
+  }
 }
