@@ -200,8 +200,11 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     * the DataFile entries (not yet committed). Rows are clustered by
     * bucket first so each bucket lands in O(1) files instead of
     * (tasks x buckets) — the small-file explosion that otherwise makes
-    * every subsequent scan slower (standard lake-writer practice). The
-    * files are written with schema `schemaId` of the latest manifest.
+    * every subsequent scan slower (standard lake-writer practice); when
+    * `df` is already hash-partitioned by `__bucket` (a merge's window
+    * pass), Spark plans no second exchange for it (ReplaySpec "phases:"
+    * checks the merge's write plan). The files are written with schema
+    * `schemaId` of the latest manifest.
     * `df` is taken by name, so a caller can build its plan inside the
     * `write` phase. */
   def writeDataFiles(df: => DataFrame, schemaId: Int): Seq[DataFile] =
@@ -209,14 +212,10 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
 
   /** [[writeDataFiles]] against an already-resolved snapshot, with its
     * current schema: a merge writes and commits against the snapshot it
-    * read, so it resolves the manifest once. `clustered`: `df` already
-    * arrives hash-partitioned by `__bucket` and sorted by it within each
-    * partition (a merge plan's own exchange and sort), so the write adds
-    * neither. */
-  def writeDataFiles(df: => DataFrame, snap: Snapshot,
-                     clustered: Boolean = false): Seq[DataFile] = {
+    * read, so it resolves the manifest once. */
+  def writeDataFiles(df: => DataFrame, snap: Snapshot): Seq[DataFile] = {
     val schemaId = snap.currentSchemaId
-    val moved = Phases.run(this, "write")(writeBuckets(df, clustered))
+    val moved = Phases.run(this, "write")(writeBuckets(df))
     // zone-map columns: the merge key, restricted to stat-comparable types
     val statCols: Map[String, DataType] =
       ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols)
@@ -244,9 +243,9 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   /** Write `df` partitioned by `__bucket` into a temp directory, then move
     * each file into `data/` under a bucket-prefixed unique name.
     * @return (final path, bucket) per written file */
-  private def writeBuckets(df: DataFrame, clustered: Boolean): Seq[(Path, Int)] = {
+  private def writeBuckets(df: DataFrame): Seq[(Path, Int)] = {
     val tmp = dataDir.resolve(s"tmp-${UUID.randomUUID()}")
-    (if (clustered) df else df.repartition(col("__bucket")))
+    df.repartition(col("__bucket"))
       .write.partitionBy("__bucket").parquet(tmp.toString)
     val moved = LakeTable.listDir(tmp)(_.filter(
       p => p.getFileName.toString.startsWith("__bucket=")).toSeq)

@@ -105,7 +105,7 @@ object History {
     val files = lake.rewriteSet(snap, touched, Nil)
     val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
     val newFiles = lake.writeDataFiles(
-      mergePlan(snap, routed, lake.scan(snap, files), obs), snap, clustered = true)
+      mergePlan(snap, routed, lake.scan(snap, files), obs), snap)
     // the write job ran -> the observation is available (an empty pass
     // observes its sums as null -> 0)
     val m = obs.get.map { case (k, v) =>

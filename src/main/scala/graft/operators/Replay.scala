@@ -37,10 +37,7 @@ import org.apache.spark.sql.types._
   * join and no second exchange. Every generated class costs a compile
   * when Spark's codegen cache (100 entries) evicts it, and a tail batch's
   * working set has to fit that cache to run compiled code; fewer
-  * operators per plan is what keeps it there. The round-7 plan (`plans/r07/
-  * cdc_replay_clone_after.txt`, `replay-fold-batch0`) predates this:
-  * exchange on the key, two windows, two sort aggregates, and an
-  * exchange and a full-outer join against the target.
+  * operators per plan is what keeps it there.
   *
   * The fold is NOT skew-safe: all of one key's ops, and in the merge all
   * of one bucket's rows, land in one task. BASELINE.md's Zipf-8 run
@@ -355,6 +352,8 @@ object Replay {
     import org.apache.spark.sql.expressions.Window
     val byKey = Window.partitionBy(clusterBy :+ col("key"): _*).orderBy(col("ord"))
     val all = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val before = byKey.rowsBetween(Window.unboundedPreceding, -1)
+    val afterDl = col("op") === "I" && col("ord") > coalesce(col("dl"), lit(Long.MinValue))
     // per column, the latest U carrying it: max over struct(ord, v) ignores
     // nulls and compares by the unique ord — genuine NULL values ride in v
     val o = rows.select(clusterBy ++ Seq(col("key"), col("ord"), col("op"), col("after"),
@@ -364,15 +363,21 @@ object Replay {
         struct(col("ord").as("o"), element_at(col("after"), c).as("v")))).over(all)
         .as(s"__upd_$c")) ++
       carry.map { case (n, c) => c.over(all).as(n) }: _*)
-      // fi reads dl: a second window operator over the first's partitioning
-      // and order (no exchange, no sort). Each operator keeps ONE frame
-      // group: Spark orders an operator's groups by a hash of keys that can
-      // carry expression ids (`first(x, ignoreNulls)` becomes `nth_value`
-      // keyed by x), so with two groups the generated code can change
-      // between plannings and miss the codegen cache.
-      .withColumn("fi", min(when(col("op") === "I" &&
-        col("ord") > coalesce(col("dl"), lit(Long.MinValue)), col("ord"))).over(all))
-    val fiExists = col("fi").isNotNull
+      // the rows before each row read dl: a second window operator over the
+      // first's partitioning and order (no exchange, no sort). Each operator
+      // keeps ONE frame group: Spark orders an operator's groups by a hash
+      // of keys that can carry expression ids (`first(x, ignoreNulls)`
+      // becomes `nth_value` keyed by x), so with two groups the generated
+      // code can change between plannings and miss the codegen cache.
+      .select(col("*"), max(col("ord")).over(before).as("prev"),
+        max(when(afterDl, col("ord"))).over(before).as("iBefore"))
+    // The key's Xf row: fi, its first I after dl, or, when it has none, its
+    // last row. Copies of one event (a chunk sent twice) share an ord and
+    // sort next to each other; only the first copy is taken, so the pass
+    // emits exactly one row per key.
+    val fiExists = afterDl && col("iBefore").isNull
+    val lastRow = col("ord") === col("last") && col("iBefore").isNull &&
+      !(col("prev") <=> col("ord"))
 
     // a map of the payload columns whose `present` holds
     def mapOf(entry: String => (Column, Column)): Column = map_from_entries(transform(
@@ -391,7 +396,7 @@ object Replay {
       (late || map_contains_key(col("after"), c),
         when(late, upd.getField("v")).otherwise(element_at(col("after"), c)))
     }
-    o.filter(col("ord") === coalesce(col("fi"), col("last"))).select(clusterBy ++ Seq(
+    o.filter(fiExists || lastRow).select(clusterBy ++ Seq(
       col("key"), col("op"), col("maxLsn"),
       fiExists.as("absentExists"),
       when(fiExists, absMap).otherwise(map().cast("map<string,string>")).as("onAbsent"),
@@ -568,8 +573,7 @@ object Replay {
     val files = lake.rewriteSet(snap, touched, zones)
     val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId")
     val newFiles = lake.writeDataFiles(
-      mergePlan(snap, transformed, appendMode, lake.scan(snap, files), obs), snap,
-      clustered = true)
+      mergePlan(snap, transformed, appendMode, lake.scan(snap, files), obs), snap)
     // the write job ran -> observed merge-outcome counters are available
     val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
     // cumulative drift counter rides the same atomic commit (the

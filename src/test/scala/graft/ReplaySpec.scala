@@ -282,12 +282,8 @@ class ReplaySpec extends AnyFunSuite {
     val history = jobsFor(TableMode.History,
       graft.operators.History.historySchema(Transcripts.schema))
     info(s"jobs per batch: clone $clone, history $history")
-    // the stats-overlap protocol (forked stats job + persisted fold +
-    // touched-bucket collect before the write) submitted 10 and
-    // 11 jobs for these two batches (clone, History); the probe's
-    // aggregation and the merges' separate fold, target and bucket
-    // exchanges then took 7 and 8. Now each is the probe's one pass, the
-    // merge's one exchange and its write.
+    // each batch is the probe's one pass, the merge's one exchange and
+    // its write
     assert(clone < 4, s"clone batch ran $clone jobs")
     assert(history < 4, s"history batch ran $history jobs")
   }
@@ -372,9 +368,13 @@ class ReplaySpec extends AnyFunSuite {
       val d = descs.asScala.toSeq
       assert(d.nonEmpty && d.forall(_.startsWith("graft:")), d.mkString("\n"))
       val tableName = java.nio.file.Paths.get(lake.root).getFileName.toString
-      assert(plans.asScala.exists { case (desc, plan) =>
-        desc == s"graft:$tableName:write" && plan.contains("Window") },
-        plans.asScala.map(_._1).mkString("\n"))
+      val writePlans = plans.asScala.collect {
+        case (desc, plan) if desc == s"graft:$tableName:write" => plan }.toSeq
+      assert(writePlans.exists(_.contains("Window")), plans.asScala.map(_._1).mkString("\n"))
+      // the writer's repartition by bucket meets the window pass's own
+      // exchange on the bucket, and Spark plans one exchange for both
+      writePlans.foreach { plan =>
+        assert("""Exchange \(\d+\)""".r.findAllIn(plan).size == 1, plan) }
     } finally sc.removeSparkListener(listener)
   }
 

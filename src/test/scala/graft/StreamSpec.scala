@@ -271,11 +271,62 @@ class StreamSpec extends AnyFunSuite {
     compare(bad, cfg, cfg.numEvents)
   }
 
+  /** One self-contained pgoutput chunk of Gen `events` over the source
+    * tables `srcs` (a Relation message per table, then one transaction per
+    * lsn). */
+  private def pgChunk(srcs: Seq[String], events: Seq[ChangeEvent]): Array[Byte] = {
+    import graft.sources.PgOutput.Wire
+    val cols = Transcripts.schema.fieldNames.toSeq
+    val oids = Seq(25, 23, 25, 25, 25, 1114) // text int4 text text text timestamp
+    def vals(m: Map[String, String]) = cols.map(c => m.get(c).flatMap(Option(_)))
+    val rel = srcs.zipWithIndex.map { case (t, i) => t -> (i + 1) }.toMap
+    Wire.chunk(rel.toSeq.sortBy(_._2).map { case (t, id) =>
+      Wire.relation(id, "public", t, cols.zip(oids)) } ++
+      events.groupBy(_.lsn).toSeq.sortBy(_._1).flatMap { case (lsn, es) =>
+        Wire.begin(lsn, lsn.toInt) +: es.sortBy(_.seq).map { e =>
+          val id = rel(e.source_table)
+          e.op match {
+            case "I" => Wire.insert(id, vals(e.after))
+            case "U" => Wire.update(id, vals(e.after),
+              oldKey = if (e.old_kind == "K") Some(('K', vals(e.before))) else None,
+              toastAbsent = cols.indices.filterNot(i => e.after.contains(cols(i))).toSet)
+            case "D" => Wire.delete(id, 'K', vals(e.before))
+          }
+        } :+ Wire.commit(lsn)
+      })
+  }
+
+  test("stream: one batch carrying every event twice (two chunk files) equals the oracle") {
+    // the server re-sends WAL whose commit it has not seen acknowledged,
+    // and the tailer writes it into NEW chunk files, so one micro-batch can
+    // carry two copies of an event: same (lsn, seq), same key. The merge
+    // must still write one row per key, over a preloaded target.
+    import graft.sources.PgOutput
+    val dir = SparkTestBase.tmpDir("stream-dup")
+    val in = Files.createDirectories(Paths.get(s"$dir/in"))
+    val base = Gen.Config(numEvents = Long.MaxValue, numConvs = 60, seed = 37)
+    val preload = pgChunk(Seq("transcripts"),
+      (0L until 600L).map(Gen.mkEvent(_, base.copy(pInsert = 0.9, pUpdate = 0.08))))
+    val tail = pgChunk(Seq("transcripts"),
+      (600L until 1400L).map(Gen.mkEvent(_, base.copy(pInsert = 0.3, pUpdate = 0.5))))
+    val lake = LakeTable.create(spark, s"$dir/clone", Transcripts.spec(numBuckets = 8))
+    val routes = Seq(CdcStream.Route(mapping, lake))
+    Files.write(in.resolve("chunk-00000.bin"), preload)
+    CdcStream.runAvailable(spark, s"$in/chunk-*.bin", s"$dir/ckpt", routes, format = "pgoutput")
+    Files.write(in.resolve("chunk-00001.bin"), tail)
+    Files.write(in.resolve("chunk-00002.bin"), tail)
+    CdcStream.runAvailable(spark, s"$in/chunk-*.bin", s"$dir/ckpt", routes,
+      maxFilesPerTrigger = 2, format = "pgoutput")
+    assert(lake.snapshot().properties("commit-epoch") == "1",
+      "both copies must arrive in one batch")
+    compareTo(lake, PgOutput.decodeChunk(preload, "s0") ++ PgOutput.decodeChunk(tail, "s0"),
+      mapping)
+  }
+
   test("codegen guard: warm tail-shaped batches compile no new code") {
     // a tail-shaped stream: self-contained pgoutput chunks carrying two
     // source tables, one routed to a clone table and one to a History
     // table; every compile Spark's code generator runs counts here
-    import graft.sources.PgOutput.Wire
     import org.apache.spark.metrics.source.CodegenMetrics
     val dir = SparkTestBase.tmpDir("stream-codegen")
     val srcs = Seq("transcripts", "transcripts_audit")
@@ -283,26 +334,6 @@ class StreamSpec extends AnyFunSuite {
       seed = 29)
     val preload = base.copy(pInsert = 0.9, pUpdate = 0.08)
     val tailCfg = base.copy(pInsert = 0.2, pUpdate = 0.6, pToast = 0.4)
-    val cols = Transcripts.schema.fieldNames.toSeq
-    val oids = Seq(25, 23, 25, 25, 25, 1114) // text int4 text text text timestamp
-    def chunk(events: Seq[ChangeEvent]): Array[Byte] = {
-      def vals(m: Map[String, String]) = cols.map(c => m.get(c).flatMap(Option(_)))
-      val rel = srcs.zipWithIndex.map { case (t, i) => t -> (i + 1) }.toMap
-      Wire.chunk(rel.toSeq.sortBy(_._2).map { case (t, id) =>
-        Wire.relation(id, "public", t, cols.zip(oids)) } ++
-        events.groupBy(_.lsn).toSeq.sortBy(_._1).flatMap { case (lsn, es) =>
-          Wire.begin(lsn, lsn.toInt) +: es.sortBy(_.seq).map { e =>
-            val id = rel(e.source_table)
-            e.op match {
-              case "I" => Wire.insert(id, vals(e.after))
-              case "U" => Wire.update(id, vals(e.after),
-                oldKey = if (e.old_kind == "K") Some(('K', vals(e.before))) else None,
-                toastAbsent = cols.indices.filterNot(i => e.after.contains(cols(i))).toSet)
-              case "D" => Wire.delete(id, 'K', vals(e.before))
-            }
-          } :+ Wire.commit(lsn)
-        })
-    }
     // chunk 0 preloads both targets; chunks 1-4 are 480 update-heavy events
     val ranges = (0L, 2400L) +: (0 until 4).map(k => (2400L + 480L * k, 2880L + 480L * k))
     val clone = LakeTable.create(spark, s"$dir/clone", Transcripts.spec(numBuckets = 16))
@@ -319,7 +350,7 @@ class StreamSpec extends AnyFunSuite {
     val compiles = try ranges.zipWithIndex.map { case ((lo, hi), k) =>
       val cfg = if (k == 0) preload else tailCfg
       val f = in.resolve(f"chunk-$k%05d.bin")
-      Files.write(f, chunk((lo until hi).map(Gen.mkEvent(_, cfg))))
+      Files.write(f, pgChunk(srcs, (lo until hi).map(Gen.mkEvent(_, cfg))))
       require(f.toFile.setLastModified(System.currentTimeMillis() - 60000L + k))
       q.processAllAvailable()
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount
