@@ -120,9 +120,10 @@ object History {
     * as op T ahead of every op; each row's next closer (min struct(ord, t,
     * del) over the rows after it) is then, for a target row, the key's
     * FIRST closer — which ends the pre-existing open versions — and, for a
-    * new version, its own kvsz_end / soft-delete flag. No join, no
-    * aggregation, and one exchange (on the bucket, which the write
-    * reuses). The outcome counts go to `obs`. */
+    * new version, its own kvsz_end / soft-delete flag. Two copies of one
+    * event in the batch write one version. No join, no aggregation, and
+    * one exchange (on the bucket, which the write reuses). The outcome
+    * counts go to `obs`. */
   private def mergePlan(snap: Snapshot, routed: DataFrame, target: DataFrame,
                         obs: org.apache.spark.sql.Observation): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -133,9 +134,14 @@ object History {
     val rows = Replay.withTargetRows(snap, target, opsDF(routed, keys))
     val closer = when(col("op").isin("C", "CD"),
       struct(col("ord").as("o"), col("t").as("ct"), (col("op") === "CD").as("cd")))
-    val o = rows.withColumn("nx", min(closer).over(Window.partitionBy(col("__bucket"), col("key"))
-      .orderBy(col("ord")).rowsBetween(1, Window.unboundedFollowing)))
-      .filter(col("op").isin("T", "I", "V"))
+    val after = Window.partitionBy(col("__bucket"), col("key")).orderBy(col("ord"))
+      .rowsBetween(1, Window.unboundedFollowing)
+    // copies of one event (a chunk sent twice) share an ord and sort next
+    // to each other: a new version is written once, from its last copy
+    val o = rows.select(col("*"), min(closer).over(after).as("nx"),
+        min(col("ord")).over(after).as("next"))
+      .filter(col("op") === "T" ||
+        col("op").isin("I", "V") && !(col("next") <=> col("ord")))
 
     val isT = col("op") === "T"
     val closeT = col("nx.ct").cast(TimestampType)

@@ -299,8 +299,9 @@ class StreamSpec extends AnyFunSuite {
   test("stream: one batch carrying every event twice (two chunk files) equals the oracle") {
     // the server re-sends WAL whose commit it has not seen acknowledged,
     // and the tailer writes it into NEW chunk files, so one micro-batch can
-    // carry two copies of an event: same (lsn, seq), same key. The merge
-    // must still write one row per key, over a preloaded target.
+    // carry two copies of an event: same (lsn, seq), same key. Over
+    // preloaded targets, the clone merge must still write one row per key
+    // and the History merge one version per event.
     import graft.sources.PgOutput
     val dir = SparkTestBase.tmpDir("stream-dup")
     val in = Files.createDirectories(Paths.get(s"$dir/in"))
@@ -310,7 +311,11 @@ class StreamSpec extends AnyFunSuite {
     val tail = pgChunk(Seq("transcripts"),
       (600L until 1400L).map(Gen.mkEvent(_, base.copy(pInsert = 0.3, pUpdate = 0.5))))
     val lake = LakeTable.create(spark, s"$dir/clone", Transcripts.spec(numBuckets = 8))
-    val routes = Seq(CdcStream.Route(mapping, lake))
+    val histSpec = Transcripts.spec(numBuckets = 8)
+      .copy(schema = History.historySchema(Transcripts.schema))
+    val hist = LakeTable.create(spark, s"$dir/hist", histSpec)
+    val routes = Seq(CdcStream.Route(mapping, lake),
+      CdcStream.Route(mapping.copy(mode = TableMode.History), hist))
     Files.write(in.resolve("chunk-00000.bin"), preload)
     CdcStream.runAvailable(spark, s"$in/chunk-*.bin", s"$dir/ckpt", routes, format = "pgoutput")
     Files.write(in.resolve("chunk-00001.bin"), tail)
@@ -319,8 +324,13 @@ class StreamSpec extends AnyFunSuite {
       maxFilesPerTrigger = 2, format = "pgoutput")
     assert(lake.snapshot().properties("commit-epoch") == "1",
       "both copies must arrive in one batch")
-    compareTo(lake, PgOutput.decodeChunk(preload, "s0") ++ PgOutput.decodeChunk(tail, "s0"),
-      mapping)
+    val events = PgOutput.decodeChunk(preload, "s0") ++ PgOutput.decodeChunk(tail, "s0")
+    compareTo(lake, events, mapping)
+    val payloadCols = Transcripts.schema.fieldNames.toSeq
+    val want = Scd2Model.versions(events, histSpec.mergeKey, payloadCols)
+    val got = Scd2Model.lakeVersions(hist, histSpec.mergeKey, payloadCols)
+    assert(got.size == want.size, s"versions: engine=${got.size} oracle=${want.size}")
+    got.zip(want).foreach { case (g, w) => assert(g == w, s"\n engine=$g\n oracle=$w") }
   }
 
   test("codegen guard: warm tail-shaped batches compile no new code") {
