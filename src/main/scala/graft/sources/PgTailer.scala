@@ -40,8 +40,10 @@ import scala.collection.mutable
   *      writer commits) or from a plain file an operator process maintains
   *      (`--ack-file`). On crash-restart the tailer resumes from that
   *      acked LSN; bytes buffered but not yet rolled (or rolled but not
-  *      yet committed downstream) are simply re-sent by the server and
-  *      deduplicated by the engine's (lsn, seq) ord floor.
+  *      yet committed downstream) are simply re-sent by the server. Copies
+  *      that land in one micro-batch fold to one row (clone) or one
+  *      version (History); a copy in a later batch is applied again, as
+  *      the (lsn, seq) ord floor holds only after a checkpoint heal.
   */
 object PgTailer {
 
@@ -138,7 +140,7 @@ object PgTailer {
     private var inStream = false
     private val openStreams = mutable.LinkedHashSet[Int]()
     // restart never overwrites: continue numbering after existing chunks
-    // (re-sent WAL lands in NEW files; the engine's ord floor dedups)
+    // (re-sent WAL lands in NEW files)
     private var chunkSeq: Int = {
       val s = Files.list(outDir)
       try {
