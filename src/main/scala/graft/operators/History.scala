@@ -59,8 +59,7 @@ object History {
     * `op` (I insert, V new version, C close, CD soft-delete close), `t`
     * (its logical time) and `after` (its value map). */
   private def opsDF(routed: DataFrame, keys: Seq[(String, DataType)]): DataFrame = {
-    def keyArr(src: Column): Column = array(keys.map { case (c, _) =>
-      if (c == "sid") col("sid") else element_at(src, c) }: _*)
+    val keyOf: Column => Column = Replay.typedKey(keys)
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 4
     val emptyMap = map().cast("map<string,string>")
     // whole timestamp from lsn seconds + seq milliseconds in ONE interval,
@@ -75,21 +74,20 @@ object History {
         t.as("t"), after.as("after"))
     val halves =
       when(col("op") === "I",
-        array(h(keyArr(col("after")), 1, "I", lit(KVSZ_T0), col("after"))))
+        array(h(keyOf(col("after")), 1, "I", lit(KVSZ_T0), col("after"))))
       .when(col("op") === "U" && col("old_kind") === "K",
-        array(h(keyArr(col("before")), 0, "C", histT, emptyMap),
-          h(keyArr(col("after")), 1, "V", histT, col("after"))))
+        array(h(keyOf(col("before")), 0, "C", histT, emptyMap),
+          h(keyOf(col("after")), 1, "V", histT, col("after"))))
       .when(col("op") === "U",
         array(
-          h(when(col("old_kind") === "O", keyArr(col("before")))
-            .otherwise(keyArr(col("after"))), 0, "C", histT, emptyMap),
-          h(when(col("old_kind") === "O", keyArr(col("before")))
-            .otherwise(keyArr(col("after"))), 1, "V", histT, col("after"))))
+          h(when(col("old_kind") === "O", keyOf(col("before")))
+            .otherwise(keyOf(col("after"))), 0, "C", histT, emptyMap),
+          h(when(col("old_kind") === "O", keyOf(col("before")))
+            .otherwise(keyOf(col("after"))), 1, "V", histT, col("after"))))
       .when(col("op") === "D",
-        array(h(keyArr(col("before")), 1, "CD", histT, emptyMap)))
+        array(h(keyOf(col("before")), 1, "CD", histT, emptyMap)))
     routed.filter(col("op").isin("I", "U", "D"))
       .select(explode(halves).as("x")).select("x.*")
-      .withColumn("key", Replay.typedKey(keys))
   }
 
   /** History's merge body, run by Replay.applyBatch (which routes,

@@ -3,7 +3,7 @@ package graft.operators
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec}
 import graft.obs.Phases
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,10 +39,11 @@ import org.apache.spark.sql.types._
   * zone-pruned merge of exactly the CHANGED label rows, mirroring
   * `SignatureStore.applyBatch`.
   *
-  * Exactly-once: the label table keeps its own `commit-epoch` on its own
-  * snapshot — a crash between the signature commit and the label commit
-  * replays only the label half (and the fold is idempotent: it recomputes
-  * from the already-committed signature state).
+  * Exactly-once: the label table keeps its own `commit-epoch` and applied
+  * watermark (`Replay.aboveApplied`) on its own snapshot — a crash between
+  * the signature commit and the label commit replays only the label half
+  * (and the fold is idempotent: it recomputes from the already-committed
+  * signature state), and a re-sent event applies once.
   */
 object LabelStore {
 
@@ -63,7 +64,8 @@ object LabelStore {
     * `SignatureStore.bootstrap`: covers labels enabled after the corpus
     * already ingested, or a vanished label table under a live checkpoint.
     * Records `labels-bootstrap = <signature snapshot version>` so it runs
-    * once. Caller holds the label table's lock. */
+    * once, and the signature snapshot's applied watermarks
+    * (`Replay.appliedOrdsFrom`). Caller holds the label table's lock. */
   def bootstrap(labels: LakeTable, sig: LakeTable,
                 force: Boolean = false): Boolean = {
     val lsnap = labels.snapshot()
@@ -80,7 +82,8 @@ object LabelStore {
       .withColumn("__bucket", LakeTable.bucketOf(lsnap))
     labels.commit(labels.writeDataFiles(rows, lsnap),
       lsnap.files.map(_.path).toSet,
-      properties = Map("labels-bootstrap" -> ssnap.version.toString), base = Some(lsnap))
+      properties = Replay.appliedOrdsFrom(ssnap, lsnap) +
+        ("labels-bootstrap" -> ssnap.version.toString), base = Some(lsnap))
     true
     }
   }
@@ -106,7 +109,8 @@ object LabelStore {
     val docSnap = docLake.snapshot()
     val mergeKey = (if (docSnap.hasSid) Seq("sid") else Nil) ++ docSnap.keyCols
     val envSchema = mapping.sourceSchema.getOrElse(docSnap.schema)
-    val routed = events.filter(Replay.routeCond(mapping))
+    val routed = Replay.aboveApplied(events, lsnap, epochKey)
+      .filter(Replay.routeCond(mapping))
     // a meta-only update to an existing row ('none' kind, no text in the
     // value map — the TOAST case) changes neither the doc's text nor its
     // existence under any key, so its edges are untouched; PK-updates
@@ -117,24 +121,30 @@ object LabelStore {
           (col("old_kind") =!= "none" ||
             map_contains_key(col("after"), textCol))))
     val appendMode = mapping.mode == TableMode.Append
+    // one row per touched doc, with its last op ord
     val touched = Replay.normalizeDF(relevant.toDF(), mergeKey, appendMode)
       .select(SignatureStore.docIdCol((0 until mergeKey.length).map(i =>
-        element_at(col("key"), i + 1))).as("doc_id"))
-      .distinct().filter(col("doc_id").isNotNull)
+        element_at(col("key"), i + 1))).as("doc_id"), col("ord"))
+      .groupBy("doc_id").agg(max(col("ord")).as("ord"))
+      .filter(col("doc_id").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE stats pass over a batch-bounded id set: emptiness check, RAW
       // doc_id hashes (per-lake buckets derive on the driver, so the label
       // and signature lakes share the same job even with different bucket
-      // counts) and zone bounds
-      final case class IdStats(n: Long, hashes: Seq[Long], lo: String, hi: String)
-      def statsOf(ids: DataFrame): IdStats = {
+      // counts), zone bounds and the max of `ord` (touched's: the applied
+      // watermark the commit advances)
+      final case class IdStats(n: Long, hashes: Seq[Long], lo: String, hi: String,
+                               ord: Long)
+      def statsOf(ids: DataFrame, ord: Column = lit(-1L)): IdStats = {
         val st = ids.agg(count(lit(1)).as("n"),
           collect_set(xxhash64(col("doc_id"))).as("hs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head()
-        IdStats(st.getLong(0), st.getSeq[Long](1), st.getString(2), st.getString(3))
+          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
+          max(ord).as("ord")).head()
+        IdStats(st.getLong(0), st.getSeq[Long](1), st.getString(2), st.getString(3),
+          if (st.isNullAt(4)) -1L else st.getLong(4))
       }
-      val tStats = Phases.run(labels, "touched")(statsOf(touched))
+      val tStats = Phases.run(labels, "touched")(statsOf(touched, col("ord")))
       if (tStats.n == 0L) {
         labels.commit(Nil, Set.empty,
           properties = Map(epochKey -> batchId.toString))
@@ -179,9 +189,10 @@ object LabelStore {
           min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head())
       }
       val touchedBuckets = statRow.getSeq[Int](0).toSet
+      val applied = Replay.appliedOrd(lsnap, epochKey, tStats.ord)
       if (touchedBuckets.isEmpty) {
         labels.commit(Nil, Set.empty,
-          properties = Map(epochKey -> batchId.toString))
+          properties = Map(epochKey -> batchId.toString, applied))
         return true
       }
       val zones = Seq(graft.lake.Zone("doc_id",
@@ -192,7 +203,7 @@ object LabelStore {
         .unionAll(diff.filter(col("cluster_id").isNotNull))
         .withColumn("__bucket", bucketOf)
       labels.commit(labels.writeDataFiles(out, lsnap), files.map(_.path).toSet,
-        properties = Map(epochKey -> batchId.toString), base = Some(lsnap))
+        properties = Map(epochKey -> batchId.toString, applied), base = Some(lsnap))
       true
     } finally touched.unpersist(blocking = false)
     }

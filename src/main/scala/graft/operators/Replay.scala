@@ -68,23 +68,66 @@ object Replay {
       spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
 
-  /** A normalized, keyed DML op: `ord` = (lsn, seq, sub) packed so that the
-    * delete half of a PK-update (sub 0) sorts before its insert half
-    * (sub 1) at identical (lsn, seq). */
+  /** A normalized, keyed DML op: a [[normalizeDF]] row read as a typed
+    * object (StateApply's per-key state store). `ord` = (lsn, seq, sub)
+    * packed so that the delete half of a PK-update (sub 0) sorts before its
+    * insert half (sub 1) at identical (lsn, seq). */
   final case class KeyedOp(key: Seq[String], lsn: Long, ord: Long,
                            op: String, after: Map[String, String])
 
-  @inline private def packOrd(lsn: Long, seq: Int, sub: Int): Long =
-    (lsn << 20) | (seq.toLong << 1) | sub.toLong // seq < 2^19, sub in {0,1}
-
   /** Event-granular applied position `(lsn << 20) | (seq << 1) | 1` —
-    * monotone in (lsn, seq). Committed per sid as the `applied-ord-<sid>`
-    * snapshot property so checkpoint-loss healing can floor the catch-up
-    * replay at EVENT granularity: multiple events share one lsn (seq
-    * orders them), and a micro-batch boundary can split one lsn's events
-    * across WAL segments — an lsn-granular floor would silently drop the
-    * unapplied remainder (row loss). */
+    * monotone in (lsn, seq). Every commit of a table advances its
+    * `applied-ord-<epochKey>` snapshot property to the max position it
+    * applied, and every batch of every table drops the events at or below
+    * that watermark ([[aboveApplied]]): this is what makes a re-sent event
+    * apply once, in any later batch, after a crash or after a lost
+    * checkpoint. Event granularity because one lsn's events can straddle a
+    * batch boundary (seq orders them), and an lsn-granular floor would drop
+    * the unapplied remainder.
+    *
+    * The contract it rests on: one epoch key is one source with a total
+    * order, like one replication slot — across its batches, (lsn, seq)
+    * never goes backwards, except for re-sent copies of events already
+    * delivered. */
   def eventOrdCol: Column = shiftleft(col("lsn"), 20) + col("seq") * 2 + 1
+
+  /** The snapshot property carrying a table's applied watermark for
+    * `epochKey` (see [[eventOrdCol]]). */
+  private[graft] def appliedOrdKey(epochKey: String): String = s"applied-ord-$epochKey"
+
+  /** `events` past `snap`'s applied watermark for `epochKey` — the one
+    * exactly-once floor, applied by every table to every batch against the
+    * snapshot it resolved (no watermark yet: -1, which passes every event,
+    * so the plan has one shape). The floor is ONE struct literal compared
+    * with `struct(lsn, seq)`: Spark inlines a primitive literal into the
+    * generated Java, so a floor that moves every batch would recompile the
+    * batch's code every batch, while a struct literal is passed by
+    * reference. A struct predicate does not push down to parquet, so a
+    * catch-up replay reads every row group of the WAL. */
+  private[graft] def aboveApplied[T](events: Dataset[T], snap: Snapshot,
+                                     epochKey: String): Dataset[T] = {
+    val ord = snap.properties.getOrElse(appliedOrdKey(epochKey), "-1").toLong
+    events.filter(struct(col("lsn").as("_1"), col("seq").as("_2")) >
+      typedLit((ord >> 20, ((ord >> 1) & ((1L << 19) - 1)).toInt)))
+  }
+
+  /** The property that advances `snap`'s applied watermark for `epochKey`
+    * to `maxOrd`; it never moves backwards. */
+  private[operators] def appliedOrd(snap: Snapshot, epochKey: String,
+                                    maxOrd: Long): (String, String) = {
+    val k = appliedOrdKey(epochKey)
+    k -> math.max(maxOrd, snap.properties.getOrElse(k, "-1").toLong).toString
+  }
+
+  /** The applied watermarks of a table `dst` rebuilt from `src`'s state:
+    * `src`'s own, and -1 for each one `dst` holds that `src` lacks — the
+    * rebuilt table reflects exactly what `src` applied, so it replays what
+    * `src` would. */
+  private[operators] def appliedOrdsFrom(src: Snapshot,
+                                         dst: Snapshot): Map[String, String] = {
+    def ords(s: Snapshot) = s.properties.filter(_._1.startsWith(appliedOrdKey("")))
+    ords(dst).map { case (k, _) => k -> "-1" } ++ ords(src)
+  }
 
   // ---------------------------------------------------------------------
   // P1/P2: row filter & column transform over the decoded row env
@@ -221,34 +264,66 @@ object Replay {
   // R2: key extraction + PK-update normalization
   // ---------------------------------------------------------------------
 
-  /** Normalize one event into keyed DML ops — the typed twin of
-    * [[normalizeDF]], kept for StateApply's per-key state store. PK-updates (old_kind "K",
-    * `streamer/process_clone.go:48-77`) become delete(oldKey) +
-    * insert(newKey) with sub-ordering preserved; replica-identity-full
-    * (old_kind "O") takes the whole old row as the key. NOTE (documented
-    * divergence): the reference's `UPDATE ... WHERE oldkey` is a no-op when
-    * the old row is absent, while delete+insert creates the new row; on a
-    * complete stream (the reference always full-syncs first,
+  /** The merge key `keys` (name, type) read straight off an event's value
+    * map `src` (`sid` off the event's own column): one struct of the typed
+    * key columns, named like the table's — the same value as a target
+    * row's `struct(key columns)`, so a merge's window pass meets a batch
+    * key and its target row in one partition. Partitioning and struct
+    * comparison treat NULL fields as equal, so NULL key values still match
+    * null-safely. */
+  private[operators] def typedKey(keys: Seq[(String, DataType)])(src: Column): Column =
+    struct(keys.map { case (c, dt) =>
+      (if (c == "sid") col("sid") else element_at(src, c)).cast(dt).as(c) }: _*)
+
+  /** The keyed halves of one event as an array column, built by `half(key,
+    * sub, op, after)` with each key read off its value map by `keyOf`: a
+    * PK-update (old_kind K) splits into D(old key, sub 0) + I(new key, sub
+    * 1); a delete or a replica-identity-full update (old_kind O) is keyed
+    * by its old tuple, anything else by its new one. NULL for events that
+    * fold to nothing: R, T, and deletes in append mode (W4). Shared by the
+    * normalizers and [[probe]], so the probe's touched keys are exactly
+    * the fold's. */
+  private def keyHalves(keyOf: Column => Column, appendMode: Boolean)(
+      half: (Column, Int, Column, Column) => Column): Column = {
+    val emptyMap = map().cast("map<string,string>")
+    when(col("op") === "U" && col("old_kind") === "K",
+      array(
+        half(keyOf(col("before")), 0, lit("D"), emptyMap),
+        half(keyOf(col("after")), 1, lit("I"), col("after"))))
+      .when(col("op").isin("I", "U") || (col("op") === "D" && !lit(appendMode)),
+        array(half(
+          when(col("op") === "D" || col("old_kind") === "O", keyOf(col("before")))
+            .otherwise(keyOf(col("after"))),
+          1, col("op"),
+          when(col("op") === "D", emptyMap).otherwise(col("after")))))
+  }
+
+  /** Normalize routed DML events (R/T pre-filtered) into keyed op rows
+    * (`lsn, key, ord, op, after`; [[KeyedOp]]) via pure expressions;
+    * PK-updates explode into D(old)+I(new) halves. The `key` is the merge
+    * key's text values, `array<string>`. NOTE (documented divergence): the
+    * reference's `UPDATE ... WHERE oldkey` is a no-op when the old row is
+    * absent, while delete+insert creates the new row; on a complete stream
+    * (the reference always full-syncs first,
     * `replicate_database.go:220-235`) the two are identical. */
-  def normalize(ev: ChangeEvent, mergeKey: Seq[String],
-                appendMode: Boolean): Seq[KeyedOp] = {
-    def keyOf(m: Map[String, String]): Seq[String] =
-      mergeKey.map(c => if (c == "sid") ev.sid else m.getOrElse(c, null))
-    ev.op match {
-      case "I" =>
-        Seq(KeyedOp(keyOf(ev.after), ev.lsn, packOrd(ev.lsn, ev.seq, 1), "I", ev.after))
-      case "U" if ev.old_kind == "K" =>
-        Seq(
-          KeyedOp(keyOf(ev.before), ev.lsn, packOrd(ev.lsn, ev.seq, 0), "D", Map.empty),
-          KeyedOp(keyOf(ev.after), ev.lsn, packOrd(ev.lsn, ev.seq, 1), "I", ev.after))
-      case "U" if ev.old_kind == "O" =>
-        Seq(KeyedOp(keyOf(ev.before), ev.lsn, packOrd(ev.lsn, ev.seq, 1), "U", ev.after))
-      case "U" =>
-        Seq(KeyedOp(keyOf(ev.after), ev.lsn, packOrd(ev.lsn, ev.seq, 1), "U", ev.after))
-      case "D" if !appendMode => // append mode drops deletes (W4)
-        Seq(KeyedOp(keyOf(ev.before), ev.lsn, packOrd(ev.lsn, ev.seq, 1), "D", Map.empty))
-      case _ => Nil // D in append mode, R, T(runcate: parsed, ignored — W8)
+  def normalizeDF(routed: DataFrame, mergeKey: Seq[String],
+                  appendMode: Boolean): DataFrame =
+    normalizeBy(routed, appendMode, src =>
+      array(mergeKey.map(c => if (c == "sid") col("sid") else element_at(src, c)): _*))
+
+  /** [[normalizeDF]] with each op's key read off its value map by `keyOf`. */
+  private def normalizeBy(routed: DataFrame, appendMode: Boolean,
+                          keyOf: Column => Column): DataFrame = {
+    val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 2
+    val halves = keyHalves(keyOf, appendMode) { (key, sub, op, after) =>
+      struct(key.as("key"), (ordBase + sub).as("ord"), op.as("op"), after.as("after"))
     }
+    routed
+      .filter(col("op").isin("I", "U", "D") &&
+        !(lit(appendMode) && col("op") === "D"))
+      .select(col("lsn"), explode(halves).as("h"))
+      .select(col("lsn"), col("h.key").as("key"), col("h.ord").as("ord"),
+        col("h.op").as("op"), col("h.after").as("after"))
   }
 
   // ---------------------------------------------------------------------
@@ -273,66 +348,14 @@ object Replay {
   // row: fi's, or (no fi) the key's last op.
   // ---------------------------------------------------------------------
 
-  /** The keyed halves of one event as an array column, built by `half(key,
-    * sub, op, after)`: a PK-update (old_kind K) splits into D(old key, sub
-    * 0) + I(new key, sub 1); a delete or a replica-identity-full update
-    * (old_kind O) is keyed by its old tuple, anything else by its new one.
-    * NULL for events that fold to nothing: R, T, and deletes in append
-    * mode (W4). Shared by [[normalizeDF]] and [[probe]], so the probe's
-    * touched keys are exactly the fold's. */
-  private def keyHalves(mergeKey: Seq[String], appendMode: Boolean)(
-      half: (Column, Int, Column, Column) => Column): Column = {
-    def keyArr(src: Column): Column = array(mergeKey.map(c =>
-      if (c == "sid") col("sid") else element_at(src, c)): _*)
-    val emptyMap = map().cast("map<string,string>")
-    when(col("op") === "U" && col("old_kind") === "K",
-      array(
-        half(keyArr(col("before")), 0, lit("D"), emptyMap),
-        half(keyArr(col("after")), 1, lit("I"), col("after"))))
-      .when(col("op").isin("I", "U") || (col("op") === "D" && !lit(appendMode)),
-        array(half(
-          when(col("op") === "D" || col("old_kind") === "O", keyArr(col("before")))
-            .otherwise(keyArr(col("after"))),
-          1, col("op"),
-          when(col("op") === "D", emptyMap).otherwise(col("after")))))
-  }
-
-  /** Normalize routed DML events (R/T pre-filtered) into keyed op rows via
-    * pure expressions; PK-updates explode into D(old)+I(new) halves. The
-    * `key` is the merge key's text values, `array<string>`; [[typedKey]]
-    * turns it into the typed key a merge folds by. */
-  def normalizeDF(routed: DataFrame, mergeKey: Seq[String],
-                  appendMode: Boolean): DataFrame = {
-    val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 2
-    val halves = keyHalves(mergeKey, appendMode) { (key, sub, op, after) =>
-      struct(key.as("key"), (ordBase + sub).as("ord"), op.as("op"), after.as("after"))
-    }
-    routed
-      .filter(col("op").isin("I", "U", "D") &&
-        !(lit(appendMode) && col("op") === "D"))
-      .select(col("lsn"), explode(halves).as("h"))
-      .select(col("lsn"), col("h.key").as("key"), col("h.ord").as("ord"),
-        col("h.op").as("op"), col("h.after").as("after"))
-  }
-
-  /** The merge key `keys` (name, type) read off a text key array `arr`:
-    * one struct of the typed key columns, named like the table's — the
-    * same value as a target row's `struct(key columns)`, so a merge's
-    * window pass meets a batch key and its target row in one partition.
-    * Partitioning and struct comparison treat NULL fields as equal, so
-    * NULL key values still match null-safely. */
-  private[operators] def typedKey(keys: Seq[(String, DataType)],
-                                  arr: Column = col("key")): Column =
-    struct(keys.zipWithIndex.map { case ((c, dt), i) =>
-      element_at(arr, i + 1).cast(dt).as(c) }: _*)
-
   /** Fold normalized op rows to one row per `key` carrying the key's [[Xf]]
-    * (`key, maxLsn, absentExists, onAbsent, presentKind, onPresent`): one
-    * exchange on `key`, one sort, two window operators over it and a
-    * filter keeping one row per key ([[xfRows]]). */
+    * (`key, maxLsn, maxOrd, absentExists, onAbsent, presentKind,
+    * onPresent`; `maxOrd` is the key's last op `ord`): one exchange on
+    * `key`, one sort, two window operators over it and a filter keeping one
+    * row per key ([[xfRows]]). */
   def foldToXfDF(ops: DataFrame, payloadCols: Seq[String]): DataFrame =
-    xfRows(ops, payloadCols).select("key", "maxLsn", "absentExists", "onAbsent",
-      "presentKind", "onPresent")
+    xfRows(ops, payloadCols).select("key", "maxLsn", "maxOrd", "absentExists",
+      "onAbsent", "presentKind", "onPresent")
 
   /** The one row per `key` of `rows` (`key, ord, op, after, lsn`) that
     * carries the key's [[Xf]] over its I/U/D ops, with its `op` and the
@@ -397,7 +420,7 @@ object Replay {
         when(late, upd.getField("v")).otherwise(element_at(col("after"), c)))
     }
     o.filter(fiExists || lastRow).select(clusterBy ++ Seq(
-      col("key"), col("op"), col("maxLsn"),
+      col("key"), col("op"), col("maxLsn"), col("last").as("maxOrd"),
       fiExists.as("absentExists"),
       when(fiExists, absMap).otherwise(map().cast("map<string,string>")).as("onAbsent"),
       when(col("dl").isNull, lit(Xf.OVERRIDE))
@@ -471,8 +494,8 @@ object Replay {
   private[graft] def probe(snap: Snapshot, batch: DataFrame, appendMode: Boolean,
                            batchId: Long): Probe = {
     val keys = keyTypes(snap)
-    val halves = keyHalves(keys.map(_._1), appendMode)((key, _, _, _) =>
-      struct(typedKey(keys, key).as("key")))
+    val halves = keyHalves(typedKey(keys), appendMode)((key, _, _, _) =>
+      struct(key.as("key")))
     val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
     val types = zoneKeys.map(_._2)
     val rows = batch
@@ -541,16 +564,14 @@ object Replay {
       val k = s"metrics-ops-$op"
       k -> (prev.getOrElse(k, "0").toLong + n).toString
     }
-    // event-granular applied watermark (see eventOrdCol), keyed per EPOCH
-    // KEY — i.e. per (stream, mapping), like the epoch itself: two mappings
+    // the applied watermark (see eventOrdCol) is keyed per EPOCH KEY —
+    // i.e. per (stream, mapping), like the epoch itself: two mappings
     // sharing one target advance independent watermarks, so one route's
-    // commit can never floor the other route's unapplied events out of a
-    // healing catch-up replay
-    val ordKey = s"applied-ord-$epochKey"
+    // commit can never floor the other route's unapplied events
     lake.commit(newFiles, removed,
       properties = extraProps ++ opProps ++ Map(
         epochKey -> batchId.toString,
-        ordKey -> math.max(ci.maxOrd, prev.getOrElse(ordKey, "-1").toLong).toString,
+        appliedOrd(snap, epochKey, ci.maxOrd),
         "lsn-high-watermark" -> math.max(ci.lineage.map(_.maxLsn).max,
           prev.getOrElse("lsn-high-watermark", "-1").toLong).toString),
       lineage = ci.lineage, base = Some(snap))
@@ -611,7 +632,7 @@ object Replay {
     val keys = keyTypes(snap)
     val mergeKey = keys.map(_._1)
     val rows = withTargetRows(snap, target,
-      normalizeDF(transformed, mergeKey, appendMode).withColumn("key", typedKey(keys)))
+      normalizeBy(transformed, appendMode, typedKey(keys)))
     val folded = xfRows(rows, schema.fieldNames.filterNot(mergeKey.contains).toSeq,
       carry = Seq("tRow" -> max_by(col("row"), col("op") === "T")),
       clusterBy = Seq(col("__bucket")))
@@ -733,9 +754,11 @@ object Replay {
     *
     * The target manifest is resolved once and that snapshot is threaded
     * through the probe, the merge and the data write. Idempotent: if the
-    * lake's commit-epoch already covers `batchId` the batch is skipped
-    * (exactly-once on restart — the analog of the reference's `ON
-    * CONFLICT DO NOTHING` replay tolerance + LSN-ack-after-commit,
+    * lake's commit-epoch already covers `batchId` the batch is skipped, and
+    * events at or below the snapshot's applied watermark are dropped
+    * ([[aboveApplied]]), so a re-sent event applies once whichever batch
+    * carries it (exactly-once — the analog of the reference's `ON CONFLICT
+    * DO NOTHING` replay tolerance + LSN-ack-after-commit,
     * `worker.go:135-165`). Returns true if applied.
     */
   def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
@@ -748,7 +771,7 @@ object Replay {
     if (batchId <= committed) return false // already applied before a crash
 
     // route: exact name or partitions-regex (mapping_table.go:57-81)
-    val routed0 = events.filter(routeCond(mapping))
+    val routed0 = aboveApplied(events, snap0, epochKey).filter(routeCond(mapping))
     val history = mapping.mode == TableMode.History
     // env schema for filter/set expressions: the source-row layout (CEL is
     // evaluated over source columns in the reference) or, absent an explicit

@@ -28,9 +28,11 @@ import org.apache.spark.sql.types._
   *     the target row to recompute an identical signature would be waste;
   *   - net delete (TO_ABSENT): drop the signature row.
   *
-  * Exactly-once: the same commit-epoch skip as `Replay.applyBatch`, on the
-  * signature table's own snapshot — the signature route replays
-  * independently of the main route after a crash between the two commits.
+  * Exactly-once: the same commit-epoch skip and applied-watermark floor
+  * as `Replay.applyBatch` (`Replay.aboveApplied`), on the signature table's
+  * own snapshot — the signature route replays independently of the main
+  * route after a crash between the two commits or a lost checkpoint, and a
+  * re-sent event applies once.
   */
 object SignatureStore {
 
@@ -94,21 +96,24 @@ object SignatureStore {
     * recreated signatures table under a live checkpoint (whose epoch skip
     * would otherwise leave the gap permanent). One corpus text scan;
     * records `signatures-bootstrap = <doc snapshot version>` so it runs
-    * once. Caller holds the signature table's lock. */
+    * once, and the doc snapshot's applied watermarks
+    * (`Replay.appliedOrdsFrom`), so the signature table replays exactly
+    * what the doc table does. Caller holds the signature table's lock. */
   def bootstrap(sig: LakeTable, docLake: LakeTable,
                 textCol: String = "text", force: Boolean = false): Boolean = {
     val ssnap = sig.snapshot()
     if (!force && ssnap.properties.contains("signatures-bootstrap")) return false
     val dsnap = docLake.snapshot()
     val mergeKey = (if (dsnap.hasSid) Seq("sid") else Nil) ++ dsnap.keyCols
-    val docs = docLake.read().select(
+    val docs = docLake.readAt(dsnap).select(
       docIdCol(mergeKey.map(col)).as("doc_id"),
       col(textCol).as("text"))
     val rows = signaturesOf(docs, uniqueIds = true)
       .withColumn("__bucket", LakeTable.bucketOf(ssnap))
     sig.commit(sig.writeDataFiles(rows, ssnap),
       ssnap.files.map(_.path).toSet,
-      properties = Map("signatures-bootstrap" -> dsnap.version.toString), base = Some(ssnap))
+      properties = Replay.appliedOrdsFrom(dsnap, ssnap) +
+        ("signatures-bootstrap" -> dsnap.version.toString), base = Some(ssnap))
     true
   }
 
@@ -133,7 +138,8 @@ object SignatureStore {
     val docSnap = docLake.snapshot()
     val mergeKey = (if (docSnap.hasSid) Seq("sid") else Nil) ++ docSnap.keyCols
     val envSchema = mapping.sourceSchema.getOrElse(docSnap.schema)
-    val routed = events.filter(Replay.routeCond(mapping))
+    val routed = Replay.aboveApplied(events, snap, epochKey)
+      .filter(Replay.routeCond(mapping))
     val transformed = Replay.filterTransform(routed, mapping, envSchema)
       .filter(col("op").isin("I", "U", "D"))
     val appendMode = mapping.mode == TableMode.Append
@@ -147,7 +153,7 @@ object SignatureStore {
     val f = folded.select(
       docIdCol((0 until mergeKey.length).map(i =>
         element_at(col("key"), i + 1))).as("doc_id"),
-      col("absentExists"), col("presentKind"),
+      col("maxOrd"), col("absentExists"), col("presentKind"),
       map_contains_key(col("onAbsent"), textCol).as("a_has"),
       element_at(col("onAbsent"), textCol).as("a_txt"),
       map_contains_key(col("onPresent"), textCol).as("p_has"),
@@ -163,11 +169,12 @@ object SignatureStore {
       // table per batch). doc_id is the rendered merge key: a NULL single-
       // column key renders to NULL doc_id, so the null flag drops the zone
       // (stats don't cover nulls — same soundness rule as the doc merge).
+      // The batch's max op ord is the applied watermark the commit advances.
       val statRow = Phases.run(sig, "stats")(f.agg(
         collect_set(LakeTable.bucketOf(snap).cast("int")).as("bs"),
         min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
         max(col("doc_id").isNull.cast("int")).as("nl"),
-        count(lit(1)).as("n")).head())
+        count(lit(1)).as("n"), max(col("maxOrd")).as("ord")).head())
       if (statRow.getLong(4) == 0L) { // empty fold: advance the epoch only
         sig.commit(Nil, Set.empty,
           properties = Map(epochKey -> batchId.toString))
@@ -215,7 +222,8 @@ object SignatureStore {
           .withColumn("__bucket", LakeTable.bucketOf(snap))
         val newFiles = sig.writeDataFiles(out, snap)
         sig.commit(newFiles, files.map(_.path).toSet,
-          properties = Map(epochKey -> batchId.toString), base = Some(snap))
+          properties = Map(epochKey -> batchId.toString,
+            Replay.appliedOrd(snap, epochKey, statRow.getLong(5))), base = Some(snap))
         true
       } finally rows.unpersist()
     } finally f.unpersist()

@@ -41,7 +41,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * LSN/seq mapping: each DML row gets `lsn` = the transaction's final LSN
   * (from Begin, `replicate_database.go` uses the commit position as the
   * ack watermark) and `seq` = its 0-based position within the transaction
-  * — matching the engine's (lsn, seq) ordering contract (Replay.packOrd).
+  * — matching the engine's (lsn, seq) ordering contract (Replay.eventOrdCol).
   *
   * Chunk layout (little framing, big-endian ints like the wire):
   *   repeated records: [len: int32][payload: len bytes]
@@ -110,7 +110,8 @@ object PgOutput {
       * transaction are the chunk writer's registry prefix: they update the
       * decoder registry but emit NO engine event (their position carries no
       * wire ordering — stamping them (0, seq) would repeat identical ords
-      * in every chunk and any positive heal floor would filter them). */
+      * in every chunk and any positive applied watermark would filter
+      * them). */
     var inTxn: Boolean = false
     /** Inside a StreamStart..StreamStop block (protocol v2: in-progress
       * transactions stream in interleavable blocks; DML/Relation/Truncate/
@@ -130,9 +131,9 @@ object PgOutput {
   }
 
   /** Hard ceiling on per-transaction event count: the engine's ord packing
-    * ((lsn << 20) | (seq << 1) | sub, Replay.packOrd) carries seq in 19
+    * ((lsn << 20) | (seq << 1) | sub, Replay.normalizeDF) carries seq in 19
     * bits; overflowing would bleed into the lsn field and silently corrupt
-    * ordering AND the applied-ord heal watermark — fail loudly instead (a
+    * ordering AND the applied-ord watermark — fail loudly instead (a
     * transaction this large must be chunked upstream). */
   private val SeqMax = (1 << 19) - 1
 

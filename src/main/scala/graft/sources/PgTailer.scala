@@ -42,8 +42,9 @@ import scala.collection.mutable
   *      acked LSN; bytes buffered but not yet rolled (or rolled but not
   *      yet committed downstream) are simply re-sent by the server. Copies
   *      that land in one micro-batch fold to one row (clone) or one
-  *      version (History); a copy in a later batch is applied again, as
-  *      the (lsn, seq) ord floor holds only after a checkpoint heal.
+  *      version (History); a copy in a later batch is dropped, because
+  *      every table floors each batch at its own committed (lsn, seq)
+  *      applied watermark (`Replay.aboveApplied`).
   */
 object PgTailer {
 

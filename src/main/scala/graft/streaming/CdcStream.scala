@@ -18,13 +18,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     after the lake snapshot commit).
   *   - `maxFilesPerTrigger` plays the commit_delay batching knob (W9,
   *     `worker.go:61-104`) and the full-sync rate limit (A2).
-  *   - Exactly-once: if the process dies between the lake commit and the
-  *     checkpoint commit, the batch is replayed on restart and skipped by
-  *     the epoch check in `Replay.applyBatch` (commit-epoch snapshot
-  *     property) — the idempotent-replay analog of `ON CONFLICT DO
-  *     NOTHING` (`process_clone.go:195`). `Replay.applyBatch` is the one
-  *     per-batch entry for every table mode, history included: it
-  *     dispatches on the mapping's mode itself.
+  *   - Exactly-once: every table — target, signature and label — drops
+  *     the events at or below its own committed applied watermark
+  *     (`applied-ord-<epochKey>`, `Replay.aboveApplied`) and advances it in
+  *     the same commit, so an event applies once whichever batch carries
+  *     it: a batch replayed after a crash between the lake commit and the
+  *     checkpoint commit, WAL re-sent by the server, or the whole WAL
+  *     replayed after a lost checkpoint. The epoch check (commit-epoch
+  *     snapshot property) skips a replayed batch before it is read. This
+  *     is the idempotent-replay analog of `ON CONFLICT DO NOTHING`
+  *     (`process_clone.go:195`). `Replay.applyBatch` is the one per-batch
+  *     entry for every table mode, history included: it dispatches on the
+  *     mapping's mode itself.
   *   - One stream fans out to many table mappings (the reference's
   *     multi-table map, `streamer/map.go`): each target table carries its
   *     own epoch, so a crash between two tables' commits in one batch also
@@ -55,9 +60,10 @@ object CdcStream {
     * ingest half of incremental dedup — SignatureStore). */
   /** @param labels optional duplicate-cluster label table folded forward
     *               AFTER the signature commit (LabelStore reads the
-    *               post-commit signature rows); it keeps its own epoch on
-    *               its own snapshot, so a crash between any two of the
-    *               three commits replays exactly the missing halves */
+    *               post-commit signature rows); it keeps its own epoch and
+    *               applied watermark on its own snapshot, so a crash
+    *               between any two of the three commits replays exactly the
+    *               missing halves */
   final case class SignatureSink(lake: LakeTable, textCol: String = "text",
                                  labels: Option[LakeTable] = None)
 
@@ -68,21 +74,13 @@ object CdcStream {
     *                    exactly-once epoch (per-source to survive fan-in)
     * @param signatures  optional near-dup signature table updated from the
     *                    same batch after the main merge; it keeps its own
-    *                    epoch on its own snapshot, so a crash between the
-    *                    two commits replays only the missing half
-    * @param ordFloor    drop events at or below this applied position
-    *                    ((lsn << 20) | (seq << 1) | 1 — Replay.eventOrdCol)
-    *                    before applying (anomaly healing: a lost checkpoint
-    *                    replays the whole WAL, and the floor — the table's
-    *                    recorded event-granular applied watermark — turns
-    *                    that into a zone-pruned catch-up instead of a
-    *                    duplicate apply; event granularity because one lsn's
-    *                    events can straddle a batch boundary); -1 = off */
+    *                    epoch and applied watermark on its own snapshot, so
+    *                    a crash between the two commits replays only the
+    *                    missing half */
   final case class Route(mapping: TableMapping, lake: LakeTable,
                          sidOverride: Option[String] = None,
                          epochKey: String = "commit-epoch",
-                         signatures: Option[SignatureSink] = None,
-                         ordFloor: Long = -1L)
+                         signatures: Option[SignatureSink] = None)
 
   /** One lock per table root: cross-stream applies to one lake serialize
     * (single-writer commit protocol; see class doc). Shared with the
@@ -243,22 +241,9 @@ object CdcStream {
           df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else df0
         def applyRoute(r: Route): Unit = {
-          // (lsn, seq) floor as a Column predicate tree — Or(Gt(lsn),
-          // And(Eq(lsn), Gt(seq))) pushes down to the parquet scan, so a
-          // healing catch-up replay reads only the row groups past the
-          // applied watermark; the seq leg keeps the remainder of a
-          // batch-boundary-straddling lsn (row-loss fix)
-          val floored =
-            if (r.ordFloor >= 0L) {
-              import org.apache.spark.sql.functions.col
-              val fLsn = r.ordFloor >> 20
-              val fSeq = (r.ordFloor >> 1) & ((1L << 19) - 1)
-              df.filter(col("lsn") > fLsn ||
-                (col("lsn") === fLsn && col("seq") > fSeq))
-            } else df
           val events = (r.sidOverride match {
-            case Some(s) => floored.withColumn("sid", lit(s))
-            case None => floored
+            case Some(s) => df.withColumn("sid", lit(s))
+            case None => df
           }).as[ChangeEvent]
           lockFor(r.lake.root).synchronized {
             Replay.applyBatch(r.lake, events, r.mapping, batchId, r.epochKey)

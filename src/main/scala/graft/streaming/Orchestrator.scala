@@ -3,7 +3,7 @@ package graft.streaming
 import graft.config.MapConfig
 import graft.lake.LakeTable
 import graft.model.{TableMode, TableSpec}
-import graft.operators.{Backfill, History}
+import graft.operators.{Backfill, History, Replay}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -164,7 +164,9 @@ object Orchestrator {
             // enabled after the target already holds rows, (b) a vanished/
             // recreated signatures table, (c) backfilled rows (which do
             // not flow through the streaming apply). `force` after a real
-            // sync re-signs so the fresh backfill is covered.
+            // sync re-signs so the fresh backfill is covered. A bootstrap
+            // takes its source's applied watermarks, so a companion rebuilt
+            // off a recreated target replays the WAL the target replays.
             r.signatures.foreach { s =>
               val sigBooted = CdcStream.lockFor(s.lake.root).synchronized {
                 graft.operators.SignatureStore.bootstrap(s.lake, r.lake,
@@ -207,99 +209,58 @@ object Orchestrator {
         // the CHECKPOINT is gone (publication-without-slot). The stream
         // will replay the whole WAL with batch ids restarting at 0, which
         // the committed epoch would otherwise skip wholesale — data loss.
-        // Rebase instead: epoch back to -1 so replayed batches apply, and
-        // a floor at the table's per-sid applied watermark so the catch-up
-        // replay skips everything already applied — a zone-pruned resume,
-        // NOT a duplicate full sync (the full-sync-* property survives, so
-        // backfill does not rerun). The floor is EVENT-granular — the
-        // `applied-ord-<sid>` property ((lsn << 20) | (seq << 1) | 1,
-        // Replay.eventOrdCol): multiple events share one lsn, and a batch
-        // boundary can split one lsn's events across WAL segments, so an
-        // lsn-granular floor would silently drop the unapplied remainder.
-        // Tables written before the property existed fall back to the
-        // lineage maxLsn rendered as an ord covering ALL of that lsn's
-        // seqs (the old, coarser behavior). The floor is committed
-        // ATOMICALLY with the epoch rebase as a lake property
-        // (`heal-floor-<epochKey>`, value = ord) and re-read on EVERY
-        // start — a crash mid-catch-up (checkpoint exists again, heal
-        // branch skipped) must still replay behind the floor, or pre-floor
-        // events would apply a second time. The floor is permanent-safe:
-        // (lsn, seq) is monotone and everything at or below it is applied.
-        val healedRoutes = routes.map { r =>
+        // Rebase instead: epoch back to -1 so replayed batches apply. Every
+        // table — target, signatures, labels — floors each batch at its own
+        // applied watermark (`applied-ord-<epochKey>`, Replay.aboveApplied),
+        // so the catch-up resumes each one where its own commits left off:
+        // NOT a duplicate apply, and NOT a duplicate full sync (the
+        // full-sync-* property survives, so backfill does not rerun). A
+        // companion that missed a batch the target committed replays that
+        // batch itself. A table written before the watermark existed gets
+        // one in the rebase commit: the lineage maxLsn rendered as an ord
+        // covering ALL of that lsn's seqs (the old, coarser floor).
+        routes.foreach { r =>
           CdcStream.lockFor(r.lake.root).synchronized {
-            val floorKey = s"heal-floor-${r.epochKey}"
+            val ordKey = Replay.appliedOrdKey(r.epochKey)
             val snap = r.lake.snapshot()
             val preDocEpoch = snap.properties.getOrElse(r.epochKey, "-1").toLong
-            val healing =
-              !java.nio.file.Files.isDirectory(ckptDir) && preDocEpoch >= 0
-            if (healing) {
-              // per-ROUTE watermark (applied-ord-<epochKey>): a sibling
-              // mapping sharing this target advances its own key, so its
-              // commits can never floor this route's unapplied events out
-              // of the catch-up replay. Legacy fallback: the lineage
-              // maxLsn rendered as an ord covering all of that lsn's seqs.
-              val floor = snap.properties.get(s"applied-ord-${r.epochKey}")
-                .map(_.toLong).getOrElse {
-                  snap.lineage.filter(_.sid == u.sid)
-                    .map(_.maxLsn).maxOption.filter(_ >= 0)
-                    .map(l => (l << 20) | ((1L << 20) - 1)).getOrElse(-1L)
-                }
+            if (!java.nio.file.Files.isDirectory(ckptDir) && preDocEpoch >= 0) {
+              val legacy = if (snap.properties.contains(ordKey)) None else
+                snap.lineage.filter(_.sid == u.sid).map(_.maxLsn).maxOption
+                  .filter(_ >= 0).map(l => ordKey -> ((l << 20) | ((1L << 20) - 1)).toString)
               System.err.println(s"[orchestrator] checkpoint $ckptDir " +
                 s"missing for applied table ${r.mapping.target} — " +
-                s"rebasing epoch and resuming from (lsn,seq) ord > $floor")
+                "rebasing epoch and resuming past each table's applied watermark")
               r.lake.commit(Nil, Set.empty,
-                properties = Map(r.epochKey -> "-1", floorKey -> floor.toString))
+                properties = Map(r.epochKey -> "-1") ++ legacy)
             }
             val props = r.lake.snapshot().properties
-            r.signatures.foreach { s =>
-              val sigRebooted = CdcStream.lockFor(s.lake.root).synchronized {
-                val se = s.lake.snapshot().properties
-                  .getOrElse(r.epochKey, "-1").toLong
-                val de = props.getOrElse(r.epochKey, "-1").toLong
-                // epoch AHEAD of the doc table's (post-rebase): rebase it
-                // to match or post-heal batches would be skipped on the
-                // signature route forever
-                if (se > de)
-                  s.lake.commit(Nil, Set.empty,
-                    properties = Map(r.epochKey -> de.toString))
-                // epoch BEHIND the doc table's pre-rebase epoch while
-                // healing: the doc table holds batches the signature table
-                // never applied, and the heal floor will hide their replay
-                // (the events filter out before BOTH routes) — re-sign
-                // from the doc table's current state, which contains
-                // exactly those rows (the bootstrap full-sync analog)
-                if (healing && se < preDocEpoch) {
-                  graft.operators.SignatureStore.bootstrap(s.lake, r.lake,
-                    s.textCol, force = true)
-                  true
-                } else false
-              }
-              // the label table heals against the SAME doc epoch, and a
-              // re-signed signature table invalidates it wholesale (its
-              // source changed under it) regardless of its own epoch
-              s.labels.foreach { l =>
-                CdcStream.lockFor(l.root).synchronized {
-                  val le = l.snapshot().properties
-                    .getOrElse(r.epochKey, "-1").toLong
-                  val de = props.getOrElse(r.epochKey, "-1").toLong
-                  if (le > de)
-                    l.commit(Nil, Set.empty,
-                      properties = Map(r.epochKey -> de.toString))
-                  if (sigRebooted || (healing && le < preDocEpoch))
-                    graft.operators.LabelStore.bootstrap(l, s.lake,
-                      force = true)
+            val de = props.getOrElse(r.epochKey, "-1").toLong
+            // a companion epoch AHEAD of the doc table's (post-rebase) is
+            // rebased to match, or post-heal batches would be skipped on it
+            // forever
+            r.signatures.toSeq.flatMap(s => s.lake +: s.labels.toSeq).foreach { c =>
+              CdcStream.lockFor(c.root).synchronized {
+                val cp = c.snapshot().properties
+                val ce = cp.getOrElse(r.epochKey, "-1").toLong
+                if (ce > de) {
+                  // one written before the watermark existed that had
+                  // caught up with the doc table takes the doc table's
+                  val legacy = props.get(ordKey)
+                    .filter(_ => !cp.contains(ordKey) && ce >= preDocEpoch)
+                  c.commit(Nil, Set.empty,
+                    properties = Map(r.epochKey -> de.toString) ++ legacy.map(ordKey -> _))
                 }
               }
             }
-            r.copy(ordFloor = props.getOrElse(floorKey, "-1").toLong)
           }
         }
         // record the targets this checkpoint routes to (vanished-target
         // detection on the next start)
         java.nio.file.Files.createDirectories(ckptDir)
         java.nio.file.Files.write(markerFile,
-          healedRoutes.map(_.mapping.target).sorted.mkString("\n").getBytes("UTF-8"))
-        val q = CdcStream.start(spark, u.url, ckptDir.toString, healedRoutes,
+          routes.map(_.mapping.target).sorted.mkString("\n").getBytes("UTF-8"))
+        val q = CdcStream.start(spark, u.url, ckptDir.toString, routes,
           maxFilesPerTrigger = maxFilesPerTrigger,
           trigger = trigger, format = u.format.getOrElse("parquet"))
         Handle(db.name, u.url, u.sid, q)

@@ -116,7 +116,7 @@ object StateApply {
   }
 
   /** Normalize a change-event stream (PK-updates split, replica-identity
-    * keys extracted — Replay.normalize) and fold it through keyed state;
+    * keys extracted — Replay.normalizeDF) and fold it through keyed state;
     * returns the update-mode emission stream. Works on a streaming OR
     * batch Dataset (flatMapGroupsWithState is supported on both; on batch
     * it degenerates to a single "micro-batch").
@@ -140,7 +140,8 @@ object StateApply {
         "watermark, which batch plans do not carry); pass tombstoneTtl = " +
         "None for batch input — a one-shot batch has no cross-batch state " +
         "to bound")
-    val normalized = events.flatMap(e => Replay.normalize(e, mergeKey, appendMode))
+    val normalized = Replay.normalizeDF(events.toDF(), mergeKey, appendMode)
+      .as[Replay.KeyedOp]
     val (keyed, timeout) = tombstoneTtl match {
       case None => (normalized, GroupStateTimeout.NoTimeout())
       case Some(_) =>

@@ -878,7 +878,7 @@ ORDER BY batch_id"""
   // ---------------------------------------------------------------------
 
   /** Normalized-op CTE. pkUpdate splits purchases into D(old)+I(new) with
-    * sub-ordering ord = 2*lsn (+1), mirroring Replay.normalize/packOrd. */
+    * sub-ordering ord = 2*lsn (+1), mirroring Replay.normalizeDF. */
   private def nopsCte(pkUpdate: Boolean, excl: String): String = {
     val base = s"raw AS (SELECT * FROM events${if (excl == null) "" else s" WHERE $excl"})"
     if (!pkUpdate)

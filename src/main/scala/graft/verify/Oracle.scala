@@ -14,7 +14,7 @@ import scala.collection.mutable
   *   I: absent -> row(after); present -> unchanged (ON CONFLICT DO NOTHING)
   *   U: absent -> no-op (0 rows affected); present -> override the columns
   *      present in `after` (omitted = unchanged-TOAST)
-  *   U old_kind=K: delete(old key) + insert(after) — see Replay.normalize
+  *   U old_kind=K: delete(old key) + insert(after) — see Replay.normalizeDF
   *      for the documented divergence on incomplete streams
   *   U old_kind=O: key taken from the old whole-row tuple
   *   D: remove; absent -> tolerated no-op (reference logs drift)

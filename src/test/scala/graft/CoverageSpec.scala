@@ -220,6 +220,84 @@ class CoverageSpec extends AnyFunSuite {
     assert(lakeB.snapshot().properties("commit-epoch") == "1")
   }
 
+  /** A stream over a parquet WAL into a doc table with both companions:
+    * batch 0 preloads; then the first `crash` of batch 1's three commits
+    * (doc, signatures, labels) land by direct calls — a process that died
+    * after them, before the checkpoint — and the stream restarts on the
+    * same checkpoint. With `resend`, batch 1's events arrive once more in a
+    * later batch, after batch 2 changed the same docs, as WAL re-sent by the
+    * server would. The doc table must equal the oracle, and each companion
+    * its bootstrap off the final doc table. */
+  private def companionRun(crash: Int, resend: Boolean): Unit = {
+    import graft.operators.{LabelStore, SignatureStore}
+    import graft.streaming.CdcStream
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir(s"companions-$crash-$resend")
+    val spec = TableSpec("docs", StructType(Seq(
+        StructField("doc_id", LongType, nullable = false),
+        StructField("text", StringType, nullable = true))),
+      keyCols = Seq("doc_id"), bucketCols = Seq("doc_id"), numBuckets = 2)
+    val mapping = TableMapping("docs", "docs")
+    // chain-shaped text: neighbouring docs share most words, so they cluster
+    def ev(lsn: Long, op: String, id: Int, t: Int = 0): ChangeEvent = {
+      val row = Map("doc_id" -> id.toString,
+        "text" -> (t until t + 19).map(w => s"w$w").mkString(" "))
+      if (op == "D") ChangeEvent(lsn, 0, op, "docs", "s0", "none", row - "text", Map.empty)
+      else ChangeEvent(lsn, 0, op, "docs", "s0", "none", Map.empty, row)
+    }
+    val b0 = (0 until 8).map(i => ev(i + 1L, "I", i, i))
+    val b1 = Seq(ev(10, "U", 3, 53), ev(11, "D", 5), ev(12, "I", 8, 8), ev(13, "I", 9, 1))
+    val b2 = Seq(ev(20, "U", 3, 3), ev(21, "D", 9), ev(22, "I", 5, 6), ev(23, "U", 0, 2))
+    val docs = LakeTable.create(spark, s"$dir/docs", spec)
+    val sig = LakeTable.create(spark, s"$dir/sig", SignatureStore.spec(numBuckets = 2))
+    val lbl = LakeTable.create(spark, s"$dir/lbl", LabelStore.spec(numBuckets = 2))
+    val route = CdcStream.Route(mapping, docs,
+      signatures = Some(CdcStream.SignatureSink(sig, labels = Some(lbl))))
+    val t0 = System.currentTimeMillis() - 60000L
+    def seg(i: Int, evs: Seq[ChangeEvent]): Unit = {
+      val d = java.nio.file.Paths.get(f"$dir/wal/seg-$i%05d")
+      evs.toDS().coalesce(1).write.parquet(d.toString)
+      // the file source takes files in modification-time order
+      java.nio.file.Files.list(d).forEach(f => f.toFile.setLastModified(t0 + i * 2000L))
+    }
+    def run(): Unit =
+      CdcStream.runAvailable(spark, s"$dir/wal/seg-*", s"$dir/ckpt", Seq(route))
+    seg(0, b0)
+    run()
+    (Seq(b1, b2) ++ (if (resend) Seq(b1) else Nil)).zipWithIndex.foreach {
+      case (b, i) => seg(i + 1, b) }
+    val crashed = b1.toDS()
+    if (crash >= 1) assert(Replay.applyBatch(docs, crashed, mapping, 1))
+    if (crash >= 2) assert(SignatureStore.applyBatch(sig, crashed, mapping, docs, batchId = 1))
+    if (crash >= 3) assert(LabelStore.applyBatch(lbl, sig, crashed, mapping, docs, batchId = 1))
+    run()
+
+    val what = s"crash after $crash commits, resend $resend"
+    val last = if (resend) "3" else "2"
+    Seq(docs, sig, lbl).foreach(t =>
+      assert(t.snapshot().properties("commit-epoch") == last, what))
+    def rows(t: LakeTable): Set[Seq[Any]] =
+      t.read().collect().map(_.toSeq.map(v => if (v == null) null else v.toString)).toSet
+    val want = Oracle.replay(b0 ++ b1 ++ b2, spec, mapping).values
+      .map(r => Seq(r("doc_id"), r("text"))).toSet
+    assert(rows(docs) == want, what)
+    val sigCheck = LakeTable.create(spark, s"$dir/sig-check", SignatureStore.spec(numBuckets = 2))
+    assert(SignatureStore.bootstrap(sigCheck, docs))
+    assert(rows(sig) == rows(sigCheck), what)
+    val lblCheck = LakeTable.create(spark, s"$dir/lbl-check", LabelStore.spec(numBuckets = 2))
+    assert(LabelStore.bootstrap(lblCheck, sigCheck))
+    assert(rows(lbl) == rows(lblCheck), what)
+    assert(rows(lbl).nonEmpty, "the fixture must cluster some docs")
+  }
+
+  test("re-send: a batch re-sent after a later one applies once to the doc, signature and label tables") {
+    companionRun(crash = 0, resend = true)
+  }
+
+  test("crash matrix: a crash after the doc, signature or label commit, with and without a later re-send, replays to the oracle") {
+    for (crash <- 1 to 3; resend <- Seq(false, true)) companionRun(crash, resend)
+  }
+
   test("Catalyst fold over two batches equals the sequential oracle") {
     import spark.implicits._
     val cfg = graft.gen.Gen.Config(numEvents = 30000L, numConvs = 120,

@@ -327,6 +327,49 @@ class OrchestratorSpec extends AnyFunSuite {
         s"$c1 -> ${opCounts(t1b)}")
   }
 
+  test("vanished target under a live checkpoint whose signature and label " +
+    "tables survive: both companions converge on the recreated target") {
+    import graft.operators.{LabelStore, SignatureStore}
+    val dir = SparkTestBase.tmpDir("orchvanishcomp")
+    Gen.writeLog(spark, Gen.Config(numEvents = 2000, numConvs = 20, seed = 406,
+      evolveAtId = None), s"$dir/wal", 2, filesPerSegment = 1)
+    val bf = (0 until 3).map(i => (s"bf-$i", i, "user", s"backfill $i",
+      null: String, java.sql.Timestamp.valueOf("2020-01-01 00:00:00")))
+    val backfill = (table: String, _: String) =>
+      if (table == "transcripts")
+        Some(bf.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts"))
+      else None
+    val mapJson =
+      s"""{"databases":[{"name":"app",
+         |  "urls":[{"url":"$dir/wal/seg-*","sid":"s0"}],
+         |  "tables":{"transcripts":{"type":"clone","target":"transcripts",
+         |    "signatures":true,"labels":true}}}]}""".stripMargin
+    Files.writeString(Paths.get(s"$dir/map.json"), mapJson)
+    val specs = Map("transcripts" -> Transcripts.spec(numBuckets = 4))
+    def run(): Unit = Orchestrator.runAvailable(spark, s"$dir/map.json",
+      s"$dir/targets", specs, s"$dir/ckpt", backfill)
+    run()
+    // the doc target vanishes; its signature and label tables do not
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    }
+    rm(new java.io.File(s"$dir/targets/transcripts"))
+    run()
+
+    def rows(t: LakeTable): Set[Seq[Any]] =
+      t.read().collect().map(_.toSeq.map(v => if (v == null) null else v.toString)).toSet
+    val docs = LakeTable.load(spark, s"$dir/targets/transcripts")
+    assert(docs.read().count() > bf.size, "the WAL must replay into the recreated target")
+    val sigCheck = LakeTable.create(spark, s"$dir/sig-check", SignatureStore.spec(numBuckets = 4))
+    assert(SignatureStore.bootstrap(sigCheck, docs))
+    assert(rows(LakeTable.load(spark, s"$dir/targets/transcripts_signatures")) ==
+      rows(sigCheck), "signatures must equal their bootstrap off the final doc table")
+    val lblCheck = LakeTable.create(spark, s"$dir/lbl-check", LabelStore.spec(numBuckets = 4))
+    assert(LabelStore.bootstrap(lblCheck, sigCheck))
+    assert(rows(LakeTable.load(spark, s"$dir/targets/transcripts_labels")) ==
+      rows(lblCheck), "labels must equal their bootstrap off the final signatures")
+  }
+
   test("missing checkpoint over an applied table: watermark resume, no loss, " +
     "no duplicate apply, no duplicate full sync") {
     val dir = SparkTestBase.tmpDir("orchnockpt")
@@ -374,12 +417,12 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(rows.count(_.head.toString.startsWith("bf-")) == bf.size,
       "full sync must NOT rerun (full-sync property survives healing)")
 
-    // the heal floor is a PERSISTED property, not in-memory route state:
-    // on a later start (checkpoint present, heal branch skipped) a newly
+    // the floor is the table's PERSISTED applied watermark, not in-memory
+    // route state: on a later start (checkpoint present, heal branch skipped) a newly
     // delivered segment carrying pre-floor lsns must still filter out —
     // the crash-mid-heal scenario where replay continues without the heal
     val floor = after.snapshot().properties
-      .get("heal-floor-commit-epoch-app-s0-transcripts")
+      .get("applied-ord-commit-epoch-app-s0-transcripts")
     assert(floor.exists(_.toLong > 0), s"heal floor must persist, got $floor")
     Seq(graft.model.ChangeEvent(5L, 0, "I", "transcripts", "s0", "none",
       Map.empty, Map("conv_id" -> "stale-lsn", "turn_idx" -> "0",

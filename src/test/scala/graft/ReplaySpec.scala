@@ -346,7 +346,10 @@ class ReplaySpec extends AnyFunSuite {
     val scope = LakeTable.rootKey(lake.root)
     def phaseSeconds: Map[String, Double] = graft.obs.Phases.totals.collect {
       case ((`scope`, ph), t) => ph -> t.seconds }
+    // a second stream's events, past batch 0's lsns (1-1000): the table
+    // drops events at or below what it already applied
     val events = Gen.events(spark, cfg.copy(seed = 43))
+      .withColumn("lsn", col("lsn") + 1000L).as[ChangeEvent]
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "outer")

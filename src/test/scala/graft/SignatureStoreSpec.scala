@@ -182,10 +182,9 @@ class SignatureStoreSpec extends AnyFunSuite {
 
   test("heal floor gap: doc-committed/sig-missed batch re-signs via forced bootstrap") {
     // crash window: doc table commits batch 1, signature table does not,
-    // checkpoint lost. The heal floor (doc applied-ord) filters batch 1's
-    // replay before BOTH routes, so the signature route can never receive
-    // it from the WAL — the orchestrator must detect sig-epoch < pre-heal
-    // doc-epoch and force a bootstrap re-sign from the doc table's state.
+    // checkpoint lost. The WAL replays from batch 0: the doc table drops
+    // batch 1 at its own applied-ord, while the signature table, floored
+    // at its own applied-ord (batch 0's), replays the batch it missed.
     import java.nio.file.{Files, Paths}
     val dir = SparkTestBase.tmpDir("siggap")
     val t = (0 until 20).map(i => s"g$i").mkString(" ")

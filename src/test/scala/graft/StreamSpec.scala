@@ -333,6 +333,75 @@ class StreamSpec extends AnyFunSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"\n engine=$g\n oracle=$w") }
   }
 
+  test("stream: a chunk re-sent in a later batch applies once (clone and History)") {
+    // the re-send above with each copy in its own micro-batch: the second
+    // batch carries only events both tables already applied, and each
+    // table's applied watermark must drop every one of them
+    import graft.sources.PgOutput
+    val dir = SparkTestBase.tmpDir("stream-resend")
+    val in = Files.createDirectories(Paths.get(s"$dir/in"))
+    val base = Gen.Config(numEvents = Long.MaxValue, numConvs = 60, seed = 37)
+    val preload = pgChunk(Seq("transcripts"),
+      (0L until 600L).map(Gen.mkEvent(_, base.copy(pInsert = 0.9, pUpdate = 0.08))))
+    val tail = pgChunk(Seq("transcripts"),
+      (600L until 1400L).map(Gen.mkEvent(_, base.copy(pInsert = 0.3, pUpdate = 0.5))))
+    val lake = LakeTable.create(spark, s"$dir/clone", Transcripts.spec(numBuckets = 8))
+    val histSpec = Transcripts.spec(numBuckets = 8)
+      .copy(schema = History.historySchema(Transcripts.schema))
+    val hist = LakeTable.create(spark, s"$dir/hist", histSpec)
+    val routes = Seq(CdcStream.Route(mapping, lake),
+      CdcStream.Route(mapping.copy(mode = TableMode.History), hist))
+    Files.write(in.resolve("chunk-00000.bin"), preload)
+    Files.write(in.resolve("chunk-00001.bin"), tail)
+    Files.write(in.resolve("chunk-00002.bin"), tail)
+    CdcStream.runAvailable(spark, s"$in/chunk-*.bin", s"$dir/ckpt", routes,
+      maxFilesPerTrigger = 1, format = "pgoutput")
+    assert(lake.snapshot().properties("commit-epoch") == "2",
+      "each chunk must arrive in its own batch")
+    val events = PgOutput.decodeChunk(preload, "s0") ++ PgOutput.decodeChunk(tail, "s0")
+    compareTo(lake, events, mapping)
+    val payloadCols = Transcripts.schema.fieldNames.toSeq
+    val want = Scd2Model.versions(events, histSpec.mergeKey, payloadCols)
+    val got = Scd2Model.lakeVersions(hist, histSpec.mergeKey, payloadCols)
+    assert(got.size == want.size, s"versions: engine=${got.size} oracle=${want.size}")
+    got.zip(want).foreach { case (g, w) => assert(g == w, s"\n engine=$g\n oracle=$w") }
+  }
+
+  test("codegen: a sid-keyed route that stamps its sid compiles every plan") {
+    // with a sid override the sid is a literal inside the merge key; a
+    // generated class that fails to compile is logged as an error and its
+    // stage falls back to interpreted code, so only the log shows it
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("codegen-errors", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val cfg = Gen.Config(numEvents = 2000, numConvs = 40, pPkUpdate = 0.1, seed = 31)
+    val dir = SparkTestBase.tmpDir("stream-sid")
+    val spec = Transcripts.spec(numBuckets = 4, hasSid = true)
+      .copy(schema = Transcripts.schema.add("sid", "string"))
+    val lake = LakeTable.create(spark, s"$dir/t", spec)
+    try {
+      Gen.writeLog(spark, cfg, s"$dir/wal", 2)
+      CdcStream.runAvailable(spark, s"$dir/wal/seg-*", s"$dir/ckpt",
+        Seq(CdcStream.Route(mapping, lake, sidOverride = Some("tenant-7"))))
+    } finally logger.removeAppender(appender)
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+    val want = Oracle.replay((0L until cfg.numEvents).map(id =>
+      Gen.mkEvent(id, cfg).copy(sid = "tenant-7")), spec, mapping)
+    assert(lake.read().count() == want.size)
+    assert(lake.read().filter(col("sid") =!= "tenant-7").isEmpty)
+  }
+
   test("codegen guard: warm tail-shaped batches compile no new code") {
     // a tail-shaped stream: self-contained pgoutput chunks carrying two
     // source tables, one routed to a clone table and one to a History
