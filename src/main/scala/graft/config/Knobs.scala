@@ -23,13 +23,6 @@ object Knobs {
   @volatile var compactFileCap: Int =
     sys.env.getOrElse("GRAFT_COMPACT_FILE_CAP", "8").toInt
 
-  /** Pair-count ceiling for the connected-components small-graph fast
-    * path (driver union-find, one job). Above it the distributed
-    * label-propagation fixpoint runs. 0 forces the distributed path
-    * (tests cover both). */
-  @volatile var ccCollectCap: Long =
-    sys.env.getOrElse("GRAFT_CC_COLLECT_CAP", "200000").toLong
-
   /** Initial full-sync pacing — the analog of the reference's token-bucket
     * full-sync rate limit (`config.go:97-98` app.sync_rate / app.sync_burst,
     * applied in `full_sync.go:39-50`): average rows/sec cap and per-commit

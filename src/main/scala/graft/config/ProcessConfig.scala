@@ -71,8 +71,7 @@ object ProcessConfig {
 
   /** Env names read outside the settings layering: engine knobs with no
     * settings key. */
-  private[graft] val runtimeKnobs = Set("GRAFT_CANDIDATE_CAP",
-    "GRAFT_CC_COLLECT_CAP")
+  private[graft] val runtimeKnobs = Set("GRAFT_CANDIDATE_CAP")
   /** Renamed/retired knobs: still recognized (no "unrecognized" warning,
     * which would be misleading) but called out explicitly — a deployment
     * still setting the old name gets neither effect nor silence. */

@@ -58,6 +58,10 @@ final case class Snapshot(
     timestampMs: Long) {
   def schema: StructType =
     DataType.fromJson(schemas(currentSchemaId.toString)).asInstanceOf[StructType]
+
+  /** The merge key: `sid` first when the table carries one, then the key
+    * columns (`TableSpec.mergeKey`). */
+  def mergeKey: Seq[String] = (if (hasSid) Seq("sid") else Nil) ++ keyCols
 }
 
 /** Minimal snapshot-based lake table ("icelite") on Parquet: data files +
@@ -218,8 +222,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
     val moved = Phases.run(this, "write")(writeBuckets(df))
     // zone-map columns: the merge key, restricted to stat-comparable types
     val statCols: Map[String, DataType] =
-      ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols)
-        .flatMap(c => snap.schema.fields.find(_.name == c))
+      snap.mergeKey.flatMap(c => snap.schema.fields.find(_.name == c))
         .collect { case f if LakeTable.statComparable(f.dataType) =>
           f.name -> f.dataType }.toMap
     // footer harvest in parallel: one commit registers O(buckets) files and

@@ -98,9 +98,6 @@ final case class TableMapping(
 }
 
 object TableMapping {
-  /** `name` -> `public.name`; already-qualified names pass through. */
-  def qualify(t: String): String = if (t.contains(".")) t else s"public.$t"
-
   /** (schema, bare table name) with default schema `public`. */
   def splitSchema(t: String): (String, String) = t.indexOf('.') match {
     case -1 => ("public", t)

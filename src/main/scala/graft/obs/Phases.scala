@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   *                                that runs fold, merge join and parquet
   *                                write; then the footer harvest)
   *   - `commit`                   LakeTable.commit
-  *   - `stats`                    SignatureStore.applyBatch
+  *   - `stats`                    SignatureStore.applyBatch (its probe)
   *   - `touched`, `fold`          LabelStore.applyBatch
   *
   * [[run]] labels the phase's Spark jobs with the job description

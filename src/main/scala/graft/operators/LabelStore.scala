@@ -35,12 +35,12 @@ import org.apache.spark.sql.types._
   * signature band probe (no shuffle, cache, or temp write of anything
   * corpus-sized); corpus TEXT is never read. Each table's manifest is
   * resolved once per batch, and every read and the commit use that
-  * snapshot. The write back into the label lake is a bucket- and
-  * zone-pruned merge of exactly the CHANGED label rows, mirroring
-  * `SignatureStore.applyBatch`.
+  * snapshot. The write back into the label lake rewrites exactly the
+  * CHANGED label rows into the bucket- and zone-pruned rewrite set of the
+  * files holding them (`LakeTable.rewriteSet`, as every merge does).
   *
   * Exactly-once: the label table keeps its own `commit-epoch` and applied
-  * watermark (`Replay.aboveApplied`) on its own snapshot — a crash between
+  * watermark (`Replay.prelude`) on its own snapshot — a crash between
   * the signature commit and the label commit replays only the label half
   * (and the fold is idempotent: it recomputes from the already-committed
   * signature state), and a re-sent event applies once.
@@ -97,34 +97,31 @@ object LabelStore {
                  docLake: LakeTable, textCol: String = "text",
                  batchId: Long, epochKey: String = "commit-epoch"): Boolean = {
     val spark = events.sparkSession
-    Replay.tuneSession(spark)
-    val lsnap = labels.snapshot()
-    val committed = lsnap.properties.getOrElse(epochKey, "-1").toLong
-    if (batchId <= committed) return false
+    lazy val docSnap = docLake.snapshot()
+    val (lsnap, batch) =
+      Replay.prelude(labels, events, mapping, batchId, epochKey)(_ => docSnap.schema) match {
+        case Some(b) => b
+        case None => return false
+      }
     // scope the kernel's temp parquet to this batch: everything lands in
     // the label lake before return, and the ingest loop calls this once
     // per micro-batch — without the scope, temp dirs accumulate until
     // JVM exit on a long-running orchestrator
     TextPipeline.scopedTmp {
-    val docSnap = docLake.snapshot()
-    val mergeKey = (if (docSnap.hasSid) Seq("sid") else Nil) ++ docSnap.keyCols
-    val envSchema = mapping.sourceSchema.getOrElse(docSnap.schema)
-    val routed = Replay.aboveApplied(events, lsnap, epochKey)
-      .filter(Replay.routeCond(mapping))
     // a meta-only update to an existing row ('none' kind, no text in the
     // value map — the TOAST case) changes neither the doc's text nor its
     // existence under any key, so its edges are untouched; PK-updates
     // ('K'/'O' kinds) change existence under BOTH keys and always count
-    val relevant = Replay.filterTransform(routed, mapping, envSchema)
+    val relevant = batch
       .filter(col("op").isin("I", "D") ||
         (col("op") === "U" &&
           (col("old_kind") =!= "none" ||
             map_contains_key(col("after"), textCol))))
     val appendMode = mapping.mode == TableMode.Append
     // one row per touched doc, with its last op ord
-    val touched = Replay.normalizeDF(relevant.toDF(), mergeKey, appendMode)
-      .select(SignatureStore.docIdCol((0 until mergeKey.length).map(i =>
-        element_at(col("key"), i + 1))).as("doc_id"), col("ord"))
+    val touched = Replay.normalizeBy(relevant, appendMode,
+        SignatureStore.docKey(docSnap.mergeKey))
+      .select(col("key.doc_id").as("doc_id"), col("ord"))
       .groupBy("doc_id").agg(max(col("ord")).as("ord"))
       .filter(col("doc_id").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

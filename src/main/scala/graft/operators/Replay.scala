@@ -31,10 +31,11 @@ import org.apache.spark.sql.types._
   * reference's sequential apply, so last-write-wins convergence holds
   * under any partitioning.
   *
-  * The clone merge ([[mergeApply]]) runs that pass over the target's rows
-  * and the batch's ops together, so its write plan is: one exchange on
-  * the bucket, one sort, the two windows, then the parquet write — no
-  * join and no second exchange. Every generated class costs a compile
+  * The clone merge ([[mergeApply]]) and the signature companion
+  * (`SignatureStore.applyBatch`) run that pass over the target's rows and
+  * the batch's ops together ([[keyedPass]]), so the clone write plan is:
+  * one exchange on the bucket, one sort, the two windows, then the
+  * parquet write — no join and no second exchange. Every generated class costs a compile
   * when Spark's codegen cache (100 entries) evicts it, and a tail batch's
   * working set has to fit that cache to run compiled code; fewer
   * operators per plan is what keeps it there.
@@ -50,8 +51,9 @@ object Replay {
     * session (idempotent, runtime-settable SQL confs only).
     *
     * canChangeCachedPlanOutputPartitioning: the companion merges persist
-    * their batch-bounded folds (the signature fold, the label kernels'
-    * pinned frames; the clone and History folds are consumed once, by the
+    * their batch-bounded frames (the signature merge's keyed pass, which
+    * its keep and re-sign halves both read, and the label kernels' pinned
+    * frames; the clone and History passes are consumed once, by the
     * write, and are not cached). With the flag off (Spark's default, kept for
     * plan-stability of long-lived caches) the cached plan materializes at
     * the static shuffle-partition count, so every downstream pass over a
@@ -260,6 +262,25 @@ object Replay {
       exact || (schemaEq && regexp_like(evBare, lit(s"^(?:$r)$$"))))
   }
 
+  /** The prelude every per-batch entry runs ([[applyBatch]] and the
+    * signature and label companions'): the epoch skip, the applied
+    * watermark floor ([[aboveApplied]]), the route ([[routeCond]]) and the
+    * filter and set stages ([[filterTransform]]), whose env schema is the
+    * mapping's source schema or else `envSchema` of `lake`'s snapshot.
+    * None when `lake`'s epoch already covers `batchId` (applied before a
+    * crash); else the snapshot `lake` resolved, which the batch reads and
+    * commits against, and the batch to apply. */
+  private[operators] def prelude(lake: LakeTable, events: Dataset[ChangeEvent],
+                                 mapping: TableMapping, batchId: Long, epochKey: String)(
+      envSchema: Snapshot => StructType): Option[(Snapshot, DataFrame)] = {
+    tuneSession(events.sparkSession)
+    val snap = lake.snapshot()
+    if (batchId <= snap.properties.getOrElse(epochKey, "-1").toLong) None
+    else Some(snap -> filterTransform(
+      aboveApplied(events, snap, epochKey).filter(routeCond(mapping)), mapping,
+      mapping.sourceSchema.getOrElse(envSchema(snap))).toDF())
+  }
+
   // ---------------------------------------------------------------------
   // R2: key extraction + PK-update normalization
   // ---------------------------------------------------------------------
@@ -272,8 +293,12 @@ object Replay {
     * comparison treat NULL fields as equal, so NULL key values still match
     * null-safely. */
   private[operators] def typedKey(keys: Seq[(String, DataType)])(src: Column): Column =
-    struct(keys.map { case (c, dt) =>
-      (if (c == "sid") col("sid") else element_at(src, c)).cast(dt).as(c) }: _*)
+    struct(keys.map { case (c, dt) => keyPart(src, c).cast(dt).as(c) }: _*)
+
+  /** Merge key column `c` of an event, as text: off its value map `src`,
+    * or `sid` off the event's own column. */
+  private[operators] def keyPart(src: Column, c: String): Column =
+    if (c == "sid") col("sid") else element_at(src, c)
 
   /** The keyed halves of one event as an array column, built by `half(key,
     * sub, op, after)` with each key read off its value map by `keyOf`: a
@@ -308,12 +333,11 @@ object Replay {
     * `replicate_database.go:220-235`) the two are identical. */
   def normalizeDF(routed: DataFrame, mergeKey: Seq[String],
                   appendMode: Boolean): DataFrame =
-    normalizeBy(routed, appendMode, src =>
-      array(mergeKey.map(c => if (c == "sid") col("sid") else element_at(src, c)): _*))
+    normalizeBy(routed, appendMode, src => array(mergeKey.map(keyPart(src, _)): _*))
 
   /** [[normalizeDF]] with each op's key read off its value map by `keyOf`. */
-  private def normalizeBy(routed: DataFrame, appendMode: Boolean,
-                          keyOf: Column => Column): DataFrame = {
+  private[operators] def normalizeBy(routed: DataFrame, appendMode: Boolean,
+                                     keyOf: Column => Column): DataFrame = {
     val ordBase = shiftleft(col("lsn"), 20) + col("seq") * 2
     val halves = keyHalves(keyOf, appendMode) { (key, sub, op, after) =>
       struct(key.as("key"), (ordBase + sub).as("ord"), op.as("op"), after.as("after"))
@@ -454,8 +478,7 @@ object Replay {
 
   /** The merge key of `snap` with each column's type (sid is a string). */
   private[operators] def keyTypes(snap: Snapshot): Seq[(String, DataType)] =
-    ((if (snap.hasSid) Seq("sid") else Nil) ++ snap.keyCols).map(c =>
-      c -> (if (c == "sid") StringType else snap.schema(c).dataType))
+    snap.mergeKey.map(c => c -> (if (c == "sid") StringType else snap.schema(c).dataType))
 
   /** One (sid, op, bucket) group of [[probe]]'s aggregation: the LSN
     * bounds, the event count (first halves only), the max
@@ -492,9 +515,16 @@ object Replay {
     * batch's [min, max], so its file can never prune; columns where the
     * batch carries a NULL key value get no zone (stats don't cover nulls). */
   private[graft] def probe(snap: Snapshot, batch: DataFrame, appendMode: Boolean,
-                           batchId: Long): Probe = {
+                           batchId: Long): Probe =
+    probe(snap, batch, appendMode, batchId, typedKey(keyTypes(snap)))
+
+  /** [[probe]] with each key read off its value map by `keyOf`, which
+    * yields a struct of `snap`'s merge key columns (a signature table's
+    * `doc_id`, `SignatureStore.docKey`). */
+  private[graft] def probe(snap: Snapshot, batch: DataFrame, appendMode: Boolean,
+                           batchId: Long, keyOf: Column => Column): Probe = {
     val keys = keyTypes(snap)
-    val halves = keyHalves(typedKey(keys), appendMode)((key, _, _, _) =>
+    val halves = keyHalves(keyOf, appendMode)((key, _, _, _) =>
       struct(key.as("key")))
     val zoneKeys = keys.filter { case (_, dt) => LakeTable.statComparable(dt) }
     val types = zoneKeys.map(_._2)
@@ -620,10 +650,24 @@ object Replay {
       .withColumn("__bucket", LakeTable.bucketOf(snap, c => col("key").getField(c)))
       .repartition(col("__bucket"))
 
-  /** The rows [[mergeApply]] writes, with their `__bucket`. The `target`
-    * rows (the touched buckets' read) enter the fold as op T ahead of
-    * every op, each key's pass carries its target row (`tRow`), and the
-    * key's [[Xf]] applies to it; merge outcomes are counted into `obs`.
+  /** The keyed merge pass of the clone and signature merges: the `target`
+    * rows of `snap` (a touched-bucket read) and the batch's ops, each
+    * keyed by `keyOf` ([[normalizeBy]]), folded together in ONE
+    * bucket-partitioned window pass ([[withTargetRows]], [[xfRows]]) over
+    * `payloadCols`. One row per key: an untouched target row as op T,
+    * else the key's [[Xf]]; each carries the key's target row (`tRow`,
+    * NULL when the target has none) and its `__bucket`. */
+  private[operators] def keyedPass(snap: Snapshot, target: DataFrame, transformed: DataFrame,
+                                   appendMode: Boolean, keyOf: Column => Column,
+                                   payloadCols: Seq[String]): DataFrame =
+    xfRows(withTargetRows(snap, target, normalizeBy(transformed, appendMode, keyOf)),
+      payloadCols,
+      carry = Seq("tRow" -> max_by(col("row"), col("op") === "T")),
+      clusterBy = Seq(col("__bucket")))
+
+  /** The rows [[mergeApply]] writes, with their `__bucket`: the
+    * [[keyedPass]] over the touched buckets' read, and each key's [[Xf]]
+    * applied to its target row; merge outcomes are counted into `obs`.
     * The pass's one exchange is on the bucket (the window partitions by
     * bucket and key), so the write adds no exchange and no sort. */
   private def mergePlan(snap: Snapshot, transformed: DataFrame, appendMode: Boolean,
@@ -631,11 +675,8 @@ object Replay {
     val schema = snap.schema
     val keys = keyTypes(snap)
     val mergeKey = keys.map(_._1)
-    val rows = withTargetRows(snap, target,
-      normalizeBy(transformed, appendMode, typedKey(keys)))
-    val folded = xfRows(rows, schema.fieldNames.filterNot(mergeKey.contains).toSeq,
-      carry = Seq("tRow" -> max_by(col("row"), col("op") === "T")),
-      clusterBy = Seq(col("__bucket")))
+    val folded = keyedPass(snap, target, transformed, appendMode, typedKey(keys),
+      schema.fieldNames.filterNot(mergeKey.contains).toSeq)
 
     // the key has a target row / no op
     val tExists = col("tRow").isNotNull
@@ -764,14 +805,6 @@ object Replay {
   def applyBatch(lake: LakeTable, events: Dataset[ChangeEvent],
                  mapping: TableMapping, batchId: Long,
                  epochKey: String = "commit-epoch"): Boolean = {
-    tuneSession(events.sparkSession)
-
-    val snap0 = lake.snapshot()
-    val committed = snap0.properties.getOrElse(epochKey, "-1").toLong
-    if (batchId <= committed) return false // already applied before a crash
-
-    // route: exact name or partitions-regex (mapping_table.go:57-81)
-    val routed0 = aboveApplied(events, snap0, epochKey).filter(routeCond(mapping))
     val history = mapping.mode == TableMode.History
     // env schema for filter/set expressions: the source-row layout (CEL is
     // evaluated over source columns in the reference) or, absent an explicit
@@ -780,20 +813,20 @@ object Replay {
     // programs are compiled against the catalog as of map-refresh
     // (`mapping_table.go:156-169`) — a column added by an R message in this
     // same batch is not yet visible to filter/set expressions.
-    val envSchema = mapping.sourceSchema.getOrElse {
-      val target = snap0.schema
-      if (history) StructType(target.fields.filterNot(_.name.startsWith("kvsz_")))
-      else target
-    }
-
-    // P1 row filter + P2 column transform (CEL analog) — see
-    // filterTransform. NOT persisted: the batch is
-    // consumed twice (probe + fold), but a vectorized parquet re-scan
-    // of the micro-batch is cheaper than the columnar cache build
+    //
+    // The routed, filtered and set batch is NOT persisted: it is consumed
+    // twice (probe + fold), but a vectorized parquet re-scan of the
+    // micro-batch is cheaper than the columnar cache build
     // (dictionary/RLE compressibility scans showed up as a top CPU sink in
     // thread profiles) — and it avoids pinning executor memory at
     // 10^10-event scale.
-    val transformed = filterTransform(routed0, mapping, envSchema).toDF()
+    val (snap0, transformed) = prelude(lake, events, mapping, batchId, epochKey) { s =>
+      if (history) StructType(s.schema.fields.filterNot(_.name.startsWith("kvsz_")))
+      else s.schema
+    } match {
+      case Some(b) => b
+      case None => return false // already applied before a crash
+    }
     val appendMode = mapping.mode == TableMode.Append
 
     def probed(s: Snapshot): Probe =

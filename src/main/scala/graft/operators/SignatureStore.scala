@@ -15,7 +15,15 @@ import org.apache.spark.sql.types._
   * lake table, so `TextPipeline.dedupAgainstSignatures` /
   * `dedupSimhashAgainstFps` can dedup a newly-arrived batch against corpus
   * SIGNATURES only. Steady-state cost per batch: the delta's text once,
-  * plus the touched signature buckets — never the corpus text.
+  * plus the zone-pruned files of the touched signature buckets — never the
+  * corpus text.
+  *
+  * The plan is the doc merge's (`Replay`), keyed by `doc_id` ([[docKey]]):
+  * one probe (the `stats` phase: touched buckets, the doc_id zone and the
+  * applied watermark; a batch with no DML commits the epoch alone), then
+  * one bucket-partitioned window pass over the touched signature rows and
+  * the batch's ops together (`Replay.keyedPass`; no join). Keys whose text
+  * the pass leaves unchanged keep their hashes; the rest are re-signed.
   *
   * Signature semantics under the CDC fold (all oracle-checked by
   * SignatureStoreSpec):
@@ -29,7 +37,7 @@ import org.apache.spark.sql.types._
   *   - net delete (TO_ABSENT): drop the signature row.
   *
   * Exactly-once: the same commit-epoch skip and applied-watermark floor
-  * as `Replay.applyBatch` (`Replay.aboveApplied`), on the signature table's
+  * as `Replay.applyBatch` (`Replay.prelude`), on the signature table's
   * own snapshot — the signature route replays independently of the main
   * route after a crash between the two commits or a lost checkpoint, and a
   * re-sent event applies once.
@@ -52,6 +60,13 @@ object SignatureStore {
       when(str.isNull, lit("n"))
         .otherwise(concat(length(str).cast("string"), lit(":"), str))
     }: _*)
+
+  /** The key function of the signature and label companions: the
+    * `struct(doc_id)` of an event of a doc table keyed by `mergeKey`, read
+    * off its value map `src` (`Replay.keyPart`) — the key `Replay.probe`
+    * and `Replay.normalizeBy` take. */
+  private[graft] def docKey(mergeKey: Seq[String]): Column => Column = src =>
+    struct(docIdCol(mergeKey.map(Replay.keyPart(src, _))).as("doc_id"))
 
   def schema: StructType = StructType(
     StructField("doc_id", StringType, nullable = false) +:
@@ -104,9 +119,8 @@ object SignatureStore {
     val ssnap = sig.snapshot()
     if (!force && ssnap.properties.contains("signatures-bootstrap")) return false
     val dsnap = docLake.snapshot()
-    val mergeKey = (if (dsnap.hasSid) Seq("sid") else Nil) ++ dsnap.keyCols
     val docs = docLake.readAt(dsnap).select(
-      docIdCol(mergeKey.map(col)).as("doc_id"),
+      docIdCol(dsnap.mergeKey.map(col)).as("doc_id"),
       col(textCol).as("text"))
     val rows = signaturesOf(docs, uniqueIds = true)
       .withColumn("__bucket", LakeTable.bucketOf(ssnap))
@@ -118,114 +132,62 @@ object SignatureStore {
   }
 
   /** Apply one micro-batch of change events for `mapping` to the signature
-    * table. `docLake` supplies the doc table's merge key and env schema so
-    * routing/filter/set and the per-key fold mirror the main route
-    * exactly; only the `textCol` column is folded (a one-column fold — far
-    * cheaper than the full-row fold the main merge pays).
+    * table. `docLake` supplies the doc table's merge key and env schema,
+    * so routing, filter, set and the per-key fold mirror the main route
+    * exactly; `textCol` is the pass's one payload column.
     * Returns true if applied (false = epoch already covers batchId). */
   def applyBatch(sig: LakeTable, events: Dataset[ChangeEvent],
                  mapping: TableMapping, docLake: LakeTable,
                  textCol: String = "text", batchId: Long,
                  epochKey: String = "commit-epoch"): Boolean = {
-    val spark = events.sparkSession
-    Replay.tuneSession(spark)
-    // one signature manifest per batch: the epoch check, the rewrite set
-    // and the write all read this snapshot
-    val snap = sig.snapshot()
-    val committed = snap.properties.getOrElse(epochKey, "-1").toLong
-    if (batchId <= committed) return false
-
-    val docSnap = docLake.snapshot()
-    val mergeKey = (if (docSnap.hasSid) Seq("sid") else Nil) ++ docSnap.keyCols
-    val envSchema = mapping.sourceSchema.getOrElse(docSnap.schema)
-    val routed = Replay.aboveApplied(events, snap, epochKey)
-      .filter(Replay.routeCond(mapping))
-    val transformed = Replay.filterTransform(routed, mapping, envSchema)
-      .filter(col("op").isin("I", "U", "D"))
-    val appendMode = mapping.mode == TableMode.Append
-
-    // one-column fold: per doc key, the net effect on (existence, text)
-    val folded = Replay.foldToXfDF(
-      Replay.normalizeDF(transformed.toDF(), mergeKey, appendMode),
-      payloadCols = Seq(textCol))
-    // emptiness is read off the stats row below (empty bucket set) — a
-    // separate isEmpty probe would execute the whole fold a second time
-    val f = folded.select(
-      docIdCol((0 until mergeKey.length).map(i =>
-        element_at(col("key"), i + 1))).as("doc_id"),
-      col("maxOrd"), col("absentExists"), col("presentKind"),
-      map_contains_key(col("onAbsent"), textCol).as("a_has"),
-      element_at(col("onAbsent"), textCol).as("a_txt"),
-      map_contains_key(col("onPresent"), textCol).as("p_has"),
-      element_at(col("onPresent"), textCol).as("p_txt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE stats pass yields the touched buckets AND the batch's doc_id
-      // bounds — zone predicates on the signature read, mirroring
-      // Replay.probe: a narrow-key batch (incremental steady state)
-      // prunes whole signature files inside touched buckets instead of
-      // rewriting every file of every touched bucket per micro-batch
-      // (which at 10^10 docs would rewrite nearly the whole companion
-      // table per batch). doc_id is the rendered merge key: a NULL single-
-      // column key renders to NULL doc_id, so the null flag drops the zone
-      // (stats don't cover nulls — same soundness rule as the doc merge).
-      // The batch's max op ord is the applied watermark the commit advances.
-      val statRow = Phases.run(sig, "stats")(f.agg(
-        collect_set(LakeTable.bucketOf(snap).cast("int")).as("bs"),
-        min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
-        max(col("doc_id").isNull.cast("int")).as("nl"),
-        count(lit(1)).as("n"), max(col("maxOrd")).as("ord")).head())
-      if (statRow.getLong(4) == 0L) { // empty fold: advance the epoch only
-        sig.commit(Nil, Set.empty,
-          properties = Map(epochKey -> batchId.toString))
-        return true
+    lazy val docSnap = docLake.snapshot()
+    // one signature manifest per batch: the probe, the rewrite set and the
+    // commit all use it
+    val (snap, batch) =
+      Replay.prelude(sig, events, mapping, batchId, epochKey)(_ => docSnap.schema) match {
+        case Some(b) => b
+        case None => return false
       }
-      val touched = statRow.getSeq[Int](0).toSet
-      val zones: Seq[graft.lake.Zone] =
-        if (touched.isEmpty || statRow.getInt(3) != 0) Nil
-        else Seq(graft.lake.Zone("doc_id",
-          lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-      // the target read + the files the commit removes, one rewrite set
-      // (self-compacting past the file cap, like the doc merge)
-      val files = sig.rewriteSet(snap, touched, zones)
-
-      // SHUFFLE_HASH on the batch-bounded fold: building its per-partition
-      // hash table is safe, and the full-outer join then skips both sort
-      // legs of the default SMJ
-      val j = sig.scan(snap, files).alias("t").join(f.alias("x").hint("shuffle_hash"),
-        col("t.doc_id") <=> col("x.doc_id"), "full_outer")
-      val fNull = col("x.presentKind").isNull
-      val sigExists = col("t.doc_id").isNotNull
-      val toAbsent = col("x.presentKind") === lit(Xf.TO_ABSENT)
-      val toRow = col("x.presentKind") === lit(Xf.TO_ROW)
-      // survives iff: untouched, or folded state exists
-      val survives = fNull ||
-        (when(sigExists, !toAbsent).otherwise(col("x.absentExists")))
-      // needs re-signing iff the folded state DEFINES the text:
-      //   TO_ROW (row replaced), new row (insert), or OVERRIDE carrying text
-      val resign = !fNull && (toRow || !sigExists || col("x.p_has"))
-      val newText = when(toRow || (sigExists && col("x.p_has")), col("x.p_txt"))
-        .otherwise(col("x.a_txt"))
-      val rows = j.filter(survives).select(
-        coalesce(col("t.doc_id"), col("x.doc_id")).as("doc_id"),
-        resign.as("__resign"), newText.as("__text"),
-        struct((0 until K).map(k => col(s"t.h$k")) :+ col("t.fp"): _*).as("__old"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val keep = rows.filter(!col("__resign"))
-          .select(col("doc_id") +: ((0 until K).map(k =>
-            col("__old").getField(s"h$k").as(s"h$k")) :+
-            col("__old").getField("fp").as("fp")): _*)
-        val signed = signaturesOf(rows.filter(col("__resign"))
-          .select(col("doc_id"), col("__text").as("text")), uniqueIds = true)
-        val out = keep.unionByName(signed)
-          .withColumn("__bucket", LakeTable.bucketOf(snap))
-        val newFiles = sig.writeDataFiles(out, snap)
-        sig.commit(newFiles, files.map(_.path).toSet,
-          properties = Map(epochKey -> batchId.toString,
-            Replay.appliedOrd(snap, epochKey, statRow.getLong(5))), base = Some(snap))
-        true
-      } finally rows.unpersist()
-    } finally f.unpersist()
+    val appendMode = mapping.mode == TableMode.Append
+    val keyOf = docKey(docSnap.mergeKey)
+    val p = Phases.run(sig, "stats")(Replay.probe(snap, batch, appendMode, batchId, keyOf))
+    p.ci match {
+      case None =>
+        sig.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
+      case Some(ci) =>
+        // the target read + the files the commit removes, one rewrite set
+        // (zone-pruned, self-compacting past the file cap, like the doc merge)
+        val files = sig.rewriteSet(snap, p.touched, p.zones)
+        val untouched = col("op") === "T"
+        val sigExists = col("tRow").isNotNull
+        val toAbsent = col("presentKind") === lit(Xf.TO_ABSENT)
+        val toRow = col("presentKind") === lit(Xf.TO_ROW)
+        val pHas = map_contains_key(col("onPresent"), textCol)
+        // survives iff: untouched, or folded state exists
+        val survives = untouched || when(sigExists, !toAbsent).otherwise(col("absentExists"))
+        // needs re-signing iff the folded state DEFINES the text:
+        //   TO_ROW (row replaced), new row (insert), or OVERRIDE carrying text
+        val resign = !untouched && (toRow || !sigExists || pHas)
+        val newText = when(toRow || (sigExists && pHas), element_at(col("onPresent"), textCol))
+          .otherwise(element_at(col("onAbsent"), textCol))
+        // both halves read the pass: persist it once
+        val rows = Replay.keyedPass(snap, sig.scan(snap, files), batch, appendMode, keyOf,
+            Seq(textCol))
+          .filter(survives)
+          .select(col("key.doc_id").as("doc_id"), resign.as("__resign"),
+            newText.as("__text"), col("tRow").as("__old"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val keep = rows.filter(!col("__resign")).select("__old.*")
+          val signed = signaturesOf(rows.filter(col("__resign"))
+            .select(col("doc_id"), col("__text").as("text")), uniqueIds = true)
+          val out = keep.unionByName(signed)
+            .withColumn("__bucket", LakeTable.bucketOf(snap))
+          sig.commit(sig.writeDataFiles(out, snap), files.map(_.path).toSet,
+            properties = Map(epochKey -> batchId.toString,
+              Replay.appliedOrd(snap, epochKey, ci.maxOrd)), base = Some(snap))
+        } finally rows.unpersist()
+    }
+    true
   }
 }

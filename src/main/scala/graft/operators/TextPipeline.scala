@@ -534,6 +534,10 @@ ORDER BY corpus_id, new_id"""
     * produce — hitting the cap indicates a propagation bug, not data. */
   val ClusterMaxIters = 20
 
+  /** Pair-count ceiling of [[propagateLabels]]' small-graph fast path
+    * (driver union-find, one job); above it the distributed fixpoint runs. */
+  val CcCollectCap = 200000L
+
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     clusterFrame(spark, dir, propagateLabels(spark,
       dedupMinhashLsh(spark, dir).select(col("a"), col("b"))))
@@ -543,7 +547,7 @@ ORDER BY corpus_id, new_id"""
     * full ([[dedupClusters]]) and incremental ([[foldLabels]])
     * paths. Returns the converged (doc_id, cluster_id) frame for
     * PAIR-INVOLVED vertices only: a LOCAL relation (driver union-find)
-    * for graphs at or under [[graft.config.Knobs.ccCollectCap]] pairs —
+    * for graphs at or under [[CcCollectCap]] pairs —
     * batch-bounded, so plans embedding it carry up to ~2·cap vertex rows
     * — or a landed parquet scan (pins no cache blocks) for corpus-scale
     * graphs. */
@@ -559,7 +563,13 @@ ORDER BY corpus_id, new_id"""
     *                callers keep the land-first order so an over-cap graph
     *                never executes its producing DAG twice. */
   def propagateLabels(spark: SparkSession, pairsIn: DataFrame,
-                      bounded: Boolean): DataFrame = {
+                      bounded: Boolean): DataFrame =
+    propagateLabels(spark, pairsIn, bounded, CcCollectCap)
+
+  /** @param collectCap the fast path's pair-count ceiling; 0 forces the
+    *                   distributed fixpoint (tests cover both paths). */
+  private[graft] def propagateLabels(spark: SparkSession, pairsIn: DataFrame,
+                                     bounded: Boolean, collectCap: Long): DataFrame = {
     // small-graph fast path: a pair set at or under the cap (the normal
     // case for a per-BATCH root/pair graph — bounded by the batch, not
     // the corpus) converges on the driver via min-rooted union-find in
@@ -574,7 +584,7 @@ ORDER BY corpus_id, new_id"""
     // characters). Caps at or above Int.MaxValue clamp (limit takes an
     // Int; a >2G-row collect is impossible anyway), so a huge cap means
     // "always fast path" as documented, never a silent fall-through.
-    val cap = math.min(graft.config.Knobs.ccCollectCap, Int.MaxValue - 1L)
+    val cap = math.min(collectCap, Int.MaxValue - 1L)
     val idType = pairsIn.schema.head.dataType
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", idType, nullable = false),
@@ -823,9 +833,8 @@ ORDER BY l.doc_id"""
     // broadcast, so the one-pass inline strategy applies (one corpus scan
     // instead of three — see agreementPairsAgainst's scaladoc)
     if (!symmetric) return inlineAgreement(left, right, opLabel)
-    val bandEq = col("x.band") === col("y.band") && col("x.bk") === col("y.bk")
-    val joinCond = if (symmetric) bandEq && col("x.doc_id") < col("y.doc_id")
-                   else bandEq
+    val joinCond = col("x.band") === col("y.band") && col("x.bk") === col("y.bk") &&
+      col("x.doc_id") < col("y.doc_id")
     val cand = Similarity.observeCandidates(opLabel,
       sigBands(left).as("x").join(sigBands(right).as("y"), joinCond),
       struct(col("x.band"), col("x.bk")))

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.ChangeEvent
-import graft.operators.Replay
+import graft.operators.{Replay, Xf}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -69,11 +69,11 @@ object StateApply {
   /** Year-3000 sentinel for de-arming a stale timer (no clearTimeout API). */
   private val FarFutureMs = 32503680000000L
 
-  /** Apply one key's micro-batch slice onto its state — EXACTLY the
-    * reference per-row rules (see Oracle.replay): I inserts if absent,
-    * U column-merges if present (absent keys in `after` = unchanged
-    * TOAST), D removes (absent tolerated). A timed-out tombstone is
-    * evicted silently. */
+  /** Apply one key's micro-batch slice onto its state: the slice's ops,
+    * in ord order, folded to one [[Xf]] — EXACTLY the reference per-row
+    * rules (see Oracle.replay): I inserts if absent, U column-merges if
+    * present (absent keys in `after` = unchanged TOAST), D removes
+    * (absent tolerated). A timed-out tombstone is evicted silently. */
   private def applyOps(key: String, it: Iterator[Replay.KeyedOp],
                        state: GroupState[KeyState],
                        ttl: Option[java.time.Duration]): Iterator[Emit] = {
@@ -89,16 +89,8 @@ object StateApply {
     }
     val sorted = it.toArray.sortBy(_.ord)
     val prev = state.getOption
-    var row: Option[Map[String, String]] =
-      prev.filter(_.exists).map(_.row)
-    sorted.foreach { op =>
-      op.op match {
-        case "I" => if (row.isEmpty) row = Some(op.after)
-        case "U" => row = row.map(_ ++ op.after)
-        case "D" => row = None
-        case _ =>
-      }
-    }
+    val row = Xf.fold(sorted.iterator.map(o => (o.op, o.after)))(
+      prev.filter(_.exists).map(_.row))
     val ord = math.max(prev.map(_.ord).getOrElse(Long.MinValue),
       sorted.last.ord)
     state.update(KeyState(row.isDefined, row.getOrElse(Map.empty), ord))

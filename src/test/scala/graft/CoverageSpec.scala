@@ -3,7 +3,7 @@ package graft
 import graft.config.MapConfig
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec, Transcripts}
-import graft.operators.{Backfill, Replay, Xf}
+import graft.operators.{Backfill, Replay, SignatureStore, Xf}
 import graft.verify.Oracle
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
@@ -381,6 +381,8 @@ class CoverageSpec extends AnyFunSuite {
         StructField("j", StringType), StructField("a", StringType))),
       keyCols = Seq("k", "j"), bucketCols = Seq("k", "j"), numBuckets = 4, hasSid = true)
     val snap = LakeTable.create(spark, SparkTestBase.tmpDir("probe"), spec).snapshot()
+    val sigSnap = LakeTable.create(spark, SparkTestBase.tmpDir("probe-sig"),
+      SignatureStore.spec(numBuckets = 4)).snapshot()
     val mergeKey = Seq("sid", "k", "j")
     val none = Map.empty[String, String]
     // key values include genuine NULLs (no zone may form over them)
@@ -442,10 +444,32 @@ class CoverageSpec extends AnyFunSuite {
         maxOrd = stats.map(_._6).max,
         opRows = stats.sortBy(s => (s._1, s._2)).map(s => (3L, s._1, "op", s._2, s._5))))
 
+      // the signature companion's probe of the same batch, keyed by the
+      // doc_id of a one-column key and of the sid + multi-part key (the
+      // length-prefixed encoding)
+      val sigProps = Seq(Seq("k"), mergeKey).map { docKey =>
+        val sp = Replay.probe(sigSnap, df, appendMode, batchId = 3L,
+          SignatureStore.docKey(docKey))
+        val ids = Replay.foldToXfDF(Replay.normalizeDF(df, docKey, appendMode), Seq("a"))
+          .select(SignatureStore.docIdCol(docKey.indices.map(i =>
+            element_at(col("key"), i + 1))).as("doc_id"))
+        val sTouched = ids.select(pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+          .distinct().collect().map(_.getInt(0)).toSet
+        val b = ids.agg(count(lit(1)), min("doc_id"), max("doc_id"),
+          max(col("doc_id").isNull.cast("int"))).head()
+        val sZones = if (b.getLong(0) == 0L || b.getInt(3) != 0) Nil
+          else Seq(graft.lake.Zone("doc_id", Some(b.getString(1)), Some(b.getString(2))))
+        val on = docKey.mkString("doc_id of (", ", ", ")")
+        (Prop(sp.touched == sTouched) :| s"$on: touched ${sp.touched} vs fold $sTouched") &&
+          (Prop(sp.zones == sZones) :| s"$on: zones ${sp.zones} vs fold $sZones") &&
+          (Prop(sp.ci == ci) :| s"$on: commit info ${sp.ci} vs $ci")
+      }
+
       (Prop(p.touched == touched) :| s"touched ${p.touched} vs fold $touched") &&
         (Prop(p.zones == zones) :| s"zones ${p.zones} vs fold $zones") &&
         (Prop(p.ci == ci) :| s"commit info ${p.ci} vs $ci") &&
-        (Prop(p.hasR == evs.exists(_.op == "R")) :| "R detection")
+        (Prop(p.hasR == evs.exists(_.op == "R")) :| "R detection") &&
+        sigProps.reduce(_ && _)
     }
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(25)
       .withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)

@@ -79,14 +79,10 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
     // force the DISTRIBUTED fixpoint: under the collect cap the union-find
     // fast path would answer without exercising pointer doubling at all
-    val cap0 = graft.config.Knobs.ccCollectCap
-    graft.config.Knobs.ccCollectCap = 0L
-    try {
-      val lbl = TextPipeline.propagateLabels(spark, pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(lbl.size == 200 && lbl.values.forall(_ == 0L),
-        "every path vertex must adopt the component minimum")
-    } finally graft.config.Knobs.ccCollectCap = cap0
+    val lbl = TextPipeline.propagateLabels(spark, pairs, bounded = false, collectCap = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lbl.size == 200 && lbl.values.forall(_ == 0L),
+      "every path vertex must adopt the component minimum")
     // and the fast path must agree bit-for-bit on the same graph
     val uf = TextPipeline.propagateLabels(spark, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -104,10 +100,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(res(TextPipeline.propagateLabels(spark, pairs, bounded = false)) == want)
     // over-cap bounded call must fall back (to the landed distributed
     // fixpoint) and still converge to the same labels
-    val cap0 = graft.config.Knobs.ccCollectCap
-    graft.config.Knobs.ccCollectCap = 2L
-    try assert(res(TextPipeline.propagateLabels(spark, pairs, bounded = true)) == want)
-    finally graft.config.Knobs.ccCollectCap = cap0
+    assert(res(TextPipeline.propagateLabels(spark, pairs, bounded = true, collectCap = 2L)) == want)
   }
 
   test("driver union-find orders string ids by UTF-8 bytes (binary), not UTF-16") {
@@ -119,12 +112,8 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = Seq((supp, hi)).toDF("a", "b")
     val fast = TextPipeline.propagateLabels(spark, pairs, bounded = true)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val cap0 = graft.config.Knobs.ccCollectCap
-    graft.config.Knobs.ccCollectCap = 0L
-    val dist =
-      try TextPipeline.propagateLabels(spark, pairs).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      finally graft.config.Knobs.ccCollectCap = cap0
+    val dist = TextPipeline.propagateLabels(spark, pairs, bounded = false, collectCap = 0L)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fast == dist, s"fast $fast vs distributed $dist")
     assert(fast.values.toSet == Set(hi), "canonical id must be the UTF-8 minimum")
   }
