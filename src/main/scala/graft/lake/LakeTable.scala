@@ -6,7 +6,7 @@ import graft.model.TableSpec
 import graft.obs.Phases
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
@@ -220,11 +220,7 @@ final class LakeTable private (val spark: SparkSession, val root: String) {
   def writeDataFiles(df: => DataFrame, snap: Snapshot): Seq[DataFile] = {
     val schemaId = snap.currentSchemaId
     val moved = Phases.run(this, "write")(writeBuckets(df))
-    // zone-map columns: the merge key, restricted to stat-comparable types
-    val statCols: Map[String, DataType] =
-      snap.mergeKey.flatMap(c => snap.schema.fields.find(_.name == c))
-        .collect { case f if LakeTable.statComparable(f.dataType) =>
-          f.name -> f.dataType }.toMap
+    val statCols = zoneCols(snap).map(f => f.name -> f.dataType).toMap
     // footer harvest in parallel: one commit registers O(buckets) files and
     // a serial per-file footer read is avoidable driver time on the
     // micro-batch critical path
@@ -510,6 +506,27 @@ object LakeTable {
     * key cast to the column's type first hashes like the stored value. */
   def bucketOf(snap: Snapshot, colFor: String => Column = col): Column =
     pmod(xxhash64(snap.bucketCols.map(colFor): _*), lit(snap.numBuckets))
+
+  /** The zone-map columns of `snap`'s files: its merge key, restricted to
+    * stat-comparable types. */
+  private def zoneCols(snap: Snapshot): Seq[StructField] =
+    snap.mergeKey.flatMap(c => snap.schema.fields.find(_.name == c))
+      .filter(f => statComparable(f.dataType))
+
+  /** Where the rows keyed by the id frame `ids` (carrying `snap`'s merge
+    * key columns) live in `snap`: the buckets of their keys ([[bucketOf]])
+    * and each zone-map column's min and max, from ONE aggregation. A read
+    * of `snap` pruned to them ([[LakeTable.readAt]],
+    * [[LakeTable.rewriteSet]]) holds every row whose key equals one of
+    * `ids`', so a caller never derives a bucket or a zone itself. */
+  def keysOf(snap: Snapshot, ids: DataFrame): (Set[Int], Seq[Zone]) = {
+    val zc = zoneCols(snap).map(_.name)
+    val r = ids.agg(collect_set(bucketOf(snap).cast("int")),
+      zc.flatMap(c => Seq(min(col(c)).cast(StringType), max(col(c)).cast(StringType))): _*)
+      .head()
+    (r.getSeq[Int](0).toSet, zc.zipWithIndex.map { case (c, i) =>
+      Zone(c, Option(r.getString(1 + 2 * i)), Option(r.getString(2 + 2 * i))) })
+  }
 
   /** Types whose per-file min/max zone stats are recorded and comparable. */
   private[graft] def statComparable(dt: DataType): Boolean = dt match {

@@ -11,12 +11,15 @@ import scala.jdk.CollectionConverters._
   * is wrapped in exactly one place:
   *
   *   - `probe`, `evolve`          Replay.applyBatch
-  *   - `write`, `footer`          LakeTable.writeDataFiles (the Spark job
-  *                                that runs fold, merge join and parquet
-  *                                write; then the footer harvest)
+  *   - `write`, `footer`          LakeTable.writeDataFiles (planning
+  *                                the caller's write, the Spark job that
+  *                                runs it and the parquet write; then
+  *                                the footer harvest)
   *   - `commit`                   LakeTable.commit
   *   - `stats`                    SignatureStore.applyBatch (its probe)
-  *   - `touched`, `fold`          LabelStore.applyBatch
+  *   - `touched`, `fold`          LabelStore.applyBatch (its probe and
+  *                                the touched doc ids' collect; the
+  *                                label kernel and the rewrite set's keys)
   *
   * [[run]] labels the phase's Spark jobs with the job description
   * `graft:<table>:<phase>` (so the SQL execution events carry the phase

@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, Snapshot}
 import graft.model.{ChangeEvent, TableMapping, TableMode, TableSpec}
 import graft.obs.Phases
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *     (a touched doc's old edges die with its old signature; TOAST and
   *     meta-only updates are edge-neutral and filtered out);
   *   - the label and signature lookups it asks for are bucket- AND
-  *     zone-pruned lake reads;
+  *     zone-pruned lake reads, each by its own lake's buckets;
   *   - its `pairsOf` is one asymmetric band probe of the whole signature
   *     table against the members' post-commit signatures.
   *
@@ -31,8 +31,10 @@ import org.apache.spark.sql.types._
   * D5 predicate) — LabelStoreSpec re-derives it from scratch after every
   * batch, on clique- and chain-shaped clusters.
   *
-  * Per-batch corpus cost: TWO broadcast-semi label-table scans + ONE
-  * signature band probe (no shuffle, cache, or temp write of anything
+  * Per-batch cost: ONE probe of the batch (`Replay.probe`, as every
+  * merge) and one `LakeTable.keysOf` aggregation per other lookup and for
+  * the rewrite set. Corpus cost: TWO broadcast-semi label-table scans +
+  * ONE signature band probe (no shuffle, cache, or temp write of anything
   * corpus-sized); corpus TEXT is never read. Each table's manifest is
   * resolved once per batch, and every read and the commit use that
   * snapshot. The write back into the label lake rewrites exactly the
@@ -90,8 +92,11 @@ object LabelStore {
 
   /** Fold one applied micro-batch into the label table. MUST run after
     * `SignatureStore.applyBatch` committed the same batch (the fold reads
-    * the POST-commit signature rows). Returns true if applied (false =
-    * epoch already covers batchId). */
+    * the POST-commit signature rows). The probe of its edge-changing
+    * events yields the applied watermark (none: the epoch commits alone)
+    * and the touched docs' label buckets and zone; every other lookup and
+    * the rewrite set take theirs from `LakeTable.keysOf`. Returns true if
+    * applied (false = epoch already covers batchId). */
   def applyBatch(labels: LakeTable, sig: LakeTable,
                  events: Dataset[ChangeEvent], mapping: TableMapping,
                  docLake: LakeTable, textCol: String = "text",
@@ -118,91 +123,59 @@ object LabelStore {
           (col("old_kind") =!= "none" ||
             map_contains_key(col("after"), textCol))))
     val appendMode = mapping.mode == TableMode.Append
-    // one row per touched doc, with its last op ord
-    val touched = Replay.normalizeBy(relevant, appendMode,
-        SignatureStore.docKey(docSnap.mergeKey))
-      .select(col("key.doc_id").as("doc_id"), col("ord"))
-      .groupBy("doc_id").agg(max(col("ord")).as("ord"))
-      .filter(col("doc_id").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE stats pass over a batch-bounded id set: emptiness check, RAW
-      // doc_id hashes (per-lake buckets derive on the driver, so the label
-      // and signature lakes share the same job even with different bucket
-      // counts), zone bounds and the max of `ord` (touched's: the applied
-      // watermark the commit advances)
-      final case class IdStats(n: Long, hashes: Seq[Long], lo: String, hi: String,
-                               ord: Long)
-      def statsOf(ids: DataFrame, ord: Column = lit(-1L)): IdStats = {
-        val st = ids.agg(count(lit(1)).as("n"),
-          collect_set(xxhash64(col("doc_id"))).as("hs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"),
-          max(ord).as("ord")).head()
-        IdStats(st.getLong(0), st.getSeq[Long](1), st.getString(2), st.getString(3),
-          if (st.isNullAt(4)) -1L else st.getLong(4))
-      }
-      val tStats = Phases.run(labels, "touched")(statsOf(touched, col("ord")))
-      if (tStats.n == 0L) {
-        labels.commit(Nil, Set.empty,
-          properties = Map(epochKey -> batchId.toString))
-        return true
-      }
-      val ssnap = sig.snapshot()
-      // batch-bounded lake lookup: "rows OF these docs" answered by a
-      // bucket- AND zone-PRUNED read of the batch's snapshot (the same
-      // pruning the signature merge uses) followed by an exact semi join —
-      // O(touched FILES) per call, never a full corpus scan
-      def prunedRowsOf(lake: LakeTable, snap: graft.lake.Snapshot,
-                       ids: DataFrame): DataFrame = {
-        val st = if (ids eq touched) tStats else statsOf(ids) // touched's are in hand
-        val zones = Seq(graft.lake.Zone("doc_id",
-          lo = Option(st.lo), hi = Option(st.hi)))
-        // driver-side twin of LakeTable.bucketOf over the one bucket
-        // column doc_id: floorMod(xxhash64, n) == pmod(xxhash64, n); the
-        // two must agree or the pruned read misses rows
-        val buckets = st.hashes
-          .map(h => java.lang.Math.floorMod(h, snap.numBuckets)).toSet
-        lake.readAt(snap, buckets = Some(buckets), zones = zones)
-          .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      }
-      val bucketOf = LakeTable.bucketOf(lsnap)
-      val (diff, statRow) = Phases.run(labels, "fold") {
-        val rows = TextPipeline.foldLabels(spark, touched,
-          ids => prunedRowsOf(labels, lsnap, ids),
-          labels.readAt(lsnap),
-          // post-commit signatures: a deleted doc has none, an edited doc
-          // re-pairs off its new one; the band probe over the whole
-          // signature table is the fold's one corpus-signature pass
-          ids => TextPipeline.agreementPairsAgainst(sigCols(sig.readAt(ssnap)),
-            sigCols(prunedRowsOf(sig, ssnap, ids)), "labels_ingest"))
-        // the write-set is a pure new-vs-current filter, LANDED once (the
-        // fold's plan tree is deep and Catalyst re-plans the full tree per
-        // action — the write path below runs several)
-        val diff = TextPipeline.landTmp(
-          rows.filter(!(col("cluster_id") <=> col("oc")))
-            .select(col("doc_id"), col("cluster_id")), "graft-delta")
-        (diff, diff.agg(
-          collect_set(bucketOf.cast("int")).as("bs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx")).head())
-      }
-      val touchedBuckets = statRow.getSeq[Int](0).toSet
-      val applied = Replay.appliedOrd(lsnap, epochKey, tStats.ord)
-      if (touchedBuckets.isEmpty) {
-        labels.commit(Nil, Set.empty,
-          properties = Map(epochKey -> batchId.toString, applied))
-        return true
-      }
-      val zones = Seq(graft.lake.Zone("doc_id",
-        lo = Option(statRow.getString(1)), hi = Option(statRow.getString(2))))
-      val files = labels.rewriteSet(lsnap, touchedBuckets, zones)
-      val out = labels.scan(lsnap, files).join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
+    val keyOf = SignatureStore.docKey(docSnap.mergeKey)
+    // the probe, and the touched docs (one row each): a batch-bounded id
+    // set collected to the driver, so each later read of it is local
+    val (p, touchedIds) = Phases.run(labels, "touched") {
+      val p = Replay.probe(lsnap, relevant, appendMode, batchId, keyOf)
+      p -> (if (p.ci.isEmpty) Nil
+        else Replay.normalizeBy(relevant, appendMode, keyOf).select(col("key.doc_id"))
+          .filter(col("doc_id").isNotNull).collect().map(_.getString(0)).distinct.toSeq)
+    }
+    if (p.ci.isEmpty) {
+      labels.commit(Nil, Set.empty, properties = Map(epochKey -> batchId.toString))
+      return true
+    }
+    import spark.implicits._
+    val touched = touchedIds.toDF("doc_id")
+    val ssnap = sig.snapshot()
+    // batch-bounded lake lookup: "rows OF these docs" answered by a
+    // bucket- AND zone-PRUNED read of the batch's snapshot followed by an
+    // exact semi join: O(touched FILES) per call, never a full corpus scan
+    def rowsOf(lake: LakeTable, snap: Snapshot)(ids: DataFrame): DataFrame = {
+      val (buckets, zones) =
+        if (ids eq touched) (p.touched, p.zones) else LakeTable.keysOf(snap, ids)
+      lake.readAt(snap, Some(buckets), zones)
+        .join(broadcast(ids), Seq("doc_id"), "left_semi")
+    }
+    val (diff, (buckets, zones)) = Phases.run(labels, "fold") {
+      val rows = TextPipeline.foldLabels(spark, touched, rowsOf(labels, lsnap),
+        labels.readAt(lsnap),
+        // post-commit signatures: a deleted doc has none, an edited doc
+        // re-pairs off its new one; the band probe over the whole
+        // signature table is the fold's one corpus-signature pass
+        ids => TextPipeline.agreementPairsAgainst(sigCols(sig.readAt(ssnap)),
+          sigCols(rowsOf(sig, ssnap)(ids)), "labels_ingest"))
+      // the write-set is a pure new-vs-current filter, LANDED once (the
+      // fold's plan tree is deep and Catalyst re-plans the full tree per
+      // action — the write path below runs several)
+      val diff = TextPipeline.landTmp(
+        rows.filter(!(col("cluster_id") <=> col("oc")))
+          .select(col("doc_id"), col("cluster_id")), "graft-delta")
+      (diff, LakeTable.keysOf(lsnap, diff))
+    }
+    // no changed label: nothing to write; else the write plan is built
+    // inside the write phase
+    val files = labels.rewriteSet(lsnap, buckets, zones)
+    val written = if (buckets.isEmpty) Nil else labels.writeDataFiles(
+      labels.scan(lsnap, files).join(diff.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("cluster_id"))
         .unionAll(diff.filter(col("cluster_id").isNotNull))
-        .withColumn("__bucket", bucketOf)
-      labels.commit(labels.writeDataFiles(out, lsnap), files.map(_.path).toSet,
-        properties = Map(epochKey -> batchId.toString, applied), base = Some(lsnap))
-      true
-    } finally touched.unpersist(blocking = false)
+        .withColumn("__bucket", LakeTable.bucketOf(lsnap)), lsnap)
+    labels.commit(written, files.map(_.path).toSet,
+      properties = Map(epochKey -> batchId.toString,
+        Replay.appliedOrd(lsnap, epochKey, p.ci.get.maxOrd)), base = Some(lsnap))
+    true
     }
   }
 }

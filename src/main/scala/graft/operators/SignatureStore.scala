@@ -170,23 +170,25 @@ object SignatureStore {
         val resign = !untouched && (toRow || !sigExists || pHas)
         val newText = when(toRow || (sigExists && pHas), element_at(col("onPresent"), textCol))
           .otherwise(element_at(col("onAbsent"), textCol))
-        // both halves read the pass: persist it once
-        val rows = Replay.keyedPass(snap, sig.scan(snap, files), batch, appendMode, keyOf,
-            Seq(textCol))
-          .filter(survives)
-          .select(col("key.doc_id").as("doc_id"), resign.as("__resign"),
-            newText.as("__text"), col("tRow").as("__old"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // both halves read the pass: persist it once. The pass, the
+        // signing and the union are planned inside the write phase
+        var rows: DataFrame = null
         try {
-          val keep = rows.filter(!col("__resign")).select("__old.*")
-          val signed = signaturesOf(rows.filter(col("__resign"))
-            .select(col("doc_id"), col("__text").as("text")), uniqueIds = true)
-          val out = keep.unionByName(signed)
-            .withColumn("__bucket", LakeTable.bucketOf(snap))
-          sig.commit(sig.writeDataFiles(out, snap), files.map(_.path).toSet,
+          sig.commit(sig.writeDataFiles({
+            rows = Replay.keyedPass(snap, sig.scan(snap, files), batch, appendMode, keyOf,
+                Seq(textCol))
+              .filter(survives)
+              .select(col("key.doc_id").as("doc_id"), resign.as("__resign"),
+                newText.as("__text"), col("tRow").as("__old"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val keep = rows.filter(!col("__resign")).select("__old.*")
+            val signed = signaturesOf(rows.filter(col("__resign"))
+              .select(col("doc_id"), col("__text").as("text")), uniqueIds = true)
+            keep.unionByName(signed).withColumn("__bucket", LakeTable.bucketOf(snap))
+          }, snap), files.map(_.path).toSet,
             properties = Map(epochKey -> batchId.toString,
               Replay.appliedOrd(snap, epochKey, ci.maxOrd)), base = Some(snap))
-        } finally rows.unpersist()
+        } finally if (rows != null) rows.unpersist()
     }
     true
   }

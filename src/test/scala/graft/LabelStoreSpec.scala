@@ -100,6 +100,18 @@ class LabelStoreSpec extends AnyFunSuite {
       batchId = 4))
     assert(labelRows(lbl) == Map("2" -> "2", "5" -> "2", "6" -> "2"))
     invariant()
+
+    // a batch carrying only a meta-only update touches no doc: the label
+    // table commits the epoch alone, its rows and applied watermark as
+    // they were
+    def appliedOrds = lbl.snapshot().properties.filter(_._1.startsWith("applied-ord-"))
+    val (v5, ords5) = (lbl.currentVersion, appliedOrds)
+    assert(ords5.nonEmpty)
+    apply(5, Seq(uEv(50, 5, Map("meta" -> "m3"))))
+    assert(lbl.currentVersion == v5 + 1)
+    assert(lbl.snapshot().properties("commit-epoch") == "5")
+    assert(appliedOrds == ords5)
+    assert(labelRows(lbl) == Map("2" -> "2", "5" -> "2", "6" -> "2"))
   }
 
   test("cluster migration of the lexicographically-SMALLEST doc merges") {
@@ -138,11 +150,13 @@ class LabelStoreSpec extends AnyFunSuite {
   // middle
   private def chain(t: Int): String = (t until t + 19).map(w => s"w$w").mkString(" ")
 
-  private final class Chained(name: String) {
+  private final class Chained(name: String, sigBuckets: Int = 16, lblBuckets: Int = 16) {
     val dir: String = SparkTestBase.tmpDir(name)
     val docs: LakeTable = LakeTable.create(spark, s"$dir/docs", docSpec)
-    val sig: LakeTable = LakeTable.create(spark, s"$dir/sigs", SignatureStore.spec())
-    val lbl: LakeTable = LakeTable.create(spark, s"$dir/labels", LabelStore.spec())
+    val sig: LakeTable = LakeTable.create(spark, s"$dir/sigs",
+      SignatureStore.spec(numBuckets = sigBuckets))
+    val lbl: LakeTable = LakeTable.create(spark, s"$dir/labels",
+      LabelStore.spec(numBuckets = lblBuckets))
     private var checks = 0
     def apply(b: Long, evs: Seq[ChangeEvent]): Unit = {
       graft.operators.Replay.applyBatch(docs, evs.toDS(), mapping, b)
@@ -170,24 +184,65 @@ class LabelStoreSpec extends AnyFunSuite {
   }
 
   test("seeded insert/update/delete batches over chains keep labels == bootstrap") {
-    val c = new Chained("lblseeded")
-    val rnd = new scala.util.Random(20261017L)
-    val live = scala.collection.mutable.Set[Int]()
-    var lsn = 0L
-    def next(): Long = { lsn += 1; lsn }
-    for (b <- 0L until 6L) {
-      // per batch: ~12 ops over 3 chains of 16 docs; a key is touched at
-      // most once per batch, so each batch's net effect is unambiguous
-      val keys = rnd.shuffle((0 until 48).toList).take(12)
-      val evs = keys.map { k =>
-        val t = (k / 16) * 100 + k % 16
-        if (!live(t)) { live += t; iEv(next(), t, chain(t)) }
-        else if (rnd.nextInt(3) == 0) { live -= t; dEv(next(), t) }
-        else uEv(next(), t, Map("text" ->
-          chain(if (rnd.nextBoolean()) t else t + 50)))
+    // the signature and label lakes on equal, then on different bucket
+    // counts: each lookup prunes by its own lake's buckets
+    for ((sigBuckets, lblBuckets) <- Seq((16, 16), (5, 3))) {
+      val c = new Chained("lblseeded", sigBuckets, lblBuckets)
+      val rnd = new scala.util.Random(20261017L)
+      val live = scala.collection.mutable.Set[Int]()
+      var lsn = 0L
+      def next(): Long = { lsn += 1; lsn }
+      for (b <- 0L until 6L) {
+        // per batch: ~12 ops over 3 chains of 16 docs; a key is touched at
+        // most once per batch, so each batch's net effect is unambiguous
+        val keys = rnd.shuffle((0 until 48).toList).take(12)
+        val evs = keys.map { k =>
+          val t = (k / 16) * 100 + k % 16
+          if (!live(t)) { live += t; iEv(next(), t, chain(t)) }
+          else if (rnd.nextInt(3) == 0) { live -= t; dEv(next(), t) }
+          else uEv(next(), t, Map("text" ->
+            chain(if (rnd.nextBoolean()) t else t + 50)))
+        }
+        c(b, evs)
       }
-      c(b, evs)
     }
+  }
+
+  test("job-count guard: a small warm label batch runs no more Spark jobs") {
+    val c = new Chained("lbljobs")
+    def phaseSplit(lake: LakeTable)(body: => Unit): String = {
+      val scope = LakeTable.rootKey(lake.root)
+      def secs = graft.obs.Phases.totals.collect { case ((`scope`, ph), t) => ph -> t.seconds }
+      val (s0, t0) = (secs, System.nanoTime())
+      body
+      val wall = (System.nanoTime() - t0) / 1e9
+      val split = secs.map { case (ph, s) => ph -> (s - s0.getOrElse(ph, 0.0)) }
+      f"phases cover ${split.values.sum / wall * 100}%.1f%% of $wall%.3f s: " +
+        split.toSeq.sorted.map { case (ph, s) => f"$ph $s%.3f s" }.mkString(", ")
+    }
+    // warm: two chains, then an edit that splits one
+    c(0, (0 until 8).flatMap(t =>
+      Seq(iEv(t + 1, t, chain(t)), iEv(t + 101, t + 100, chain(t + 100)))))
+    c(1, Seq(uEv(200, 3, Map("text" -> chain(53))), dEv(201, 104), iEv(202, 20, chain(20))))
+    val evs = Seq(uEv(300, 3, Map("text" -> chain(3))), dEv(301, 6), iEv(302, 8, chain(8)),
+      uEv(303, 101, Map("meta" -> "m2")))
+    graft.operators.Replay.applyBatch(c.docs, evs.toDS(), mapping, 2)
+    val sigSplit = phaseSplit(c.sig)(
+      assert(SignatureStore.applyBatch(c.sig, evs.toDS(), mapping, c.docs, batchId = 2)))
+    var lblSplit = ""
+    val n = SparkTestBase.jobsOf {
+      lblSplit = phaseSplit(c.lbl)(
+        assert(LabelStore.applyBatch(c.lbl, c.sig, evs.toDS(), mapping, c.docs, batchId = 2)))
+    }
+    info(s"signature batch: $sigSplit")
+    info(s"label batch: $lblSplit; $n jobs")
+    val fresh = LakeTable.create(spark, s"${c.dir}/check", LabelStore.spec())
+    assert(LabelStore.bootstrap(fresh, c.sig))
+    assert(labelRows(c.lbl) == labelRows(fresh))
+    // the probe and the touched ids' collect, the fold's landings and
+    // lookups, and the write: 36 jobs (38 when the batch's bookkeeping
+    // was its own stats job over a cached touched set)
+    assert(n <= 36, s"label batch ran $n jobs")
   }
 
   test("ingest-loop temp artifacts are batch-scoped, not JVM-lifetime") {

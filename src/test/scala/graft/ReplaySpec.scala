@@ -5,6 +5,7 @@ import graft.lake.LakeTable
 import graft.model._
 import graft.operators.Replay
 import graft.verify.Oracle
+import graft.SparkTestBase.jobsOf
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -232,33 +233,6 @@ class ReplaySpec extends AnyFunSuite {
     val tags = lake2.read().select("tag").distinct().collect().map(_.getString(0))
     assert(tags.nonEmpty && tags.forall(t => t == null || t.endsWith("-text")),
       s"set literal '-text' must survive: ${tags.take(5).mkString(",")}")
-  }
-
-  /** Spark jobs submitted by `body`, counted by its job group (forked work
-    * carries the caller's group). A marker job run afterwards flushes the
-    * asynchronous listener bus: once its start is seen, every earlier job
-    * start has been delivered. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000L
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "listener bus did not deliver the marker job")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("job-count guard: a small clone batch and a small History batch run fewer Spark jobs") {
