@@ -19,14 +19,12 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
   * also drops the redundant `.crc` shadow files — we run on a local disk
   * whose integrity the OS already guarantees; the lake's own manifest
   * tracks file sizes.
+  *
+  * Every graft session builder sets it itself. The streaming engine's
+  * checkpoint logs go through it too (`CdcStream.start` selects Spark's
+  * file-system-based checkpoint manager), so a trigger's offsets and
+  * commits logs fork nothing either.
   */
 class BareLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = ()
-}
-
-object SparkLocalFs {
-  /** Configs every local graft SparkSession should set. */
-  val configs: Map[String, String] = Map(
-    "spark.hadoop.fs.file.impl" -> classOf[BareLocalFileSystem].getName,
-    "spark.hadoop.fs.file.impl.disable.cache" -> "false")
 }

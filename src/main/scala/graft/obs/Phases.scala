@@ -12,9 +12,12 @@ import scala.jdk.CollectionConverters._
   *
   *   - `probe`, `evolve`          Replay.applyBatch
   *   - `write`, `footer`          LakeTable.writeDataFiles (planning
-  *                                the caller's write, the Spark job that
-  *                                runs it and the parquet write; then
-  *                                the footer harvest)
+  *                                the caller's write — for the clone and
+  *                                History merges, binding the batch into
+  *                                the table's analyzed merge plan,
+  *                                Replay.bound — the Spark job that runs
+  *                                it and the parquet write; then the
+  *                                footer harvest)
   *   - `commit`                   LakeTable.commit
   *   - `stats`                    SignatureStore.applyBatch (its probe)
   *   - `touched`, `fold`          LabelStore.applyBatch (its probe and

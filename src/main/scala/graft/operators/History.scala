@@ -93,17 +93,18 @@ object History {
   /** History's merge body, run by Replay.applyBatch (which routes,
     * filters, sets and probes first): the SCD2 close-and-append pass
     * ([[mergePlan]]) over the probe's `touched` buckets of `snap`, the
-    * write, and the shared commit step (Replay.commitMerge). The target
-    * scan and the pass's plan are built inside the write phase, whose job
-    * runs them. */
+    * write, and the shared commit step (Replay.commitMerge). The pass's
+    * plan is not rebuilt per batch: the batch and the target scan are
+    * bound into the table's analyzed plan (`Replay.bound`) inside the
+    * write phase, whose job runs them. */
   private[operators] def merge(lake: LakeTable, snap: Snapshot, routed: DataFrame,
                                ci: Replay.CommitInfo, touched: Set[Int],
                                batchId: Long, epochKey: String): Unit = {
     // no zones: every version row of a touched key's bucket is rewritten
     val files = lake.rewriteSet(snap, touched, Nil)
-    val obs = org.apache.spark.sql.Observation(s"graft-hist-$batchId")
-    val newFiles = lake.writeDataFiles(
-      mergePlan(snap, routed, lake.scan(snap, files), obs), snap)
+    lazy val (plan, obs) = Replay.bound(lake, "history", snap, routed,
+      lake.scan(snap, files), appendMode = false)(mergePlan(snap, _, _))
+    val newFiles = lake.writeDataFiles(plan, snap)
     // the write job ran -> the observation is available (an empty pass
     // observes its sums as null -> 0)
     val m = obs.get.map { case (k, v) =>
@@ -121,9 +122,8 @@ object History {
     * new version, its own kvsz_end / soft-delete flag. Two copies of one
     * event in the batch write one version. No join, no aggregation, and
     * one exchange (on the bucket, which the write reuses). The outcome
-    * counts go to `obs`. */
-  private def mergePlan(snap: Snapshot, routed: DataFrame, target: DataFrame,
-                        obs: org.apache.spark.sql.Observation): DataFrame = {
+    * counts are observed as `graft-hist`. */
+  private def mergePlan(snap: Snapshot, routed: DataFrame, target: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val schema = snap.schema
     val keys = Replay.keyTypes(snap)
@@ -149,12 +149,13 @@ object History {
     // no extra pass): pre-existing open versions closed by this batch,
     // soft deletes among them, new version rows — clone-mode parity for
     // the reference's per-op result counters (`streamer/metrics.go:11-53`).
-    // ONE observation, attached to a node descending from the target side:
-    // inside foreachBatch the batch DF belongs to the micro-batch's cloned
-    // session, and an Observation registered there never sees the write
-    // (which executes on the lake's session) — two separate observations
-    // deadlocked on exactly that.
-    o.observe(obs,
+    // ONE observation, whose Observation the lake's session holds (the
+    // template is built there, Replay.bound): inside foreachBatch the
+    // batch DF belongs to the micro-batch's cloned session, and an
+    // Observation registered there never sees the write (which executes
+    // on the lake's session) — two separate observations deadlocked on
+    // exactly that.
+    o.observe("graft-hist",
         sum(when(closing, 1L).otherwise(0L)).as("closed"),
         sum(when(closing && col("nx.cd"), 1L).otherwise(0L)).as("soft_deleted"),
         sum(when(isT, 0L).otherwise(1L)).as("inserted"))

@@ -3,7 +3,7 @@ package graft.operators
 import graft.lake.{DataFile, LakeTable, LineageEntry, Snapshot, Zone}
 import graft.model._
 import graft.obs.Phases
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,6 +39,12 @@ import org.apache.spark.sql.types._
   * when Spark's codegen cache (100 entries) evicts it, and a tail batch's
   * working set has to fit that cache to run compiled code; fewer
   * operators per plan is what keeps it there.
+  *
+  * The clone and History merge plans are analyzed once per table schema,
+  * not once per batch ([[bound]]): each is built over placeholder inputs,
+  * and a batch substitutes its routed frame and its touched-bucket scan
+  * for them, as Structured Streaming substitutes each trigger's sources
+  * into its analyzed query.
   *
   * The fold is NOT skew-safe: all of one key's ops, and in the merge all
   * of one bucket's rows, land in one task. BASELINE.md's Zipf-8 run
@@ -616,15 +622,17 @@ object Replay {
     * typed the batch's keys against; `touched` and `zones` are its result.
     * The target read and the files the commit removes are ONE
     * [[LakeTable.rewriteSet]]; the commit is [[commitMerge]], carrying the
-    * `metrics-delete-miss` drift counter. The target scan and the merge
-    * plan are built inside the write phase, whose job runs them. */
+    * `metrics-delete-miss` drift counter. The plan is not rebuilt per
+    * batch: the batch and the target scan are bound into the table's
+    * analyzed [[mergePlan]] ([[bound]]) inside the write phase, whose job
+    * runs them. */
   def mergeApply(lake: LakeTable, snap: Snapshot, transformed: DataFrame, appendMode: Boolean,
                  ci: CommitInfo, touched: Set[Int], zones: Seq[Zone], batchId: Long,
                  epochKey: String): Unit = {
     val files = lake.rewriteSet(snap, touched, zones)
-    val obs = org.apache.spark.sql.Observation(s"graft-merge-$batchId")
-    val newFiles = lake.writeDataFiles(
-      mergePlan(snap, transformed, appendMode, lake.scan(snap, files), obs), snap)
+    lazy val (plan, obs) = bound(lake, "clone", snap, transformed, lake.scan(snap, files),
+      appendMode)(mergePlan(snap, _, appendMode, _))
+    val newFiles = lake.writeDataFiles(plan, snap)
     // the write job ran -> observed merge-outcome counters are available
     val m = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
     // cumulative drift counter rides the same atomic commit (the
@@ -633,6 +641,57 @@ object Replay {
       extraProps = Map("metrics-delete-miss" ->
         (snap.properties.getOrElse("metrics-delete-miss", "0").toLong +
           m.getOrElse("delete_miss", 0L)).toString))
+  }
+
+  /** A merge plan analyzed once ([[bound]]): the inputs its build read,
+    * its batch and target placeholders, the plan over them, and how many
+    * times its (table, kind) has built one. */
+  private final case class Template(inputs: Seq[Any], batch: DataFrame, target: DataFrame,
+                                    plan: DataFrame, builds: Long)
+
+  /** The one live template per (table root, plan kind). */
+  private val templates =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Template]()
+
+  /** How many merge-plan templates `lake`'s table has built. */
+  private[graft] def templateBuilds(lake: LakeTable): Long = {
+    import scala.jdk.CollectionConverters._
+    val root = LakeTable.rootKey(lake.root)
+    templates.asScala.collect { case ((`root`, _), t) => t.builds }.sum
+  }
+
+  /** `kind`'s merge plan for `lake` bound to this batch's inputs — the
+    * routed `batch` and the touched-bucket read `target` of `snap` — and
+    * the Observation its outcome counters go to. `build` makes the plan
+    * from a batch frame and a target frame. It runs once, over placeholders
+    * of `batch`'s schema and `snap`'s (every column nullable), and the
+    * analyzed result is kept per (table, kind); each call substitutes its
+    * two inputs for the placeholders (`GraftSqlShim.bind`), so a batch pays
+    * no DataFrame construction or analysis of the merge. The template is
+    * rebuilt, replacing the old one, only when an input `build` reads
+    * changes: the session, `snap`'s schema, merge key, bucket columns or
+    * count, `batch`'s schema, or `appendMode`. Session confs read at
+    * analysis are those of the build. */
+  private[operators] def bound(lake: LakeTable, kind: String, snap: Snapshot,
+                               batch: DataFrame, target: DataFrame, appendMode: Boolean)(
+      build: (DataFrame, DataFrame) => DataFrame): (DataFrame, Observation) = {
+    val spark = lake.spark
+    val inputs = Seq(spark, snap.schema, snap.mergeKey, snap.bucketCols, snap.numBuckets,
+      batch.schema, appendMode)
+    // built outside the map's lock; two batches of one table racing here
+    // would only build twice, each binding the template it built
+    val key = (LakeTable.rootKey(lake.root), kind)
+    val old = templates.get(key)
+    val t = if (old != null && old.inputs == inputs) old else {
+      val b = GraftSqlShim.placeholder(spark, batch.schema)
+      val tg = GraftSqlShim.placeholder(spark,
+        StructType(snap.schema.map(_.copy(nullable = true))))
+      val fresh = Template(inputs, b, tg, build(b, tg), Option(old).fold(1L)(_.builds + 1))
+      templates.put(key, fresh)
+      fresh
+    }
+    (GraftSqlShim.bind(t.plan, Seq(t.batch -> batch, t.target -> target)),
+      GraftSqlShim.observation(t.plan))
   }
 
   /** A merge's window-pass input: the `target` rows of `snap` as op T,
@@ -667,11 +726,12 @@ object Replay {
 
   /** The rows [[mergeApply]] writes, with their `__bucket`: the
     * [[keyedPass]] over the touched buckets' read, and each key's [[Xf]]
-    * applied to its target row; merge outcomes are counted into `obs`.
-    * The pass's one exchange is on the bucket (the window partitions by
-    * bucket and key), so the write adds no exchange and no sort. */
+    * applied to its target row; merge outcomes are observed as
+    * `graft-merge`. The pass's one exchange is on the bucket (the window
+    * partitions by bucket and key), so the write adds no exchange and no
+    * sort. */
   private def mergePlan(snap: Snapshot, transformed: DataFrame, appendMode: Boolean,
-                        target: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame = {
+                        target: DataFrame): DataFrame = {
     val schema = snap.schema
     val keys = keyTypes(snap)
     val mergeKey = keys.map(_._1)
@@ -691,7 +751,7 @@ object Replay {
     val toAbsent = col("presentKind") === lit(Xf.TO_ABSENT)
     def cnt(cond: Column): Column =
       sum(when(!xNull && cond, 1L).otherwise(0L))
-    val counted = folded.observe(obs,
+    val counted = folded.observe("graft-merge",
       cnt(!tExists && col("absentExists")).as("inserted"),
       cnt(tExists && !toAbsent).as("updated"),
       cnt(tExists && toAbsent).as("deleted"),

@@ -5,6 +5,7 @@ import graft.model.{ChangeEvent, TableMapping, TableMode}
 import graft.operators.Replay
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -16,6 +17,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     source only after the destination commit, `worker.go:135-165`; here
   *     the checkpoint advances only after `foreachBatch` returns, i.e.
   *     after the lake snapshot commit).
+  *   - Checkpoint I/O: the offsets, commits and sources logs are written
+  *     by Spark's `FileSystemBasedCheckpointFileManager` through the
+  *     session's `fs.file.impl` (graft.lake.BareLocalFileSystem), so
+  *     writing them forks no `chmod`/`readlink` process and leaves no
+  *     `.crc` files. Every engine checkpoint is a local path.
   *   - `maxFilesPerTrigger` plays the commit_delay batching knob (W9,
   *     `worker.go:61-104`) and the full-sync rate limit (A2).
   *   - Exactly-once: every table — target, signature and label — drops
@@ -201,6 +207,12 @@ object CdcStream {
             format: String = "parquet"): StreamingQuery = {
     import spark.implicits._
     ProgressLog.attach(spark)
+    // the offsets, commits and sources logs go through the session's
+    // `fs.file.impl` (BareLocalFileSystem on every graft session), not
+    // Hadoop's LocalFs, which forks `chmod` per created file and
+    // `readlink` per rename and writes `.crc` shadow files
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)
     val src = format match {
       case "parquet" =>
         spark.readStream

@@ -112,10 +112,17 @@ class ReplaySpec extends AnyFunSuite {
       evolveAtId = Some(10000L))
     val spec = Transcripts.spec(numBuckets = 8)
     val lake = LakeTable.create(spark, SparkTestBase.tmpDir("lake"), spec)
-    // two batches: evolution happens inside batch 1
+    // three batches: evolution happens inside batch 2
     val all = Gen.events(spark, cfg)
-    Replay.applyBatch(lake, all.filter(e => (e.lsn - 1) * cfg.txnSize + e.seq < 8000), mapping, 0)
-    Replay.applyBatch(lake, all.filter(e => (e.lsn - 1) * cfg.txnSize + e.seq >= 8000), mapping, 1)
+    def slice(lo: Long, hi: Long) = all.filter(e =>
+      (e.lsn - 1) * cfg.txnSize + e.seq >= lo && (e.lsn - 1) * cfg.txnSize + e.seq < hi)
+    Replay.applyBatch(lake, slice(0, 4000), mapping, 0)
+    assert(Replay.templateBuilds(lake) == 1, "the first batch builds the table's merge plan")
+    // a warm batch binds into the plan; the R message's schema rebuilds it once
+    Replay.applyBatch(lake, slice(4000, 8000), mapping, 1)
+    assert(Replay.templateBuilds(lake) == 1, "a warm batch builds no merge plan")
+    Replay.applyBatch(lake, slice(8000, cfg.numEvents), mapping, 2)
+    assert(Replay.templateBuilds(lake) == 2, "the evolving batch builds one merge plan")
     assert(lake.schema.fieldNames.contains("tokens"), "schema must evolve")
     // oracle over evolved schema
     val evolvedSpec = spec.copy(schema = lake.schema)
@@ -260,6 +267,37 @@ class ReplaySpec extends AnyFunSuite {
     // its write
     assert(clone < 4, s"clone batch ran $clone jobs")
     assert(history < 4, s"history batch ran $history jobs")
+  }
+
+  test("clone _metrics: each batch's merge outcomes are its own, delete misses accumulate") {
+    val lake = LakeTable.create(spark, SparkTestBase.tmpDir("clonemet"),
+      Transcripts.spec(numBuckets = 2))
+    def key(c: String) = Map("conv_id" -> c, "turn_idx" -> "0")
+    Replay.applyBatch(lake, Seq(
+      ChangeEvent(1, 0, "I", "transcripts", "s0", "none", Map.empty, turn("c1", 0, "a")),
+      ChangeEvent(1, 1, "I", "transcripts", "s0", "none", Map.empty, turn("c2", 0, "b")),
+      ChangeEvent(1, 2, "I", "transcripts", "s0", "none", Map.empty, turn("c3", 0, "c")))
+      .toDS(), mapping, 0)
+    // an update and a delete of present keys
+    Replay.applyBatch(lake, Seq(
+      ChangeEvent(2, 0, "U", "transcripts", "s0", "none", Map.empty, turn("c1", 0, "a2")),
+      ChangeEvent(3, 0, "D", "transcripts", "s0", "K", key("c2"), Map.empty))
+      .toDS(), mapping, 1)
+    // a delete and an update of absent keys
+    Replay.applyBatch(lake, Seq(
+      ChangeEvent(4, 0, "D", "transcripts", "s0", "K", key("c9"), Map.empty),
+      ChangeEvent(5, 0, "U", "transcripts", "s0", "none", Map.empty, turn("c8", 0, "z")))
+      .toDS(), mapping, 2)
+    val merge = lake.metrics().collect().filter(_.getString(2) == "merge")
+      .map(r => (r.getLong(0), r.getString(3)) -> r.getLong(4)).toMap
+    val outcomes = Seq("inserted", "updated", "deleted", "delete_miss", "update_miss")
+    Seq(Seq(3L, 0L, 0L, 0L, 0L), Seq(0L, 1L, 1L, 0L, 0L), Seq(0L, 0L, 0L, 1L, 1L))
+      .zipWithIndex.foreach { case (want, b) =>
+        assert(outcomes.map(o => merge.get((b.toLong, o))) == want.map(Some(_)),
+          s"batch $b: $merge")
+      }
+    assert(lake.snapshot().properties("metrics-delete-miss") == "1")
+    assert(lake.read().count() == 2)
   }
 
   test("two writers: a merge whose base a compaction replaced aborts, and its retry applies once") {

@@ -90,6 +90,20 @@ class StreamSpec extends AnyFunSuite {
     assert(lake.snapshot().lineage.nonEmpty)
   }
 
+  test("checkpoint: the stream's logs go through the session's file system, no .crc files") {
+    val cfg = Gen.Config(numEvents = 2000, numConvs = 20, seed = 25)
+    val dir = SparkTestBase.tmpDir("ckpt-crc")
+    val ckpt = s"$dir/ckpt"
+    Gen.writeSegments(spark, cfg, s"$dir/wal", 1, 0 until 1)
+    val lake = LakeTable.create(spark, s"$dir/transcripts", Transcripts.spec())
+    CdcStream.runAvailable(spark, s"$dir/wal/seg-*", ckpt, Seq(CdcStream.Route(mapping, lake)))
+    assert(lake.snapshot().properties("commit-epoch") == "0")
+    val files = Files.walk(Paths.get(ckpt)).iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => Paths.get(ckpt).relativize(p).toString).toSeq
+    assert(files.exists(_.startsWith("commits")), files.mkString(", "))
+    assert(!files.exists(_.endsWith(".crc")), files.mkString(", "))
+  }
+
   private def stampInOrder(segDirs: Seq[String]): Unit = {
     val base = System.currentTimeMillis()
     segDirs.zipWithIndex.foreach { case (d, i) =>
